@@ -29,7 +29,6 @@ import org.apache.spark.sql.functions.{col, shiftright, sum, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sweeps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEPS", "3").toInt)
     // COLD mode (SPARK_GRAFT_BENCH_COLD=1): disable every stored-index
     // memo so each query pays its index BUILD + serve — the measured
@@ -38,18 +37,11 @@ object Bench {
     // inferred from superseded records (round-10 verdict item 1).
     // Writes its own BENCH_SELF_COLD.json; never clobbers the canonical.
     val cold = sys.env.get("SPARK_GRAFT_BENCH_COLD").exists(v => v == "1" || v == "true")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val builder = if (cold) builder0.config(StoredMemo.DisableConf, "true") else builder0
-    // same extra-conf hook as Verify ([[ExtraConf]], e.g. bench the
-    // at-scale selfJoin.strategy=shuffle configuration); a non-default
-    // conf is a forensics run — record it to the filtered sibling file,
-    // never the canonical record
-    val spark = jobs.Jobs.configure(ExtraConf.applyTo(builder).getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    // a non-default SPARK_GRAFT_CONF ([[ExtraConf]], e.g. bench the
+    // at-scale selfJoin.strategy=shuffle configuration) is a forensics
+    // run — recorded to the filtered sibling file, never the canonical
+    val spark = jobs.Jobs.buildSession("graft-bench",
+      if (cold) Map(StoredMemo.DisableConf -> "true") else Map.empty)
 
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -67,7 +59,7 @@ object Bench {
       def one() = once("calibration", (s, _) =>
         // shift keeps per-row magnitude < 2^31 so the 200M-row ANSI sum
         // cannot overflow long
-        s.range(0, 200000000L, 1, cpus.toInt)
+        s.range(0, 200000000L, 1, s.sparkContext.defaultParallelism)
           .select(sum(shiftright(xxhash64(col("id")), 32)).as("h")))
       // min-of-3 strips scheduler jitter; an idle machine's floor is
       // stable, a loaded one can't fake a low floor

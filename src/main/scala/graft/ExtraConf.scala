@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** `SPARK_GRAFT_CONF="k=v,k=v"` — extra session conf for the Verify and
-  * Bench mains, so whole suites can run under a chosen configuration
-  * (e.g. `spark.graft.selfJoin.strategy=shuffle`, a different
-  * `spark.sql.shuffle.partitions`). One parser shared by both mains.
+/** `SPARK_GRAFT_CONF="k=v,k=v"` — extra session conf, applied last by
+  * [[jobs.Jobs.buildSession]] for every main, so whole suites can run
+  * under a chosen configuration (e.g. `spark.graft.selfJoin.strategy=
+  * shuffle`, a different `spark.sql.shuffle.partitions`).
   *
   * Documented limitation: entries split on every comma, so a conf whose
   * VALUE contains commas (list-valued confs like extra JVM options)

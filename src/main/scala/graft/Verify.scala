@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,18 +11,12 @@ object Verify {
       case Some(f) => val ps = f.split(",").toSeq; n => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // extra session conf ([[ExtraConf]]) — lets the whole gate run
-    // under an at-scale configuration (e.g.
-    // spark.graft.selfJoin.strategy=shuffle) to prove the 100 TB plan
-    // shapes produce oracle-identical results corpus-wide
-    val spark = jobs.Jobs.configure(ExtraConf.applyTo(builder).getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    // one shuffle partition per core; SPARK_GRAFT_CONF ([[ExtraConf]])
+    // can still run the whole gate under another configuration (e.g.
+    // spark.graft.selfJoin.strategy=shuffle, the 100 TB plan shapes)
+    val cores = jobs.Jobs.cpus().getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = jobs.Jobs.buildSession("graft-verify",
+      Map("spark.sql.shuffle.partitions" -> cores.toString))
     new java.io.File(outDir).mkdirs()
     val errored = scala.collection.mutable.ListBuffer[String]()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>

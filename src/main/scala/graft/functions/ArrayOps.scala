@@ -77,8 +77,8 @@ case class LongDot(left: Expression, right: Expression)
 
 /** Column-API surface for the graft-native expressions. `long_dot` is
   * registered by [[graft.GraftExtensions]] (SparkSessionExtensions,
-  * `spark.sql.extensions=graft.GraftExtensions` — set by Verify/Bench/
-  * tests); sessions built without the extension transparently fall back
+  * `spark.sql.extensions=graft.GraftExtensions` — set by
+  * `Jobs.buildSession`); sessions built without the extension transparently fall back
   * to the semantically-identical interpreted higher-order fold.
   */
 object ArrayOps {

@@ -34,8 +34,9 @@ import graft.operators.{Categories, Sessions}
   */
 object Jobs {
   /** Runtime confs every graft entry point needs — THE single source for
-    * the trio (round-8 ADVICE; Verify/Bench/ExplainDump/RecallSnap/
-    * SparkTestBase/SparkEntry.entry all route through here):
+    * the trio. [[buildSession]] applies them for Bench, Verify, the job
+    * mains, the tools (all but SmokeCheck), SparkTestBase and perfbench;
+    * `SparkEntry.entry` applies them to the caller's own session:
     *  - `nanosAsLong`: a TIMESTAMP(NANOS) events fixture (driver
     *    generations through round 7) must read as LongType, not error;
     *  - `inferTimestampNTZ=false`: a TIMESTAMP(MICROS) fixture with
@@ -44,22 +45,52 @@ object Jobs {
     *  - UTC: all date math, and it makes Timestamp↔NTZ casts identity.
     * Whatever variant is on disk, [[graft.Tables.normalizeTs]] maps ts
     * back to the internal epoch-nanos-Long contract. Runtime-settable,
-    * so mains can apply them to a caller-provided or fresh session. */
+    * so they apply to a caller-provided or fresh session alike. */
+  val RuntimeConf: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC")
+
   def configure(s: SparkSession): SparkSession = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+    RuntimeConf.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 
-  def buildSession(name: String): SparkSession = configure(
-    SparkSession.builder()
-      .appName(name)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+  /** Build-time confs every graft session starts from; a caller's
+    * `conf` and then `SPARK_GRAFT_CONF` ([[graft.ExtraConf]]) override
+    * them. */
+  val SessionConf: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "32",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.ui.enabled" -> "false")
+
+  val MasterEnv = "SPARK_GRAFT_MASTER"
+  val CpusEnv = "SPARK_GRAFT_CPUS"
+
+  /** `SPARK_GRAFT_CPUS` as a core count, validated whenever it is set. */
+  def cpus(env: Map[String, String] = sys.env): Option[Int] =
+    env.get(CpusEnv).map { v =>
+      val n = v.trim.toIntOption.getOrElse(0)
+      require(n > 0, s"$CpusEnv must be a positive integer, got '$v'")
+      n
+    }
+
+  /** `SPARK_GRAFT_MASTER`, else `local[$SPARK_GRAFT_CPUS]`, else `local[*]`. */
+  def master(env: Map[String, String] = sys.env): String = {
+    val n = cpus(env) // validated even when SPARK_GRAFT_MASTER wins
+    env.getOrElse(MasterEnv, n.fold("local[*]")(c => s"local[$c]"))
+  }
+
+  /** The one session factory: every graft main, the test base and the
+    * benchmark build their session here. `conf` carries only what a
+    * caller really needs beyond [[SessionConf]]. */
+  def buildSession(name: String, conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = SparkSession.builder().appName(name).master(master())
+    (SessionConf ++ conf).foreach { case (k, v) => b.config(k, v) }
+    val s = configure(graft.ExtraConf.applyTo(b).getOrCreate())
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   private[jobs] def keyed(taskUUID: String, df: DataFrame): DataFrame =
     df.select(lit(taskUUID).as("task_id") +: df.columns.map(col).toSeq: _*)

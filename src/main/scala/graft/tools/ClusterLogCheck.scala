@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured read for st25's union-find-as-log cluster store — the
@@ -18,13 +17,7 @@ object ClusterLogCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batches = args.lift(1).map(_.toInt).getOrElse(4)
-    val s = graft.jobs.Jobs.configure(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.jobs.Jobs.buildSession("graft-cluster-log-check")
     import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.IncrementalBatchMod
     val idx = java.nio.file.Files.createTempDirectory("graft-clc-").toString

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.SparkEntry
 
 /** Writes `docs/PLANS.md`: the formatted physical plan of each headline
@@ -10,6 +10,13 @@ import graft.SparkEntry
   * artifact (broadcast choices, pushed filters, exchange counts,
   * whole-stage codegen spans). Usage:
   * `sbt "runMain graft.tools.ExplainDump [sfDir] [outFile]"`.
+  *
+  * With a third argument, a comma-separated query list, it instead
+  * writes one `<outDir>/<query>.txt` per named query (the before/after
+  * plan evidence for an optimization claim):
+  * `sbt "runMain graft.tools.ExplainDump <sfDir> <outDir> <q1,q2,...>"`.
+  * Either way the session is the benchmark's ([[graft.jobs.Jobs.buildSession]]),
+  * so the dumped plan is the one the benchmark executes.
   */
 object ExplainDump {
   private val headliners = Seq(
@@ -47,15 +54,29 @@ object ExplainDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outFile = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = graft.jobs.Jobs.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val out = args.lift(1).getOrElse("docs/PLANS.md")
+    val spark = graft.jobs.Jobs.buildSession("graft-explain-dump")
+    args.lift(2) match {
+      case Some(list) =>
+        Files.createDirectories(Paths.get(out))
+        list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+          SparkEntry.queries.get(name) match {
+            case Some(fn) =>
+              val f = Paths.get(out, s"$name.txt")
+              Files.writeString(f, planOf(fn(spark, sfDir)))
+              println(s"[explain] wrote $f")
+            case None => System.err.println(s"[explain] unknown query: $name")
+          }
+        }
+      case None => dumpHeadliners(spark, sfDir, out)
+    }
+    spark.stop()
+  }
 
+  private def planOf(df: DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  private def dumpHeadliners(spark: SparkSession, sfDir: String, outFile: String): Unit = {
     val sb = new StringBuilder
     sb.append("# Physical plans (headline queries)\n\n")
     sb.append(s"Generated by `graft.tools.ExplainDump` on `$sfDir`. ")
@@ -75,7 +96,7 @@ object ExplainDump {
     // performs the clustered rewrite + two metadata collects as part of
     // constructing the frame (the pre-written-path ingest), and the
     // frame it returns IS the pruned-scan query — dump that with a note.
-    def frameFor(name: String): Option[(org.apache.spark.sql.DataFrame, String)] =
+    def frameFor(name: String): Option[(DataFrame, String)] =
       name match {
         case "m16_global_rank" => Some((
           graft.operators.Misc.m16Sorted(spark, sfDir, graft.operators.Misc.M16Parts),
@@ -92,14 +113,11 @@ object ExplainDump {
       }
     headliners.foreach { name =>
       frameFor(name).foreach { case (df, note) =>
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name$note\n\n```\n$plan```\n")
+        sb.append(s"\n## $name$note\n\n```\n${planOf(df)}```\n")
       }
     }
     Files.createDirectories(Paths.get(outFile).getParent)
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"[explain] wrote $outFile (${headliners.size} plans)")
-    spark.stop()
   }
 }

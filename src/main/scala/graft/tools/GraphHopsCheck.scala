@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engaged-lever read for the graph SERVE side (`spark.graft.graph
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
 object GraphHopsCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = graft.jobs.Jobs.configure(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.jobs.Jobs.buildSession("graft-graph-hops-check")
     val truth = graft.operators.Embeddings.e01KnnBrute(s, dir)
       .where(col("rank") <= 3 && col("query_id") % 5 === 0)
       .select(col("query_id"), col("neighbor_id")).collect()

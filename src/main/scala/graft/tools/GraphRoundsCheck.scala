@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engaged-lever read for the stored kNN graph (`spark.graft.nnd
@@ -14,13 +13,7 @@ import org.apache.spark.sql.functions._
 object GraphRoundsCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = graft.jobs.Jobs.configure(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.jobs.Jobs.buildSession("graft-graph-rounds-check")
     val truth = graft.operators.Embeddings.e01KnnBrute(s, dir)
       .where(col("rank") <= 3)
       .select(col("query_id"), col("neighbor_id")).collect()

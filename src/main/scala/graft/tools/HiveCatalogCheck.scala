@@ -38,17 +38,12 @@ object HiveCatalogCheck {
 
   private def run(sf: String, wh: String, ms: String): Unit = {
 
-    def session(): SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hive-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$ms/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
+    // catalogImplementation=hive is exactly what enableHiveSupport() sets
+    def session(): SparkSession = graft.jobs.Jobs.buildSession("graft-hive-check", Map(
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> wh,
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$ms/metastore_db;create=true"))
 
     val s1 = session()
     require(s1.conf.get("spark.sql.catalogImplementation") == "hive",

@@ -11,8 +11,8 @@ package graft.tools
   * LlmText first, so the green gate could not see it.
   *
   * This main reproduces the Embeddings-first order and asserts every
-  * registered oracle is clean; run it in a FRESH JVM
-  * (`sbt "runMain graft.tools.InitOrderCheck"`). Fix pinned: the
+  * registered oracle is clean; it needs a FRESH JVM, so SessionSpec
+  * forks it. Fix pinned: the
   * shared batch-mod constant is a compile-time `final val` (no runtime
   * cross-object read during Embeddings' init) and every cross-module
   * SQL val/map is lazy (assembled after all objects initialize). */

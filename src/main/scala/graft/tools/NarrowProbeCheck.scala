@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the stored-tokenized-corpus trade-off documented on
@@ -18,14 +17,7 @@ import org.apache.spark.sql.functions._
 object NarrowProbeCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.jobs.Jobs.configure(spark)
+    val spark = graft.jobs.Jobs.buildSession("graft-narrow-probe-check")
 
     def probeStored(): Long = graft.operators.LlmText.base(spark, dir)
       .groupBy(col("lang"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall forensics: print e07's audited recall per ANN path for a
   * fixture dir (default sf0.001). The per-round BASELINE notes record
   * these numbers so codebook/sketch changes can be held to a
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object RecallSnap {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val s = graft.jobs.Jobs.configure(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.jobs.Jobs.buildSession("graft-recall-snap")
     graft.operators.Embeddings.e07RecallAudit(s, dir).collect()
       .foreach(r => println(s"[recall] ${r.getString(0)} ${r.getLong(2)}/${r.getLong(1)} = ${r.getDouble(3)}"))
     s.stop()

@@ -5,7 +5,9 @@ import graft.SparkEntry
 
 /** Simulates the round driver's smoke test: a BARE session (none of the
   * engine's build-time confs) calling `SparkEntry.entry` — proves the
-  * entry point is self-sufficient. Exits non-zero on empty results. */
+  * entry point is self-sufficient. Exits non-zero on empty results.
+  * SessionSpec runs it in a forked JVM; its session stays bare on
+  * purpose, outside [[graft.jobs.Jobs.buildSession]]. */
 object SmokeCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -21,6 +21,15 @@ class ArrayOpsSpec extends GraftSuite {
     assert(got.toSeq === Seq(32L, -41L, 0L))
   }
 
+  test("rolling_hash and word_shingles resolve by name to their native expressions") {
+    // no other spec calls these two by name: their wrappers would fall
+    // back to the composable chain silently if GraftExtensions lost them
+    val plan = spark.sql("SELECT rolling_hash('abcdefgh', 4) AS r, word_shingles('a b c', 2) AS w")
+      .queryExecution.analyzed
+    Seq(classOf[graft.functions.RollingHash], classOf[graft.functions.WordShinglesExpr])
+      .foreach(cls => assert(plan.expressions.exists(_.exists(cls.isInstance)), cls.getSimpleName))
+  }
+
   test("rolling_hash: native expression matches the per-window fold fallback") {
     import spark.implicits._
     // the non-ASCII inputs pin the ASCII projection: the native path

@@ -123,23 +123,7 @@ class SinksSpec extends GraftSuite {
     // (graft.tools.HiveCatalogCheck: saveTable → stop the context →
     // fresh context over the same Derby metastore → table still there)
     // runs in a forked JVM, like the driver's SmokeCheck.
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"),
-      "graft.tools.HiveCatalogCheck", sf)
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    val code = proc.waitFor()
+    val (code, out) = SparkTestBase.forkMain("graft.tools.HiveCatalogCheck", sf)
     assert(code === 0, s"HiveCatalogCheck exited $code:\n${out.takeRight(4000)}")
     assert(out.contains("hive-catalog OK rows=25"), out.takeRight(2000))
   }
