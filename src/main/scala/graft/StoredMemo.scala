@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared machinery for the stored-index in-JVM memos (docs/SCALE.md,
+/** The one in-JVM memo for stored-index artifacts (docs/SCALE.md,
   * round-10 section): each build/serve family materializes its index
-  * artifact once per (session, dir, result-changing levers) and serves
+  * artifact once per (session, name, result-changing levers) and serves
   * queries from the stored table — the single-JVM analogue of a
   * deployment persisting an index per corpus snapshot.
   *
-  * Three concerns live here so every memo site inherits them:
+  * Every artifact lives in ONE map keyed by `Key(app, name, parts)`:
   *
   *  1. '''Cold bypass''' ([[DisableConf]]): with
   *     `spark.graft.storedMemo.disable=true` every [[stored]] call runs
@@ -16,21 +16,30 @@ import org.apache.spark.sql.SparkSession
   *     build+serve per query instead of the warm serve-only path, so the
   *     stored-index discipline's build cost is MEASURED each round, not
   *     inferred (round-10 verdict item 1).
-  *  2. '''Session-scoped keys''' ([[dirKey]]): memo values (DataFrames
-  *     from `localCheckpoint`, catalog table names) are bound to the
-  *     SparkSession that built them; a dir-only key would serve a frame
-  *     from a stopped context to a restarted session in the same JVM.
-  *     The applicationId rides in the key so a new context rebuilds.
-  *  3. '''Bounded memory''' ([[guard]]): a flooded map means some caller
-  *     keys the memo on one-shot frames — the class of bug behind the r9
-  *     e19 cold-sweep regression (store builders training THROUGH a
-  *     plan-keyed memo; they must use the *Fresh bypasses). The guard
-  *     warns loudly and evicts only the OVERFLOW (arbitrary victims, not
-  *     the whole map), so hot serving keys usually survive a flood
-  *     instead of all being rebuilt mid-sweep. The check-then-evict is
-  *     deliberately non-atomic — the bound is a memory safety valve, not
-  *     an invariant; dropping the strong references lets ContextCleaner
+  *  2. '''Session-scoped keys''': memo values (DataFrames from
+  *     `localCheckpoint`, catalog table names) are bound to the
+  *     SparkSession that built them; `Key.app` is the applicationId, so
+  *     a restarted or second context in the same JVM rebuilds instead of
+  *     being served frames from a stopped one.
+  *  3. '''Bounded memory''' ([[guard]]): each artifact name holds at
+  *     most [[boundOf]] entries. A flooded name means some caller keys
+  *     the memo on one-shot frames — the class of bug behind the r9 e19
+  *     cold-sweep regression (store builders training THROUGH a
+  *     plan-keyed memo; they call the trainers directly). The guard
+  *     warns loudly and evicts only the OVERFLOW, foreign-app entries
+  *     first, so hot serving keys survive a flood instead of all being
+  *     rebuilt mid-sweep. The check-then-evict is deliberately
+  *     non-atomic — the bound is a memory safety valve, not an
+  *     invariant; dropping the strong references lets ContextCleaner
   *     free the checkpointed blocks once GC'd.
+  *
+  * Builds nest (the shingle table is built over the tokenized corpus,
+  * the truth table over the quantized vectors), so a build never runs
+  * inside `computeIfAbsent`, which forbids updating the map from its
+  * own mapping function. The map holds a [[Slot]] whose lazy value is
+  * built outside the map lock: one build per key under concurrency, a
+  * retry after a build that throws, and the same (`eq`) value on every
+  * later call.
   */
 private[graft] object StoredMemo {
   /** When `true`, [[stored]] bypasses every memo and builds fresh per
@@ -64,12 +73,6 @@ private[graft] object StoredMemo {
   def disabled(s: SparkSession): Boolean =
     s.conf.getOption(DisableConf).exists(_.trim.equalsIgnoreCase("true"))
 
-  /** Session-scoped memo key for a fixture dir: a restarted or second
-    * SparkSession in the same JVM must not be served frames (or catalog
-    * table names) bound to another context. */
-  def dirKey(s: SparkSession, dir: String): String =
-    s"${s.sparkContext.applicationId}|$dir"
-
   /** Collision-proof identifier tag for a dir, safe inside table names
     * and paths: the sanitized path keeps names readable, the MD5 prefix
     * disambiguates dirs that sanitize identically (`a/b` vs `a_b`) —
@@ -86,64 +89,88 @@ private[graft] object StoredMemo {
     s"${sane}_$hex"
   }
 
+  /** `parts` are the artifact's inputs: its dir (or the canonicalized
+    * plans it was built from) and every result-changing lever. */
+  private final case class Key(app: String, name: String, parts: Seq[Any])
+
+  private final class Slot(build: => Any) {
+    lazy val value: Any = build
+  }
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, Slot]()
+
+  /** The four canonical-plan-keyed PQ/SQ families: every distinct
+    * derived frame that reaches them is a key, so they get more room. */
+  private val PlanKeyed = Set("pq-codebooks", "pq-codes", "sq-lohi", "sq-codes")
+
+  private[graft] def boundOf(name: String): Int = if (PlanKeyed(name)) 64 else 16
+
   /** Memoize-or-bypass: the one entry point every stored-index family
     * routes through. Store builders (persisted-parquet trainers) must
-    * NOT call this — their store is their memo; see pqCodebookFresh. */
-  def stored[K, V](s: SparkSession,
-                   cache: java.util.concurrent.ConcurrentHashMap[K, V],
-                   name: String, key: K, bound: Int = 16)(build: => V): V =
+    * NOT call this — their store is their memo. */
+  def stored[V](s: SparkSession, name: String, parts: Any*)(build: => V): V =
     if (disabled(s)) build
     else {
-      val v = cache.computeIfAbsent(key, _ => build)
-      // guard AFTER the insert so the cache steady-states at the bound,
+      val key = Key(s.sparkContext.applicationId, name, parts)
+      val slot = memo.computeIfAbsent(key, _ => new Slot(build))
+      // guard AFTER the insert so the name steady-states at its bound,
       // not bound+1; the just-inserted key is a live-session key, so the
       // victim preference below never picks it while foreign keys exist
-      guard(cache, name, bound,
-        liveApp = Some(s.sparkContext.applicationId))
-      v
+      guard(name, key.app)
+      try slot.value.asInstanceOf[V]
+      catch { case e: Throwable => memo.remove(key, slot); throw e }
     }
 
-  /** Evict down to the bound. Victim preference makes the "hot keys
-    * survive a flood" property actually hold instead of relying on
-    * hash-iteration luck: keys NOT belonging to the live session
-    * (dead-context leftovers and one-shot flood keys that embed another
-    * applicationId) go first; only if the overflow is entirely
-    * live-session keys does eviction fall back to arbitrary victims (at
-    * that point nothing distinguishes hot from flood, and the safety
-    * valve still bounds memory). Every memo key carries the session
-    * identity in a recognized position: plain [[dirKey]] strings lead
-    * with `appId|`, and the composite tuple keys (codebook/lever memos)
-    * lead with either the bare applicationId or a dirKey — so tuple
-    * keys get the same live-session protection as string keys (the
-    * round-11 advisory gap). */
-  def guard(cache: java.util.concurrent.ConcurrentHashMap[_, _],
-            name: String, bound: Int = 16,
-            liveApp: Option[String] = None): Unit =
-    if (cache.size > bound) {
+  /** Evict `name`'s entries down to its bound. Victim preference makes
+    * the "hot keys survive a flood" property hold instead of relying on
+    * hash-iteration luck: entries of another application (dead-context
+    * leftovers) go first; only if the overflow is entirely live-session
+    * keys does eviction fall back to arbitrary victims (at that point
+    * nothing distinguishes hot from flood, and the safety valve still
+    * bounds memory). */
+  private[graft] def guard(name: String, liveApp: String): Unit = {
+    val bound = boundOf(name)
+    def count: Int = { var n = 0; memo.keySet().forEach(k => if (k.name == name) n += 1); n }
+    if (count > bound) {
       System.err.println(
         s"[graft] stored-index memo '$name' exceeded $bound entries — " +
           "evicting overflow; a flood here means some caller keys the memo " +
-          "on one-shot frames (use the *Fresh bypass for store builds)")
-      def evictWhere(victim: Any => Boolean): Unit = {
-        val it = cache.keySet().iterator()
-        while (cache.size > bound && it.hasNext) {
+          "on one-shot frames (store builds must call the trainers directly)")
+      var excess = count - bound
+      def evictWhere(victim: Key => Boolean): Unit = {
+        val it = memo.keySet().iterator()
+        while (excess > 0 && it.hasNext) {
           val k = it.next()
-          if (victim(k)) it.remove()
+          if (k.name == name && victim(k)) { it.remove(); excess -= 1 }
         }
       }
-      liveApp.foreach { app =>
-        def foreignTag(s: String): Boolean =
-          s != app && !s.startsWith(app + "|")
-        evictWhere {
-          case s: String => foreignTag(s)
-          case p: Product if p.productArity > 0 =>
-            p.productElement(0) match {
-              case s: String => foreignTag(s)
-              case _ => false
-            }
-          case _ => false
-        }
-      }
+      evictWhere(_.app != liveApp)
       evictWhere(_ => true)
     }
+  }
+
+  /** Test hook: the entries held for `name`, as (app, parts). */
+  private[graft] def entries(name: String): Seq[(String, Seq[Any])] = {
+    import scala.jdk.CollectionConverters._
+    memo.keySet().asScala.toSeq.filter(_.name == name).map(k => (k.app, k.parts))
+  }
+
+  /** Test hook: plant an already-built entry, e.g. one left behind by
+    * another application. */
+  private[graft] def seed(app: String, name: String, parts: Seq[Any], value: Any): Unit =
+    memo.put(Key(app, name, parts), new Slot(value))
+
+  /** Release a frame's stored blocks now. `Dataset.unpersist()` only
+    * drops a CacheManager entry; a `localCheckpoint`ed frame's blocks
+    * belong to the checkpointed RDD that `checkpoint` wraps in a
+    * `LogicalRDD` leaf, so that RDD is unpersisted too. Only for frames
+    * nothing will read again: a later read of a released checkpoint
+    * fails with a missing checkpoint block. */
+  def release(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
+  }
 }

@@ -538,7 +538,7 @@ object IncrementalIndex {
     * the expensive half, one broadcast-join pass over the members. */
   def writePqIndex(s: SparkSession, trainVecs: DataFrame, allVecs: DataFrame,
                    indexDir: String): Unit = {
-    Embeddings.pqCodebookFresh(s, Embeddings.quantizedFrom(s, trainVecs), "q")
+    Embeddings.pqTrain(s, Embeddings.quantizedFrom(s, trainVecs), "q")
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, PqCodebook))
     encodePqMembers(s, allVecs, indexDir, SaveMode.Overwrite)
   }
@@ -566,7 +566,7 @@ object IncrementalIndex {
     * bit-identical to the in-query quantizer. */
   def writeSqIndex(s: SparkSession, trainVecs: DataFrame, allVecs: DataFrame,
                    indexDir: String): Unit = {
-    Embeddings.sqLohiFresh(Embeddings.quantizedFrom(s, trainVecs))
+    Embeddings.sqLohiTrain(Embeddings.quantizedFrom(s, trainVecs))
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, SqQuantizer))
     encodeSqMembers(s, allVecs, indexDir, SaveMode.Overwrite)
   }
@@ -1074,16 +1074,9 @@ object IncrementalIndex {
     * Keyed on the same levers as the d03 memo (they change the edges)
     * plus the batch mod. Cold runs recompute through the same
     * definitions. */
-  private val bootLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Long, String), DataFrame]()
-
   private def bootstrapLabelsOf(s: SparkSession, dir: String): DataFrame = {
     val mod = LlmText.IncrementalBatchMod
-    val key = (graft.StoredMemo.dirKey(s, dir), mod,
-      s.conf.get(LlmText.BandRowsConf, "1").toInt,
-      s.conf.get(LlmText.MaxBucketConf, "0").toLong,
-      s.conf.get(SelfJoin.StrategyConf, "broadcast"))
-    graft.StoredMemo.stored(s, bootLabelsCache, "cluster-bootstrap-labels", key) {
+    graft.StoredMemo.stored(s, "cluster-bootstrap-labels", dir, mod, LlmText.d03Levers(s)) {
       val edges = LlmText.d03LshNeardup(s, dir)
         .where(col("jaccard") >= LlmText.NeardupThreshold &&
           col("doc_a") % mod =!= 0 && col("doc_b") % mod =!= 0)
@@ -1387,13 +1380,9 @@ object IncrementalIndex {
     * derived from the memoized shingle table; st17/st23's bootstraps
     * pay the parquet write warm, the recompute cold ([[writeServePair]]
     * discipline). */
-  private val benchRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), DataFrame]()
-
   private def benchRowsOf(s: SparkSession, dir: String): DataFrame = {
     val mod = LlmText.ContaminationMod
-    graft.StoredMemo.stored(s, benchRowsCache, "bench-shingle-rows",
-        (graft.StoredMemo.dirKey(s, dir), mod)) {
+    graft.StoredMemo.stored(s, "bench-shingle-rows", dir, mod) {
       benchRowsFrom(s,
         LlmText.shinglesOf(s, dir).where(col("doc_id") % mod === 0))
         .localCheckpoint(true)

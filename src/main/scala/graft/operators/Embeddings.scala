@@ -50,12 +50,8 @@ object Embeddings {
     * (docs/SCALE.md). Within a JVM every caller then shares ONE
     * canonical plan, which also keys the codebook/quantizer memos
     * consistently. */
-  private val quantizedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, quantizedCache, "quantized-vectors",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "quantized-vectors", dir) {
       quantizedFrom(s, Tables.spreadIfNarrow(Tables.embeddings(s, dir), s"$dir/embeddings"))
         .localCheckpoint()
     }
@@ -99,12 +95,8 @@ object Embeddings {
     * e07's truth leg reads through e01, and e16's MMR pool is the
     * rank ≤ MmrPoolN slice — one nested-loop scoring pass serves all
     * three. Column pruning drops the payload where unused. */
-  private val bruteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def bruteRankedOf(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, bruteCache, "brute-truth",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "brute-truth", dir) {
       // layout note (r13): deliberately NOT repartitioned — consumers
       // either aggregate or broadcast this table, and the measured A/B
       // showed the compact AQE layout faster for e16's iterative rounds
@@ -226,12 +218,8 @@ object Embeddings {
     * analogue). Sound for the same reason as [[graft.Tables
     * .spreadIfNarrow]]'s cache: fixture inputs are immutable within a
     * JVM, and the bucket hash is a pure function of q. */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def bucketedOf(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, bucketedCache, "lsh-bucketed",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "lsh-bucketed", dir) {
       bucketedFrom(s, quantized(s, dir)).localCheckpoint()
     }
 
@@ -422,12 +410,8 @@ object Embeddings {
     * second-order effect: frames derived from this ONE checkpoint have
     * stable canonicalized plans, so the codebook/quantizer memos keyed
     * on them re-hit across queries instead of retraining. */
-  private val rankedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def cellRanked(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, rankedCache, "ivf-assignment",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "ivf-assignment", dir) {
       val v = quantized(s, dir)
       // layout note (r13): deliberately NOT repartitioned — the e05/
       // e12-e15 consumers join it broadcast-side or aggregate it, and
@@ -1261,33 +1245,19 @@ object Embeddings {
     * analogue (sound because the fixture inputs are immutable within a
     * JVM, the same contract as [[graft.Tables.spreadIfNarrow]]'s cache;
     * the canonical-plan key distinguishes dirs/frames). */
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), DataFrame]()
-
-  private[graft] def pqCodebookOf(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame = {
+  private[graft] def pqCodebookOf(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame =
     // canonicalized-plan key: structural equality, so two frames compare
     // equal iff they compute the same relation (no hash-collision risk).
     // Only SERVING paths (e12/e13/e19 over the stable fixture plans) go
     // through this memo, so it holds a handful of hot keys; store
-    // builders train via [[pqCodebookFresh]] (the persisted parquet is
-    // their memo), so one-shot keys never accumulate here. The bound is
-    // a pure safety valve — in round 9 it actually tripped (incremental-
-    // index temp frames flooded the map) and the clear() evicted the hot
+    // builders call [[pqTrain]] directly (the persisted parquet is their
+    // memo), so one-shot keys never accumulate here. The bound is a pure
+    // safety valve — in round 9 it actually tripped (incremental-index
+    // temp frames flooded the map) and the clear() evicted the hot
     // codebooks mid-sweep, which was e19's first-sweep 3.5× spike.
-    val key = (s.sparkContext.applicationId,
-      frame.queryExecution.analyzed.canonicalized, vecCol)
-    graft.StoredMemo.stored(s, pqCbCache, "pq-codebooks", key, bound = 64)(
+    graft.StoredMemo.stored(s, "pq-codebooks",
+        frame.queryExecution.analyzed.canonicalized, vecCol)(
       pqTrain(s, frame, vecCol))
-  }
-
-  /** Memo-BYPASS trainer for store builds ([[graft.jobs
-    * .IncrementalIndex]]): the trained table is immediately persisted
-    * to parquet — the store IS the memo — so caching the in-JVM frame
-    * under a one-shot temp-frame key would only pollute [[pqCbCache]]
-    * toward its clear() bound (evicting the serving paths' hot
-    * codebooks — the measured e19 cold-sweep regression). */
-  private[graft] def pqCodebookFresh(s: SparkSession, frame: DataFrame,
-      vecCol: String): DataFrame = pqTrain(s, frame, vecCol)
 
   /** In-JVM memo of the ENCODED code table — the other half of the PQ
     * index next to the codebook (faiss stores exactly this pair; the
@@ -1301,19 +1271,18 @@ object Embeddings {
     * fixture frames reach here) plus the codebook's plan; store
     * builders keep calling [[pqEncode]] directly (their parquet IS the
     * memo). Cold runs rebuild through the same definition. */
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), DataFrame]()
-
   private[graft] def pqCodesOf(s: SparkSession, frame: DataFrame, vecCol: String,
-      codebook: DataFrame): DataFrame = {
-    val key = (s.sparkContext.applicationId,
-      frame.queryExecution.analyzed.canonicalized,
-      codebook.queryExecution.analyzed.canonicalized, vecCol)
-    graft.StoredMemo.stored(s, pqCodesCache, "pq-codes", key, bound = 64)(
+      codebook: DataFrame): DataFrame =
+    graft.StoredMemo.stored(s, "pq-codes",
+        frame.queryExecution.analyzed.canonicalized,
+        codebook.queryExecution.analyzed.canonicalized, vecCol)(
       pqEncode(s, frame, vecCol, codebook).localCheckpoint())
-  }
 
-  private def pqTrain(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame = {
+  /** The codebook trainer behind [[pqCodebookOf]]; store builders
+    * ([[graft.jobs.IncrementalIndex.writePqIndex]]) call it directly —
+    * their persisted parquet is the memo, and a one-shot temp-frame key
+    * would only flood the serving memo toward its bound. */
+  private[graft] def pqTrain(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame = {
     val dot = dotQ(s) _
     val train = frame.where(col("vec_id") % lit(PqTrainSampleMod) === 0)
     val subs = pqSubvectors(train, vecCol).localCheckpoint()
@@ -1705,22 +1674,14 @@ object Embeddings {
     * per corpus, not once per query; operationally it would
     * store-and-freeze beside the PQ halves in
     * [[graft.jobs.IncrementalIndex]]. */
-  private val sqLohiCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]()
+  private[graft] def sqLohiOf(v: DataFrame): DataFrame =
+    graft.StoredMemo.stored(v.sparkSession, "sq-lohi",
+        v.queryExecution.analyzed.canonicalized)(sqLohiTrain(v))
 
-  private[graft] def sqLohiOf(v: DataFrame): DataFrame = {
-    val s = v.sparkSession
-    val key = (s.sparkContext.applicationId, v.queryExecution.analyzed.canonicalized)
-    graft.StoredMemo.stored(s, sqLohiCache, "sq-lohi", key, bound = 64)(
-      sqLohiTrain(v))
-  }
-
-  /** Memo-BYPASS quantizer trainer for store builds (the
-    * [[pqCodebookFresh]] discipline — persisted-to-parquet trainers
-    * must not pollute the serving memo with one-shot keys). */
-  private[graft] def sqLohiFresh(v: DataFrame): DataFrame = sqLohiTrain(v)
-
-  private def sqLohiTrain(v: DataFrame): DataFrame =
+  /** The quantizer trainer behind [[sqLohiOf]]; store builders call it
+    * directly (the [[pqTrain]] discipline — persisted-to-parquet
+    * trainers must not pollute the serving memo with one-shot keys). */
+  private[graft] def sqLohiTrain(v: DataFrame): DataFrame =
     v.select(posexplode(col("q")).as(Seq("d", "x")))
       .groupBy(col("d")).agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
       .agg(
@@ -1741,19 +1702,14 @@ object Embeddings {
     * ADC consumer divides by) so the stored artifact carries its norm
     * column like the persisted form. Cold runs rebuild through the
     * same definition. */
-  private val sqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]()
-
   private[graft] def sqCodesOf(s: SparkSession, frame: DataFrame,
-      lohi: DataFrame): DataFrame = {
-    val key = (s.sparkContext.applicationId,
-      frame.queryExecution.analyzed.canonicalized,
-      lohi.queryExecution.analyzed.canonicalized)
-    graft.StoredMemo.stored(s, sqCodesCache, "sq-codes", key, bound = 64)(
+      lohi: DataFrame): DataFrame =
+    graft.StoredMemo.stored(s, "sq-codes",
+        frame.queryExecution.analyzed.canonicalized,
+        lohi.queryExecution.analyzed.canonicalized)(
       sqEncode(frame, lohi)
         .withColumn("rnb", dotQ(s)(col("r"), col("r")))
         .localCheckpoint())
-  }
 
   /** SQ8 encode of `frame` (any frame carrying `q`) against quantizer
     * `lohi`: appends `codes` (the 8-bit levels — the 64-byte stored
@@ -2449,12 +2405,13 @@ object Embeddings {
       .localCheckpoint()
     // the checkpoint above is eager, so the round's corpus-sized d2
     // blocks are consumed — release them now instead of leaking one
-    // per round to GC/ContextCleaner (the d03Cache discipline; r13
-    // advisory). At 100 TB the per-round pin is thereby bounded to
-    // the one in-flight round, and CONFIG.md documents the reliable-
-    // checkpoint lever for clusters where executor-local blocks of
-    // even one round are too hot to hold.
-    d2.unpersist()
+    // per round to GC/ContextCleaner. `StoredMemo.release` drops the
+    // checkpointed RDD's blocks (a bare `unpersist()` on a checkpointed
+    // frame leaves them pinned). At 100 TB the per-round pin is thereby
+    // bounded to the one in-flight round, and CONFIG.md documents the
+    // reliable-checkpoint lever for clusters where executor-local
+    // blocks of even one round are too hot to hold.
+    graft.StoredMemo.release(d2)
     grown
   }
 
@@ -2471,7 +2428,7 @@ object Embeddings {
     // exists — release it as we go (c0 is lazy, nothing to release)
     val cands = (1 to KmppRounds).foldLeft(c0) { (c, r) =>
       val next = kmppRound(s, v, c, r)
-      if (r > 1) c.unpersist()
+      if (r > 1) graft.StoredMemo.release(c)
       next
     }
     val asg = v.crossJoin(broadcast(cands))
@@ -2481,16 +2438,17 @@ object Embeddings {
       .where(col("rn") === 1)
     // materialize the (≤ KmppSeeds-row) result eagerly so every
     // per-invocation checkpoint this query pinned — the corpus frame
-    // and the final center table — can be released HERE instead of
-    // accumulating one set per invocation until GC (r13 advisory).
+    // and the final center table — is released HERE instead of
+    // accumulating one set per invocation until GC; only the result's
+    // own checkpoint stays pinned.
     val out = asg.groupBy(col("cid")).agg(count(lit(1)).as("weight"))
       .withColumn("seed_rank", row_number().over(
         Window.orderBy(col("weight").desc, col("cid").asc)))
       .where(col("seed_rank") <= KmppSeeds)
       .select(col("seed_rank"), col("cid"), col("weight"))
       .localCheckpoint(eager = true)
-    cands.unpersist()
-    v.unpersist()
+    graft.StoredMemo.release(cands)
+    graft.StoredMemo.release(v)
     out
   }
 
@@ -2682,14 +2640,10 @@ object Embeddings {
     * pair memo — strategy is not result-changing, but the
     * strategy-invariance gate must exercise a REBUILD under the
     * alternate plan, not re-serve the broadcast-built frame. */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, String), DataFrame]()
-
   private[graft] def graphOf(s: SparkSession, dir: String,
                              rounds: Int, revCap: Int): DataFrame =
-    graft.StoredMemo.stored(s, graphCache, "nnd-graph",
-        (graft.StoredMemo.dirKey(s, dir), rounds, revCap,
-          s.conf.get(SelfJoin.StrategyConf, "broadcast"))) {
+    graft.StoredMemo.stored(s, "nnd-graph", dir, rounds, revCap,
+        s.conf.get(SelfJoin.StrategyConf, "broadcast")) {
       // layout note (r13): deliberately NOT repartitioned — the serve
       // paths broadcast this edge table, so a compact layout is cheaper
       nnDescentRounds(s, dir, rounds, revCap).localCheckpoint()
@@ -2705,13 +2659,9 @@ object Embeddings {
     * the same definitions, so the build price stays measured. The
     * subset graph is NOT a filter of the full-corpus graph (descent
     * edges depend on the candidate pool), hence its own memo. */
-  private val ingestGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, String), DataFrame]()
-
   private[graft] def ingestGraphOf(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, ingestGraphCache, "ingest-bootstrap-graph",
-        (graft.StoredMemo.dirKey(s, dir), IncrementalBatchModE,
-          s.conf.get(SelfJoin.StrategyConf, "broadcast"))) {
+    graft.StoredMemo.stored(s, "ingest-bootstrap-graph", dir,
+        IncrementalBatchModE, s.conf.get(SelfJoin.StrategyConf, "broadcast")) {
       val v = quantizedFrom(s, Tables.spreadIfNarrow(
           Tables.embeddings(s, dir), s"$dir/embeddings")
         .where(col("vec_id") % IncrementalBatchModE =!= 0))

@@ -61,12 +61,8 @@ object LlmText {
     * reads the full tokenized rows — at the stored-table operating
     * point that is exactly what the persisted layout costs too, and
     * the tokenize+normalize work it replaces dominates. */
-  private val baseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def base(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, baseCache, "tokenized-docs",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "tokenized-docs", dir) {
       baseFrom(Tables.spreadIfNarrow(Tables.documents(s, dir), s"$dir/documents"))
         .localCheckpoint()
     }
@@ -139,9 +135,7 @@ object LlmText {
     * must run under the same bandRows value (documented contract of
     * [[graft.jobs.IncrementalIndex]]). */
   private[graft] def bandEntriesOf(s: SparkSession, sig: DataFrame): DataFrame = {
-    val bandRows = s.conf.get(BandRowsConf, "1").toInt
-    require(bandRows >= 1 && NumHashes % bandRows == 0,
-      s"$BandRowsConf must divide NumHashes=$NumHashes, got $bandRows")
+    val bandRows = d03Levers(s).bandRows
     val bandKeyCols = (0 until NumHashes / bandRows).map { b =>
       val parts = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
       if (bandRows == 1) parts.head else xxhash64(parts: _*)
@@ -192,6 +186,41 @@ object LlmText {
     * bands, before the bucket cap. Must divide NumHashes. */
   val BandRowsConf = "spark.graft.lsh.bandRows"
 
+  /** The levers that change the d03 pair table, read once with their
+    * defaults: bandRows ([[BandRowsConf]], validated here), the bucket
+    * cap ([[MaxBucketConf]]) and the [[SelfJoin]] strategy. Every memo
+    * derived from the pair table or its band entries keys on them. */
+  private[graft] final case class D03Levers(bandRows: Int, maxBucket: Long, strategy: String)
+
+  private[graft] def d03Levers(s: SparkSession): D03Levers = {
+    val bandRows = s.conf.get(BandRowsConf, "1").toInt
+    require(bandRows >= 1 && NumHashes % bandRows == 0,
+      s"$BandRowsConf must divide NumHashes=$NumHashes, got $bandRows")
+    D03Levers(bandRows, s.conf.get(MaxBucketConf, "0").toLong,
+      s.conf.get(SelfJoin.StrategyConf, "broadcast"))
+  }
+
+  /** In-JVM memos of the two PERSISTED text-index tables (band entries
+    * and shingle sets over the full fixture corpus) — the artifacts
+    * [[graft.jobs.IncrementalIndex.writeTextIndex]] freezes. Both
+    * derivations are per-doc pure functions, so any fixture-subset
+    * store partition (a streaming bootstrap's `bid=-1`) is EXACTLY a
+    * doc_id filter of these tables — which is what lets the st13/st25
+    * bootstraps derive their store from the already-materialized memo
+    * (the writeServePair discipline, r13 optimization round) instead
+    * of re-running tokenize→shingle→minhash per invocation. Cold
+    * (memo-disabled) runs recompute through the same definitions.
+    * Bands are keyed on the bandRows lever (it changes the rows). */
+  private[graft] def bandsOf(s: SparkSession, dir: String): DataFrame =
+    graft.StoredMemo.stored(s, "text-bands", dir, d03Levers(s).bandRows) {
+      bandEntriesOf(s, sigOf(s, base(s, dir))).localCheckpoint()
+    }
+
+  private[graft] def shinglesOf(s: SparkSession, dir: String): DataFrame =
+    graft.StoredMemo.stored(s, "text-shingles", dir) {
+      shingleSetsOf(s, base(s, dir)).localCheckpoint()
+    }
+
   /** In-JVM memo of the verified near-dup PAIR TABLE — the
     * [[graft.operators.Embeddings]] bucketedOf discipline applied to
     * the text index: operationally the LSH pair list is built once per
@@ -205,43 +234,8 @@ object LlmText {
     * recomputes; sound because fixture inputs are immutable within a
     * JVM (the spreadIfNarrow contract). Bounded: a handful of
     * configuration keys ever exist. */
-  private val d03Cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long, String), DataFrame]()
-
-  /** In-JVM memos of the two PERSISTED text-index tables (band entries
-    * and shingle sets over the full fixture corpus) — the artifacts
-    * [[graft.jobs.IncrementalIndex.writeTextIndex]] freezes. Both
-    * derivations are per-doc pure functions, so any fixture-subset
-    * store partition (a streaming bootstrap's `bid=-1`) is EXACTLY a
-    * doc_id filter of these tables — which is what lets the st13/st25
-    * bootstraps derive their store from the already-materialized memo
-    * (the writeServePair discipline, r13 optimization round) instead
-    * of re-running tokenize→shingle→minhash per invocation. Cold
-    * (memo-disabled) runs recompute through the same definitions.
-    * Bands are keyed on the bandRows lever (it changes the rows). */
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
-  private val shinglesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def bandsOf(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, bandsCache, "text-bands",
-        (graft.StoredMemo.dirKey(s, dir), s.conf.get(BandRowsConf, "1").toInt)) {
-      bandEntriesOf(s, sigOf(s, base(s, dir))).localCheckpoint()
-    }
-
-  private[graft] def shinglesOf(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, shinglesCache, "text-shingles",
-        graft.StoredMemo.dirKey(s, dir)) {
-      shingleSetsOf(s, base(s, dir)).localCheckpoint()
-    }
-
-  def d03LshNeardup(s: SparkSession, dir: String): DataFrame = {
-    val key = (graft.StoredMemo.dirKey(s, dir),
-      s.conf.get(BandRowsConf, "1").toInt,
-      s.conf.get(MaxBucketConf, "0").toLong,
-      s.conf.get(SelfJoin.StrategyConf, "broadcast"))
-    graft.StoredMemo.stored(s, d03Cache, "lsh-pairs", key) {
+  def d03LshNeardup(s: SparkSession, dir: String): DataFrame =
+    graft.StoredMemo.stored(s, "lsh-pairs", dir, d03Levers(s)) {
       val (verified, caches) = d03Lazy(s, dir)
       // materialize the verified pairs (candidate pairs ≪ corpus — the
       // whole point of LSH) and release the shingle/signature caches: a
@@ -258,28 +252,21 @@ object LlmText {
       caches.foreach(_.unpersist())
       out
     }
-  }
 
   /** The un-materialized d03 plan + the caches it persists — the form
     * PlanAuditSpec inspects (the public entry checkpoints the result, so
     * its executed plan is just the RDD scan). Callers own the unpersist. */
   private[graft] def d03Lazy(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
+    // validate the levers BEFORE any persist so a bad one can't leak caches
+    val levers = d03Levers(s)
+    val maxBucket = levers.maxBucket
     // persist: the signature table feeds both sides of the band join
     // (re-evaluations of the whole shingle+hash pipeline otherwise —
     // SURVEY M3, the shared-intermediate persist) and the shingle sets
     // feed the two verification joins
     val shd = withShingleSet(s, base(s, dir)).select(col("doc_id"), col("sh")).persist()
     val sig = d02MinhashSig(s, dir).persist()
-    val maxBucket = s.conf.get(MaxBucketConf, "0").toLong
-    val bandRows = s.conf.get(BandRowsConf, "1").toInt
-    require(bandRows >= 1 && NumHashes % bandRows == 0,
-      s"$BandRowsConf must divide NumHashes=$NumHashes, got $bandRows")
-    val bandKeyCols = (0 until NumHashes / bandRows).map { b =>
-      val parts = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
-      if (bandRows == 1) parts.head else xxhash64(parts: _*)
-    }
-    val allBandKeys = sig.select(col("doc_id"),
-      posexplode(array(bandKeyCols: _*)).as(Seq("band", "band_key")))
+    val allBandKeys = bandEntriesOf(s, sig)
     val bandKeys =
       if (maxBucket <= 0) allBandKeys
       else allBandKeys
@@ -308,7 +295,7 @@ object LlmText {
     // local benefit — so the broadcast path skips it. Both shapes stay
     // pinned in PlanAuditSpec; results are identical either way
     // (SelfJoinStrategySpec).
-    val shVer = s.conf.get(SelfJoin.StrategyConf, "broadcast") match {
+    val shVer = levers.strategy match {
       case "broadcast" => shd
       case _ =>
         val docsInPairs = cand.select(col("doc_a").as("doc_id"))
@@ -964,7 +951,8 @@ object LlmText {
       val cur = potential(small)
       converged = cur == prev
       prev = cur
-      edges.unpersist()
+      // `small` is materialized, so the previous round's blocks are dead
+      graft.StoredMemo.release(edges)
       edges = small
       rounds += 1
     }
@@ -1804,9 +1792,7 @@ object LlmText {
 
   def d30IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     // validate conf BEFORE any persist so a bad lever can't leak caches
-    val bandRows = s.conf.get(BandRowsConf, "1").toInt
-    require(bandRows >= 1 && NumHashes % bandRows == 0,
-      s"$BandRowsConf must divide NumHashes=$NumHashes, got $bandRows")
+    d03Levers(s)
     val shd = withShingleSet(s, base(s, dir)).select(col("doc_id"), col("sh")).persist()
     val sig = d02MinhashSig(s, dir).persist()
     try {
@@ -2107,17 +2093,13 @@ object LlmText {
     * d33/d34 invocation rebuilt and checkpointed it fresh; the memo is
     * the stored-index discipline (docs/SCALE.md round-10 section) —
     * the serving queries read the one stored table. Keyed on the
-    * pruning lever, the only conf that changes the table's content. */
-  private val wtsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
-
-  /** The stored weighted-postings artifact d33/d34 serve from —
-    * exposed package-private so StoredParitySpec can diff it against
+    * pruning lever, the only conf that changes the table's content.
+    * Exposed package-private so StoredParitySpec can diff it against
     * [[graft.jobs.IncrementalIndex]]'s persisted `postings` parquet
     * (the discipline's rule 3: in-JVM memo ≡ persisted store). */
   private[graft] def storedPostings(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, wtsCache, "sparse-postings",
-        (graft.StoredMemo.dirKey(s, dir), s.conf.get(SparseMaxDfConf, "1000").toInt)) {
+    graft.StoredMemo.stored(s, "sparse-postings", dir,
+        s.conf.get(SparseMaxDfConf, "1000").toInt) {
       val docs = base(s, dir)
       val tf = tfOf(docs)
       // doc_id-keyed layout at a scale-adaptive partition count: the
@@ -3072,12 +3054,6 @@ object LlmText {
   val D44Window = 32
   val D44MinDocs = 2L
 
-  /** The stored rolling-hash POSTINGS table (doc_id, p, h) — one row
-    * per byte window. Built once per (session, dir) like every index
-    * artifact; a deployment persists it bucketed by h. */
-  private val rhPostingsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** (doc_id, p, h) rolling-hash postings for an arbitrary
     * documents-shaped frame — the derivation the persisted lifecycle
     * writes ([[graft.jobs.IncrementalIndex.writeSubstrIndex]]), so a
@@ -3091,9 +3067,11 @@ object LlmText {
         posexplode(graft.functions.ArrayOps.rollingHash(s, col("norm"), D44Window)))
       .toDF("doc_id", "p", "h")
 
+  /** The stored rolling-hash POSTINGS table (doc_id, p, h) — one row
+    * per byte window. Built once per (session, dir) like every index
+    * artifact; a deployment persists it bucketed by h. */
   private def rhPostings(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, rhPostingsCache, "rh-postings",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "rh-postings", dir) {
       rhPostingsOf(s, base(s, dir)).localCheckpoint()
     }
 
@@ -3140,12 +3118,8 @@ object LlmText {
     * map-read of its own result — serve-your-own-output accounting).
     * Keyed on dir only (window/min-docs are compile-time constants);
     * cold runs recompute through the same definitions (r13). */
-  private val spansCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def spansWorklist(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, spansCache, "crossdoc-spans",
-        graft.StoredMemo.dirKey(s, dir)) {
+    graft.StoredMemo.stored(s, "crossdoc-spans", dir) {
       spansFromPostings(rhPostings(s, dir)).localCheckpoint(eager = true)
     }
 

@@ -246,12 +246,8 @@ object Misc {
   /** Bucketed tables are the ingest-once layout by definition (the
     * operator's whole point); write them once per (JVM, dir) and serve
     * the join from the stored tables. */
-  private val m09Written =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   def m09BucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val (ordersT, customerT) = graft.StoredMemo.stored(s, m09Written,
-        "m09-bucketed-tables", graft.StoredMemo.dirKey(s, dir)) {
+    val (ordersT, customerT) = graft.StoredMemo.stored(s, "m09-bucketed-tables", dir) {
       val sfx = graft.StoredMemo.dirTag(dir)
       val (o, c) = (s"graft_m09_orders_$sfx", s"graft_m09_customer_$sfx")
       graft.etl.Sinks.writeBucketed(
@@ -672,13 +668,9 @@ object Misc {
     * discipline; the dir-suffixed name keeps multi-dir JVMs apart).
     * The bounds lookup, file-stats index, and prune stay per-query:
     * they ARE the skipping work being priced. */
-  private val m15Written =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def m15ZorderSkip(s: SparkSession, dir: String): DataFrame = {
     val (pLo, pHi) = m15PartBounds(s, dir)
-    val path = graft.StoredMemo.stored(s, m15Written, "m15-zclustered-files",
-      graft.StoredMemo.dirKey(s, dir))(
+    val path = graft.StoredMemo.stored(s, "m15-zclustered-files", dir)(
       m15WriteClustered(s, dir,
         s"graft_m15_lineitem_z_${graft.StoredMemo.dirTag(dir)}",
         zorderKey(col("ship_day"), col("l_partkey"))))

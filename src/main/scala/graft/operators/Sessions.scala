@@ -49,12 +49,8 @@ object Sessions {
     * (SessionStat.scala's input contract); re-deriving sessions per
     * query is the thing no deployment does. Stored-index discipline,
     * docs/SCALE.md. */
-  private val sessCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def sessionized(s: SparkSession, dir: String): DataFrame =
-    graft.StoredMemo.stored(s, sessCache, "sessionized-events",
-      graft.StoredMemo.dirKey(s, dir))(
+    graft.StoredMemo.stored(s, "sessionized-events", dir)(
       // layout note (r13): deliberately NOT repartitioned — the s-suite
       // consumers aggregate immediately, and the measured A/B favored
       // the compact AQE layout over a 32-way spread

@@ -177,9 +177,10 @@ object Streams {
       val merged =
         if (batches % checkpointEvery == 0) mergedRaw.localCheckpoint(eager = true)
         else { val m = mergedRaw.persist(); m.count(); m }
-      // safe to release the previous store: the new one is fully
-      // materialized above, so nothing recomputes through the old chain
-      if (store ne initialStore) store.unpersist()
+      // safe to release the previous store (its cache or its checkpoint
+      // blocks): the new one is fully materialized above, so nothing
+      // recomputes through the old chain
+      if (store ne initialStore) graft.StoredMemo.release(store)
       store = merged
     }
   }

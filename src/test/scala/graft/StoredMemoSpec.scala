@@ -2,64 +2,61 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The stored-index memo machinery: overflow guard (bounded memory,
-  * partial eviction so hot serving keys usually survive a one-shot-key
-  * flood — the r9 e19 regression class), cold bypass
-  * ([[StoredMemo.DisableConf]] — the measured-cold-bench switch),
-  * session-scoped keys, and collision-proof dir tags.
+/** The stored-index memo machinery: the one memo map (session-scoped
+  * keys, per-name overflow guard with partial eviction so hot serving
+  * keys survive a one-shot-key flood — the r9 e19 regression class),
+  * cold bypass ([[StoredMemo.DisableConf]] — the measured-cold-bench
+  * switch), builds that nest or race, collision-proof dir tags, and
+  * [[StoredMemo.release]] actually dropping checkpointed blocks.
   */
 class StoredMemoSpec extends AnyFunSuite {
 
-  private def mapOf(n: Int) = {
-    val m = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    (1 to n).foreach(i => m.put(i, s"v$i"))
-    m
-  }
+  private def spark = SparkTestBase.spark
+  private def app = spark.sparkContext.applicationId
+
+  /** Plant `n` built entries under `name` for `owner` (parts = i). */
+  private def seedN(name: String, owner: String, range: Range): Unit =
+    range.foreach(i => StoredMemo.seed(owner, name, Seq(i), s"v$i"))
 
   test("guard leaves a within-bound memo untouched") {
-    val m = mapOf(16)
-    StoredMemo.guard(m, "t", bound = 16)
-    assert(m.size === 16)
+    seedN("spec-within", app, 1 to 16)
+    StoredMemo.guard("spec-within", app)
+    assert(StoredMemo.entries("spec-within").size === 16)
   }
 
   test("guard evicts only the overflow, not the whole memo") {
-    val m = mapOf(20)
-    StoredMemo.guard(m, "t", bound = 16)
-    assert(m.size === 16,
+    seedN("spec-overflow", app, 1 to 20)
+    StoredMemo.guard("spec-overflow", app)
+    assert(StoredMemo.entries("spec-overflow").size === 16,
       "guard must evict down to the bound, not clear every hot key")
-    // and the next computeIfAbsent simply rebuilds an evicted entry
-    m.computeIfAbsent(999, _ => "rebuilt")
-    assert(m.get(999) === "rebuilt")
+    // and the next call simply rebuilds an evicted entry
+    assert(StoredMemo.stored(spark, "spec-overflow", 999)("rebuilt") === "rebuilt")
   }
 
-  test("eviction prefers foreign-session keys — for plain dirKey strings AND tuple keys") {
-    // the round-11 advisory gap: composite tuple keys (codebook/lever
-    // memos lead with appId or a dirKey in position 0) must get the
-    // same live-session protection as plain string keys
-    val app = "app-live"
-    val m = new java.util.concurrent.ConcurrentHashMap[Any, String]()
-    // 10 live string keys, 4 live tuple keys, 6 foreign keys of both shapes
-    (1 to 10).foreach(i => m.put(s"$app|dir$i", "live"))
-    (1 to 4).foreach(i => m.put((s"$app|dir$i", i), "live-tuple"))
-    (1 to 3).foreach(i => m.put(s"app-dead|dir$i", "foreign"))
-    (1 to 3).foreach(i => m.put(("app-dead", i), "foreign-tuple"))
-    assert(m.size === 20)
-    StoredMemo.guard(m, "t", bound = 14, liveApp = Some(app))
-    assert(m.size === 14)
-    import scala.jdk.CollectionConverters._
-    val survivors = m.asScala.values.toSeq
-    assert(!survivors.contains("foreign") && !survivors.contains("foreign-tuple"),
-      s"foreign keys must be the preferred victims, kept: ${m.keySet()}")
-    assert(survivors.count(_ == "live") === 10 && survivors.count(_ == "live-tuple") === 4,
-      "every live-session key (both shapes) must survive when evicting foreigners suffices")
+  test("eviction prefers foreign-app entries, and bounds each name on its own") {
+    seedN("spec-foreign", app, 1 to 16)
+    seedN("spec-foreign", "app-dead", 1 to 4)
+    seedN("spec-other", "app-dead", 1 to 4)
+    assert(StoredMemo.entries("spec-foreign").size === 20)
+    StoredMemo.guard("spec-foreign", app)
+    val kept = StoredMemo.entries("spec-foreign")
+    assert(kept.size === 16)
+    assert(kept.forall(_._1 == app),
+      s"foreign entries must be the preferred victims, kept: $kept")
+    assert(StoredMemo.entries("spec-other").size === 4,
+      "another name's entries are not counted against this name's bound")
+  }
+
+  test("the PQ/SQ plan-keyed families get the wider bound") {
+    Seq("pq-codebooks", "pq-codes", "sq-lohi", "sq-codes")
+      .foreach(n => assert(StoredMemo.boundOf(n) === 64, n))
+    assert(StoredMemo.boundOf("tokenized-docs") === 16)
   }
 
   test("stored() guards AFTER the insert: the cache steady-states at the bound") {
-    val spark = SparkTestBase.spark
-    val m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val app = spark.sparkContext.applicationId
-    (1 to 20).foreach(i => StoredMemo.stored(spark, m, "t", s"$app|k$i", bound = 8)(s"v$i"))
-    assert(m.size <= 8, s"cache must steady-state at the bound, got ${m.size}")
+    (1 to 20).foreach(i => StoredMemo.stored(spark, "spec-steady", i)(s"v$i"))
+    val n = StoredMemo.entries("spec-steady").size
+    assert(n <= 16, s"cache must steady-state at the bound, got $n")
   }
 
   test("dirTag is filesystem/table-safe and collision-resistant") {
@@ -73,33 +70,69 @@ class StoredMemoSpec extends AnyFunSuite {
   }
 
   test("stored() bypasses the memo when the cold conf is set") {
-    val spark = SparkTestBase.spark
-    val m = new java.util.concurrent.ConcurrentHashMap[String, String]()
     var builds = 0
     def build(): String = { builds += 1; s"b$builds" }
-    assert(StoredMemo.stored(spark, m, "t", "k")(build()) === "b1")
-    assert(StoredMemo.stored(spark, m, "t", "k")(build()) === "b1", "warm: memo hit")
+    assert(StoredMemo.stored(spark, "spec-cold", "k")(build()) === "b1")
+    assert(StoredMemo.stored(spark, "spec-cold", "k")(build()) === "b1", "warm: memo hit")
     spark.conf.set(StoredMemo.DisableConf, "true")
     try {
-      assert(StoredMemo.stored(spark, m, "t", "k")(build()) === "b2", "cold: fresh build")
-      assert(StoredMemo.stored(spark, m, "t", "k")(build()) === "b3", "cold: every call builds")
-      assert(m.size === 1, "cold builds must not pollute the memo")
+      assert(StoredMemo.stored(spark, "spec-cold", "k")(build()) === "b2", "cold: fresh build")
+      assert(StoredMemo.stored(spark, "spec-cold", "k")(build()) === "b3", "cold: every call builds")
+      assert(StoredMemo.entries("spec-cold").size === 1, "cold builds must not pollute the memo")
     } finally spark.conf.unset(StoredMemo.DisableConf)
-    assert(StoredMemo.stored(spark, m, "t", "k")(build()) === "b1", "warm again: memo intact")
+    assert(StoredMemo.stored(spark, "spec-cold", "k")(build()) === "b1", "warm again: memo intact")
   }
 
-  test("dirKey is session-scoped (applicationId rides in the key)") {
-    val spark = SparkTestBase.spark
-    val k = StoredMemo.dirKey(spark, "/some/dir")
-    assert(k.contains(spark.sparkContext.applicationId))
-    assert(k.endsWith("|/some/dir"))
+  test("stored keys are session-scoped (applicationId rides in the key)") {
+    StoredMemo.stored(spark, "spec-session", "/some/dir")("v")
+    assert(StoredMemo.entries("spec-session") === Seq((app, Seq("/some/dir"))))
+    // an entry another context built is never served to this one
+    StoredMemo.seed("app-dead", "spec-session-stale", Seq("/d"), "stale")
+    assert(StoredMemo.stored(spark, "spec-session-stale", "/d")("fresh") === "fresh")
+  }
+
+  test("a stored() build may call stored() on the one map") {
+    // real builds nest (benchRowsOf → shinglesOf → base, bruteRankedOf
+    // → quantized). Keys with equal hashes share a map bin, where a
+    // build run inside computeIfAbsent fails with "Recursive update"
+    final case class Colliding(i: Int) { override def hashCode: Int = 42 }
+    val outer = StoredMemo.stored(spark, "spec-nested", Colliding(1)) {
+      StoredMemo.stored(spark, "spec-nested", Colliding(2))("in") + "-out"
+    }
+    assert(outer === "in-out")
+    assert(StoredMemo.stored(spark, "spec-nested", Colliding(2))("rebuilt") === "in",
+      "the nested build is memoized too")
+  }
+
+  test("8 threads asking for one key build it exactly once, and a failed build retries") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[AnyRef] {
+        def call(): AnyRef = {
+          start.await()
+          StoredMemo.stored(spark, "spec-race", "k") {
+            builds.incrementAndGet(); Thread.sleep(200); new Object
+          }
+        }
+      }))
+      start.countDown()
+      val got = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get === 1, "one build per key under concurrency")
+      assert(got.forall(_ eq got.head), "every caller gets the same artifact")
+    } finally pool.shutdown()
+    intercept[IllegalStateException] {
+      StoredMemo.stored[String](spark, "spec-retry", "k")(throw new IllegalStateException("boom"))
+    }
+    assert(StoredMemo.stored(spark, "spec-retry", "k")("ok") === "ok",
+      "a build that threw must not leave a poisoned entry")
   }
 
   test("stored-index serving paths return the SAME artifact across calls") {
     // identity (eq), not equality: a regression that silently rebuilds
     // the stored table per call is value-neutral and invisible to the
     // oracle gate — only the memo identity catches it
-    val spark = SparkTestBase.spark
     val sf = SparkTestBase.sf
     assert(graft.operators.LlmText.d03LshNeardup(spark, sf)
       eq graft.operators.LlmText.d03LshNeardup(spark, sf))
@@ -108,7 +141,6 @@ class StoredMemoSpec extends AnyFunSuite {
   }
 
   test("d03 memo keys on the result-changing levers (A/B recomputes)") {
-    val spark = SparkTestBase.spark
     val sf = SparkTestBase.sf
     val base = graft.operators.LlmText.d03LshNeardup(spark, sf)
     spark.conf.set(graft.operators.LlmText.BandRowsConf, "2")
@@ -119,7 +151,6 @@ class StoredMemoSpec extends AnyFunSuite {
   }
 
   test("cold conf makes a serving path rebuild (and warm serves the stored one)") {
-    val spark = SparkTestBase.spark
     val sf = SparkTestBase.sf
     val warm = graft.operators.Embeddings.bucketedOf(spark, sf)
     spark.conf.set(StoredMemo.DisableConf, "true")
@@ -129,5 +160,64 @@ class StoredMemoSpec extends AnyFunSuite {
     } finally spark.conf.unset(StoredMemo.DisableConf)
     assert(graft.operators.Embeddings.bucketedOf(spark, sf) eq warm,
       "warm path must still serve the stored artifact after a cold probe")
+  }
+
+  test("e21 releases every checkpoint it pins except its own result") {
+    // GC would unregister an unreachable RDD on its own, so a listener
+    // keeps a strong reference to every RDD persisted during the call:
+    // only an explicit release can then take one off the persistent list
+    val sc = spark.sparkContext
+    val sf = SparkTestBase.sf
+    graft.operators.Embeddings.e21KmppSeed(spark, sf).collect() // warm the corpus memo
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.rdd.RDD[_]]()
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        sc.getPersistentRDDs.values.foreach(seen.add)
+    }
+    val firstId = sc.emptyRDD[Int].id
+    sc.addSparkListener(holder)
+    try graft.operators.Embeddings.e21KmppSeed(spark, sf).collect()
+    finally sc.removeSparkListener(holder)
+    import scala.jdk.CollectionConverters._
+    val created = seen.asScala.filter(_.id > firstId)
+    val stillPinned = created.count(r => sc.getPersistentRDDs.contains(r.id))
+    assert(created.size > 1, s"the call must checkpoint its intermediates, saw ${created.size}")
+    assert(stillPinned <= 1,
+      s"e21 left $stillPinned of its ${created.size} checkpoints pinned (its result is 1)")
+  }
+
+  test("cold mode does not pile up pins: e12 and e14 twice return to the baseline") {
+    // the benchmark harness's settle: GC, then read; after the run, poll
+    // for a bounded time while ContextCleaner drops unreachable checkpoints
+    def settle(): Int = {
+      System.gc(); Thread.sleep(400); System.gc(); Thread.sleep(400)
+      spark.sparkContext.getPersistentRDDs.size
+    }
+    val sf = SparkTestBase.sf
+    val before = settle()
+    spark.conf.set(StoredMemo.DisableConf, "true")
+    try (1 to 2).foreach { _ =>
+      graft.operators.Embeddings.e12IvfPqAdc(spark, sf).collect()
+      graft.operators.Embeddings.e14SqRerank(spark, sf).collect()
+    } finally spark.conf.unset(StoredMemo.DisableConf)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var after = settle()
+    while (after > before && System.nanoTime() < deadline) after = settle()
+    assert(after <= before, s"cold e12/e14 left ${after - before} persistent RDDs pinned")
+  }
+
+  test("main code keeps no memo map outside StoredMemo") {
+    // Tables' narrow/wide decision cache and Streams' stream dirs are not
+    // session-bound artifacts; every stored artifact goes through StoredMemo
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val allowed = Set("graft/StoredMemo.scala", "graft/Tables.scala", "graft/streaming/Streams.scala")
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .matches("(?s).*new (java\\.util\\.concurrent\\.)?ConcurrentHashMap\\b.*"))
+      .map(p => root.relativize(p).toString).toSet -- allowed
+    assert(offenders.isEmpty, s"memo maps outside StoredMemo: $offenders")
   }
 }
