@@ -58,11 +58,16 @@ object Jobs {
 
   /** Build-time confs every graft session starts from; a caller's
     * `conf` and then `SPARK_GRAFT_CONF` ([[graft.ExtraConf]]) override
-    * them. */
+    * them. The two `fs` entries serve `file:` paths through
+    * [[graft.etl.GraftLocalFileSystem]] (FileSystem API) and
+    * [[graft.etl.GraftLocalFs]] (FileContext API, stream checkpoints),
+    * which fork no `chmod`/`readlink` process per file. */
   val SessionConf: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "32",
     "spark.sql.extensions" -> "graft.GraftExtensions",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.etl.GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.etl.GraftLocalFs].getName)
 
   val MasterEnv = "SPARK_GRAFT_MASTER"
   val CpusEnv = "SPARK_GRAFT_CPUS"

@@ -571,15 +571,7 @@ object AdAnalytics {
       // safe to drop the temp index: every batch's verdicts were
       // materialized by the probe's localCheckpoint, so the returned
       // union holds no lineage into these files
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st13Sql: String = graft.operators.LlmText.d30Sql
@@ -620,15 +612,7 @@ object AdAnalytics {
           org.apache.spark.sql.SaveMode.Append)
         store.unionByName(verdicts)
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st14Sql: String = graft.operators.Embeddings.e09Sql
@@ -672,15 +656,7 @@ object AdAnalytics {
       // OutputSchemaSpec).
       coded.select(col("vec_id"),
         concat_ws(",", col("codes").cast("array<string>")).as("codes_csv"))
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st15Sql: String = {
@@ -742,15 +718,7 @@ object AdAnalytics {
           org.apache.spark.sql.SaveMode.Append)
         store.unionByName(verdicts)
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st16Sql: String = {
@@ -816,15 +784,7 @@ object AdAnalytics {
           .where(col("doc_id") % mod =!= 0)) { (store, batch) =>
         store.unionByName(IncrementalIndex.probeBench(s, batch, indexDir))
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st17Sql: String = graft.operators.LlmText.d18Sql
@@ -913,15 +873,7 @@ object AdAnalytics {
       }
       // materialize before dropping the temp store (the probe is lazy)
       IncrementalIndex.probeSubstrSpans(s, indexDir).localCheckpoint(eager = true)
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st19Sql: String = graft.operators.LlmText.d44Sql
@@ -1009,15 +961,7 @@ object AdAnalytics {
           .where(col("vec_id") % 5 === 0)) { (store, batch) =>
         store.unionByName(IncrementalIndex.probeGraphServe(s, batch, indexDir))
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st21Sql: String = graft.operators.Embeddings.e23Sql
@@ -1070,15 +1014,7 @@ object AdAnalytics {
         IncrementalIndex.writeGraphEdgesBatch(s, edges, indexDir, bid)
         store.unionByName(edges)
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st22Sql: String = graft.operators.Embeddings.onlineInsertSql
@@ -1119,15 +1055,7 @@ object AdAnalytics {
           .where(col("doc_id") % mod =!= 0)) { (store, batch) =>
         store.unionByName(IncrementalIndex.probeBenchBloom(s, batch, indexDir))
       }
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st23Sql: String = graft.operators.LlmText.d18Sql
@@ -1174,15 +1102,7 @@ object AdAnalytics {
         store.unionByName(batch)
       }
       IncrementalIndex.probeGraphServeLive(s, indexDir)
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st24Sql: String = graft.operators.Embeddings.e24Sql
@@ -1232,15 +1152,7 @@ object AdAnalytics {
         store
       }
       IncrementalIndex.resolveClusterLabels(s, indexDir)
-    } finally {
-      val root = java.nio.file.Paths.get(indexDir)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(pp => { java.nio.file.Files.deleteIfExists(pp); () })
-        finally it.close()
-      }
-    }
+    } finally Streams.dropDir(indexDir)
   }
 
   lazy val st25Sql: String = graft.operators.LlmText.d14Sql

@@ -62,8 +62,9 @@ object Streams {
     Files.createTempDirectory("graft-ckpt-").toString
 
   /** Best-effort recursive delete of a finished query's checkpoint —
-    * session-lifetime accumulation otherwise (one dir per run). */
-  private def dropDir(path: String): Unit = {
+    * session-lifetime accumulation otherwise (one dir per run) — or of
+    * a streaming query's temp index store. */
+  private[graft] def dropDir(path: String): Unit = {
     val root = java.nio.file.Paths.get(path)
     if (Files.exists(root)) {
       val it = Files.walk(root).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -25,15 +25,7 @@ object HiveCatalogCheck {
     val wh = java.nio.file.Files.createTempDirectory("graft-hive-wh-").toString
     val ms = java.nio.file.Files.createTempDirectory("graft-hive-ms-").toString
     try run(sf, wh, ms)
-    finally Seq(wh, ms).foreach { d =>
-      val root = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        try it.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally it.close()
-      }
-    }
+    finally Seq(wh, ms).foreach(graft.streaming.Streams.dropDir)
   }
 
   private def run(sf: String, wh: String, ms: String): Unit = {

@@ -13,7 +13,9 @@ class SessionSpec extends GraftSuite {
     assert(Jobs.SessionConf === Map(
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.extensions" -> "graft.GraftExtensions",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> "graft.etl.GraftLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.etl.GraftLocalFs"))
     assert(Jobs.RuntimeConf === Map(
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",

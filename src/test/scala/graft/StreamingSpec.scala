@@ -189,6 +189,32 @@ class StreamingSpec extends GraftSuite {
     assert(st04.agg(sum("total")).collect()(0).getLong(0) === total)
   }
 
+  test("a stateful AvailableNow run forks no Hadoop Shell process (chmod/readlink per file)") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    // Shell's class init probes `setsid` once per JVM: not a per-file spawn
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val out = java.nio.file.Files.createTempFile("graft-spawns-", ".jfr")
+    val events = try {
+      val st04 = AdAnalytics.st04CumulativeState(spark, sf)
+      assert(st04.agg(sum("total")).collect()(0).getLong(0) === Tables.events(spark, sf).count())
+      // a control spawn outside Hadoop: the recording does see processes
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(out)
+      RecordingFile.readAllEvents(out).asScala.toSeq
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(out) }
+    def frames(e: jdk.jfr.consumer.RecordedEvent) =
+      Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala).map(_.getMethod.getType.getName)
+    assert(events.exists(_.getString("command").startsWith("true")), "control spawn not recorded")
+    val shell = events.filter(e => frames(e).contains("org.apache.hadoop.util.Shell"))
+    assert(shell.isEmpty,
+      shell.take(3).map(_.getString("command")).mkString(s"${shell.size} Shell spawns, e.g. ", "; ", ""))
+  }
+
   test("st08: session_window boundary semantics — a gap of exactly the duration still merges") {
     import spark.implicits._
     // user 1: two events exactly 1800 s apart -> ONE session (touching
