@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Embeddings, LlmText, Misc, SelfJoin}
@@ -1039,7 +1039,8 @@ object IncrementalIndex {
   def writeClusterBootstrap(s: SparkSession, corpusDocs: DataFrame,
                             indexDir: String): Unit = {
     writeTextIndexBatch(s, corpusDocs, indexDir, batchId = -1L)
-    writeBootstrapLabels(s, selfTextEdges(s, indexDir), indexDir)
+    writeBootstrapLabels(labelsOf(selfTextEdges(s, indexDir)
+      .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))), indexDir)
   }
 
   /** [[writeClusterBootstrap]] for the FIXTURE corpus (st25's form —
@@ -1057,14 +1058,7 @@ object IncrementalIndex {
     val mod = LlmText.IncrementalBatchMod
     writeTextIndexFixtureBootstrap(s, dir, indexDir,
       col("doc_id") % mod =!= 0)
-    bootstrapLabelsOf(s, dir).write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, ClusterLabels)}/bid=-1")
-    // an explicitly-empty remap partition so every later storeTable
-    // read finds the table (merge events may only come much later)
-    bootstrapLabelsOf(s, dir).limit(0)
-      .select(col("doc_id").as("src"), col("label").as("dst"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, LabelRemaps)}/bid=-1")
+    writeBootstrapLabels(bootstrapLabelsOf(s, dir), indexDir)
   }
 
   /** In-JVM memo of the fixture bootstrap LABELS (the corpus-subset
@@ -1081,25 +1075,22 @@ object IncrementalIndex {
         .where(col("jaccard") >= LlmText.NeardupThreshold &&
           col("doc_a") % mod =!= 0 && col("doc_b") % mod =!= 0)
         .select(col("doc_a"), col("doc_b"))
-      val labels =
-        if (edges.isEmpty)
-          edges.limit(0).select(col("doc_a").cast("long").as("doc_id"),
-            col("doc_a").cast("long").as("label"))
-        else LlmText.minLabelComponents(edges, LlmText.MaxClusterRounds)
-          .select(col("doc_id"), col("cluster_id").as("label"))
-      labels.localCheckpoint(true)
+      labelsOf(edges).localCheckpoint(true)
     }
   }
 
-  private def writeBootstrapLabels(s: SparkSession, edges: DataFrame,
-                                   indexDir: String): Unit = {
-    val labels =
-      if (edges.isEmpty)
-        edges.limit(0).select(col("new_id").cast("long").as("doc_id"),
-          col("new_id").cast("long").as("label"))
-      else LlmText.minLabelComponents(edges.select(col("new_id").as("doc_a"),
-          col("old_id").as("doc_b")), LlmText.MaxClusterRounds)
-        .select(col("doc_id"), col("cluster_id").as("label"))
+  /** Component labels (doc_id, label = component min) of an undirected
+    * (doc_a, doc_b) edge set; an empty frame when there are no edges. */
+  private def labelsOf(edges: DataFrame): DataFrame =
+    if (edges.isEmpty)
+      edges.limit(0).select(col("doc_a").cast("long").as("doc_id"),
+        col("doc_a").cast("long").as("label"))
+    else LlmText.minLabelComponents(edges, LlmText.MaxClusterRounds)
+      .select(col("doc_id"), col("cluster_id").as("label"))
+
+  /** The bootstrap (bid -1) partitions of the cluster store: the labels
+    * and an empty remap table. */
+  private def writeBootstrapLabels(labels: DataFrame, indexDir: String): Unit = {
     labels.write.mode(SaveMode.Overwrite)
       .parquet(s"${p(indexDir, ClusterLabels)}/bid=-1")
     // an explicitly-empty remap partition so every later storeTable
@@ -1402,9 +1393,16 @@ object IncrementalIndex {
     * only on (batch doc, frozen store) — no cross-batch state — so ANY
     * micro-batch split of the training side reproduces the batch d18
     * exactly (st17's contract). Returns the materialized frame. */
-  def probeBench(s: SparkSession, batchDocs: DataFrame, indexDir: String): DataFrame = {
+  def probeBench(s: SparkSession, batchDocs: DataFrame, indexDir: String): DataFrame =
+    verifyBench(s, batchDocs, indexDir, lit(true))
+
+  /** The broadcast verify join of [[probeBench]] and [[probeBenchBloom]]
+    * over the batch shingles that pass `prefilter`. */
+  private def verifyBench(s: SparkSession, batchDocs: DataFrame, indexDir: String,
+                          prefilter: Column): DataFrame = {
     val ex = LlmText.shingleSetsFrom(s, spread(batchDocs))
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
+      .where(prefilter)
     val bench = s.read.parquet(p(indexDir, BenchShingles))
     ex.join(broadcast(bench), Seq("shingle"))
       .groupBy(col("doc_id"), col("bench_id"))
@@ -1421,16 +1419,11 @@ object IncrementalIndex {
     * list). Geometry (bits, k) rides IN the store, so a probe under any
     * session conf applies the hashing the filter was built with. */
   def writeBloomIndex(s: SparkSession, benchDocs: DataFrame, indexDir: String,
-                      bits: Int, k: Int): Unit = {
-    val ex = LlmText.shingleSetsFrom(s, spread(benchDocs))
-      .select(col("doc_id").as("bench_id"), explode(col("sh")).as("shingle"))
-    val rare = ex.groupBy(col("shingle"))
-      .agg(countDistinct(col("bench_id")).as("df"))
-      .where(col("df") <= LlmText.BenchHotShingleCap)
-      .select(col("shingle"))
-    graft.functions.BloomFilter.wordsDF(rare, "shingle", bits, k)
+                      bits: Int, k: Int): Unit =
+    graft.functions.BloomFilter.wordsDF(
+        benchRowsFrom(s, LlmText.shingleSetsFrom(s, spread(benchDocs)))
+          .select(col("shingle")).distinct(), "shingle", bits, k)
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
-  }
 
   /** Fixture-path twin of [[writeBloomIndex]]: the bits table derived
     * from the memoized bench-shingle rows (the distinct shingles of the
@@ -1457,15 +1450,8 @@ object IncrementalIndex {
     val (bits, k) = stored.select(col("bits"), col("k")).as[(Int, Int)].head()
     val words = BloomFilter.dense(
       stored.select(col("widx"), col("word")).as[(Long, Long)].collect().toSeq, bits)
-    val ex = LlmText.shingleSetsFrom(s, spread(batchDocs))
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .where(BloomFilter.mightContainFast(s, words, col("shingle"), bits, k))
-    val bench = s.read.parquet(p(indexDir, BenchShingles))
-    ex.join(broadcast(bench), Seq("shingle"))
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(countDistinct(col("shingle")).as("n_shared"))
-      .where(col("n_shared") >= LlmText.ContaminationMinShared)
-      .localCheckpoint(true)
+    verifyBench(s, batchDocs, indexDir,
+      BloomFilter.mightContainFast(s, words, col("shingle"), bits, k))
   }
 
   /** Train the TOKENIZER half and freeze it: `rounds` full BPE

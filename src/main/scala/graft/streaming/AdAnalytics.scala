@@ -132,7 +132,7 @@ object AdAnalytics {
             Iterator((uid, total))
         }
         .toDF("user_id", "total")
-    }((store, batch) => Upsert.overwrite(store, batch, Seq("user_id")))
+    }((store, batch, _) => Upsert.overwrite(store, batch, Seq("user_id")))
   }
 
   val st04Sql: String =
@@ -187,7 +187,7 @@ object AdAnalytics {
   def st05ThresholdPromote(s: SparkSession, dir: String): DataFrame = {
     val empty = { import s.implicits._; Seq.empty[(Long, Long)].toDF("user_id", "n") }
     val store = Streams.runForeachBatch(s, "append", empty)(
-      ss => Streams.tableStream(ss, dir, "events")) { (store, batch) =>
+      ss => Streams.tableStream(ss, dir, "events")) { (store, batch, _) =>
       val delta = batch.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
       Upsert.accumulate(store, delta, Seq("user_id"), "n")
     }
@@ -211,7 +211,7 @@ object AdAnalytics {
     val store = Streams.runForeachBatch(s, "append", empty) { ss =>
       Streams.tableStream(ss, dir, "events")
         .withColumn("date", date_format(expr("timestamp_micros(ts div 1000)"), "yyyy-MM-dd"))
-    } { (store, batch) =>
+    } { (store, batch, _) =>
       val delta = batch.groupBy(col("date"), col("event_type")).agg(count(lit(1)).as("n"))
       Upsert.accumulate(store, delta, Seq("date", "event_type"), "n")
     }
@@ -473,7 +473,7 @@ object AdAnalytics {
     import graft.operators.Misc.{eventRollup, rollupReadout}
     val empty = eventRollup(graft.Tables.events(s, dir).limit(0))
     val store = Streams.runForeachBatch(s, "append", empty)(
-      ss => Streams.tableStream(ss, dir, "events")) { (store, batch) =>
+      ss => Streams.tableStream(ss, dir, "events")) { (store, batch, _) =>
       graft.etl.Upsert.accumulateAll(
         store, eventRollup(batch), Seq("event_type"), Seq("n_events", "sum_value"))
     }
@@ -544,8 +544,7 @@ object AdAnalytics {
     import graft.operators.LlmText
     import graft.jobs.IncrementalIndex
     val mod = LlmText.IncrementalBatchMod
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st13-idx-").toString
-    try {
+    Streams.withTempDir("graft-st13-idx-") { indexDir =>
       // batch-id-keyed store layout throughout (bootstrap = bid -1):
       // appends are idempotent partition overwrites and the probe can
       // exclude a crash-replayed batch's own append — the exactly-
@@ -557,7 +556,7 @@ object AdAnalytics {
         col("doc_id") % mod =!= 0)
       val empty = graft.Tables.documents(s, dir).limit(0)
         .select(col("doc_id"), lit(0L).as("n_matches"), lit(false).as("is_dup"))
-      Streams.runForeachBatchWithId(s, "append", empty)(
+      Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
           .where(col("doc_id") % mod === 0)) { (store, batch, bid) =>
         // probe BEFORE appending: the store must hold only prior
@@ -568,10 +567,9 @@ object AdAnalytics {
         IncrementalIndex.writeTextIndexBatch(s, batch, indexDir, bid)
         store.unionByName(verdicts)
       }
-      // safe to drop the temp index: every batch's verdicts were
-      // materialized by the probe's localCheckpoint, so the returned
-      // union holds no lineage into these files
-    } finally Streams.dropDir(indexDir)
+      // safe to drop the temp index: the fold localCheckpoints the
+      // store every batch, so it holds no lineage into these files
+    }
   }
 
   lazy val st13Sql: String = graft.operators.LlmText.d30Sql
@@ -595,8 +593,7 @@ object AdAnalytics {
     import graft.operators.Embeddings
     import graft.jobs.IncrementalIndex
     val mod = Embeddings.IncrementalBatchModE
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st14-idx-").toString
-    try {
+    Streams.withTempDir("graft-st14-idx-") { indexDir =>
       val vecs = graft.Tables.embeddings(s, dir)
       // frozen cell index from the in-JVM memo path (the
       // writeServePair discipline); per-batch probes stay explicit
@@ -606,13 +603,13 @@ object AdAnalytics {
           lit(0L).as("n_matches"), lit(true).as("kept"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
-          .where(col("vec_id") % mod === 0)) { (store, batch) =>
+          .where(col("vec_id") % mod === 0)) { (store, batch, _) =>
         val verdicts = IncrementalIndex.probeCells(s, batch, indexDir)
         IncrementalIndex.appendCellMembers(s, batch, indexDir,
           org.apache.spark.sql.SaveMode.Append)
         store.unionByName(verdicts)
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st14Sql: String = graft.operators.Embeddings.e09Sql
@@ -637,8 +634,7 @@ object AdAnalytics {
     import graft.operators.Embeddings
     import graft.jobs.IncrementalIndex
     val mod = Embeddings.IncrementalBatchModE
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st15-idx-").toString
-    try {
+    Streams.withTempDir("graft-st15-idx-") { indexDir =>
       val vecs = graft.Tables.embeddings(s, dir)
       val hist = vecs.where(col("vec_id") % mod =!= 0)
       IncrementalIndex.writeSqIndex(s, hist, hist, indexDir)
@@ -646,7 +642,7 @@ object AdAnalytics {
         .select(col("vec_id"), array().cast("array<long>").as("codes"))
       val coded = Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
-          .where(col("vec_id") % mod === 0)) { (store, batch) =>
+          .where(col("vec_id") % mod === 0)) { (store, batch, _) =>
         store.unionByName(
           IncrementalIndex.encodeSqMembers(s, batch, indexDir))
       }
@@ -656,7 +652,7 @@ object AdAnalytics {
       // OutputSchemaSpec).
       coded.select(col("vec_id"),
         concat_ws(",", col("codes").cast("array<string>")).as("codes_csv"))
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st15Sql: String = {
@@ -703,8 +699,7 @@ object AdAnalytics {
   def st16StreamingPhashIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.IncrementalBatchMod
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st16-idx-").toString
-    try {
+    Streams.withTempDir("graft-st16-idx-") { indexDir =>
       IncrementalIndex.writeMediaIndex(s,
         graft.Tables.documents(s, dir).where(col("doc_id") % mod =!= 0), indexDir)
       val empty = graft.Tables.documents(s, dir).limit(0)
@@ -712,13 +707,13 @@ object AdAnalytics {
           lit(false).as("is_dup"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
-          .where(col("doc_id") % mod === 0)) { (store, batch) =>
+          .where(col("doc_id") % mod === 0)) { (store, batch, _) =>
         val verdicts = IncrementalIndex.probeMedia(s, batch, indexDir)
         IncrementalIndex.writeMediaIndex(s, batch, indexDir,
           org.apache.spark.sql.SaveMode.Append)
         store.unionByName(verdicts)
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st16Sql: String = {
@@ -770,8 +765,7 @@ object AdAnalytics {
     import graft.operators.LlmText
     import graft.jobs.IncrementalIndex
     val mod = LlmText.ContaminationMod
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st17-idx-").toString
-    try {
+    Streams.withTempDir("graft-st17-idx-") { indexDir =>
       val docs = graft.Tables.documents(s, dir)
       // frozen bench store from the in-JVM memo path (writeServePair's
       // discipline); the per-batch probes stay the explicit recompute
@@ -781,10 +775,10 @@ object AdAnalytics {
           lit(0L).as("n_shared"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
-          .where(col("doc_id") % mod =!= 0)) { (store, batch) =>
+          .where(col("doc_id") % mod =!= 0)) { (store, batch, _) =>
         store.unionByName(IncrementalIndex.probeBench(s, batch, indexDir))
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st17Sql: String = graft.operators.LlmText.d18Sql
@@ -860,20 +854,19 @@ object AdAnalytics {
     * islands pass every substring probe pays. */
   def st19StreamingSubstrIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st19-idx-").toString
-    try {
+    Streams.withTempDir("graft-st19-idx-") { indexDir =>
       val empty = graft.Tables.documents(s, dir).limit(0)
       // batch-id-keyed appends: a crash-replayed batch overwrites its
       // own partition (idempotent), so the postings store is exactly-
       // once under recovery (StreamingSpec crash case)
-      Streams.runForeachBatchWithId(s, "append", empty)(
+      Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")) { (store, batch, bid) =>
         IncrementalIndex.writeSubstrIndexBatch(s, batch, indexDir, bid)
         store
       }
       // materialize before dropping the temp store (the probe is lazy)
       IncrementalIndex.probeSubstrSpans(s, indexDir).localCheckpoint(eager = true)
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st19Sql: String = graft.operators.LlmText.d44Sql
@@ -949,8 +942,7 @@ object AdAnalytics {
     * runs. */
   def st21StreamingGraphServe(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st21-idx-").toString
-    try {
+    Streams.withTempDir("graft-st21-idx-") { indexDir =>
       val vecs = graft.Tables.embeddings(s, dir)
       IncrementalIndex.writeServePair(s, dir, indexDir)
       val empty = vecs.limit(0)
@@ -958,10 +950,10 @@ object AdAnalytics {
           lit(0.0).as("cos"), lit(0).as("rank"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
-          .where(col("vec_id") % 5 === 0)) { (store, batch) =>
+          .where(col("vec_id") % 5 === 0)) { (store, batch, _) =>
         store.unionByName(IncrementalIndex.probeGraphServe(s, batch, indexDir))
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st21Sql: String = graft.operators.Embeddings.e23Sql
@@ -993,8 +985,7 @@ object AdAnalytics {
     import graft.jobs.IncrementalIndex
     import graft.operators.Embeddings
     val modE = Embeddings.IncrementalBatchModE
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st22-idx-").toString
-    try {
+    Streams.withTempDir("graft-st22-idx-") { indexDir =>
       val vecs = graft.Tables.embeddings(s, dir)
       // bootstrap pair from the in-JVM memo path (writeServePair's
       // discipline — warm pays the parquet write, cold rebuilds);
@@ -1003,7 +994,7 @@ object AdAnalytics {
       val empty = vecs.limit(0)
         .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
           lit(0.0).as("cos"), lit(0).as("rank"))
-      Streams.runForeachBatchWithId(s, "append", empty)(
+      Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
           .where(col("vec_id") % modE === 0)) { (store, batch, bid) =>
         // probe BEFORE appending; exceptBid hides a crash-replayed
@@ -1014,7 +1005,7 @@ object AdAnalytics {
         IncrementalIndex.writeGraphEdgesBatch(s, edges, indexDir, bid)
         store.unionByName(edges)
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st22Sql: String = graft.operators.Embeddings.onlineInsertSql
@@ -1041,8 +1032,7 @@ object AdAnalytics {
     val mod = LlmText.ContaminationMod
     val bits = s.conf.get(BloomFilter.BitsConf, BloomFilter.DefaultBits.toString).toInt
     val k = s.conf.get(BloomFilter.KConf, BloomFilter.DefaultK.toString).toInt
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st23-idx-").toString
-    try {
+    Streams.withTempDir("graft-st23-idx-") { indexDir =>
       val docs = graft.Tables.documents(s, dir)
       // frozen serve pair (strings + bits) from the in-JVM memo path
       IncrementalIndex.writeBenchIndexFixture(s, dir, indexDir)
@@ -1052,10 +1042,10 @@ object AdAnalytics {
           lit(0L).as("n_shared"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
-          .where(col("doc_id") % mod =!= 0)) { (store, batch) =>
+          .where(col("doc_id") % mod =!= 0)) { (store, batch, _) =>
         store.unionByName(IncrementalIndex.probeBenchBloom(s, batch, indexDir))
       }
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st23Sql: String = graft.operators.LlmText.d18Sql
@@ -1089,20 +1079,19 @@ object AdAnalytics {
   def st24StreamingRetraction(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
     import graft.operators.Embeddings
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st24-idx-").toString
-    try {
+    Streams.withTempDir("graft-st24-idx-") { indexDir =>
       val vecs = graft.Tables.embeddings(s, dir)
       IncrementalIndex.writeServePair(s, dir, indexDir)
       val empty = vecs.limit(0).select(col("vec_id"))
-      Streams.runForeachBatchWithId(s, "append", empty)(
+      Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
           .where(col("vec_id") % Embeddings.VecTombMod === Embeddings.VecTombRem)
           .select(col("vec_id"))) { (store, batch, bid) =>
         IncrementalIndex.writeVecTombstonesBatch(s, batch, indexDir, bid)
-        store.unionByName(batch)
+        store
       }
       IncrementalIndex.probeGraphServeLive(s, indexDir)
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st24Sql: String = graft.operators.Embeddings.e24Sql
@@ -1139,20 +1128,19 @@ object AdAnalytics {
     import graft.jobs.IncrementalIndex
     import graft.operators.LlmText
     val mod = LlmText.IncrementalBatchMod
-    val indexDir = java.nio.file.Files.createTempDirectory("graft-st25-idx-").toString
-    try {
+    Streams.withTempDir("graft-st25-idx-") { indexDir =>
       val docs = graft.Tables.documents(s, dir)
       IncrementalIndex.writeClusterBootstrapFixture(s, dir, indexDir)
       val empty = docs.limit(0)
         .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      Streams.runForeachBatchWithId(s, "append", empty)(
+      Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
           .where(col("doc_id") % mod === 0)) { (store, batch, bid) =>
         IncrementalIndex.applyClusterBatch(s, batch, indexDir, bid)
         store
       }
       IncrementalIndex.resolveClusterLabels(s, indexDir)
-    } finally Streams.dropDir(indexDir)
+    }
   }
 
   lazy val st25Sql: String = graft.operators.LlmText.d14Sql

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming plumbing shared by the ad-analytics suite
@@ -14,6 +13,14 @@ import org.apache.spark.sql.streaming.Trigger
   * batch aggregate over the same input. Kafka would swap in via
   * `readStream.format("kafka")` with the identical downstream plan
   * (SURVEY S5); unit tests use MemoryStream for multi-batch behavior.
+  *
+  * Every query runs through ONE runner ([[drain]]): a `foreachBatch`
+  * fold into a running store, materialized per batch by
+  * `localCheckpoint` ([[StoreFold]]). The complete/append runners are
+  * that fold with "the batch replaces the store" / "union" merges —
+  * `foreachBatch` as the general sink (Structured Streaming, SIGMOD
+  * 2018) — so no temp view or cached store outlives a query; the JDBC
+  * runner is the same fold with a side-effecting merge.
   */
 object Streams {
 
@@ -58,9 +65,6 @@ object Streams {
     graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(d.toString))
   }
 
-  private def ckpt(): String =
-    Files.createTempDirectory("graft-ckpt-").toString
-
   /** Best-effort recursive delete of a finished query's checkpoint —
     * session-lifetime accumulation otherwise (one dir per run) — or of
     * a streaming query's temp index store. */
@@ -73,8 +77,13 @@ object Streams {
     }
   }
 
-  private def freshName(): String =
-    "graft_mem_" + UUID.randomUUID().toString.replace("-", "")
+  /** Run `body` against a fresh temp directory and drop the directory
+    * afterwards — a query's checkpoint, or a streaming ingest's index
+    * store. Whatever `body` returns must not read lazily from the dir. */
+  private[graft] def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toString
+    try body(dir) finally dropDir(dir)
+  }
 
   /** Stateful-partition lever shared by every streaming runner. A
     * stateful operator materializes one state store PER shuffle
@@ -113,76 +122,94 @@ object Streams {
     child
   }
 
-  /** Run an AvailableNow streaming aggregation to completion into a
-    * complete-mode in-memory sink (ST1 trigger + ST2 checkpoint) and
-    * return the final table. `build` receives the per-query child
-    * session (see [[streamSession]]) and must construct the WHOLE
-    * streaming frame — sources and any static join sides — against it.
-    * The result is localCheckpoint-ed (final states are small
-    * aggregates) so the memory-sink temp view and the checkpoint dir
-    * can be dropped immediately instead of accumulating for the
-    * session lifetime. */
+  /** The one runner every streaming query drains through: build the
+    * frame on a per-query child session ([[streamSession]]) — `build`
+    * must construct the WHOLE streaming frame, sources and any static
+    * join sides, against the session it is given — run it with
+    * `Trigger.AvailableNow` (ST1) and a checkpoint (ST2), fold each
+    * micro-batch into a running store in the one `foreachBatch`
+    * callback ([[StoreFold]]), and return the final store.
+    * `initialStore` receives the built frame, so a runner can start
+    * from an empty frame of the stream's own schema. Without a
+    * `checkpoint` the query gets a temp one, dropped when it finishes;
+    * a caller-owned one ([[runForeachBatchJdbc]]) is kept. */
+  private def drain(
+      s: SparkSession, outputMode: String, checkpoint: Option[String])(
+      build: SparkSession => DataFrame)(
+      initialStore: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
+    def run(cp: String): DataFrame = {
+      val stream = build(streamSession(s))
+      val fold = new StoreFold(initialStore(stream), merge)
+      stream.writeStream
+        .outputMode(outputMode)
+        .foreachBatch { (batch: DataFrame, id: Long) => fold(batch, id) }
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", cp)
+        .start()
+        .awaitTermination()
+      fold.store
+    }
+    checkpoint.fold(withTempDir("graft-ckpt-")(run))(run)
+  }
+
+  private def emptyOf(stream: DataFrame): DataFrame =
+    stream.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), stream.schema)
+
+  /** Run an AvailableNow streaming aggregation in complete mode and
+    * return its final table: every batch of a complete-mode query is
+    * the whole result, so it replaces the store. */
   def runComplete(s: SparkSession)(build: SparkSession => DataFrame): DataFrame =
-    runToMemorySink(s, "complete")(build)
+    drain(s, "complete", None)(build)(emptyOf, (_, batch, _) => batch)
 
   /** Append-mode twin of [[runComplete]] — for operators that only
     * support append output (stream-stream joins, watermark-finalized
-    * aggregations). Same materialize-then-drop resource story. */
+    * aggregations): the batches' rows accumulate by union. */
   def runAppend(s: SparkSession)(build: SparkSession => DataFrame): DataFrame =
-    runToMemorySink(s, "append")(build)
+    drain(s, "append", None)(build)(emptyOf, (store, batch, _) => store.union(batch))
 
-  private def runToMemorySink(
-      s: SparkSession, outputMode: String)(
-      build: SparkSession => DataFrame): DataFrame = {
-    val qn = freshName()
-    val cp = ckpt()
-    val child = streamSession(s)
-    val q = build(child).writeStream
-      .format("memory").queryName(qn)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
-      .start()
-    q.awaitTermination()
-    // the memory sink registers its table on the session that started
-    // the query — the child — so read it back from there
-    val result = child.table(qn).localCheckpoint(eager = true)
-    child.catalog.dropTempView(qn)
-    dropDir(cp)
-    result
-  }
+  /** Run an AvailableNow stream through `foreachBatch`, folding each
+    * micro-batch into a running store via `merge(store, batch, batchId)`
+    * (one of the [[graft.etl.Upsert]] semantics, or a side-effecting
+    * index append that returns the store unchanged). The batch id is
+    * what a crash-safe parquet ingest keys its idempotent appends on
+    * (offsets commit AFTER the callback, so a replayed batch arrives
+    * with the SAME id and an id-keyed partition overwrite makes the
+    * store exactly-once under recovery; [[graft.jobs.IncrementalIndex
+    * .writeTextIndexBatch]] / `writeSubstrIndexBatch`, crash-resume
+    * pinned in StreamingSpec). Returns the final store. */
+  def runForeachBatch(
+      s: SparkSession,
+      outputMode: String,
+      initialStore: DataFrame)(
+      build: SparkSession => DataFrame)(
+      merge: (DataFrame, DataFrame, Long) => DataFrame): DataFrame =
+    drain(s, outputMode, None)(build)(_ => initialStore, merge)
 
-  /** Fold micro-batches into a running store with BOUNDED lineage.
-    * Each batch's merge is materialized before the callback returns (a
-    * batch frame must not escape its `foreachBatch` invocation
-    * unmaterialized); every [[LineageCheckpointEvery]]-th batch swaps
-    * the persist for a `localCheckpoint`, truncating the union/
-    * anti-join chain the merges build up — persist alone does NOT cut
-    * lineage, so a 24/7 deployment would otherwise pay analysis and
-    * planning cost linear in the total batch count (the same fix
-    * `starComponentsWithRounds` applies to its per-round edge frames;
-    * a cluster deployment would use reliable checkpoints). Bounded-
-    * plan-depth behavior is pinned in StreamingSpec over ~50 batches. */
-  val LineageCheckpointEvery = 10
-
+  /** The running store of a [[drain]] and its one materialization rule:
+    * each merged store is `localCheckpoint`-ed before the callback
+    * returns (a batch frame must not escape its `foreachBatch`
+    * invocation unmaterialized), which also cuts the union/anti-join
+    * lineage the merges build up — the store's plan is one leaf however
+    * many batches a 24/7 deployment folds (pinned in StreamingSpec over
+    * ~50 batches; a cluster deployment would use reliable checkpoints).
+    * The previous store's blocks are released
+    * ([[graft.StoredMemo.release]]) and nothing enters the CacheManager.
+    * A merge that returns the store unchanged costs nothing. */
   private[graft] final class StoreFold(
       initialStore: DataFrame,
-      merge: (DataFrame, DataFrame, Long) => DataFrame,
-      checkpointEvery: Int = LineageCheckpointEvery) {
-    private var batches = 0
+      merge: (DataFrame, DataFrame, Long) => DataFrame) {
     @volatile private[graft] var store: DataFrame = initialStore
 
     def apply(batch: DataFrame, id: Long): Unit = synchronized {
-      batches += 1
-      val mergedRaw = merge(store, batch, id)
-      val merged =
-        if (batches % checkpointEvery == 0) mergedRaw.localCheckpoint(eager = true)
-        else { val m = mergedRaw.persist(); m.count(); m }
-      // safe to release the previous store (its cache or its checkpoint
-      // blocks): the new one is fully materialized above, so nothing
-      // recomputes through the old chain
-      if (store ne initialStore) graft.StoredMemo.release(store)
-      store = merged
+      val merged = merge(store, batch, id)
+      if (merged ne store) {
+        val cut = merged.localCheckpoint(eager = true)
+        // safe to release the previous store: the new one is
+        // materialized above, so nothing recomputes through the old one
+        if (store ne initialStore) graft.StoredMemo.release(store)
+        store = cut
+      }
     }
   }
 
@@ -248,8 +275,10 @@ object Streams {
     * the same merge is a `MERGE INTO` against a transactional table;
     * the per-batch store read/write here is the plain-JDBC analogue,
     * costed at |store| + |delta| per batch, history never re-read.
-    * `checkpoint` is caller-owned: it must be STABLE across restarts
-    * (a fresh temp dir per run would replay the whole source). */
+    * The in-memory fold store stays `emptyStore` (the merge returns it
+    * unchanged, which is free). `checkpoint` is caller-owned: it must
+    * be STABLE across restarts (a fresh temp dir per run would replay
+    * the whole source). */
   def runForeachBatchJdbc(
       s: SparkSession,
       outputMode: String,
@@ -259,74 +288,28 @@ object Streams {
       build: SparkSession => DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, lit, max}
-    val child = streamSession(s)
-    val q = build(child).writeStream
-      .outputMode(outputMode)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // absence is detected SPECIFICALLY (metadata probe) — any other
-        // failure, including on the read itself, aborts the batch so a
-        // transient JDBC outage can never read as "first batch" and
-        // wipe the store through the overwrite below
-        val existing =
-          if (jdbcTableExists(url, table, props))
-            Some(child.read.jdbc(url, table, props))
-          else None
-        val lastApplied = existing.flatMap { df =>
-          val r = df.agg(max(col(BatchIdCol))).collect()(0)
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-        if (!lastApplied.exists(_ >= batchId)) {
-          val store = existing.map(_.drop(BatchIdCol)).getOrElse(emptyStore)
-          val merged = merge(store, batch)
-            .withColumn(BatchIdCol, lit(batchId))
-            .localCheckpoint(true) // the plan reads the table we overwrite
-          graft.etl.Sinks.jdbcOverwrite(merged, url, table, props)
-        }
-        ()
+    drain(s, outputMode, Some(checkpoint))(build)(_ => emptyStore, { (unchanged, batch, batchId) =>
+      // absence is detected SPECIFICALLY (metadata probe) — any other
+      // failure, including on the read itself, aborts the batch so a
+      // transient JDBC outage can never read as "first batch" and
+      // wipe the store through the overwrite below
+      val existing =
+        if (jdbcTableExists(url, table, props))
+          Some(batch.sparkSession.read.jdbc(url, table, props))
+        else None
+      val lastApplied = existing.flatMap { df =>
+        val r = df.agg(max(col(BatchIdCol))).collect()(0)
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Run an AvailableNow stream through `foreachBatch`, folding each
-    * micro-batch into a running store DataFrame via `merge` (one of the
-    * [[graft.etl.Upsert]] semantics) with [[StoreFold]]'s bounded-
-    * lineage materialization. Returns the final store. */
-  def runForeachBatch(
-      s: SparkSession,
-      outputMode: String,
-      initialStore: DataFrame)(
-      build: SparkSession => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    runForeachBatchWithId(s, outputMode, initialStore)(build)(
-      (store, batch, _) => merge(store, batch))
-
-  /** [[runForeachBatch]] exposing the micro-batch id to the merge —
-    * what a crash-safe parquet ingest keys its idempotent appends on
-    * (offsets commit AFTER the callback, so a replayed batch arrives
-    * with the SAME id and an id-keyed partition overwrite makes the
-    * store exactly-once under recovery; [[graft.jobs.IncrementalIndex
-    * .writeTextIndexBatch]] / `writeSubstrIndexBatch`, crash-resume
-    * pinned in StreamingSpec). */
-  def runForeachBatchWithId(
-      s: SparkSession,
-      outputMode: String,
-      initialStore: DataFrame)(
-      build: SparkSession => DataFrame)(
-      merge: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
-    val fold = new StoreFold(initialStore, merge)
-    val cp = ckpt()
-    val child = streamSession(s)
-    val q = build(child).writeStream
-      .outputMode(outputMode)
-      .foreachBatch { (batch: DataFrame, id: Long) => fold(batch, id) }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
-      .start()
-    q.awaitTermination()
-    dropDir(cp)
-    fold.store
+      if (!lastApplied.exists(_ >= batchId)) {
+        val store = existing.map(_.drop(BatchIdCol)).getOrElse(emptyStore)
+        val merged = merge(store, batch)
+          .withColumn(BatchIdCol, lit(batchId))
+          .localCheckpoint(true) // the plan reads the table we overwrite
+        graft.etl.Sinks.jdbcOverwrite(merged, url, table, props)
+      }
+      unchanged
+    })
+    ()
   }
 }

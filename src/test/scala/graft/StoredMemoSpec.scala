@@ -220,4 +220,16 @@ class StoredMemoSpec extends AnyFunSuite {
       .map(p => root.relativize(p).toString).toSet -- allowed
     assert(offenders.isEmpty, s"memo maps outside StoredMemo: $offenders")
   }
+
+  test("Streams keeps one streaming runner and persists no store") {
+    // a second writeStream is a second runner to keep in step; a
+    // persist() in the fold is the cached store the CacheManager held
+    // on to, one entry per call
+    val path = java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    assert(java.nio.file.Files.exists(path), s"run from the repo root: $path")
+    val src = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    val runners = "writeStream".r.findAllMatchIn(src).size
+    assert(runners === 1, s"Streams.scala holds $runners writeStream sites, expected one")
+    assert(!src.contains(".persist("), "Streams.scala persists a store")
+  }
 }
