@@ -1,59 +1,92 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-provided parquet tables (TESTDATA.md).
   *
-  * Every reader is a plain parquet scan so Catalyst predicate pushdown /
-  * column pruning apply to whatever the caller chains on top — at 100 TB
-  * these tables would be partitioned (lineitem by l_shipdate month, orders
-  * by o_orderdate month, events by date) and the same code would get
-  * dynamic partition pruning for free; nothing here assumes single-file
-  * inputs.
+  * Every reader is a plain parquet scan, so predicate pushdown and
+  * column pruning apply to whatever the caller chains on top, and
+  * nothing assumes single-file inputs. Each input's schema is resolved
+  * once per file identity ([[parquet]]).
   */
 object Tables {
   private def p(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "lineitem"))
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  def region(s: SparkSession, dir: String): DataFrame     = parquet(s, p(dir, "region"))
+  def nation(s: SparkSession, dir: String): DataFrame     = parquet(s, p(dir, "nation"))
+  def customer(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "customer"))
+  def supplier(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "supplier"))
+  def part(s: SparkSession, dir: String): DataFrame       = parquet(s, p(dir, "part"))
+  def orders(s: SparkSession, dir: String): DataFrame     = parquet(s, p(dir, "orders"))
+  def lineitem(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "lineitem"))
+  def documents(s: SparkSession, dir: String): DataFrame  = parquet(s, p(dir, "documents"))
+  def embeddings(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "embeddings"))
 
-  /** `events.ts` — engine-internal contract: LongType epoch NANOS.
-    *
-    * The fixture's physical type has shifted between driver generations
-    * (TIMESTAMP(NANOS) through round 7, TIMESTAMP(MICROS) from round 8),
-    * so this reader is the single choke point that normalizes whatever
-    * is on disk back to the internal contract:
-    *
-    *  - physical INT64 / TIMESTAMP(NANOS) read under
-    *    `spark.sql.legacy.parquet.nanosAsLong=true` → already LongType
-    *    epoch nanos → pass through;
-    *  - physical TIMESTAMP(MICROS/MILLIS) → TimestampType (sessions set
-    *    `inferTimestampNTZ.enabled=false` + UTC via [[jobs.Jobs.configure]])
-    *    → `unix_micros(ts) * 1000` = the stored micros ×1000, bit-exact
-    *    with the DuckDB oracle's `epoch_ns(ts)` on the same file.
-    *
-    * Downstream code (sessionization, windows, the oracle SQL) is unaware
-    * of the physical type. The conf trio is deliberately NOT set here:
-    * mutating session conf from inside a reader is order-dependent global
-    * state; entry points call `Jobs.configure` instead. Pinned for BOTH
-    * physical variants in TablesSpec.
-    */
+  /** A parquet input read with its remembered schema: Spark infers a
+    * schema for a read without one by running a job over the footers,
+    * so only the first read of an input pays that. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemaOf(s, path)).parquet(path)
+
+  /** Session confs that change the schema Spark infers from the same
+    * files. */
+  private val InferConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** path -> (identity, schema); one entry per path. */
+  private val schemas = new ConcurrentHashMap[String, (AnyRef, StructType)]()
+
+  /** The schema Spark infers for `path` under `s`'s confs, inferred
+    * again only when the identity changes: the (path, length,
+    * modification time) of every file under `path`, from one listing,
+    * plus the values of [[InferConfs]]. A rewritten file is therefore
+    * resolved again. */
+  private[graft] def schemaOf(s: SparkSession, path: String): StructType = {
+    val id = identityOf(s, path)
+    schemas.get(path) match {
+      case (`id`, schema) => schema
+      case _ =>
+        val schema = s.read.parquet(path).schema
+        schemas.put(path, (id, schema))
+        schema
+    }
+  }
+
+  private def identityOf(s: SparkSession, path: String): AnyRef = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status reads the permissions,
+    // which the local file system gets by forking `ls` per file
+    def files(p: Path): Seq[(String, Long, Long)] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) files(f.getPath)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    (files(root), InferConfs.map(s.conf.getOption))
+  }
+
+  /** `events` with `ts` as LongType epoch nanos, whatever the file's
+    * physical timestamp type ([[normalizeTs]]). Reading INT64/NANOS as a
+    * long needs `spark.sql.legacy.parquet.nanosAsLong=true`, and a
+    * MICROS column reads as TimestampType under
+    * `inferTimestampNTZ.enabled=false`: entry points set both through
+    * [[jobs.Jobs.configure]], never this reader. Pinned for both
+    * physical variants in TablesSpec. */
   def events(s: SparkSession, dir: String): DataFrame =
-    normalizeTs(s.read.parquet(p(dir, "events")))
+    normalizeTs(parquet(s, p(dir, "events")))
 
-  /** Normalize a `ts` column to LongType epoch nanos whatever the read
-    * type was. A pure projection, so it composes with batch AND streaming
-    * frames (Streams.tableStream routes through it too — the streaming
-    * file source sees the same physical schema). No-op when `ts` is
-    * absent or already Long. */
+  /** Normalize a `ts` column to LongType epoch nanos, bit-exact with
+    * the oracle's `epoch_ns(ts)`. A pure projection, so it applies to
+    * streaming frames too; a no-op when `ts` is absent or already Long. */
   def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema.find(_.name == "ts").map(_.dataType) match {
@@ -71,18 +104,11 @@ object Tables {
     }
   }
 
-  /** Catalog-table input surface (S1: the reference reads Hive-managed
-    * tables — `session/src/main/scala/SessionStat.scala:701-710`; here
-    * the same contract is an EXTERNAL parquet table registered in the
-    * session catalog and read back via `spark.table`). The catalog scan
-    * resolves to the same parquet relation as the path read, so
-    * PushedFilters / ReadSchema / partition pruning are identical
-    * (pinned in CatalogSpec). Drop-and-recreate keeps the registered
-    * location current when one session switches fixture dirs — both are
-    * metadata-only operations. At 100 TB this is the metastore entry a
-    * warehouse would own; `etl/Sinks.saveAsTable` is the write side of
-    * the same surface.
-    */
+  /** The same input as an EXTERNAL parquet table in the session catalog,
+    * read back through `spark.table`: the scan resolves to the same
+    * parquet relation as the path read (pinned in CatalogSpec), and the
+    * catalog holds the schema. Drop-and-recreate keeps the location
+    * current when one session switches fixture dirs. */
   def catalogTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val tbl = s"${name}_cat"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -90,22 +116,13 @@ object Tables {
     s.table(tbl)
   }
 
-  /** Round-robin repartition ONLY when the input yields fewer partitions
-    * than the session parallelism. The per-row pipelines (LlmText hash
-    * work, Embeddings pairwise stages) read single-file fixtures locally
-    * — one input split would serialize every map stage — but at 100 TB
-    * the scan already has thousands of splits and an unconditional
-    * round-robin would be a full extra shuffle of the table for nothing.
-    *
-    * The partition count comes from the planned RDD (metadata only, no
-    * job runs) — but building that plan costs ~0.2-0.5 s per call, a
-    * measurable tax when every query in a suite re-reads the same
-    * table. The keyed overload memoizes the narrow/wide DECISION per
-    * (source, parallelism): sound because the fixture files are
-    * immutable within a JVM; a mutated source would need the cache
-    * cleared. */
-  private val narrowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Round-robin repartition only when the input yields fewer partitions
+    * than the session parallelism: a single-file input would otherwise
+    * serialize every map stage, while a wide scan needs no extra shuffle.
+    * Planning the scan to count its partitions costs 0.2-0.5 s, so the
+    * keyed overload remembers the decision per (key, parallelism); the
+    * key must name an input that does not change within the JVM. */
+  private val narrowCache = new ConcurrentHashMap[String, java.lang.Boolean]()
 
   def spreadIfNarrow(df: DataFrame): DataFrame = spread(df, None)
 

@@ -41,28 +41,23 @@ object Streams {
       .load()
       .selectExpr("CAST(value AS STRING) AS value")
 
-  /** Streaming read of a driver parquet table (schema inferred from a
-    * batch read of the same file — file streams require explicit schema).
-    * The file-stream source only accepts directories; the fixture is a
-    * single parquet FILE, so it is exposed through a symlink in a temp
-    * directory (no data copied). The symlink dir is cached per
-    * (dir, name) — Bench runs every streaming query twice per
-    * invocation, and un-cached this leaked a temp dir per call. */
+  /** Streaming read of a fixture parquet table, with the batch reader's
+    * schema ([[graft.Tables.schemaOf]]) and `ts` contract. The file
+    * source only accepts directories, so a single-file input is exposed
+    * through a symlink in a temp directory, made once per (dir, name)
+    * and kept for the JVM's life. */
   private val streamDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
   def tableStream(s: SparkSession, dir: String, name: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/$name.parquet")
+    val src = s"$dir/$name.parquet"
     val d = streamDirs.computeIfAbsent(s"$dir/$name", _ => {
       val t = Files.createTempDirectory(s"graft-stream-$name-")
-      Files.createSymbolicLink(t.resolve(s"$name.parquet"), src)
+      Files.createSymbolicLink(t.resolve(s"$name.parquet"), java.nio.file.Paths.get(src))
       t
     })
-    val schema = s.read.parquet(src.toString).schema
-    // same ts contract as the batch reader: LongType epoch nanos,
-    // whatever the fixture's physical timestamp type (Tables.normalizeTs
-    // is a pure projection, legal on a streaming frame)
-    graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(d.toString))
+    graft.Tables.normalizeTs(
+      s.readStream.schema(graft.Tables.schemaOf(s, src)).parquet(d.toString))
   }
 
   /** Best-effort recursive delete of a finished query's checkpoint —

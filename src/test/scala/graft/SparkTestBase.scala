@@ -26,6 +26,32 @@ object SparkTestBase {
     val out = new String(proc.getInputStream.readAllBytes())
     (proc.waitFor(), out)
   }
+
+  /** The number of Spark jobs `body` starts. Listener events arrive in
+    * order, so once a marker job run after `body` has been seen, every
+    * job `body` started has been counted. Suites run one at a time, so
+    * no other test's jobs are counted. */
+  def jobsStartedBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"graft-job-count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 abstract class GraftSuite extends AnyFunSuite {

@@ -215,6 +215,19 @@ class StreamingSpec extends GraftSuite {
       shell.take(3).map(_.getString("command")).mkString(s"${shell.size} Shell spawns, e.g. ", "; ", ""))
   }
 
+  test("building a table stream starts no job once the input's schema is resolved") {
+    Streams.tableStream(spark, sf, "events")
+    assert(SparkTestBase.jobsStartedBy(Streams.tableStream(spark, sf, "events")) === 0)
+  }
+
+  test("a warm st17 call runs 7 jobs: no schema inference, one checkpoint per batch") {
+    // a schema-inference job per fixture, stream and bench-store read,
+    // or a second checkpoint of the probe's verdicts, would add to it
+    AdAnalytics.st17StreamingDecontamination(spark, sf).collect()
+    assert(SparkTestBase.jobsStartedBy(
+      AdAnalytics.st17StreamingDecontamination(spark, sf).collect()) === 7)
+  }
+
   test("st04, st05 and st17 leave no cached store behind: nothing piles up across calls") {
     // the benchmark harness's settle: GC twice, then read the persistent
     // RDDs and the storage memory the block manager holds

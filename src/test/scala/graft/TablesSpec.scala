@@ -93,4 +93,61 @@ class TablesSpec extends GraftSuite {
     }
     assert(viaReader == viaRaw)
   }
+
+  test("a warm read resolves its schema without starting a job") {
+    Tables.events(spark, sf).schema
+    assert(SparkTestBase.jobsStartedBy(Tables.events(spark, sf).schema) === 0)
+  }
+
+  test("a file rewritten at the same path with a different schema is resolved again") {
+    import spark.implicits._
+    val path = s"${Files.createTempDirectory("graft-rewrite-")}/t.parquet"
+    Seq((1L, "a")).toDF("id", "name").write.parquet(path)
+    assert(Tables.parquet(spark, path).schema.fieldNames.toSeq === Seq("id", "name"))
+    Seq((2.5, 7)).toDF("score", "rank").write.mode("overwrite").parquet(path)
+    val again = Tables.parquet(spark, path)
+    assert(again.schema === spark.read.parquet(path).schema)
+    assert(again.collect().toSeq === Seq(Row(2.5, 7)))
+  }
+
+  test("flipping nanosAsLong or inferTimestampNTZ resolves as a plain read does") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    // a NANOS column and a UTC-unadjusted MICROS column, without the
+    // Spark schema a Spark writer would put in the footer
+    val path = s"${Files.createTempDirectory("graft-tsconf-")}/t.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 ns (TIMESTAMP(NANOS,true)); required int64 us (TIMESTAMP(MICROS,false)); }")
+    val conf = new Configuration()
+    val w = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+      .withType(schema).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("ns", 5L).append("us", 7L))
+    finally w.close()
+
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val saved = Seq(nanos, ntz).map(k => k -> spark.conf.getOption(k))
+    def under(n: Boolean, z: Boolean) = {
+      spark.conf.set(nanos, n.toString); spark.conf.set(ntz, z.toString)
+    }
+    try {
+      under(n = true, z = false)
+      val plain = Tables.parquet(spark, path).schema
+      assert(plain === spark.read.parquet(path).schema)
+      assert(plain.map(_.dataType) === Seq(LongType, TimestampType))
+      under(n = true, z = true)
+      assert(Tables.parquet(spark, path).schema === spark.read.parquet(path).schema)
+      assert(Tables.parquet(spark, path).schema("us").dataType === TimestampNTZType)
+      under(n = false, z = false)
+      intercept[Exception](spark.read.parquet(path))
+      intercept[Exception](Tables.parquet(spark, path))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
