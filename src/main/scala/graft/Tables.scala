@@ -107,12 +107,24 @@ object Tables {
   /** The same input as an EXTERNAL parquet table in the session catalog,
     * read back through `spark.table`: the scan resolves to the same
     * parquet relation as the path read (pinned in CatalogSpec), and the
-    * catalog holds the schema. Drop-and-recreate keeps the location
-    * current when one session switches fixture dirs. */
+    * catalog holds the schema, created from [[schemaOf]] so no footer is
+    * read again. The table is dropped and created again only when it is
+    * missing or points elsewhere (one session switching fixture dirs);
+    * otherwise the catalog entry and its resolved relation are reused,
+    * so a file rewritten in place needs `REFRESH TABLE`, as for any
+    * catalog table. */
   def catalogTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val tbl = s"${name}_cat"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.catalog.createTable(tbl, p(dir, name), "parquet")
+    val path = p(dir, name)
+    val catalog = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(tbl)
+    val location = new Path(path)
+    val current = catalog.tableExists(id) && catalog.getTableMetadata(id).location ==
+      location.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(location).toUri
+    if (!current) {
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.catalog.createTable(tbl, "parquet", schemaOf(s, path), Map("path" -> path))
+    }
     s.table(tbl)
   }
 

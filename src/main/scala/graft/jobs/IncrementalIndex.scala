@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.{Embeddings, LlmText, Misc, SelfJoin}
 
@@ -1442,6 +1442,13 @@ object IncrementalIndex {
         benchRowsOf(s, dir).select(col("shingle")).distinct(), "shingle", bits, k)
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
 
+  /** The stored Bloom table's schema, the (widx, word, bits, k) columns
+    * of [[graft.functions.BloomFilter.wordsDF]]: the probe reads it
+    * without a schema-inference job. */
+  private[graft] val BloomSchema = StructType(Seq(
+    StructField("widx", LongType), StructField("word", LongType),
+    StructField("bits", IntegerType), StructField("k", IntegerType)))
+
   /** [[probeBench]] with the STORED Bloom filter probed map-side before
     * the exact verify join — the Bloom-join serve path (d49's streaming
     * deployment). Reading the filter is one bounded collect (≤ bits/64
@@ -1452,10 +1459,12 @@ object IncrementalIndex {
   def probeBenchBloom(s: SparkSession, batchDocs: DataFrame, indexDir: String): DataFrame = {
     import graft.functions.BloomFilter
     import s.implicits._
-    val stored = s.read.parquet(p(indexDir, BloomWords))
-    val (bits, k) = stored.select(col("bits"), col("k")).as[(Int, Int)].head()
-    val words = BloomFilter.dense(
-      stored.select(col("widx"), col("word")).as[(Long, Long)].collect().toSeq, bits)
+    // geometry and words in one collect: every row carries (bits, k)
+    val stored = s.read.schema(BloomSchema).parquet(p(indexDir, BloomWords))
+      .as[(Long, Long, Int, Int)].collect()
+    require(stored.nonEmpty, s"no bloom filter stored under $indexDir")
+    val (_, _, bits, k) = stored.head
+    val words = BloomFilter.dense(stored.toSeq.map(r => (r._1, r._2)), bits)
     verifyBench(s, batchDocs, indexDir,
       BloomFilter.mightContainFast(s, words, col("shingle"), bits, k))
   }

@@ -715,7 +715,8 @@ object Misc {
     *  2. `sortWithinPartitions` — now the corpus is totally ordered
     *     across partition boundaries;
     *  3. `zipWithIndex` — a COUNT of each partition (cheap metadata
-    *     job) gives each partition its rank offset; attaching
+    *     job, skipped when one partition remains) gives each partition
+    *     its rank offset; attaching
     *     offset+position is narrow, per-partition, driver-free.
     *
     * Step 3 is the repo's one deliberate RDD drop-down (SURVEY §7.3
@@ -729,33 +730,42 @@ object Misc {
     * GlobalRankSpec pins rank density, agreement with the
     * single-partition window form, and that the plan contains no
     * SinglePartition exchange. */
-  val M16Parts = 32
-
   def m16GlobalRank(s: SparkSession, dir: String): DataFrame =
-    m16GlobalRankP(s, dir, M16Parts)
+    m16GlobalRankP(s, dir)
 
-  /** Partition count is a TUNING knob, not a semantic one: the total
-    * order is unique (tie-broken), so ranks are identical for any
-    * `parts` — a cluster re-size or AQE re-plan cannot change answers
-    * (pinned in GlobalRankSpec). */
+  /** The range sort m16 and m17 rank over: `repartitionByRange` on the
+    * unique `keys`, then `sortWithinPartitions`. With `parts` empty the
+    * range count is SIZED TO THE DATA: the exchange starts at
+    * `spark.sql.shuffle.partitions` and AQE's CoalesceShufflePartitions
+    * merges only ADJACENT ranges, so the partitions stay in key order
+    * (a fixture-scale input runs as one task, and `zipWithIndex` then
+    * needs no count job). A fixed `parts` is a plan AQE may not resize.
+    * Either way the count is a tuning knob, not a semantic one: the
+    * total order is unique (tie-broken), so every rank is identical for
+    * any count — a cluster re-size or AQE re-plan cannot change answers
+    * (pinned in GlobalRankSpec and QuantilesSpec). */
+  private def rangeSorted(df: DataFrame, keys: Seq[Column],
+                          parts: Option[Int]): DataFrame =
+    parts.fold(df.repartitionByRange(keys: _*))(n => df.repartitionByRange(n, keys: _*))
+      .sortWithinPartitions(keys: _*)
+
   /** The sorted pre-zipWithIndex stage of m16 — the DataFrame whose
     * PHYSICAL plan carries the whole distributed pipeline (range
     * exchange + in-partition sort, no SinglePartition). Exposed so
     * GlobalRankSpec asserts on the OPERATOR's actual plan instead of a
     * hand-rebuilt twin that could drift from it. */
   private[graft] def m16Sorted(s: SparkSession, dir: String,
-                               parts: Int): DataFrame = {
+                               parts: Option[Int] = None): DataFrame = {
     val keys = Seq(
       col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-    Tables.lineitem(s, dir)
+    rangeSorted(Tables.lineitem(s, dir)
       .where(col("l_shipdate") >= lit("2001-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
+      keys, parts)
   }
 
   private[graft] def m16GlobalRankP(s: SparkSession, dir: String,
-                                    parts: Int): DataFrame = {
+                                    parts: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
     val sorted = m16Sorted(s, dir, parts)
@@ -800,21 +810,19 @@ object Misc {
   val M17Percents: Seq[Int] = Seq(25, 50, 75, 90, 99)
 
   def m17GlobalQuantiles(s: SparkSession, dir: String): DataFrame =
-    m17GlobalQuantilesP(s, dir, M16Parts)
+    m17GlobalQuantilesP(s, dir)
 
-  /** Partition count is a tuning knob, not a semantic one (the m16
-    * contract): the total order is unique, so every rank selects the
-    * same value at any `parts` — pinned in QuantilesSpec. */
+  /** `parts` as in [[rangeSorted]]: empty sizes the range sort to the
+    * data; any count selects the same values. */
   private[graft] def m17GlobalQuantilesP(s: SparkSession, dir: String,
-                                         parts: Int): DataFrame = {
+                                         parts: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
     val keys = Seq(
       col("l_extendedprice").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-    val sorted = Tables.lineitem(s, dir)
-      .select(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
+    val sorted = rangeSorted(Tables.lineitem(s, dir)
+      .select(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
+      keys, parts)
       .select(col("l_extendedprice"))
     val rdd = sorted.rdd.map(_.getDouble(0))
     // two passes (sizes, then the positional pick): MEMORY_AND_DISK_SER,

@@ -99,7 +99,7 @@ object ExplainDump {
     def frameFor(name: String): Option[(DataFrame, String)] =
       name match {
         case "m16_global_rank" => Some((
-          graft.operators.Misc.m16Sorted(spark, sfDir, graft.operators.Misc.M16Parts),
+          graft.operators.Misc.m16Sorted(spark, sfDir),
           " (sorted pre-zipWithIndex stage — the ranked frame itself is RDD-backed)"))
         case "m15_zorder_skip" => Some((
           graft.operators.Misc.m15ZorderSkip(spark, sfDir),

@@ -148,6 +148,9 @@ class BloomFilterSpec extends GraftSuite {
     IncrementalIndex.writeBloomIndex(spark, bench, dir, bits, k)
     import spark.implicits._
     val stored = spark.read.parquet(s"$dir/${IncrementalIndex.BloomWords}")
+    assert(stored.schema.map(f => f.name -> f.dataType) ===
+      IncrementalIndex.BloomSchema.map(f => f.name -> f.dataType),
+      "the probe reads the store with a schema other than its writer's")
     val (sb, sk) = stored.select(col("bits"), col("k")).as[(Int, Int)].head()
     assert(sb === bits && sk === k, "stored geometry differs from the build call")
     val roundTrip = BloomFilter.dense(

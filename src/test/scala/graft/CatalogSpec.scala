@@ -29,6 +29,31 @@ class CatalogSpec extends GraftSuite {
     assert(spark.catalog.tableExists("region_cat"))
   }
 
+  test("a warm m08 call starts one job, the scan: the table is neither re-created nor re-inferred") {
+    Misc.m08CatalogScan(spark, sf).collect()
+    assert(SparkTestBase.jobsStartedBy(Misc.m08CatalogScan(spark, sf).collect()) === 1)
+  }
+
+  test("m08 keeps its catalog entry at one dir and re-points it when the dir switches") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import java.nio.file.{Files, Paths}
+    def relation(dir: String) = Misc.m08CatalogScan(spark, dir).queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation }.get
+    def rows(dir: String) = Misc.m08CatalogScan(spark, dir).collect().map(_.toString).sorted.toSeq
+    val before = rows(sf)
+    assert(relation(sf) eq relation(sf), "a second call at the same dir re-created the table")
+    val copy = Files.createTempDirectory("graft-catalog-copy-")
+    try {
+      Files.copy(Paths.get(sf, "orders.parquet"), copy.resolve("orders.parquet"))
+      val inputs = Misc.m08CatalogScan(spark, copy.toString).inputFiles
+      assert(inputs.nonEmpty && inputs.forall(_.contains(copy.toString)),
+        s"the table still points at the old dir: ${inputs.mkString(", ")}")
+      assert(rows(copy.toString) === before)
+      assert(Misc.m08CatalogScan(spark, sf).inputFiles.forall(_.contains(sf)))
+      assert(rows(sf) === before)
+    } finally graft.streaming.Streams.dropDir(copy.toString)
+  }
+
   test("m08 rows match the direct path read") {
     import org.apache.spark.sql.functions._
     val viaCatalog = Misc.m08CatalogScan(spark, sf).collect().map(_.toString).sorted

@@ -42,11 +42,23 @@ class GlobalRankSpec extends GraftSuite {
   }
 
   test("m16: ranks are invariant to the partition count (re-size/re-plan safe)") {
-    def ranks(parts: Int) = Misc.m16GlobalRankP(spark, sf, parts).collect()
+    def ranks(parts: Option[Int]) = Misc.m16GlobalRankP(spark, sf, parts).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(3)).toMap
-    val at32 = ranks(32)
-    assert(ranks(3) === at32)
-    assert(ranks(7) === at32)
+    val at32 = ranks(Some(32))
+    assert(ranks(Some(3)) === at32)
+    assert(ranks(Some(7)) === at32)
+    assert(ranks(None) === at32, "the sized range sort ranks differently")
+  }
+
+  test("m16: a warm call runs no stage wider than the session's shuffle partitions") {
+    // the range count starts at spark.sql.shuffle.partitions and AQE
+    // merges adjacent ranges down to the data; a fixed count above it
+    // would run that many tasks whatever the input size
+    Misc.m16GlobalRank(spark, sf).collect()
+    val limit = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (jobs, stages) = SparkTestBase.scheduledBy(Misc.m16GlobalRank(spark, sf).collect())
+    assert(stages.nonEmpty && stages.max <= limit,
+      s"stage task counts ${stages.mkString("/")} exceed $limit ($jobs jobs)")
   }
 
   test("m16: no SinglePartition exchange in the distributed plan (naive form has one)") {
@@ -55,7 +67,7 @@ class GlobalRankSpec extends GraftSuite {
     // OPERATOR's own pre-zipWithIndex stage (Misc.m16Sorted, the frame
     // m16GlobalRankP actually ranks), so an edit to the operator's
     // plan shape is caught here rather than asserted on a hand-built twin
-    val sortedPlan = Misc.m16Sorted(spark, sf, Misc.M16Parts)
+    val sortedPlan = Misc.m16Sorted(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!sortedPlan.contains("SinglePartition"),
       "distributed form unexpectedly plans a SinglePartition exchange")

@@ -83,11 +83,12 @@ class QuantilesSpec extends GraftSuite {
   test("m17: selected values are invariant to the partition count (re-size safe)") {
     // partition count only changes WHERE each rank lives, never which
     // value it selects — the total order is unique (tie-broken)
-    def at(parts: Int) = Misc.m17GlobalQuantilesP(spark, sf, parts).collect()
+    def at(parts: Option[Int]) = Misc.m17GlobalQuantilesP(spark, sf, parts).collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val at32 = at(32)
-    assert(at(3) === at32)
-    assert(at(7) === at32)
+    val at32 = at(Some(32))
+    assert(at(Some(3)) === at32)
+    assert(at(Some(7)) === at32)
+    assert(at(None) === at32, "the sized range sort selects different values")
   }
 
   test("m17: the selection pass emits only the target rows (no ranked materialization)") {

@@ -27,21 +27,29 @@ object SparkTestBase {
     (proc.waitFor(), out)
   }
 
-  /** The number of Spark jobs `body` starts. Listener events arrive in
+  /** The number of Spark jobs `body` starts. */
+  def jobsStartedBy(body: => Any): Int = scheduledBy(body)._1
+
+  /** The number of Spark jobs `body` starts, and the task count of each
+    * stage it runs, in submission order. Listener events arrive in
     * order, so once a marker job run after `body` has been seen, every
-    * job `body` started has been counted. Suites run one at a time, so
-    * no other test's jobs are counted. */
-  def jobsStartedBy(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    * job and stage `body` started has been counted. Suites run one at a
+    * time, so no other test's jobs are counted. */
+  def scheduledBy(body: => Any): (Int, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     val marker = s"graft-job-count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    // written on the listener thread only; read after the latch opens
+    var jobs = 0
+    val stages = Seq.newBuilder[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           markerSeen.countDown()
-        else jobs.incrementAndGet()
+        else if (markerSeen.getCount > 0) jobs += 1
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (markerSeen.getCount > 0) stages += e.stageInfo.numTasks
     }
     sc.addSparkListener(listener)
     try {
@@ -49,7 +57,7 @@ object SparkTestBase {
       sc.setJobDescription(marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
+      (jobs, stages.result())
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -228,6 +228,15 @@ class StreamingSpec extends GraftSuite {
       AdAnalytics.st17StreamingDecontamination(spark, sf).collect()) === 7)
   }
 
+  test("a warm st23 call runs 11 jobs: the bloom store is read with its schema in one collect") {
+    // st17's 7, the bloom store's write, and one collect of geometry and
+    // words per batch; a schema-inference job or a separate geometry
+    // read would add to it
+    AdAnalytics.st23StreamingBloom(spark, sf).collect()
+    assert(SparkTestBase.jobsStartedBy(
+      AdAnalytics.st23StreamingBloom(spark, sf).collect()) === 11)
+  }
+
   test("st04, st05 and st17 leave no cached store behind: nothing piles up across calls") {
     // the benchmark harness's settle: GC twice, then read the persistent
     // RDDs and the storage memory the block manager holds
