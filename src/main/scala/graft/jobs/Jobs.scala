@@ -61,11 +61,34 @@ object Jobs {
     * them. The two `fs` entries serve `file:` paths through
     * [[graft.etl.GraftLocalFileSystem]] (FileSystem API) and
     * [[graft.etl.GraftLocalFs]] (FileContext API, stream checkpoints),
-    * which fork no `chmod`/`readlink` process per file. */
+    * which fork no `chmod`/`readlink` process per file.
+    *
+    * The three codegen entries make a generated class compile once
+    * per JVM. Spark caches compiled classes under (the task thread's
+    * context class loader, the source):
+    *  - artifact isolation off: with it on, every session, and so every
+    *    streaming query's `newSession()` child, gets its own executor
+    *    class loader and compiles every class again. graft adds no
+    *    per-session artifact, so all sessions share one loader;
+    *  - a cache bound sized to the registry: one pass over all 168
+    *    queries compiles 1,964 to 2,004 distinct classes in one JVM
+    *    (sf0.001 and sf0.01, under the default, 7 shuffle partitions
+    *    and the shuffle self-join), against the default bound of 100;
+    *    4096 holds that twice over;
+    *  - no stage id in generated class names: AQE numbers a query's
+    *    codegen stages in the order it creates them, which varies from
+    *    run to run, and with the id in the name each numbering is a new
+    *    source for the same pipeline.
+    * The cache bound is static and the isolation flag is read when a
+    * session is created, so they are build-time confs here, and a
+    * child session inherits all three through the SparkContext. */
   val SessionConf: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "32",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.ui.enabled" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.hadoop.fs.file.impl" -> classOf[graft.etl.GraftLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.etl.GraftLocalFs].getName)
 

@@ -80,30 +80,22 @@ object Streams {
     try body(dir) finally dropDir(dir)
   }
 
-  /** Stateful-partition lever shared by every streaming runner. A
-    * stateful operator materializes one state store PER shuffle
-    * partition per operator (a stream-stream join keeps four: two per
-    * side), and each store pays a per-micro-batch delta-file commit
-    * regardless of how many rows it holds. At local[32] with 32 shuffle
-    * partitions that fixed toll dominates: st09 measured 8.0 s at 32
-    * partitions vs 3.0 s at 4 on sf0.1 (floor ~2.9 s = scan + micro-batch
-    * cost; 1 partition is NOT faster — the join work re-serializes).
-    * Default 4 fits the single-node harness; on a real cluster set
-    * `spark.graft.streaming.statePartitions` to a small multiple of the
-    * executor count so state shards spread while stores stay coarse.
-    * Results are partition-count independent (deterministic aggregates /
-    * joins) — only the store count changes.
+  /** The per-query child session every streaming runner builds its
+    * frame on (`newSession`: same SparkContext and shared state, its
+    * own SQL conf and catalog). It carries the parent's runtime conf,
+    * except that its shuffle partitions, and so the state stores per
+    * stateful operator, are `spark.graft.streaming.statePartitions`
+    * (default 4): each store pays a delta-file commit per micro-batch
+    * however few rows it holds, so on a real cluster set it to a small
+    * multiple of the executor count. Results do not depend on it.
     *
-    * The override is scoped to a PER-QUERY CHILD SESSION (`newSession`:
-    * same SparkContext and shared state, isolated SQL conf + catalog)
-    * instead of a set/restore window on the caller's session conf — a
-    * concurrent batch query or second streaming runner on the shared
-    * session raced on that window and could plan with (or restore to)
-    * the wrong partition count. Runners therefore BUILD the streaming
-    * frame against the child session (the builder-lambda signature):
-    * the conf a streaming query reads at start is the one of the
-    * session its frame was resolved on, so handing over an already-
-    * built frame would re-smuggle the parent conf in. */
+    * A child rather than a set/restore window on the caller's conf, so
+    * a concurrent query on the shared session cannot plan with, or
+    * restore to, the wrong count; runners therefore build the frame
+    * against the child (a query reads the conf of the session its
+    * frame was resolved on). The child runs its tasks under the
+    * parent's executor class loader ([[graft.jobs.Jobs.SessionConf]]),
+    * so it reuses every class already compiled for the parent. */
   private def streamSession(s: SparkSession): SparkSession = {
     val child = s.newSession()
     // newSession inherits builder-time options but NOT runtime-set conf

@@ -232,4 +232,17 @@ class PlanAuditSpec extends GraftSuite {
     assert(Tables.spreadIfNarrow(narrow, "audit-narrow").rdd.getNumPartitions === par)
     assert(Tables.spreadIfNarrow(narrow, "audit-narrow").rdd.getNumPartitions === par)
   }
+
+  test("ExplainDump dumps m16's range-sorted stage, not its RDD scan, in either mode") {
+    val (df, note) = tools.ExplainDump.frameFor(spark, sf, "m16_global_rank").get
+    assert(plan(df).contains("rangepartitioning"), s"no range exchange in the m16 frame:\n${plan(df)}")
+    assert(note.contains("pre-zipWithIndex"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-explain-")
+    try {
+      tools.ExplainDump.dumpQueries(spark, sf, dir.toString, Seq("m16_global_rank"))
+      val dumped = java.nio.file.Files.readString(dir.resolve("m16_global_rank.txt"))
+      assert(dumped.startsWith(s"# m16_global_rank$note\n"), dumped.take(200))
+      assert(dumped.contains("rangepartitioning"), dumped)
+    } finally graft.streaming.Streams.dropDir(dir.toString)
+  }
 }

@@ -14,6 +14,9 @@ class SessionSpec extends GraftSuite {
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.ui.enabled" -> "false",
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.sql.codegen.useIdInClassName" -> "false",
       "spark.hadoop.fs.file.impl" -> "graft.etl.GraftLocalFileSystem",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.etl.GraftLocalFs"))
     assert(Jobs.RuntimeConf === Map(
@@ -25,6 +28,20 @@ class SessionSpec extends GraftSuite {
     // for 4; JobsSpec's job mains reapply the factory's 32)
     val live = (Jobs.SessionConf ++ Jobs.RuntimeConf) - "spark.sql.shuffle.partitions"
     live.foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+  }
+
+  test("a newSession() child runs its tasks under its parent's context class loader") {
+    // the codegen cache is keyed on this loader: one loader for every
+    // session means a class compiled for the parent serves the child
+    def taskLoader(s: org.apache.spark.sql.SparkSession): String = {
+      import s.implicits._
+      s.range(0, 1, 1, 1).map(_ => Thread.currentThread.getContextClassLoader.toString).head()
+    }
+    val child = spark.newSession()
+    assert(child.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    assert(child.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(child.conf.get("spark.sql.codegen.useIdInClassName") === "false")
+    assert(taskLoader(child) === taskLoader(spark))
   }
 
   test("master rule: SPARK_GRAFT_MASTER, else local[SPARK_GRAFT_CPUS], else local[*]") {

@@ -27,6 +27,15 @@ object SparkTestBase {
     (proc.waitFor(), out)
   }
 
+  /** The number of classes codegen compiles while `body` runs; a class
+    * served from the codegen cache is not counted. */
+  def compilesBy(body: => Any): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
+
   /** The number of Spark jobs `body` starts. */
   def jobsStartedBy(body: => Any): Int = scheduledBy(body)._1
 
