@@ -150,15 +150,4 @@ object Tables {
     }
     if (narrow) df.repartition(target) else df
   }
-
-  /** events + derived time columns shared by the session / ad suites.
-    * All derivations are integer arithmetic on epoch nanos so they are
-    * bit-identical to the oracle's `epoch_ns`-based expressions.
-    */
-  def eventsEnriched(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .withColumn("sec", expr("ts div 1000000000"))
-      .withColumn("t", expr("timestamp_micros(ts div 1000)"))
-      .withColumn("date", date_format(col("t"), "yyyy-MM-dd"))
-      .withColumn("hour", hour(col("t")))
 }

@@ -2,8 +2,7 @@ package graft.etl
 
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Output surfaces (SURVEY S6/S7/S9/S11): JDBC append, managed-table
@@ -23,32 +22,6 @@ object Sinks {
   def jdbcAppend(df: DataFrame, url: String, table: String,
                  props: Properties = new Properties()): Unit =
     df.write.mode(SaveMode.Append).jdbc(url, table, props)
-
-  /** Overwrite a JDBC table wholesale — the store side of a persisted
-    * foreachBatch fold ([[graft.streaming.Streams.runForeachBatchJdbc]]).
-    * String columns are declared `VARCHAR(varcharWidth)` at creation
-    * (Spark's default mapping makes them LOBs on several dialects — not
-    * comparable, not indexable; same fix as the jobs layer's keyed
-    * appends) UNLESS the caller already supplies
-    * `createTableColumnTypes` in `props`, which always wins. CONTRACT:
-    * string values longer than `varcharWidth` (default 1024) fail or
-    * truncate dialect-dependently — widen the parameter or pass your
-    * own column types for wide-text stores. `df` must be MATERIALIZED
-    * (checkpointed/collected lineage) if its plan reads the same
-    * table — overwrite truncates before writing, so an unmaterialized
-    * self-referential plan would consume its own truncation. */
-  def jdbcOverwrite(df: DataFrame, url: String, table: String,
-                    props: Properties = new Properties(),
-                    varcharWidth: Int = 1024): Unit = {
-    val p2 = new Properties()
-    p2.putAll(props)
-    val varchars = df.schema.fields
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .map(f => s"${f.name} VARCHAR($varcharWidth)").mkString(", ")
-    if (varchars.nonEmpty && !p2.containsKey("createTableColumnTypes"))
-      p2.setProperty("createTableColumnTypes", varchars)
-    df.write.mode(SaveMode.Overwrite).jdbc(url, table, p2)
-  }
 
   /** Drop `name` AND its managed-table location. Overwrite-mode
     * saveAsTable replaces a TABLE but refuses an orphaned LOCATION
@@ -87,57 +60,6 @@ object Sinks {
     * SinksSpec). */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
-
-  /** Small-file COMPACTION — the maintenance pass every streaming sink
-    * and per-batch append layout eventually needs: micro-batches and
-    * daily appends leave directories of tiny files, and at 100 TB the
-    * scan cost becomes namenode listing + a task per file instead of
-    * bytes. Rewrites `path` into ~`targetFileBytes` outputs:
-    *
-    *  - unpartitioned: file count from the LIVE byte size (ceil of
-    *    bytes/target, never 0), laid out by round-robin `repartition(n)`
-    *    — no keyed shuffle, no sort, no skew;
-    *  - partitioned (`partitionCols` non-empty): rows shuffle on the
-    *    partition key so each directory is rewritten by the tasks that
-    *    hold its rows (normally ONE file per directory — the streaming-
-    *    sink rescue), with `maxRecordsPerFile` bounding any oversized
-    *    directory instead of emitting one giant file. Pruning survives
-    *    because the directory layout is identical.
-    *
-    * The rewrite stages through a `.compact-tmp` sibling (Spark cannot
-    * overwrite a path it reads) and swaps by renaming the ORIGINAL
-    * aside first (`.compact-old`), renaming the rewrite into place,
-    * then deleting the old copy — the no-data window is one rename, and
-    * a crash mid-swap leaves a recoverable copy under one of the two
-    * sibling names instead of silently losing the directory; a
-    * lakehouse deployment would make the same swap a table-format
-    * transaction (rewrite-data-files) instead. */
-  def compact(s: SparkSession, path: String,
-              targetFileBytes: Long = 128L << 20,
-              partitionCols: Seq[String] = Nil,
-              maxRecordsPerFile: Long = 0L): Unit = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
-    val src = new org.apache.hadoop.fs.Path(path)
-    val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(src).getLength
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    val df = s.read.parquet(path)
-    val writer =
-      if (partitionCols.isEmpty) {
-        val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        df.repartition(n).write
-      } else {
-        df.repartition(partitionCols.map(col): _*).write
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy(partitionCols: _*)
-      }
-    writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + ".compact-old")
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
-    require(fs.rename(src, old), s"compaction could not move $path aside")
-    require(fs.rename(tmp, src), s"compaction could not swap $tmp into $path")
-    require(fs.delete(old, true), s"compaction could not remove $old")
-  }
 
   /** Bucketed managed table (the co-located-join layout): rows are
     * hash-bucketed AND sorted by the join key at write time, so a join

@@ -6,10 +6,10 @@ import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions
 
 /** KMV (k-minimum-values) distinct-count sketch as a MERGEABLE typed
-  * `Aggregator` — the form that actually scales (round-4 verdict): the
-  * buffer is the k smallest DISTINCT hash values, bounded at k elements,
-  * so map-side partial aggregation reduces every partition to ≤ k values
-  * per group BEFORE the exchange. The window-form derivation
+  * `Aggregator` — the form that scales: the buffer is the k smallest
+  * DISTINCT hash values, bounded at k elements, so map-side partial
+  * aggregation reduces every partition to ≤ k values per group BEFORE
+  * the exchange. The window-form derivation
   * (row_number ≤ k, [[graft.operators.Misc.m10KmvWindowForm]]) computes
   * the same sketch but shuffles the whole distinct key universe into one
   * sort per group — at 100 TB that is a single-reducer sort per group,
@@ -99,46 +99,6 @@ object KmvSketch {
     override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  /** Ascending-strict check — the [[kUnion]] input contract. O(n), one
-    * pass, no allocation: the price of never merging a corrupted or
-    * hand-written sketch row silently wrong. */
-  private[functions] def isAscendingDistinct(a: Array[Long]): Boolean = {
-    var i = 1
-    while (i < a.length) { if (a(i) <= a(i - 1)) return false; i += 1 }
-    true
-  }
-
-  /** UNION of already-built sketches (the DataSketches "union
-    * operator"): inputs are retained k-min value arrays (ascending,
-    * distinct — the [[KmvValuesAgg]] output contract), the result is
-    * the k-min of their distinct union. This is what merges PERSISTED
-    * per-partition/per-day sketch partials at read time
-    * ([[graft.jobs.IncrementalIndex]]'s sketch store) without touching
-    * the base table. Stored rows are data, not code: a row that
-    * violates the ascending-distinct contract (hand-written, or
-    * corrupted at rest) is NORMALIZED (sort + dedup) before the union
-    * instead of merging silently wrong — the sketch a deployment reads
-    * back is then the sketch of whatever values the row actually held
-    * (round-11 advisory). */
-  private[graft] final class KmvMergeAgg(k: Int)
-      extends Aggregator[Seq[Long], Array[Long], Array[Long]] {
-    require(k >= 1, s"kmv sketch size must be >= 1, got $k")
-    override def zero: Array[Long] = Array.emptyLongArray
-    override def reduce(b: Array[Long], sk: Seq[Long]): Array[Long] =
-      if (sk == null) b
-      else {
-        val arr = sk.toArray
-        val clean =
-          if (isAscendingDistinct(arr)) arr
-          else arr.toIndexedSeq.distinct.sorted.toArray
-        kUnion(k, b, clean)
-      }
-    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = kUnion(k, b1, b2)
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
-
   // ------------------------------------------------------- rank sketch
   /** Sorted-insert of a (hash, value) pair: ascending and distinct by
     * hash, ≤ k long, MIN value on a hash tie — the structural
@@ -152,7 +112,7 @@ object KmvSketch {
     * false for every NaN comparison, so insert-path ties would keep the
     * incumbent while math.min on the merge path would keep the NaN —
     * same input set, different sketches depending on which path the
-    * pair travelled (round-12 review finding). */
+    * pair travelled. */
   private def pairLt(a: Double, b: Double): Boolean =
     java.lang.Double.compare(a, b) < 0
 
@@ -252,56 +212,6 @@ object KmvSketch {
     * reproduces membership exactly. */
   def kmvPairs(k: Int): UserDefinedFunction = functions.udaf(new KmvPairsAgg(k))
 
-  /** Ascending-strict-by-hash check for pair arrays ([[kUnionPair]]'s
-    * input contract). */
-  private[functions] def isAscendingDistinctPairs(a: Array[(Long, Double)]): Boolean = {
-    var i = 1
-    while (i < a.length) { if (a(i)._1 <= a(i - 1)._1) return false; i += 1 }
-    true
-  }
-
-  /** UNION of already-built PAIR sketches — [[KmvMergeAgg]]'s rank-
-    * sketch twin: merges PERSISTED per-day pair-sketch partials at read
-    * time (the quantile store's probe) without touching the base
-    * table. Non-contract stored rows normalize (sort by hash, min
-    * value per hash) instead of merging silently wrong — the
-    * [[KmvMergeAgg]] discipline. */
-  private[graft] final class KmvPairsMergeAgg(k: Int)
-      extends Aggregator[Seq[(Long, Double)], Array[(Long, Double)], Array[(Long, Double)]] {
-    require(k >= 1, s"kmv sketch size must be >= 1, got $k")
-    override def zero: Array[(Long, Double)] = Array.empty[(Long, Double)]
-    override def reduce(b: Array[(Long, Double)],
-                        sk: Seq[(Long, Double)]): Array[(Long, Double)] =
-      if (sk == null) b
-      else {
-        val arr = sk.toArray
-        val clean =
-          if (isAscendingDistinctPairs(arr)) arr
-          // per-hash min via pairLt, NOT an implicit Ordering[Double].min:
-          // normalization must share the insert/merge paths' one total
-          // order by construction (Scala 2.13's default Ordering happens
-          // to agree today, but only accidentally — round-13 advisory)
-          else arr.groupBy(_._1).iterator
-            .map { case (h, g) =>
-              (h, g.iterator.map(_._2).reduce((x, y) => if (pairLt(y, x)) y else x))
-            }
-            .toArray.sortBy(_._1)
-        kUnionPair(k, b, clean)
-      }
-    override def merge(b1: Array[(Long, Double)],
-                       b2: Array[(Long, Double)]): Array[(Long, Double)] =
-      kUnionPair(k, b1, b2)
-    override def finish(b: Array[(Long, Double)]): Array[(Long, Double)] = b
-    override def bufferEncoder: Encoder[Array[(Long, Double)]] =
-      ExpressionEncoder[Array[(Long, Double)]]()
-    override def outputEncoder: Encoder[Array[(Long, Double)]] =
-      ExpressionEncoder[Array[(Long, Double)]]()
-  }
-
-  /** Column-API handle merging stored pair-sketch arrays. */
-  def kmvPairsMerge(k: Int): UserDefinedFunction =
-    functions.udaf(new KmvPairsMergeAgg(k))
-
   /** Test handle for the pair-sketch law checks. */
   private[graft] def pairsAgg(k: Int): KmvPairsAgg = new KmvPairsAgg(k)
 
@@ -310,15 +220,12 @@ object KmvSketch {
     * the hash so the DuckDB oracle can reproduce it). */
   def kmv(k: Int): UserDefinedFunction = functions.udaf(new KmvAgg(k))
 
-  /** Column-API handle merging stored sketch arrays: `kmvMerge(64)(col("sk"))`. */
-  def kmvMerge(k: Int): UserDefinedFunction = functions.udaf(new KmvMergeAgg(k))
-
   /** The KMV readout estimate over a retained k-min VALUE array column:
     * exact count while the sketch isn't full, else (k−1)·2^60 / k-th
     * min — (k−1)·2^60 is exact in a double and the division is one
     * correctly-rounded op, identical in DuckDB. ONE definition for
-    * every array-form readout site (m18, st18, the persisted sketch
-    * store) so the estimator can never drift between them. */
+    * every array-form readout site (m18, st18) so the estimator can
+    * never drift between them. */
   def estDistinct(k: Int)(sk: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     when(size(sk) < k, size(sk).cast("double"))

@@ -33,9 +33,8 @@ object Portable {
   def normTextSql(e: String): String =
     s"regexp_replace(lower(trim($e)), '\\s+', ' ', 'g')"
 
-  /** Whitespace tokens of normalized text. */
-  def tokens(c: Column): Column = split(normText(c), " ")
-
+  /** Whitespace tokens of normalized text, DuckDB side; the Spark side
+    * splits [[normText]] on " " ([[graft.operators.LlmText.baseFrom]]). */
   def tokensSql(e: String): String = s"string_split(${normTextSql(e)}, ' ')"
 
   /** Word n-gram shingles over a token array (empty when fewer than n

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.{Embeddings, LlmText, Misc, SelfJoin}
+import graft.operators.{Embeddings, LlmText, SelfJoin}
 
 /** The PERSISTED incremental-dedup index — the store that turns d30/e09
   * from operators into a daily pipeline with a day 2.
@@ -29,20 +29,10 @@ import graft.operators.{Embeddings, LlmText, Misc, SelfJoin}
   *    assignment plus its quantized form for exact cosine verification.
   *  - `pq_codebook`   (m, code, cw, ncw) — the TRAINED product-quantizer
   *    codebook (per-subspace Lloyd, e12's machinery), frozen like the
-  *    centroids; [[retrainPq]] is its refresh event.
+  *    centroids; a rebuild ([[writePqIndex]]) is its refresh event.
   *  - `pq_codes`      (cell, vec_id, codes, nrecon) — every member's
   *    4-byte PQ encoding, the table an IVFPQ index persists: an ADC
   *    scan reads codes + codebook, never a raw vector.
-  *  - `term_stats`    (term, df, widf) — the SPARSE retrieval half's
-  *    frozen idf: document frequency and the integer-quantized weight
-  *    `QuantIdf div df`, computed ONCE at build and reused for every
-  *    later batch (the `cell_centroids` convention for lexical
-  *    statistics; re-weighting is the separate [[reidf]] event).
-  *  - `postings`      (doc_id, term, w) — the weighted inverted index
-  *    d33 materializes in-query; persisted, a batch of queries retrieves
-  *    with ZERO corpus re-tokenization.
-  *  - `doc_norms`     (doc_id, nw) — exact integer self-norms Σ w², so
-  *    candidate-side cosine needs no postings re-aggregation.
   *
   * Daily cost ∝ |batch| × collision width: the probe joins are the same
   * strategy-gated equi-joins as d30/e09 ([[SelfJoin]]: broadcast
@@ -62,23 +52,16 @@ object IncrementalIndex {
   val TextShingles = "text_shingles"
   val CellCentroids = "cell_centroids"
   val CellMembers = "cell_members"
-  val TermStats = "term_stats"
-  val Postings = "postings"
-  val DocNorms = "doc_norms"
   val PqCodebook = "pq_codebook"
   val PqCodes = "pq_codes"
   val SqQuantizer = "sq_quantizer"
   val SqCodes = "sq_codes"
   val MediaBands = "media_bands"
-  val BpeMerges = "bpe_merges"
   val BenchShingles = "bench_shingles"
   val RhPostings = "rh_postings"
-  val KmvSketches = "kmv_sketches"
   val GraphEdges = "graph_edges"
   val LshBuckets = "lsh_buckets"
   val TruthTopK = "truth_topk"
-  val QuantSketches = "quant_sketches"
-  val DocTombstones = "doc_tombstones"
   val VecTombstones = "vec_tombstones"
   val BloomWords = "bloom_words"
   val ClusterLabels = "cluster_labels"
@@ -91,61 +74,39 @@ object IncrementalIndex {
     * hashing). Batch frames from a one-file stream source and the
     * fixture's one-file parquet scans arrive as a SINGLE partition, so
     * such a probe/build ran its map stage one-core regardless of
-    * cluster size (r13 measurement: st23's bloom probe 3.7 s narrow vs
-    * 2.2 s spread at sf0.1; guide §2.5 input skew — repartition
-    * immediately after a narrow read). Conditional, so an
-    * already-parallel input pays nothing. Applied ONLY on the text/
+    * cluster size (st23's bloom probe measured 3.7 s narrow vs 2.2 s
+    * spread at sf0.1; input skew — repartition immediately after a
+    * narrow read). Conditional, so an already-parallel input pays
+    * nothing. Applied ONLY on the text/
     * shingle paths: the vector-side derivations (quantize, phash) are
     * ~1–10 µs/row, where the measured A/B showed the batch-sized
     * exchange costs more than it parallelizes. */
   private def spread(df: DataFrame): DataFrame = graft.Tables.spreadIfNarrow(df)
 
   // ------------------------------------------------------- tombstones
-  /** Which tombstone table filters which store table, on which id
+  /** Which store tables the vec-id tombstones filter, on which id
     * columns. Row-LOCAL tables (one row belongs to one id) filter
     * exactly; the ranked artifacts (`graph_edges`, `truth_topk`) name
     * BOTH endpoint columns — an edge or truth row dies when EITHER side
     * is retracted (a serve may neither return a deleted id nor route
-    * through one) — and filtering them is sound but lossy: the rebuild
-    * is the completeness-restoring event (see [[vacuum]]). */
-  private val tombKeys: Map[String, (String, Seq[String])] = Map(
-    TextBands -> ((DocTombstones, Seq("doc_id"))),
-    TextShingles -> ((DocTombstones, Seq("doc_id"))),
-    Postings -> ((DocTombstones, Seq("doc_id"))),
-    DocNorms -> ((DocTombstones, Seq("doc_id"))),
-    RhPostings -> ((DocTombstones, Seq("doc_id"))),
-    CellMembers -> ((VecTombstones, Seq("vec_id"))),
-    LshBuckets -> ((VecTombstones, Seq("vec_id"))),
-    PqCodes -> ((VecTombstones, Seq("vec_id"))),
-    SqCodes -> ((VecTombstones, Seq("vec_id"))),
-    GraphEdges -> ((VecTombstones, Seq("query_id", "neighbor_id"))),
-    TruthTopK -> ((VecTombstones, Seq("query_id", "neighbor_id"))))
+    * through one) — and filtering them is sound but lossy: a rebuild
+    * over the survivors is the completeness-restoring event. */
+  private val tombKeys: Map[String, Seq[String]] = Map(
+    CellMembers -> Seq("vec_id"),
+    LshBuckets -> Seq("vec_id"),
+    PqCodes -> Seq("vec_id"),
+    SqCodes -> Seq("vec_id"),
+    GraphEdges -> Seq("query_id", "neighbor_id"),
+    TruthTopK -> Seq("query_id", "neighbor_id"))
 
   private def tableExists(s: SparkSession, path: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  /** Record upstream RETRACTIONS: the ids land append-only in the
-    * index's tombstone table (`ids` is a 1-column frame of doc ids).
-    * Deletion is the third lifecycle verb beside probe and append — a
-    * real corpus pipeline must remove retracted documents from every
-    * frozen artifact without rebuilding any of them; the tombstone
-    * table is the cheap half (probes anti-join it via [[liveTable]]),
-    * [[vacuum]] the physical half. */
-  def writeDocTombstones(s: SparkSession, ids: DataFrame, indexDir: String,
-                         mode: SaveMode = SaveMode.Append): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-      .write.mode(mode).parquet(p(indexDir, DocTombstones))
-
-  /** [[writeDocTombstones]]'s embedding twin (vec ids). */
-  def writeVecTombstones(s: SparkSession, ids: DataFrame, indexDir: String,
-                         mode: SaveMode = SaveMode.Append): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("vec_id"))
-      .write.mode(mode).parquet(p(indexDir, VecTombstones))
-
-  /** Batch-keyed tombstone append — st24's layout for [[VecTombstones]]
-    * (the [[writeLshIndexBatch]] convention applied to retractions):
+  /** Record upstream RETRACTIONS (`ids` is a 1-column frame of vec
+    * ids) — st24's layout for [[VecTombstones]] (the
+    * [[writeLshIndexBatch]] convention applied to retractions):
     * each micro-batch's retracted ids land in their own idempotent
     * `bid=<id>` partition, so a crash-replayed batch OVERWRITES its
     * earlier append instead of duplicating it. Exactly-once here is
@@ -163,13 +124,13 @@ object IncrementalIndex {
     * broadcast anti-join per id column (the ranked artifacts pass both
     * endpoints). The tombstone set is retraction-sized — ≪ corpus, the
     * broadcast-dim discipline — so the filter costs one map-side
-    * probe per row until [[vacuum]] makes it free. Absent tombstone
-    * table (or a table with no id mapping) reads plain. */
+    * probe per row. Absent tombstone table (or a table with no id
+    * mapping) reads plain. */
   def liveTable(s: SparkSession, indexDir: String, table: String): DataFrame = {
     val df = s.read.parquet(p(indexDir, table))
     tombKeys.get(table) match {
-      case Some((tomb, keys)) if tableExists(s, p(indexDir, tomb)) =>
-        val ids = s.read.parquet(p(indexDir, tomb))
+      case Some(keys) if tableExists(s, p(indexDir, VecTombstones)) =>
+        val ids = s.read.parquet(p(indexDir, VecTombstones))
         val idCol = ids.columns.head
         keys.foldLeft(df)((d, k) =>
           d.join(broadcast(ids.select(col(idCol).as(k))), Seq(k), "left_anti"))
@@ -177,84 +138,9 @@ object IncrementalIndex {
     }
   }
 
-  /** VACUUM — the physical half of deletion: rewrite every store table
-    * that has tombstoned rows, dropping them, then clear the tombstone
-    * tables (after a vacuum, [[liveTable]] ≡ the plain read). Flat
-    * tables rewrite wholesale through the [[graft.etl.Sinks.compact]]
-    * tmp-and-swap dance (crash-safe: the swap is the commit point, and
-    * tombstones are only cleared once every rewrite landed — a re-run
-    * resumes); bid-keyed tables rewrite ONLY the affected partitions
-    * (the directories that actually hold a tombstoned row), each
-    * through its own swap.
-    *
-    * Exactness contract: for row-local tables the vacuumed store is
-    * row-identical to a rebuild over the survivor corpus under the
-    * same frozen artifacts (stats/centroids/codebooks — TombstoneSpec
-    * pins it). The ranked artifacts (`graph_edges`, `truth_topk`) are
-    * only FILTERED — sound (no retracted id remains) but lossy (a
-    * deleted neighbor's slot is not refilled and routing through the
-    * deleted node is gone); restoring completeness is the explicit
-    * rebuild event ([[writeGraphIndex]]/[[writeTruthIndex]] over the
-    * survivors), never part of a vacuum. */
-  def vacuum(s: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    for ((table, (tomb, keys)) <- tombKeys
-         if tableExists(s, p(indexDir, table)) &&
-           tableExists(s, p(indexDir, tomb))) {
-      val ids = s.read.parquet(p(indexDir, tomb))
-      val idCol = ids.columns.head
-      def drop(df: DataFrame): DataFrame =
-        keys.foldLeft(df)((d, k) =>
-          d.join(broadcast(ids.select(col(idCol).as(k))), Seq(k), "left_anti"))
-      val rootStr = p(indexDir, table)
-      val fs = new Path(rootStr).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bidDirs = fs.listStatus(new Path(rootStr)).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bid="))
-        .map(_.getPath.toString)
-      if (bidDirs.isEmpty) rewriteSwap(s, rootStr, drop(s.read.parquet(rootStr)))
-      else {
-        // affected partitions only: a directory is rewritten iff it
-        // holds at least one tombstoned row
-        val hit = keys.map(k =>
-            s.read.parquet(bidDirs: _*)
-              .withColumn("__dir", regexp_extract(input_file_name(), "(.*/bid=-?\\d+)/", 1))
-              .join(broadcast(ids.select(col(idCol).as(k))), Seq(k), "left_semi")
-              .select(col("__dir")))
-          .reduce(_ unionByName _)
-          .distinct().collect().map(_.getString(0)) // ≤ #dirs rows
-        hit.foreach(d => rewriteSwap(s, d, drop(s.read.parquet(d))))
-      }
-    }
-    for (tomb <- Seq(DocTombstones, VecTombstones)
-         if tableExists(s, p(indexDir, tomb)))
-      fsOf(s, p(indexDir, tomb)).delete(
-        new org.apache.hadoop.fs.Path(p(indexDir, tomb)), true)
-  }
-
   private def fsOf(s: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Rewrite `path` to hold exactly `df`'s rows via the tmp-and-swap
-    * dance ([[graft.etl.Sinks.compact]]'s crash-safety): write beside,
-    * move the original aside, swap in, drop the original. `df` must
-    * read FROM `path` lazily — the write materializes it before any
-    * rename touches the source files. The scratch names are DOT-
-    * prefixed siblings: Spark's readers skip dot-entries, so a crash
-    * leftover can never poison partition discovery of a bid-keyed
-    * table root (a `bid=3.vacuum-tmp` suffix-dir would). */
-  private def rewriteSwap(s: SparkSession, path: String, df: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(s, path)
-    val target = new Path(path)
-    val tmp = new Path(target.getParent, s".vacuum-tmp.${target.getName}")
-    val old = new Path(target.getParent, s".vacuum-old.${target.getName}")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
-    require(fs.rename(target, old), s"vacuum could not move $path aside")
-    require(fs.rename(tmp, target), s"vacuum could not swap $tmp into $path")
-    require(fs.delete(old, true), s"vacuum could not remove $old")
-  }
 
   // ------------------------------------------------------------ build
   /** Write the text half of the index for `docs` (band entries +
@@ -331,114 +217,14 @@ object IncrementalIndex {
       .write.mode(SaveMode.Overwrite)
       .parquet(s"${p(indexDir, RhPostings)}/bid=$batchId")
 
-  // ------------------------------------------------------- compaction
-  /** Compacted-segment bid encoding: the consolidation of every batch
+  /** Consolidated-segment bid encoding: the rewrite of every batch
     * partition with bid ≤ B lands in `bid = -2 - B`. Numeric, so the
     * partition column stays LongType beside live `bid=<batchId>` dirs;
     * strictly below the bootstrap's −1; and never equal to any real
     * batch id — a probe's `exceptBid(b)` (b ≥ 0, the crash-replay
-    * contract) can therefore never drop compacted rows. Successive
-    * compactions nest: the segment for B₂ > B₁ folds the B₁ segment in
-    * (−2−B₁ passes the ≤ B₂ eligibility test like any other committed
-    * partition). */
+    * contract) can therefore never drop consolidated rows. Successive
+    * rebases nest: the segment for B₂ > B₁ folds the B₁ segment in. */
   def compactedBid(upToBid: Long): Long = -2L - upToBid
-
-  /** COMPACT a batch-keyed store table: rewrite every committed
-    * `bid=<id>` partition with id ≤ `upToBid` (bootstrap −1, batch ids,
-    * and any earlier compacted segment) into ONE consolidated
-    * `bid=<compactedBid(upToBid)>` segment, then delete the originals.
-    * This is the small-files lifecycle event the exactly-once ingest
-    * layout needs: months of 5 s micro-batches accrue one directory per
-    * batch forever; compaction bounds the store at (one consolidated
-    * segment) + (directories newer than the watermark), with the
-    * segment's file count set by the scan's `maxPartitionBytes`
-    * coalescing — data-proportional, never batch-count-proportional.
-    *
-    * Watermark contract: `upToBid` must be a COMMITTED batch id (its
-    * offsets durably past — with a live stream, at most the last
-    * completed batch minus one is always safe). Structured Streaming
-    * batch ids are monotone, so no future append can land under the
-    * watermark; an in-flight replayed batch b > upToBid keeps its own
-    * `bid=b` directory and its `exceptBid(b)` probe semantics intact.
-    *
-    * Crash-safe by RESUMABILITY, not atomicity (the two-phase layout a
-    * lake store without a transaction log can honor): phase 1 writes
-    * the consolidated segment (its `_SUCCESS` marker is the commit
-    * point); phase 2 deletes the originals. A crash between the phases
-    * leaves originals beside a committed segment — duplicated rows —
-    * and the documented recovery is to RE-RUN the same compaction,
-    * which sees the committed marker, skips the rewrite, and finishes
-    * the deletes (pinned in IncrementalIndexSpec). Probes must not read
-    * the store between a compaction crash and its re-run.
-    *
-    * [[graft.etl.Sinks.compact]] is the complementary OFFLINE event: a
-    * whole-table rewrite-and-swap for flat (non-batch-keyed) stores,
-    * which must not run beside a live stream. This form does bounded
-    * work (only partitions under the watermark) and leaves every
-    * newer-than-watermark directory untouched, so it can run between
-    * micro-batches of a live ingest. */
-  def compactBatchStore(s: SparkSession, indexDir: String, table: String,
-                        upToBid: Long): Unit = {
-    require(upToBid >= -1L, s"compaction watermark must be >= -1, got $upToBid")
-    val eligible = compactWritePhase(s, indexDir, table, upToBid)
-    if (eligible.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(p(indexDir, table))
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      eligible.foreach(d =>
-        fs.delete(new org.apache.hadoop.fs.Path(d), true))
-    }
-  }
-
-  /** Phase 1 of [[compactBatchStore]] — consolidate, don't delete.
-    * Returns the original partition directories phase 2 removes (empty
-    * = nothing to compact). Package-visible so the crash-resume spec
-    * can stop between the phases. */
-  private[graft] def compactWritePhase(s: SparkSession, indexDir: String,
-                                       table: String, upToBid: Long): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val rootStr = p(indexDir, table)
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val bidDirs = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("bid="))
-          scala.util.Try(n.stripPrefix("bid=").toLong).toOption
-            .map(b => b -> st.getPath.toString)
-        else None
-      }
-    // watermarks are monotone: an existing segment covering B' > upToBid
-    // would make the new segment's label a lie about its contents
-    val newer = bidDirs.collect { case (b, _) if b < -1L && (-2L - b) > upToBid => -2L - b }
-    require(newer.isEmpty,
-      s"compaction watermark $upToBid is below an existing compacted segment's (${newer.sorted.lastOption.getOrElse(-1L)})")
-    val target = compactedBid(upToBid)
-    val eligible = bidDirs.filter { case (b, _) => b != target && b <= upToBid }
-    if (eligible.isEmpty) return Nil
-    val targetDir = s"$rootStr/bid=$target"
-    // the resume check: a committed segment (marker present) means a
-    // prior compaction crashed AFTER its write — the originals are all
-    // still on disk (deletes only follow the commit), so skip straight
-    // to finishing their removal
-    if (!fs.exists(new Path(targetDir, "_SUCCESS"))) {
-      s.read.parquet(eligible.map(_._2): _*)
-        .write.mode(SaveMode.Overwrite).parquet(targetDir)
-    }
-    eligible.map(_._2)
-  }
-
-  /** Compact the text-ingest store pair (st13's tables) at one
-    * watermark. */
-  def compactTextIndex(s: SparkSession, indexDir: String, upToBid: Long): Unit = {
-    compactBatchStore(s, indexDir, TextBands, upToBid)
-    compactBatchStore(s, indexDir, TextShingles, upToBid)
-  }
-
-  /** Compact the substring-postings store (st19's table). */
-  def compactSubstrIndex(s: SparkSession, indexDir: String, upToBid: Long): Unit =
-    compactBatchStore(s, indexDir, RhPostings, upToBid)
 
   /** Store-table read honoring the batch-keyed layout: optionally
     * EXCLUDES one batch id — a crash-replayed batch must probe the
@@ -505,30 +291,6 @@ object IncrementalIndex {
       .select(col("cell"), col("vec_id"), col("q"), col("nq"))
       .write.mode(mode).parquet(p(indexDir, CellMembers))
 
-  /** The RETRAIN event the frozen-centroid contract defers to: `rounds`
-    * Lloyd iterations ([[graft.operators.Embeddings.lloydStep]] — e11's
-    * step) over `trainVecs` starting from the STORED centroid table,
-    * then swap the frozen table and REBUILD the member table for
-    * `allVecs` under the new directions. Everything downstream keeps
-    * working because probes always read `cell_centroids` fresh — but
-    * assignments before and after a retrain are NOT comparable, which
-    * is exactly why this is a separate, explicit event and never part
-    * of a daily ingest. `trainVecs` is typically a sample; `allVecs`
-    * the full corpus (the rebuild is the expensive half — one
-    * assignment pass, map-shaped, plus the member-table rewrite). */
-  def retrain(s: SparkSession, trainVecs: DataFrame, allVecs: DataFrame,
-              indexDir: String, rounds: Int = 1): Unit = {
-    require(rounds >= 1, s"retrain needs at least one Lloyd round, got $rounds")
-    val q = Embeddings.quantizedFrom(s, trainVecs)
-    var cents = s.read.parquet(p(indexDir, CellCentroids))
-    (1 to rounds).foreach { _ => cents = Embeddings.lloydStep(s, q, cents) }
-    // materialize before the overwrite: the final plan still reads the
-    // stored table this write replaces (#cells rows — trivially small)
-    cents.localCheckpoint(true)
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, CellCentroids))
-    appendCellMembers(s, allVecs, indexDir, SaveMode.Overwrite)
-  }
-
   /** Train and freeze the PQ half beside `cell_members`: per-subspace
     * Lloyd codebook over `trainVecs`' quantized vectors (e12's
     * [[graft.operators.Embeddings.pqCodebookOf]] — seed + fixed rounds,
@@ -575,7 +337,7 @@ object IncrementalIndex {
   /** Encode `vecs` against the STORED quantizer and land their code
     * rows. `Append` is the ingest fold; `Overwrite` the build/retrain
     * rebuild (codes under different [lo, hi] tables are NOT comparable
-    * — retraining re-encodes wholesale, the [[retrainPq]] contract). */
+    * — retraining re-encodes wholesale, as [[writePqIndex]] does). */
   def encodeSqMembers(s: SparkSession, vecs: DataFrame, indexDir: String,
                       mode: SaveMode = SaveMode.Append): DataFrame = {
     val v = Embeddings.quantizedFrom(s, vecs).select(col("vec_id"), col("q"))
@@ -584,64 +346,6 @@ object IncrementalIndex {
     enc.write.mode(mode).parquet(p(indexDir, SqCodes))
     enc
   }
-
-  /** The CODEBOOK-RETRAIN event the frozen-codebook contract defers to
-    * (the [[retrain]] of the product quantizer): re-run the Lloyd
-    * training on `trainVecs` and re-encode `allVecs` wholesale — codes
-    * under different codebooks are NOT comparable, so this is a
-    * separate explicit event, never part of a daily ingest. */
-  def retrainPq(s: SparkSession, trainVecs: DataFrame, allVecs: DataFrame,
-                indexDir: String): Unit =
-    writePqIndex(s, trainVecs, allVecs, indexDir)
-
-  /** Build the SPARSE retrieval half: freeze the term statistics
-    * (df → quantized idf weight, honoring the build session's
-    * `spark.graft.sparse.maxDfPermille` pruning lever — the store PINS
-    * the lever value its postings were weighted with, the `bandRows`
-    * contract's lexical twin) and write every document's weighted
-    * postings + self-norm. One tokenize+count pass feeds all three
-    * tables. Also the [[reidf]] rebuild. */
-  def writeSparseIndex(s: SparkSession, docs: DataFrame, indexDir: String): Unit = {
-    val tf = LlmText.tfOf(LlmText.baseFrom(docs)).persist()
-    try {
-      LlmText.termStatsOf(s, LlmText.baseFrom(docs), tf)
-        .write.mode(SaveMode.Overwrite).parquet(p(indexDir, TermStats))
-      writePostingsAgainstStats(s, tf, indexDir, SaveMode.Overwrite)
-    } finally { tf.unpersist(); () }
-  }
-
-  /** Weight `tf` under the STORED (frozen) statistics and land the
-    * postings + norms — shared by the day-1 build and the day-N append. */
-  private def writePostingsAgainstStats(s: SparkSession, tf: DataFrame,
-                                        indexDir: String, mode: SaveMode): Unit = {
-    val w = LlmText.weightedPostingsOf(tf,
-      s.read.parquet(p(indexDir, TermStats))).persist()
-    try {
-      w.write.mode(mode).parquet(p(indexDir, Postings))
-      LlmText.sparseNormsOf(w)
-        .write.mode(mode).parquet(p(indexDir, DocNorms))
-    } finally { w.unpersist(); () }
-  }
-
-  /** Fold a batch of NEW documents into the postings store under the
-    * frozen idf — batch-sized appended partitions, the corpus never
-    * re-tokenized. Terms unseen at build time carry no stored weight
-    * and are DROPPED (they cannot score against any indexed posting
-    * anyway); the drift this accumulates is exactly what [[reidf]]
-    * resets. */
-  def appendSparsePostings(s: SparkSession, newDocs: DataFrame, indexDir: String): Unit =
-    writePostingsAgainstStats(s, LlmText.tfOf(LlmText.baseFrom(newDocs)),
-      indexDir, SaveMode.Append)
-
-  /** The RE-IDF event the frozen-statistics contract defers to — the
-    * [[retrain]] of the lexical half. Unlike centroids, idf has a
-    * closed form (no warm start to iterate from), so re-weighting IS a
-    * full rebuild: recompute df over the corpus so far, swap the frozen
-    * stats, rewrite postings + norms wholesale. Rankings before and
-    * after are NOT comparable — a separate, explicit event, never part
-    * of a daily ingest. */
-  def reidf(s: SparkSession, allDocs: DataFrame, indexDir: String): Unit =
-    writeSparseIndex(s, allDocs, indexDir)
 
   /** Write the SUBSTRING-DEDUP half of the index: the rolling-hash
     * postings table (doc_id, byte offset, window hash) — one row per
@@ -765,10 +469,10 @@ object IncrementalIndex {
     * deployment builds once and serves many. The iterate is the SAME
     * core the in-JVM memo path serves ([[graft.operators.Embeddings
     * .nnDescentOver]]), so stored graph ≡ memo graph for the same
-    * corpus and levers (parity pinned in StoredParitySpec). A retrain
+    * corpus and levers (parity pinned in StoredParitySpec). A rebuild
     * (more rounds, new corpus snapshot) overwrites — edges from
-    * different builds are not comparable, the
-    * [[writeCellIndex]]/[[retrain]] freeze discipline. */
+    * different builds are not comparable, the [[writeCellIndex]]
+    * freeze discipline. */
   def writeGraphIndex(s: SparkSession, vecs: DataFrame, indexDir: String,
                       rounds: Int = 1,
                       revCap: Int = Embeddings.DefaultNndRevCap): Unit = {
@@ -837,72 +541,6 @@ object IncrementalIndex {
     Embeddings.graphServeOver(s, alive.where(col("vec_id") % 5 === 0), alive,
       liveTable(s, indexDir, GraphEdges), hops = 1)
       .localCheckpoint(true)
-  }
-
-  /** Write the SKETCH STORE: one KMV cardinality sketch per
-    * (event_type, day) over the batch's events — the rollup-cube
-    * practice (Druid/Pinot sketch columns): the base table is read
-    * once per ingest day, every later distinct-count question is
-    * answered by MERGING the stored k-row partials. `Append` is the
-    * daily ingest; day boundaries are integer nanos arithmetic so the
-    * shard key is engine-independent. */
-  def writeSketchIndex(s: SparkSession, events: DataFrame, indexDir: String,
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    events
-      .select(col("event_type"),
-        expr("ts div 86400000000000").as("day"),
-        graft.functions.Portable.h64(col("user_id")).as("h"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(graft.functions.KmvSketch.kmvValues(Misc.KmvK)(col("h")).as("sk"))
-      .write.mode(mode).parquet(p(indexDir, KmvSketches))
-
-  /** Write the QUANTILE-SKETCH STORE — the rank-statistics column of
-    * the rollup cube beside [[writeSketchIndex]]'s cardinality column:
-    * one m19 pair sketch per (event_type, day) over the batch's
-    * events. The base table is read once per ingest day; any later
-    * "p99 of value for type X (over any day range)" merges the stored
-    * k-pair partials ([[probeQuantiles]]) without a rescan — the KMV
-    * lattice on the hash component makes the merge split/order/append
-    * invariant (parity pinned in StoredParitySpec). */
-  def writeQuantileIndex(s: SparkSession, events: DataFrame, indexDir: String,
-                         mode: SaveMode = SaveMode.Overwrite): Unit =
-    events
-      .select(col("event_type"),
-        expr("ts div 86400000000000").as("day"),
-        graft.functions.Portable.h64(col("event_id")).as("h"),
-        col("value").as("v"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(graft.functions.KmvSketch.kmvPairs(Misc.QsK)(col("h"), col("v")).as("sk"))
-      .write.mode(mode).parquet(p(indexDir, QuantSketches))
-
-  /** Per-type quantile readout from the PERSISTED pair-sketch partials
-    * alone — k-min-by-hash union of each type's stored day sketches,
-    * then m19's shared percentile_disc readout (one definition with
-    * the batch/streaming forms, so the three surfaces cannot drift). */
-  def probeQuantiles(s: SparkSession, indexDir: String): DataFrame = {
-    import Misc.QsK
-    val sk = s.read.parquet(p(indexDir, QuantSketches))
-      .groupBy(col("event_type"))
-      .agg(graft.functions.KmvSketch.kmvPairsMerge(QsK)(col("sk")).as("sk"))
-    Misc.sketchQuantiles(s, sk, Seq("event_type"))
-  }
-
-  /** Distinct-users readout from the PERSISTED sketch partials alone —
-    * the k-min union of each type's stored day sketches
-    * ([[graft.functions.KmvSketch.kmvMerge]]), never re-reading events.
-    * Because the KMV union is associative/commutative/idempotent, this
-    * equals the one-shot sketch over all events for ANY day split and
-    * ANY append history (pinned in StoredParitySpec). Readout matches
-    * st18's (m, kth, est_distinct). */
-  def probeSketchDistinct(s: SparkSession, indexDir: String): DataFrame = {
-    import Misc.KmvK
-    s.read.parquet(p(indexDir, KmvSketches))
-      .groupBy(col("event_type"))
-      .agg(graft.functions.KmvSketch.kmvMerge(KmvK)(col("sk")).as("sk"))
-      .select(col("event_type"),
-        size(col("sk")).cast("long").as("m"),
-        element_at(col("sk"), size(col("sk"))).as("kth"),
-        graft.functions.KmvSketch.estDistinct(KmvK)(col("sk")).as("est_distinct"))
   }
 
   // ------------------------------------------------------------ probe
@@ -1026,7 +664,7 @@ object IncrementalIndex {
     * one broadcast join against the label log. The full corpus is
     * never re-paired and the label table never rewritten in place —
     * the rewrite is the explicit [[rebaseClusterLabels]] maintenance
-    * event (the vacuum/compaction class).
+    * event.
     *
     * Why the readout equals the one-shot d14 for ANY ascending-id
     * split: the edge SET accumulated by bootstrap + probes is exactly
@@ -1218,14 +856,12 @@ object IncrementalIndex {
     * on a 24/7 deployment: fold the remap closure into the label rows
     * and reset the remap table to its empty bootstrap partition.
     * Readout rows are unchanged and the closure join becomes a no-op
-    * (parity pinned in IncrementalIndexSpec). Unlike
-    * [[compactBatchStore]] this rewrites ROW VALUES (labels resolve),
-    * so the watermark must cover EVERY label partition and the store
-    * must be quiesced (between micro-batches — the
-    * [[graft.etl.Sinks.compact]] class, not the between-batch-safe
-    * bounded form). Same two-phase crash discipline: the resolved
-    * segment's `_SUCCESS` is the commit point; a re-run after a crash
-    * sees it, skips the rewrite, and finishes the deletes. */
+    * (parity pinned in IncrementalIndexSpec). It rewrites ROW VALUES
+    * (labels resolve), so the watermark must cover EVERY label
+    * partition and the store must be quiesced (between micro-batches).
+    * Two-phase crash discipline: the resolved segment's `_SUCCESS` is
+    * the commit point (written before any delete); a re-run after a
+    * crash sees it, skips the rewrite, and finishes the deletes. */
   def rebaseClusterLabels(s: SparkSession, indexDir: String, upToBid: Long): Unit = {
     import org.apache.hadoop.fs.Path
     val root = p(indexDir, ClusterLabels)
@@ -1467,99 +1103,6 @@ object IncrementalIndex {
     val words = BloomFilter.dense(stored.toSeq.map(r => (r._1, r._2)), bits)
     verifyBench(s, batchDocs, indexDir,
       BloomFilter.mightContainFast(s, words, col("shingle"), bits, k))
-  }
-
-  /** Train the TOKENIZER half and freeze it: `rounds` full BPE
-    * merge-selection iterations over `trainDocs`
-    * ([[graft.operators.LlmText.bpeTrainMergesFrom]] — the canonical
-    * rank-ordered algorithm, not d40's single-pass approximation) and
-    * persist the learned merge table (round, left, right, cnt) — the
-    * artifact a tokenizer ships. Frozen like the centroids/codebook:
-    * token ids under different merge tables are not comparable, so
-    * re-training is the explicit refresh event. */
-  def writeBpeIndex(s: SparkSession, trainDocs: DataFrame, indexDir: String,
-                    rounds: Int): Unit =
-    LlmText.bpeTrainMergesFrom(s, LlmText.baseFrom(trainDocs), rounds)
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, BpeMerges))
-
-  /** Encode a batch of documents with the STORED tokenizer: per-doc
-    * subword token counts under the frozen merge table, applied in
-    * RANK ORDER (true BPE — each merge rewrites the word's symbol
-    * string left-to-right non-overlapping, the same boundary-exact
-    * regex the training loop used, one map-only pass over the
-    * DISTINCT-WORD table per merge). The corpus fans back in through
-    * one word-keyed join — the batch's text is read once however many
-    * merges the tokenizer carries; lineage is checkpointed every few
-    * rounds (the d14/d17 iteration discipline). The merge table itself
-    * is a scalar-sized artifact (its length is the vocabulary budget),
-    * collected like the training argmax — never the corpus. */
-  def encodeBpe(s: SparkSession, batchDocs: DataFrame, indexDir: String): DataFrame = {
-    val merges = s.read.parquet(p(indexDir, BpeMerges))
-      .orderBy(col("round"))
-      .select(col("left"), col("right")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    val baseDf = LlmText.baseFrom(batchDocs)
-    val perDocWord = baseDf
-      .select(col("doc_id"), explode(col("toks")).as("w"))
-      .where(length(col("w")) >= 1)
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("n"))
-    var words = perDocWord.select(col("w")).distinct()
-      .select(col("w"), concat_ws(" ", split(col("w"), "")).as("syms"))
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      words = words.withColumn("syms",
-        graft.operators.LlmText.bpeMergeApply(col("syms"), a, b))
-      if ((i + 1) % 8 == 0) words = words.localCheckpoint()
-    }
-    val tokensPerWord = words
-      .select(col("w"), size(split(col("syms"), " ")).cast("long").as("w_tokens"))
-    perDocWord.join(tokensPerWord, Seq("w"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n")).as("n_words"),
-        sum(col("n") * col("w_tokens")).as("n_bpe_tokens"))
-  }
-
-  /** d33's ranking for a batch of queries against the STORED postings:
-    * the batch tokenizes itself, weights under the frozen `term_stats`,
-    * and joins the stored inverted index — no corpus text is re-read,
-    * no df recomputed, no corpus norm re-aggregated. With the index
-    * built over the full corpus this is row-identical to the d33
-    * recompute form restricted to the batch's queries (SparseIndexSpec);
-    * in deployment it is the serving path: cost ∝ Σ_t qdf(t)·df(t)
-    * through the same [[SelfJoin]] strategy gate, never corpus². */
-  def probeSparse(s: SparkSession, queryDocs: DataFrame, indexDir: String): DataFrame = {
-    val (out, caches) = probeSparseLazy(s, queryDocs, indexDir)
-    val materialized = out.localCheckpoint(true)
-    caches.foreach(_.unpersist())
-    materialized
-  }
-
-  private[graft] def probeSparseLazy(s: SparkSession, queryDocs: DataFrame,
-                                     indexDir: String): (DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.sql.expressions.Window
-    // query-side postings under the FROZEN stats — probed twice (dots +
-    // self-norms), so persisted like probeText's base; callers own it
-    val qw0 = LlmText.weightedPostingsOf(
-      LlmText.tfOf(LlmText.baseFrom(queryDocs)),
-      s.read.parquet(p(indexDir, TermStats))).persist()
-    val qw = qw0.select(col("term"), col("doc_id").as("query_id"), col("w").as("wq"))
-    val cw = s.read.parquet(p(indexDir, Postings))
-      .select(col("term"), col("doc_id").as("cand_id"), col("w").as("wc"))
-    val dots = SelfJoin.on(qw, cw, Seq("term"))
-      .where(col("query_id") =!= col("cand_id"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(sum(col("wq") * col("wc")).as("dot"))
-    val out = dots
-      .join(LlmText.sparseNormsOf(qw0)
-        .select(col("doc_id").as("query_id"), col("nw").as("nq")), Seq("query_id"))
-      .join(s.read.parquet(p(indexDir, DocNorms))
-        .select(col("doc_id").as("cand_id"), col("nw").as("nc")), Seq("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        (col("dot").cast("double") /
-          (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double")))).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("cand_id").asc)))
-      .where(col("rnk") <= LlmText.SparseTopK)
-    (out, Seq(qw0))
   }
 
   // ----------------------------------------------------------- append

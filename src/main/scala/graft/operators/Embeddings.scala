@@ -439,17 +439,6 @@ object Embeddings {
         dot(col("cvec"), col("cvec")).as("ncv"))
   }
 
-  /** One Lloyd iteration as a frame transform: reassign `v` against
-    * `cents` by geometry, return the recomputed (cell, cvec, ncv)
-    * centroid-sum table. The step [[e11KmeansStep]] reports on and
-    * [[graft.jobs.IncrementalIndex.retrain]] iterates; a cell that
-    * attracts no members drops out (the caller reseeds — faiss does the
-    * same on empty IVF lists). */
-  private[graft] def lloydStep(s: SparkSession, v: DataFrame, cents: DataFrame): DataFrame =
-    centroidsOf(s,
-      assignRanked(s, v, cents).where(col("rn") === 1)
-        .select(col("cell").as("label"), col("q")))
-
   /** Every vector of `v` ranked by centroid-cosine against every cell of
     * `cents` (rn = 1 is the primary-cell assignment). The assignment
     * core shared by [[cellRanked]] and the persisted-index probe — the
@@ -1200,8 +1189,8 @@ object Embeddings {
     * then move each codeword to the TRUNCATING integer mean of its
     * members (`div`, ≡ DuckDB `//` — the e13 residual convention, so
     * the oracle's unrolled rounds cannot drift). A codeword attracting
-    * no members keeps its position (faiss's empty-list convention,
-    * [[lloydStep]]'s reseed analogue at fixed K). The codebook is
+    * no members keeps its position (faiss's empty-list convention at
+    * fixed K). The codebook is
     * [[PqM]]·[[PqK]] rows — broadcast at any corpus size; the round is
     * one pass over the subvector table. */
   private def pqLloydRound(s: SparkSession, subs: DataFrame, cb: DataFrame): DataFrame = {
@@ -2293,7 +2282,7 @@ object Embeddings {
     * partition SKEWED): per cell its member count and corpus share,
     * plus the scalar C·Σn²/N² (1.0 = perfectly balanced; k = all mass
     * in 1/k of the cells). This is the number that decides whether to
-    * retrain ([[e11KmeansStep]] / IncrementalIndex.retrain), raise
+    * retrain ([[e11KmeansStep]]), raise
     * nprobe, or re-seed empty cells — a skewed cell list is ALSO the
     * query-time skew surface of every cell equi-join in the e-suite,
     * so the audit doubles as the AQE-skew early warning.
@@ -3010,8 +2999,7 @@ object Embeddings {
     * nothing, and the rescore reads only live vectors. The graph stays
     * the FROZEN pre-deletion build: filtering is O(|edges|) probe-side
     * work, while re-running the descent is the explicit rebuild event
-    * — the ranked-artifact trade-off documented on
-    * [[graft.jobs.IncrementalIndex.vacuum]] (a filtered graph loses
+    * — the ranked-artifact trade-off (a filtered graph loses
     * the deleted nodes' routing, so recall can only be restored, never
     * improved, by the rebuild; TombstoneSpec measures the gap).
     *

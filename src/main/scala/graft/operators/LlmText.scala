@@ -746,31 +746,6 @@ object LlmText {
        |  max(CASE WHEN rn = (9 * cnt + 9) // 10 THEN n_tokens END) AS p90_tokens
        |FROM ranked GROUP BY lang""".stripMargin
 
-  /** SCALE variant of d13 — the documented-variant treatment d05 got.
-    * The exact form's row_number over (lang) sorts each language's FULL
-    * doc set on one task (with ~5 languages at 100 TB, billions of rows
-    * per sort task); exactness is the point there — it is the
-    * cross-engine oracle. This variant swaps the rank for
-    * `approx_percentile` (the Greenwald-Khanna sketch: MERGEABLE, so
-    * partial aggregation reduces each partition to a bounded sketch per
-    * group before one ordinary exchange — the same shape shift as m10's
-    * KMV). Same output schema; min/max/sum/count stay exact. Not
-    * oracle-registered: sketch internals are engine-specific (DuckDB has
-    * no GK twin with matching semantics) — LlmTextSpec instead pins each
-    * approx percentile to a value of the group whose RANK is within the
-    * sketch's guaranteed ε·n of the target rank. */
-  def d13CorpusStatsApprox(s: SparkSession, dir: String,
-                           accuracy: Int = 10000): DataFrame =
-    base(s, dir).select(col("lang"), size(col("toks")).as("n_tokens"))
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        min(col("n_tokens")).as("min_tokens"),
-        max(col("n_tokens")).as("max_tokens"),
-        sum(col("n_tokens")).as("sum_tokens"),
-        percentile_approx(col("n_tokens"), lit(0.5), lit(accuracy)).as("p50_tokens"),
-        percentile_approx(col("n_tokens"), lit(0.9), lit(accuracy)).as("p90_tokens"))
-
   // ---------------------------------------------------------------- d14
   /** Connected near-dup CLUSTERS: every doc that appears in a verified
     * near-dup pair gets cluster_id = min doc_id of its connected
@@ -2034,8 +2009,7 @@ object LlmText {
   val SparseMaxDfConf = "spark.graft.sparse.maxDfPermille"
 
   /** (doc_id, term, tf) counts for a [[baseFrom]] frame — d33's first
-    * stage, shared with the persisted sparse index
-    * ([[graft.jobs.IncrementalIndex]]). One explode + one keyed count. */
+    * stage. One explode + one keyed count. */
   private[graft] def tfOf(baseDf: DataFrame): DataFrame =
     baseDf
       .select(col("doc_id"), explode(col("toks")).as("term"))
@@ -2045,9 +2019,7 @@ object LlmText {
     * the integer-quantized weight `QuantIdf div df` (exact in both
     * engines over the whole long domain), honoring the
     * [[SparseMaxDfConf]] static-pruning lever and dropping weight-0
-    * (stopword-df) terms. This is d33's weighting AND the schema the
-    * persisted sparse index freezes — one definition, so a stored index
-    * and a recompute can never disagree on a weight. The default path
+    * (stopword-df) terms. This is d33's weighting. The default path
     * stays the oracle plan verbatim: the n_docs broadcast and the prune
     * filter only enter the plan when the lever is set. */
   private[graft] def termStatsOf(s: SparkSession, baseDf: DataFrame,
@@ -2063,8 +2035,8 @@ object LlmText {
     dfreq.withColumn("widf", expr(s"$QuantIdf div df")).where(col("widf") > 0)
   }
 
-  /** Weighted postings w = tf·widf for a tf table against a (possibly
-    * stored and frozen) term-stats table — the inverted index rows. */
+  /** Weighted postings w = tf·widf for a tf table against a term-stats
+    * table — the inverted index rows. */
   private[graft] def weightedPostingsOf(tf: DataFrame, stats: DataFrame): DataFrame =
     tf.join(stats.select(col("term"), col("widf")), Seq("term"))
       .select(col("doc_id"), col("term"), (col("tf") * col("widf")).as("w"))
@@ -2088,15 +2060,10 @@ object LlmText {
     * at mod 13 and discarding 4/5 of it priced the fusion at the full
     * retrieval's cost). Equivalence is pinned in LlmTextSpec. */
   /** Per-(JVM, dir, maxDfPermille) memo of the WEIGHTED POSTINGS table
-    * — the inverted index a search deployment persists (and since r8,
-    * [[graft.jobs.IncrementalIndex]] does persist). Previously each
-    * d33/d34 invocation rebuilt and checkpointed it fresh; the memo is
-    * the stored-index discipline (docs/SCALE.md round-10 section) —
-    * the serving queries read the one stored table. Keyed on the
-    * pruning lever, the only conf that changes the table's content.
-    * Exposed package-private so StoredParitySpec can diff it against
-    * [[graft.jobs.IncrementalIndex]]'s persisted `postings` parquet
-    * (the discipline's rule 3: in-JVM memo ≡ persisted store). */
+    * — the inverted index a search deployment persists: the d33/d34
+    * serving queries read the one stored table instead of rebuilding
+    * it per call. Keyed on the pruning lever, the only conf that
+    * changes the table's content. */
   private[graft] def storedPostings(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "sparse-postings", dir,
         s.conf.get(SparseMaxDfConf, "1000").toInt) {
@@ -2187,8 +2154,8 @@ object LlmText {
     * queries, while the FROZEN index artifacts stay untouched — the
     * term statistics (df → widf) remain the full-corpus values they
     * were trained with, because a deletion retracts rows, it does not
-    * re-weight the index (re-weighting is [[graft.jobs.IncrementalIndex
-    * .reidf]], the explicit separate event). The delete set rides as a
+    * re-weight the index (re-weighting is a full rebuild, an explicit
+    * separate event). The delete set rides as a
     * TABLE applied as ONE broadcast anti-join on the stored postings
     * before the ranking core ([[sparseRankOver]] — shared with d33, so
     * the live and filtered paths share every downstream definition);
@@ -2510,77 +2477,6 @@ object LlmText {
        |  FROM pc37) r
        |WHERE rank <= $BpeTopK""".stripMargin
 
-  /** The FULL BPE training loop d37 shows one round of: `rounds`
-    * merge-selection + merge-apply iterations over the weighted
-    * vocabulary, returning the learned merge table
-    * (round, left, right, cnt) — the artifact a tokenizer ships.
-    *
-    * Iteration discipline (the d14/d17 pattern): each round is ONE
-    * bounded distributed aggregate over the vocabulary (pair counts), a
-    * 1-ROW collect (the argmax — a scalar, not a dataset), and a
-    * map-only regex merge-apply, with the vocab localCheckpointed per
-    * round to truncate lineage. The corpus is read once (the initial
-    * word-frequency pass); every later round touches only the vocab
-    * table. Merge-apply is the canonical left-to-right non-overlapping
-    * replacement, realized as `(?<=^| )A B(?= |$)` over the
-    * space-joined symbol string (symbols never contain spaces, so the
-    * lookarounds are exact symbol boundaries) — spec-pinned against a
-    * list-based reference implementation of the algorithm. Not a
-    * registry query: the per-round argmax is not expressible as one
-    * non-recursive SQL statement; d37 (one round) carries the oracle. */
-  def bpeTrainMerges(s: SparkSession, dir: String, rounds: Int): DataFrame =
-    bpeTrainMergesFrom(s, base(s, dir), rounds)
-
-  /** Left-to-right non-overlapping merge-apply of ONE learned pair over
-    * a space-joined symbol string — the boundary-exact regex both the
-    * training loop and the stored-tokenizer encode
-    * ([[graft.jobs.IncrementalIndex.encodeBpe]]) replace with: symbols
-    * never contain spaces, so the lookarounds are exact symbol
-    * boundaries. */
-  private[graft] def bpeMergeApply(syms: Column, a: String, b: String): Column = {
-    import java.util.regex.{Matcher, Pattern}
-    regexp_replace(syms,
-      lit("(?<=^| )" + Pattern.quote(a + " " + b) + "(?= |$)"),
-      lit(Matcher.quoteReplacement(a + b)))
-  }
-
-  /** [[bpeTrainMerges]] over an arbitrary documents-shaped frame (the
-    * persisted-tokenizer lifecycle feeds its history slice through). */
-  def bpeTrainMergesFrom(s: SparkSession, baseDf: DataFrame, rounds: Int): DataFrame = {
-    var vocab = baseDf.select(explode(col("toks")).as("w"))
-      .where(length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("wf"))
-      .select(concat_ws(" ", split(col("w"), "")).as("syms"), col("wf"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = vocab
-        .withColumn("sym_arr", split(col("syms"), " "))
-        .where(size(col("sym_arr")) >= 2)
-        .select(col("wf"), explode(transform(
-          sequence(lit(1), size(col("sym_arr")) - 1),
-          i => concat(element_at(col("sym_arr"), i), lit(" "),
-            element_at(col("sym_arr"), i + 1)))).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("wf")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pair = top(0).getString(0)
-        val cnt = top(0).getLong(1)
-        val Array(a, b) = pair.split(" ", 2)
-        merges += ((r, a, b, cnt))
-        vocab = vocab.withColumn("syms", bpeMergeApply(col("syms"), a, b))
-          .localCheckpoint()
-        r += 1
-      }
-    }
-    import s.implicits._
-    merges.toSeq.toDF("round", "left", "right", "cnt")
-  }
-
   // ---------------------------------------------------------------- d38
   /** DSIR-style IMPORTANCE SCORING (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every raw
@@ -2719,10 +2615,10 @@ object LlmText {
     * token count, and a trained tokenizer is what turns chars into
     * tokens). Encoding is single-pass greedy left-to-right pairing: scan
     * each word once, consuming two characters where the bigram is in
-    * the vocabulary, one otherwise (rank-ITERATED merge application —
-    * full BPE — lives in [[bpeTrainMerges]]; the single-pass form is the
+    * the vocabulary, one otherwise (the single-pass form is the
     * WordPiece-style longest-match-first scan at max token length 2,
-    * and is what one non-recursive SQL statement can express).
+    * and is what one non-recursive SQL statement can express;
+    * rank-iterated merge application — full BPE — is not).
     *
     * The sequential scan is NOT computed sequentially: within a word,
     * greedy pairing merges exactly ceil(L/2) pairs in every maximal run

@@ -1,25 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Portable._
 
 /** Multimodal-column plumbing: media as opaque `binary` content with
   * typed metadata, chunk/frame sampling, and feature extraction. The
-  * image/audio codecs are NOT in this environment, so the decode step is
-  * a clearly-marked deterministic STUB ([[FakeDecoder]]) — what is real
-  * and tested is everything Spark-side: the binary column representation,
-  * the schema, the partition-parallel batch shape (mapPartitions — the
-  * Scala analogue of mapInPandas batching), and the frame/feature
-  * plumbing. Content is derived from `documents.text` bytes so every
-  * stage is reproducible and oracle-checkable.
+  * image/audio codecs are NOT in this library, so header parsing,
+  * feature extraction and resizing are clearly-marked deterministic
+  * STUBs (mm01, mm03, mm04) — what is real and tested is everything
+  * Spark-side: the binary column representation, the schema, and the
+  * frame/feature plumbing. Content is derived from `documents.text`
+  * bytes so every stage is reproducible and oracle-checkable.
   *
   * Scale notes: media blobs stay opaque binary all the way through the
   * scan (no decode before the filter); frame sampling is a map-side
   * generator (sequence + explode), so a 100 TB media table fans out
-  * without a shuffle; feature extraction is per-partition batched, the
-  * shape GPU/codec vendors need.
+  * without a shuffle.
   */
 object Multimodal {
 
@@ -306,31 +304,6 @@ object Multimodal {
             s"bit_count(xor(ab[$i], bb[$i]))").mkString(" + ")} AS BIGINT) AS hamming
        |  FROM cnd) h
        |WHERE hamming <= $PhashMaxHamming""".stripMargin
-  }
-
-  // ------------------------------------------------------- decode stub
-  final case class MediaFrame(media_id: Long, frame_idx: Int, payload: Array[Byte])
-  final case class DecodedFrame(media_id: Long, frame_idx: Int, feature: Double)
-
-  /** Partition-parallel decode plumbing (the mapInPandas analogue):
-    * batches flow through [[FakeDecoder]] per partition — a real codec
-    * would replace `FakeDecoder.decode` and nothing else. Unit-tested;
-    * not oracle-checked (the stub is the point, not the values). */
-  def decodeFrames(frames: Dataset[MediaFrame]): Dataset[DecodedFrame] = {
-    import frames.sparkSession.implicits._
-    frames.mapPartitions { it =>
-      // per-partition init cost (codec/model load) amortizes over the batch
-      val decoder = FakeDecoder
-      it.map(f => DecodedFrame(f.media_id, f.frame_idx, decoder.decode(f.payload)))
-    }
-  }
-
-  /** STUB: deterministic stand-in for an image/audio codec (none are
-    * installed in this environment). Replace with the real decoder. */
-  object FakeDecoder {
-    def decode(payload: Array[Byte]): Double =
-      if (payload == null || payload.isEmpty) 0.0
-      else payload.foldLeft(0L)((a, b) => (a * 31 + (b & 0xff)) & 0xFFFFFF).toDouble / 0xFFFFFF
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

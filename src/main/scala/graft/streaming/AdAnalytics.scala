@@ -39,7 +39,7 @@ object AdAnalytics {
         // every field EXPLICITLY cast before entering the delimited
         // format — a non-string column whose implicit rendering contains
         // the delimiter (e.g. a timestamp's "2026-08-01 00:00:00") would
-        // silently shift every downstream split() field (round-8 st01)
+        // silently shift every downstream split() field
         col("ts").cast("string"), col("user_id").cast("string"),
         col("event_type"), col("value").cast("string")).as("value"))
 
@@ -138,45 +138,6 @@ object AdAnalytics {
   val st04Sql: String =
     "SELECT user_id, count(*) AS total FROM events GROUP BY 1"
 
-  /** Event-time-TTL variant of st04's cumulative state — the 100 TB
-    * form: a key whose last event fell more than `ttl` behind the
-    * watermark has its state REMOVED (the unbounded form keeps every
-    * key forever — the reference's updateStateByKey semantics, and its
-    * scale-killer). Consequence, pinned in StreamingSpec: a key
-    * re-appearing after expiry counts from zero. Input rows are
-    * (key, event-time); the caller owns the watermark on column 2. */
-  def cumulativeCountsWithTtl(
-      events: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp)],
-      ttlMillis: Long): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp)], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove() // key expired: forget, emit nothing
-            Iterator.empty
-          } else {
-            val rows = it.toSeq // bounded: one key's rows within one batch
-            val total = state.getOption.getOrElse(0L) + rows.size
-            state.update(total)
-            // idle-TTL: expire once the watermark passes the key's
-            // LATEST activity + ttl (not the current watermark + ttl,
-            // which would expire still-active keys). Clamped above the
-            // current watermark: flatMapGroupsWithState does NOT drop
-            // late rows, so a group whose newest event already trails
-            // the watermark by more than ttl would otherwise make
-            // setTimeoutTimestamp throw (timeout must be > watermark)
-            // and kill the query — such a group expires next batch.
-            state.setTimeoutTimestamp(math.max(
-              rows.map(_._2.getTime).max + ttlMillis,
-              state.getCurrentWatermarkMs() + 1))
-            Iterator((uid, total))
-          }
-      }
-      .toDF("user_id", "total")
-  }
-
   // ---------------------------------------------------------------- st05
   /** Per-batch keyed counts + accumulate-upsert + threshold promotion
     * (ST4+ST5+S8-accumulate, 需求7): each batch's delta counts fold into
@@ -238,8 +199,7 @@ object AdAnalytics {
     * input is the stream unioned with itself — without dedup every count
     * doubles, so the oracle (plain batch counts) proves the dedup
     * actually fired. The unbounded form mirrors the reference's
-    * forever-state semantics; the scale path is [[boundedDedup]], whose
-    * key-expiry behavior StreamingSpec pins with a MemoryStream. */
+    * forever-state semantics (state grows with the key history). */
   def st07StreamDedup(s: SparkSession, dir: String): DataFrame =
     Streams.runComplete(s) { ss =>
       Streams.tableStream(ss, dir, "events")
@@ -251,19 +211,6 @@ object AdAnalytics {
 
   val st07Sql: String =
     "SELECT event_type, count(*) AS n FROM events GROUP BY 1"
-
-  /** Watermark-BOUNDED streaming dedup — the 100 TB form of st07: state
-    * keys expire once the watermark passes them, so state size is
-    * proportional to the duplicate-arrival window, not to the stream's
-    * full key history (the unbounded `dropDuplicates` state grows
-    * forever — the one deliberate scale-killer inherited from the
-    * reference). Semantics consequence, pinned in StreamingSpec: a
-    * duplicate arriving within `delay` of the original is dropped; the
-    * same key re-arriving after its state expired is emitted again —
-    * exactly-once only within the watermark horizon. */
-  def boundedDedup(stream: DataFrame, tsCol: String, idCols: Seq[String],
-      delay: String): DataFrame =
-    stream.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(idCols)
 
   // ---------------------------------------------------------------- st08
   /** STREAMING sessionization via `session_window` — the state-store
@@ -277,10 +224,9 @@ object AdAnalytics {
     * the microsecond gap. This matches the batch sessionizer's
     * reference-style `gap > 1800` rule (at second granularity), so the
     * two sessionizers agree on the boundary; session_window is still
-    * finer-grained in comparing full microsecond timestamps. Round-10
-    * note: the oracle previously used `>=` (boundary-wrong, untriggered
-    * — the fixture has no exact-microsecond 1800 s gap); the empirical
-    * pin caught it. */
+    * finer-grained in comparing full microsecond timestamps. The
+    * fixture has no exact-microsecond 1800 s gap, so only the spec pin,
+    * not the oracle, tells `>` from `>=`. */
   def st08SessionWindow(s: SparkSession, dir: String): DataFrame =
     Streams.runComplete(s) { ss =>
       Streams.tableStream(ss, dir, "events")
@@ -485,36 +431,6 @@ object AdAnalytics {
       |  CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1""".stripMargin
 
-  /** st12's fold against a PERSISTED JDBC store
-    * ([[Streams.runForeachBatchJdbc]]) — the RESTARTABLE form: every
-    * micro-batch's merged rollup lands in the store table (the
-    * reference persists each streaming aggregate to MySQL per batch —
-    * AdverStat.scala:262-284), so a restart resumes from the database
-    * plus the checkpoint's unprocessed offsets instead of refolding
-    * history; an in-memory fold store would restart from offset 0.
-    * The merge re-casts the decimal sum to the store precision: the
-    * decimal SUM widens (18,2)→(28,2)→(38,2) per round trip, an
-    * unbounded ladder that would exceed the JDBC dialect's DECIMAL cap
-    * within a few batches; the totals themselves fit (18,2) by the
-    * fixture/domain contract. Restart-resume and replay-idempotence
-    * are pinned in StreamingSpec; `checkpoint` must be stable across
-    * restarts. Returns the current store readout (= st12's result when
-    * run over the same input). */
-  def st12RunningRollupJdbc(s: SparkSession, dir: String, url: String,
-      table: String, props: java.util.Properties, checkpoint: String): DataFrame = {
-    import graft.operators.Misc.{eventRollup, rollupReadout}
-    def pinned(df: DataFrame): DataFrame =
-      df.select(col("event_type"), col("n_events"),
-        col("sum_value").cast("decimal(18,2)").as("sum_value"))
-    val empty = pinned(eventRollup(graft.Tables.events(s, dir).limit(0)))
-    Streams.runForeachBatchJdbc(s, "append", empty, url, table, props, checkpoint)(
-      ss => Streams.tableStream(ss, dir, "events")) { (store, batch) =>
-      pinned(graft.etl.Upsert.accumulateAll(
-        store, eventRollup(batch), Seq("event_type"), Seq("n_events", "sum_value")))
-    }
-    rollupReadout(s.read.jdbc(url, table, props).drop(Streams.BatchIdCol))
-  }
-
   // ---------------------------------------------------------------- st13
   /** STREAMING INGEST against the persisted dedup index — the
     * [[graft.jobs.IngestJob]] lifecycle running continuously instead of
@@ -619,9 +535,9 @@ object AdAnalytics {
     * for the quantizer half ([[graft.jobs.IncrementalIndex
     * .writeSqIndex]]): the per-dimension [lo, hi] trains ONCE on the
     * history slice and FREEZES (codes under different spans are not
-    * comparable — re-spanning is the explicit retrain event, the
-    * retrainPq contract), history lands its code rows, then each
-    * arriving micro-batch encodes against the STORED quantizer and
+    * comparable — re-spanning is an explicit rebuild event), history
+    * lands its code rows, then each arriving micro-batch encodes
+    * against the STORED quantizer and
     * appends its own 64-byte codes. Encoding is per-row (no cross-batch
     * state), so the final appended code set equals the batch encode of
     * the same slice for ANY micro-batch split — and an arrival OUTSIDE
@@ -816,9 +732,9 @@ object AdAnalytics {
   /** Oracle ranks DISTINCT (event_type, h) — the m18Sql convention —
     * not distinct (event_type, user_id): the Spark sketch retains
     * distinct HASH VALUES, so two users colliding on h64 occupy one
-    * slot, and an oracle ranking user rows would keep both (round-11
-    * advisory — unreachable without a 60-bit collision, but the two
-    * sides should encode the same semantics, not coincide on fixtures). */
+    * slot, and an oracle ranking user rows would keep both
+    * (unreachable without a 60-bit collision, but the two sides should
+    * encode the same semantics, not coincide on fixtures). */
   val st18Sql: String = {
     import graft.operators.Misc.KmvK
     val h = graft.functions.Portable.h64Sql("user_id")
@@ -1074,8 +990,8 @@ object AdAnalytics {
     * Steady-state deployment cost: per batch, one retraction-sized
     * parquet append — the serve price is paid by READS, each a
     * broadcast anti-join of the accumulated (retraction-sized ≪
-    * corpus) id set, until [[graft.jobs.IncrementalIndex.vacuum]]
-    * rewrites the touched partitions and makes reads free again. */
+    * corpus) id set, until a rebuild over the survivors makes reads
+    * free again. */
   def st24StreamingRetraction(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
     import graft.operators.Embeddings

@@ -16,7 +16,7 @@ import graft.operators.{Embeddings, LlmText}
   * index, and must (a) reproduce the oracle-pinned recompute forms
   * row-for-row, (b) never read a day-1 text/vector file, and (c) fold
   * its survivors into the store. Tests run in declaration order; the
-  * final test mutates the store and therefore comes last.
+  * ingestBatch tests mutate the store and therefore come last.
   */
 class IncrementalIndexSpec extends GraftSuite {
 
@@ -158,187 +158,5 @@ class IncrementalIndexSpec extends GraftSuite {
     val direct = LlmText.d44CrossdocSpans(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     assert(persisted === direct, "two-day substr store diverged from the batch spans")
-  }
-
-  test("stored tokenizer: encodeBpe under the frozen merges equals the canonical per-word tokenizer") {
-    val rounds = 6
-    val idx = Files.createTempDirectory("graft-bpe-idx-").toString
-    val day1 = spark.read.parquet(env._1)
-      .where(col("ingest_day") === 1).drop("ingest_day")
-    IncrementalIndex.writeBpeIndex(spark, day1, idx, rounds)
-    val stored = spark.read.parquet(s"$idx/${IncrementalIndex.BpeMerges}")
-      .orderBy("round").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-    assert(stored.map(_._1).toSeq === (1 to rounds), "one stored merge per round")
-    // encode day 2 against the stored tokenizer; the reference is the
-    // canonical list-merge tokenizer applying the STORED merges in rank
-    // order (the bpeTrainMerges-spec algorithm, apply side)
-    def jvmToks(text: String): Array[String] =
-      text.replaceAll("^ +| +$", "").toLowerCase(java.util.Locale.ROOT)
-        .replaceAll("\\s+", " ").split(" ", -1)
-    def encodeWord(w: String): Int = {
-      var syms = w.map(_.toString).toList
-      for ((_, a, b) <- stored) {
-        def merge(l: List[String]): List[String] = l match {
-          case `a` :: `b` :: rest => (a + b) :: merge(rest)
-          case h :: rest => h :: merge(rest)
-          case Nil => Nil
-        }
-        syms = merge(syms)
-      }
-      syms.length
-    }
-    val want = day2Docs.select("doc_id", "text").collect().map { r =>
-      val toks = jvmToks(r.getString(1)).filter(_.nonEmpty)
-      r.getLong(0) -> ((toks.length.toLong, toks.map(encodeWord(_).toLong).sum))
-    }.toMap
-    val got = IncrementalIndex.encodeBpe(spark, day2Docs, idx).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.length === want.size, "every day-2 document encoded once")
-    got.foreach { case (id, nw, nt) =>
-      assert((nw, nt) === want(id), s"doc $id stored-tokenizer encode mismatch")
-    }
-  }
-
-  test("retrain swaps the frozen centroids via e11's Lloyd step and rebuilds the members") {
-    val all = Tables.embeddings(spark, sf)
-    val q = Embeddings.quantizedFrom(spark, all)
-    val before = spark.read
-      .parquet(s"${env._3}/${IncrementalIndex.CellCentroids}").localCheckpoint(true)
-    val beforeRows = before.collect().map(_.toString).sorted.toSeq
-    // expected = exactly two Lloyd rounds from the OLD stored table,
-    // evaluated before the store mutates (lineage is fixture + checkpoint)
-    val expect = Embeddings.lloydStep(spark, q, Embeddings.lloydStep(spark, q, before))
-      .collect().map(_.toString).sorted.toSeq
-    IncrementalIndex.retrain(spark, all, all, env._3, rounds = 2)
-    val got = spark.read
-      .parquet(s"${env._3}/${IncrementalIndex.CellCentroids}")
-      .collect().map(_.toString).sorted.toSeq
-    assert(got === expect, "stored centroids must be exactly 2 Lloyd rounds from the old table")
-    assert(got !== beforeRows, "retrain must actually move the directions")
-    // member table rebuilt for the full corpus under the NEW directions
-    val members = spark.read.parquet(s"${env._3}/${IncrementalIndex.CellMembers}")
-    assert(members.count() === all.count(), "member table rebuilt for the full corpus")
-    val expectAsg = Embeddings.assignRanked(spark, q,
-        spark.read.parquet(s"${env._3}/${IncrementalIndex.CellCentroids}"))
-      .where(col("rn") === 1).select("cell", "vec_id")
-      .collect().map(_.toString).sorted.toSeq
-    assert(members.select("cell", "vec_id").collect().map(_.toString).sorted.toSeq
-      === expectAsg, "members must be the primary-cell assignment under the new centroids")
-  }
-
-  test("compacting the stored text index collapses small files and keeps probe verdicts identical") {
-    // the maintenance pass an append-only index accrues toward: after
-    // enough ingest folds, rewrite each table to target-sized files.
-    // Correctness contract: a probe is a pure function of the store's
-    // ROWS, so compaction (row-preserving by SinksSpec) must leave
-    // verdicts bit-identical.
-    def files(table: String): Array[java.io.File] =
-      new java.io.File(s"${env._3}/$table")
-        .listFiles().filter(_.getName.endsWith(".parquet"))
-    // fragment the store the way a run of small ingests would
-    for (i <- 0 until 3) {
-      IncrementalIndex.writeTextIndex(spark,
-        day2Docs.where(col("doc_id") % 3 === i), env._3,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    val probe = day2Docs.limit(40)
-    val before = IncrementalIndex.probeText(spark, probe, env._3)
-      .collect().map(_.toString).sorted.toSeq
-    val nBefore = files(IncrementalIndex.TextBands).length
-    assert(nBefore > 1, "fixture must actually be fragmented before compaction")
-    Sinks.compact(spark, s"${env._3}/${IncrementalIndex.TextBands}")
-    Sinks.compact(spark, s"${env._3}/${IncrementalIndex.TextShingles}")
-    assert(files(IncrementalIndex.TextBands).length < nBefore,
-      "compaction must reduce the band table's file count")
-    val after = IncrementalIndex.probeText(spark, probe, env._3)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after === before, "probe verdicts must be bit-identical across compaction")
-  }
-
-  /** bid partition directories under a batch-keyed store table. */
-  private def bidDirs(root: String): Set[Long] = {
-    val f = new java.io.File(root)
-    if (!f.exists()) Set.empty
-    else f.listFiles().filter(_.isDirectory).map(_.getName)
-      .filter(_.startsWith("bid=")).map(_.stripPrefix("bid=").toLong).toSet
-  }
-
-  test("watermark compaction of the bid-keyed store: row-preserving, bounded, resumable, nestable") {
-    import org.apache.spark.sql.SaveMode
-    val idx = Files.createTempDirectory("graft-compact-").toString
-    val docs = Tables.documents(spark, sf)
-    // bootstrap (bid −1) + four committed micro-batches (bids 0..3),
-    // the exactly-once ingest layout st13 accrues
-    IncrementalIndex.writeTextIndexBatch(spark,
-      docs.where(col("doc_id") % mod =!= 0), idx, batchId = -1L)
-    val arrivals = docs.where(col("doc_id") % mod === 0)
-    (0L to 3L).foreach(b =>
-      IncrementalIndex.writeTextIndexBatch(spark,
-        arrivals.where(col("doc_id") % 4 === b), idx, batchId = b))
-    val bandsRoot = s"$idx/${IncrementalIndex.TextBands}"
-    def rows(table: String): Seq[String] =
-      spark.read.parquet(s"$idx/$table").drop("bid")
-        .collect().map(_.toString).sorted.toSeq
-    val bandsBefore = rows(IncrementalIndex.TextBands)
-    val shBefore = rows(IncrementalIndex.TextShingles)
-    assert(bidDirs(bandsRoot) === Set(-1L, 0L, 1L, 2L, 3L))
-    // a probe pinned before/after: exceptBid(3) semantics must survive
-    // (the crash-replay contract — batch 3 is above the watermark)
-    val probeBatch = arrivals.where(col("doc_id") % 4 === 3)
-    val vBefore = IncrementalIndex.probeText(spark, probeBatch, idx,
-      exceptBid = Some(3L)).collect().map(_.toString).sorted.toSeq
-
-    // compact bids ≤ 2: bootstrap + batches 0..2 collapse to ONE
-    // segment; batch 3's directory is untouched
-    IncrementalIndex.compactTextIndex(spark, idx, upToBid = 2L)
-    assert(bidDirs(bandsRoot) === Set(IncrementalIndex.compactedBid(2L), 3L),
-      "store must hold exactly the consolidated segment + newer batches")
-    assert(rows(IncrementalIndex.TextBands) === bandsBefore,
-      "compaction must preserve band rows exactly")
-    assert(rows(IncrementalIndex.TextShingles) === shBefore,
-      "compaction must preserve shingle rows exactly")
-    val vAfter = IncrementalIndex.probeText(spark, probeBatch, idx,
-      exceptBid = Some(3L)).collect().map(_.toString).sorted.toSeq
-    assert(vAfter === vBefore,
-      "exceptBid probe verdicts must be identical across compaction")
-
-    // idempotent: re-running the same watermark is a no-op
-    IncrementalIndex.compactTextIndex(spark, idx, upToBid = 2L)
-    assert(rows(IncrementalIndex.TextBands) === bandsBefore)
-    assert(bidDirs(bandsRoot) === Set(IncrementalIndex.compactedBid(2L), 3L))
-
-    // watermarks are monotone: compacting below an existing segment's
-    // coverage must refuse (its label would lie about its contents)
-    val e = intercept[IllegalArgumentException] {
-      IncrementalIndex.compactBatchStore(spark, idx,
-        IncrementalIndex.TextBands, upToBid = 1L)
-    }
-    assert(e.getMessage.contains("watermark"))
-
-    // nesting: a later watermark folds the earlier segment in
-    IncrementalIndex.compactTextIndex(spark, idx, upToBid = 3L)
-    assert(bidDirs(bandsRoot) === Set(IncrementalIndex.compactedBid(3L)),
-      "the higher-watermark segment must subsume the earlier one")
-    assert(rows(IncrementalIndex.TextBands) === bandsBefore)
-    assert(rows(IncrementalIndex.TextShingles) === shBefore)
-
-    // crash-resume: phase 1 only (consolidated segment committed, the
-    // originals not yet deleted — the crash window), then the
-    // documented recovery: re-run the SAME compaction to completion
-    IncrementalIndex.writeTextIndexBatch(spark,
-      arrivals.where(col("doc_id") % 4 === 0), idx, batchId = 4L)
-    val withB4 = rows(IncrementalIndex.TextBands)
-    val leftover = IncrementalIndex.compactWritePhase(spark, idx,
-      IncrementalIndex.TextBands, upToBid = 4L)
-    assert(leftover.nonEmpty, "phase 1 must have consolidated something")
-    assert(bidDirs(bandsRoot) ===
-      Set(IncrementalIndex.compactedBid(3L), 4L, IncrementalIndex.compactedBid(4L)),
-      "the crash window holds originals beside the committed segment")
-    IncrementalIndex.compactBatchStore(spark, idx,
-      IncrementalIndex.TextBands, upToBid = 4L)
-    assert(bidDirs(bandsRoot) === Set(IncrementalIndex.compactedBid(4L)))
-    assert(rows(IncrementalIndex.TextBands) === withB4,
-      "resumed compaction must land exactly the pre-crash rows")
   }
 }

@@ -56,19 +56,6 @@ class KmvAggregatorSpec extends GraftSuite {
     }
   }
 
-  test("kmv store merge: a non-contract stored row (unsorted, dups) is normalized, not merged wrong") {
-    // KmvMergeAgg reads PERSISTED sketch rows — data, not code. A row
-    // violating the ascending-distinct contract must merge as the
-    // sketch of the values it actually holds (round-11 advisory).
-    val m = new KmvSketch.KmvMergeAgg(4)
-    val contract = m.reduce(m.zero, Seq(1L, 3L, 5L, 9L))
-    val corrupted = m.reduce(m.zero, Seq(9L, 3L, 5L, 1L, 3L, 9L))
-    assert(corrupted.toSeq === Seq(1L, 3L, 5L, 9L))
-    assert(m.merge(contract, corrupted).toSeq === contract.toSeq)
-    // and the normalization changes nothing for contract-abiding rows
-    assert(m.reduce(contract, Seq(2L, 4L)).toSeq === Seq(1L, 2L, 3L, 4L))
-  }
-
   test("pair sketch: insert keeps k smallest by hash, min value on a hash tie") {
     val a = KmvSketch.pairsAgg(3)
     val buf = Seq((9L, 9.0), (3L, 3.0), (7L, 7.0), (1L, 1.0), (8L, 8.0))
@@ -121,14 +108,6 @@ class KmvAggregatorSpec extends GraftSuite {
     assert(viaMerge.map(bits).toSeq === Seq(
       (3L, java.lang.Double.doubleToLongBits(-0.0)),
       (5L, java.lang.Double.doubleToLongBits(2.0))))
-  }
-
-  test("pair store merge: a non-contract stored row normalizes (sort, min value per hash)") {
-    val m = new KmvSketch.KmvPairsMergeAgg(4)
-    val contract = m.reduce(m.zero, Seq((1L, 1.0), (3L, 3.0), (5L, 5.0)))
-    val corrupted = m.reduce(m.zero, Seq((5L, 9.0), (3L, 0.5), (1L, 1.0), (3L, 3.0), (5L, 5.0)))
-    assert(corrupted.toSeq === Seq((1L, 1.0), (3L, 0.5), (5L, 5.0)))
-    assert(m.merge(contract, corrupted).toSeq === Seq((1L, 1.0), (3L, 0.5), (5L, 5.0)))
   }
 
   test("kmv finish: readout matches (m, kth) semantics") {

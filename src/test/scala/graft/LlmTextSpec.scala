@@ -242,41 +242,6 @@ class LlmTextSpec extends GraftSuite {
     assert(rows.exists(_.getDouble(3) > 0.5), "clone-heavy docs must surface")
   }
 
-  test("d13 approx variant: sketch percentiles land within rank tolerance of exact") {
-    import graft.operators.LlmText
-    val accuracy = 10000
-    val exact = LlmText.d13CorpusStats(spark, sf).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val approx = LlmText.d13CorpusStatsApprox(spark, sf, accuracy).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(approx.keySet === exact.keySet)
-    // exact columns must be EQUAL (only the percentiles are sketched)
-    for (lang <- exact.keySet) {
-      assert(approx(lang).getLong(1) === exact(lang).getLong(1), s"$lang n_docs")
-      assert(approx(lang).getInt(2) === exact(lang).getInt(2), s"$lang min")
-      assert(approx(lang).getInt(3) === exact(lang).getInt(3), s"$lang max")
-      assert(approx(lang).getLong(4) === exact(lang).getLong(4), s"$lang sum")
-    }
-    // percentile guarantee: the returned value's RANK is within ε·n of
-    // the target rank (GK bound, ε = 1/accuracy) — checked against the
-    // group's actual sorted lengths (via d06's per-doc stats)
-    val byLang = LlmText.d06TextStats(spark, sf)
-      .select("lang", "n_tokens").collect()
-      .map(r => r.getString(0) -> r.getInt(1)).groupBy(_._1)
-      .view.mapValues(_.map(_._2).sorted.toIndexedSeq).toMap
-    for ((lang, lens) <- byLang; (p, idx) <- Seq(0.5 -> 5, 0.9 -> 6)) {
-      val got = approx(lang).getInt(idx)
-      val n = lens.length
-      val lo = lens.indexOf(got) // first rank of the value (0-based)
-      val hi = lens.lastIndexOf(got) // last rank
-      assert(lo >= 0, s"$lang p$p=$got must be an actual group value")
-      val target = p * n
-      val tol = 1.0 + n.toDouble / accuracy
-      assert(lo - tol <= target && target <= hi + 1 + tol,
-        s"$lang p$p=$got rank [$lo,$hi] too far from target $target of $n")
-    }
-  }
-
   test("d20: unigram scores are probabilities, cover the corpus, and rank common-token docs higher") {
     val rows = LlmText.d20UnigramScore(spark, sf).collect()
     assert(rows.length === Tables.documents(spark, sf).count(), "every doc scored")
@@ -1053,42 +1018,6 @@ class LlmTextSpec extends GraftSuite {
     val want = pc.toSeq.sortBy { case (p, c) => (-c, p) }.take(LlmText.BpeTopK)
       .zipWithIndex.map { case ((p, c), i) => (i + 1L, p, c) }
     assert(byRank.toSeq === want, "top merge candidates must match the brute-force count")
-  }
-
-  test("bpeTrainMerges: the iterated train equals the canonical list-merge algorithm") {
-    val rounds = 5
-    val got = LlmText.bpeTrainMerges(spark, sf, rounds).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(got.map(_._1) === (1 to rounds), "one merge per round")
-    assert(got.sliding(2).forall(p => p(0)._4 >= p(1)._4),
-      "top pair counts are non-increasing across rounds (each round's max bounds the next)")
-    // canonical reference: vocab of symbol LISTS, argmax pair by
-    // (count desc, 'a b' asc), left-to-right non-overlapping merge
-    val texts = Tables.documents(spark, sf).select("text").collect().map(_.getString(0))
-    var vocab = scala.collection.mutable.Map.empty[List[String], Long]
-    for (t <- texts; w <- jvmToks(t) if w.length >= 2) {
-      val k = w.map(_.toString).toList
-      vocab(k) = vocab.getOrElse(k, 0L) + 1L
-    }
-    val want = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    for (r <- 1 to rounds) {
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-      for ((syms, f) <- vocab; p <- syms.zip(syms.tail))
-        pc(p) = pc.getOrElse(p, 0L) + f
-      val ((a, b), cnt) = pc.minBy { case ((x, y), c) => (-c, x + " " + y) }
-      want += ((r, a, b, cnt))
-      def merge(syms: List[String]): List[String] = syms match {
-        case `a` :: `b` :: rest => (a + b) :: merge(rest)
-        case h :: rest => h :: merge(rest)
-        case Nil => Nil
-      }
-      vocab = vocab.foldLeft(scala.collection.mutable.Map.empty[List[String], Long]) {
-        case (m, (syms, f)) =>
-          val k = merge(syms); m(k) = m.getOrElse(k, 0L) + f; m
-      }
-    }
-    assert(got === want.toSeq,
-      "distributed regex merge-apply must realize the canonical algorithm")
   }
 
   test("d38: DSIR scores equal a brute-force recomputation; target slice separates upward") {

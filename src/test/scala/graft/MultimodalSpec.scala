@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
-import graft.operators.Multimodal.{DecodedFrame, MediaFrame}
 
 class MultimodalSpec extends GraftSuite {
 
@@ -72,22 +71,6 @@ class MultimodalSpec extends GraftSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(natHash === fb, "native and composed 64-bit hashes must be identical")
     assert(nat.nonEmpty)
-  }
-
-  test("decode plumbing: mapPartitions batches flow through the stub decoder") {
-    import spark.implicits._
-    val frames = Seq(
-      MediaFrame(1L, 0, Array[Byte](1, 2, 3)),
-      MediaFrame(1L, 1, Array[Byte](4, 5)),
-      MediaFrame(2L, 0, Array.emptyByteArray)).toDS()
-    val decoded = Multimodal.decodeFrames(frames).collect().sortBy(f => (f.media_id, f.frame_idx))
-    assert(decoded.map(d => (d.media_id, d.frame_idx)).toSeq ===
-      Seq((1L, 0), (1L, 1), (2L, 0)))
-    decoded.foreach(d => assert(d.feature >= 0.0 && d.feature <= 1.0))
-    assert(decoded(2).feature === 0.0) // empty payload
-    // determinism: same input, same features
-    val again = Multimodal.decodeFrames(frames).collect().sortBy(f => (f.media_id, f.frame_idx))
-    assert(again.map(_.feature).toSeq === decoded.map(_.feature).toSeq)
   }
 
   test("mm05: binaryFile ingestion reads real files with correct sizes and magic") {

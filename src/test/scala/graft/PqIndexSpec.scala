@@ -8,10 +8,10 @@ import graft.jobs.IncrementalIndex
 import graft.operators.Embeddings
 
 /** The persisted PQ half of the incremental index: trained codebook +
-  * 4-byte code rows stored beside cell_members, and the explicit
-  * codebook-retrain event. The stored tables must be byte-identical to
-  * the in-query e12 machinery (one shared definition), or a served ADC
-  * scan and the oracle-pinned query could rank differently.
+  * 4-byte code rows stored beside cell_members. The stored tables must
+  * be byte-identical to the in-query e12 machinery (one shared
+  * definition), or a served ADC scan and the oracle-pinned query could
+  * rank differently.
   */
 class PqIndexSpec extends GraftSuite {
 
@@ -66,38 +66,6 @@ class PqIndexSpec extends GraftSuite {
     IncrementalIndex.encodeSqMembers(spark, day2, tmp)
     val n = spark.read.parquet(s"$tmp/${IncrementalIndex.SqCodes}").count()
     assert(n === all.count() + day2.count())
-  }
-
-  test("retrainPq swaps the frozen codebook and re-encodes the corpus wholesale") {
-    val tmp = Files.createTempDirectory("graft-pq-retrain-").toString
-    val all = Tables.embeddings(spark, sf)
-    val day1 = all.where(col("vec_id") % 3 =!= 0)
-    IncrementalIndex.writeCellIndex(spark, all, tmp)
-    // day-1 codebook trains on the day-1 slice only
-    IncrementalIndex.writePqIndex(spark, day1, day1, tmp)
-    val cbBefore = spark.read.parquet(s"$tmp/${IncrementalIndex.PqCodebook}")
-      .collect().map(_.toString).sorted.toSeq
-    val codesBefore = spark.read.parquet(s"$tmp/${IncrementalIndex.PqCodes}")
-    assert(codesBefore.count() === day1.count())
-    // the retrain event: train on the grown corpus, re-encode everything
-    IncrementalIndex.retrainPq(spark, all, all, tmp)
-    val cbAfter = spark.read.parquet(s"$tmp/${IncrementalIndex.PqCodebook}")
-      .collect().map(_.toString).sorted.toSeq
-    assert(cbAfter !== cbBefore, "retraining on a grown corpus must move the codebook")
-    assert(cbAfter.length === cbBefore.length, "codebook stays PqM x PqK")
-    val codesAfter = spark.read.parquet(s"$tmp/${IncrementalIndex.PqCodes}")
-    assert(codesAfter.count() === all.count(), "codes rebuilt for the full corpus")
-    // re-encode is consistent: stored codes equal a fresh encode of the
-    // corpus against the NEW stored codebook
-    val v = Embeddings.quantizedFrom(spark, all)
-    val members = Embeddings.assignRanked(spark, v,
-        spark.read.parquet(s"$tmp/${IncrementalIndex.CellCentroids}"))
-      .where(col("rn") === 1).select(col("cell"), col("vec_id"), col("q"))
-    val expect = Embeddings.pqEncode(spark, members, "q",
-        spark.read.parquet(s"$tmp/${IncrementalIndex.PqCodebook}"))
-      .withColumnRenamed("neighbor_id", "vec_id")
-      .collect().map(_.toString).sorted.toSeq
-    assert(codesAfter.collect().map(_.toString).sorted.toSeq === expect)
   }
 
   test("ADC recall with the trained codebook is non-decreasing vs the r7 seed codebook") {

@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import graft.functions.{Predicates, TaskParams}
-import graft.operators.Multimodal.FakeDecoder
 
 /** Property-based checks (scalacheck) for the session-free pure surfaces:
-  * parameter parsing, predicate folding, and the deterministic decode
-  * stub. Spark-bound invariants live in the scalatest suites.
+  * parameter parsing, predicate folding and integer formulas.
+  * Spark-bound invariants live in the scalatest suites.
   */
 object PropertyChecks extends Properties("graft") {
 
@@ -113,13 +112,5 @@ object PropertyChecks extends Properties("graft") {
         val got = (n * p + 99) / 100
         val expect = BigInt(n) * p / 100 + (if ((BigInt(n) * p) % 100 == 0) 0 else 1)
         BigInt(got) == expect && got >= 1 && got <= n
-    }
-
-  property("decode stub: deterministic, bounded, total") =
-    forAll(Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))) { bytes =>
-      val payload = bytes.toArray
-      val a = FakeDecoder.decode(payload)
-      val b = FakeDecoder.decode(payload)
-      a == b && a >= 0.0 && a <= 1.0 && (payload.nonEmpty || a == 0.0)
     }
 }

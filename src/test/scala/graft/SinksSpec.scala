@@ -58,40 +58,6 @@ class SinksSpec extends GraftSuite {
     assert(oneDay.count() === expected && expected > 0)
   }
 
-  test("compaction collapses a small-file directory, preserving rows exactly") {
-    val out = tmp("graft-compact-") + "/t"
-    val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type")
-    ev.repartition(40).write.parquet(out)
-    def files(): Seq[java.io.File] =
-      new java.io.File(out).listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
-    val expected = ev.collect().map(_.toString).sorted.toSeq
-    assert(files().length === 40, "fixture should start fragmented")
-    Sinks.compact(spark, out) // default 128 MB target >> data: one file
-    assert(files().length === 1, s"expected one compacted file, got ${files().length}")
-    assert(spark.read.parquet(out).collect().map(_.toString).sorted.toSeq === expected)
-  }
-
-  test("partitioned compaction: one file per directory, pruning survives") {
-    val out = tmp("graft-compact-part-") + "/t"
-    val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type")
-    ev.repartition(10).write.partitionBy("event_type").parquet(out)
-    def dirFiles(d: String): Seq[java.io.File] =
-      new java.io.File(s"$out/event_type=$d").listFiles().toSeq
-        .filter(_.getName.endsWith(".parquet"))
-    val expected = ev.collect().map(_.toString).sorted.toSeq
-    assert(dirFiles("click").length > 1, "fixture should start fragmented per dir")
-    Sinks.compact(spark, out, partitionCols = Seq("event_type"))
-    assert(dirFiles("click").length === 1,
-      s"expected one file per partition dir, got ${dirFiles("click").length}")
-    val back = spark.read.parquet(out)
-    assert(back.select("event_id", "user_id", "event_type")
-      .collect().map(_.toString).sorted.toSeq === expected)
-    val plan = back.where(col("event_type") === "click")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      s"pruning lost after compaction:\n$plan")
-  }
-
   test("bucketed tables join without a shuffle (co-located join)") {
     Sinks.writeBucketed(Tables.orders(spark, sf), "graft_orders_b", "o_custkey", 8)
     Sinks.writeBucketed(

@@ -221,6 +221,90 @@ class StoredMemoSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"memo maps outside StoredMemo: $offenders")
   }
 
+  /** `src` with its comments blanked. String and char literals are kept
+    * whole, so a comment opener inside one is not read as a comment. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def keep(end: Int): Unit = { out.append(src.substring(i, end)); i = end }
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i); i = if (e < 0) src.length else e
+      } else if (src.startsWith("/*", i)) {
+        val e = src.indexOf("*/", i + 2); i = if (e < 0) src.length else e + 2
+        out.append(' ')
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = src.indexOf("\"\"\"", i + 3); keep(if (e < 0) src.length else e + 3)
+      } else if (src.charAt(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src.charAt(j) != '"' && src.charAt(j) != '\n')
+          j += (if (src.charAt(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, src.length))
+      } else if (src.startsWith("'\\", i) && src.startsWith("'", i + 3)) keep(i + 4)
+      else if (src.startsWith("'", i) && src.startsWith("'", i + 2)) keep(i + 3)
+      else keep(i + 1)
+    }
+    out.toString
+  }
+
+  test("every member of the query, job, streaming, sink and function objects has a caller in main") {
+    // a def or val that no registered query, job main, Bench/Verify or
+    // tool reaches is deleted rather than kept for its spec; the names
+    // below are kept on purpose, each for its reason
+    val allowed = Map(
+      "writeLshIndex" -> "persisted twin of the bucket memo (StoredParitySpec, TombstoneSpec)",
+      "probeLshBuckets" -> "persisted twin of the bucket memo (StoredParitySpec)",
+      "writeGraphIndex" -> "persisted twin of e22's graph memo (StoredParitySpec, TombstoneSpec, StreamingSpec)",
+      "writeTruthIndex" -> "persisted twin of the ground-truth memo (StoredParitySpec, TombstoneSpec)",
+      "probeTruth" -> "persisted twin of the ground-truth memo (StoredParitySpec)",
+      "writePqIndex" -> "persisted twin of e12's codebook and codes (StoredParitySpec, PqIndexSpec)",
+      "writeGraphBootstrapBatch" -> "split-spec writer of st22's bootstrap (FixtureParitySpec, GraphInsertSpec, StreamingSpec)",
+      "writeClusterBootstrap" -> "split-spec writer of st25's bootstrap (StoredParitySpec, StreamingSpec)",
+      "writeBenchIndex" -> "split-spec writer of st17's store (BloomFilterSpec, StreamingSpec)",
+      "writeBloomIndex" -> "split-spec writer of st23's store (BloomFilterSpec, StreamingSpec)",
+      "buildIndex" -> "IngestJob's lifecycle API, pinned against d30/e09 (IncrementalIndexSpec)",
+      "ingestBatch" -> "IngestJob's lifecycle API, pinned against d30/e09 (IncrementalIndexSpec)",
+      "nndSeeds" -> "test hook of e22's seed stage (LlmTextSpec)",
+      "m10KmvWindowForm" -> "window-form reference of m10's aggregator (KmvAggregatorSpec)",
+      "withPhashForTest" -> "test hook of mm06's native phash (MultimodalSpec)",
+      "phashFallback" -> "composed-expression reference of mm06's native phash (MultimodalSpec)",
+      "pairsAgg" -> "test handle of the pair-sketch merge laws (KmvAggregatorSpec)",
+      "theoreticalFpr" -> "analytic bound the measured Bloom FPR is checked against (BloomFilterSpec)",
+      "kafkaLines" -> "Kafka source surface (SURVEY S5)",
+      "streamToParquet" -> "streaming file sink surface (SURVEY S6)",
+      "streamToConsole" -> "console sink surface (SURVEY S11)",
+      "groupConcatDistinct" -> "typed Aggregator surface (SURVEY A7; CompositeSpec)")
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString ->
+        stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+    val areas = Seq("graft/operators/", "graft/jobs/", "graft/streaming/",
+      "graft/etl/", "graft/functions/", "graft/Tables.scala")
+    val topLevelObject = """(?:private(?:\[\w+\])?\s+)?(?:case\s+)?object\s.*""".r
+    val member =
+      """  (?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|lazy\s+|implicit\s+)*(?:def|val)\s+(\w+).*""".r
+    val members = for {
+      (path, src) <- sources if areas.exists(path.startsWith)
+      inObject = src.split("\n").scanLeft((false, "")) { case ((in, _), line) =>
+        if (line.nonEmpty && !line.head.isWhitespace) (topLevelObject.matches(line), "")
+        else (in, line)
+      }
+      (true, member(name)) <- inObject
+    } yield name
+    val all = sources.map(_._2).mkString("\n")
+    def mentions(name: String): Int =
+      ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(name) + "(?![A-Za-z0-9_])")
+        .r.findAllMatchIn(all).size
+    val unreached = members.filter(mentions(_) < 2).toSet
+    assert((unreached -- allowed.keySet).isEmpty,
+      s"members with no caller in src/main (delete them, or allow with a reason): ${(unreached -- allowed.keySet).toSeq.sorted}")
+    assert((allowed.keySet -- unreached).isEmpty,
+      s"allowlist entries that are gone or now have a caller: ${(allowed.keySet -- unreached).toSeq.sorted}")
+  }
+
   test("Streams keeps one streaming runner and persists no store") {
     // a second writeStream is a second runner to keep in step; a
     // persist() in the fold is the cached store the CacheManager held

@@ -12,9 +12,9 @@ import graft.operators.{Embeddings, LlmText}
   * rule 3 leans on (docs/SCALE.md): the in-JVM memoized artifact and
   * the persisted-parquet form of the SAME index must be value-identical
   * for the same corpus, and a memo-served result must equal a fresh
-  * recompute. Asserted by construction until now; diffed by frames
-  * here (round-10 verdict item 4): weighted postings, IVF cell
-  * members, and the d03 verified-pair table.
+  * recompute. Diffed by frames here: IVF cell members, substring
+  * postings, PQ/SQ tables, the kNN graph, LSH buckets, ground truth,
+  * cluster bootstrap labels and the d03 verified-pair table.
   */
 class StoredParitySpec extends GraftSuite {
 
@@ -30,7 +30,6 @@ class StoredParitySpec extends GraftSuite {
 
   private lazy val indexDir: String = {
     val tmp = Files.createTempDirectory("graft-parity-").toString
-    IncrementalIndex.writeSparseIndex(spark, Tables.documents(spark, sf), tmp)
     IncrementalIndex.writeCellIndex(spark, Tables.embeddings(spark, sf), tmp)
     IncrementalIndex.writeSubstrIndex(spark, Tables.documents(spark, sf), tmp)
     IncrementalIndex.writeGraphIndex(spark, Tables.embeddings(spark, sf), tmp)
@@ -41,12 +40,6 @@ class StoredParitySpec extends GraftSuite {
     IncrementalIndex.writeLshIndex(spark, Tables.embeddings(spark, sf), tmp)
     IncrementalIndex.writeTruthIndex(spark, Tables.embeddings(spark, sf), tmp)
     tmp
-  }
-
-  test("weighted postings: in-JVM memo ≡ persisted parquet") {
-    val stored = LlmText.storedPostings(spark, sf)
-    val persisted = spark.read.parquet(s"$indexDir/${IncrementalIndex.Postings}")
-    assertSameRows(stored, persisted, "postings")
   }
 
   test("IVF cell assignment: in-JVM memo ≡ persisted cell_members") {
@@ -98,53 +91,6 @@ class StoredParitySpec extends GraftSuite {
     assertSameRows(memoSq, persistedSq, "sq codes")
   }
 
-  test("compacted bid-store ≡ uncompacted: same rows, same serving readout") {
-    // the watermark-compaction parity (round-13): consolidating the
-    // committed bid partitions is a pure relayout — every probe is a
-    // function of the store's ROWS, so the compacted and uncompacted
-    // forms must serve identically
-    val docs = Tables.documents(spark, sf)
-    val plain = Files.createTempDirectory("graft-parity-nocompact-").toString
-    val compacted = Files.createTempDirectory("graft-parity-compact-").toString
-    for (dir <- Seq(plain, compacted); b <- 0L to 2L)
-      IncrementalIndex.writeSubstrIndexBatch(spark,
-        docs.where(col("doc_id") % 3 === b), dir, batchId = b)
-    IncrementalIndex.compactSubstrIndex(spark, compacted, upToBid = 1L)
-    assertSameRows(
-      spark.read.parquet(s"$plain/${IncrementalIndex.RhPostings}").drop("bid"),
-      spark.read.parquet(s"$compacted/${IncrementalIndex.RhPostings}").drop("bid"),
-      "rh postings across compaction")
-    assertSameRows(
-      IncrementalIndex.probeSubstrSpans(spark, plain),
-      IncrementalIndex.probeSubstrSpans(spark, compacted),
-      "span readout across compaction")
-  }
-
-  test("kmv sketch store: merged persisted day partials ≡ the one-shot sketch") {
-    import graft.functions.{KmvSketch, Portable}
-    import graft.operators.Misc.KmvK
-    val ev = Tables.events(spark, sf)
-    val dir1 = Files.createTempDirectory("graft-parity-sk1-").toString
-    IncrementalIndex.writeSketchIndex(spark, ev, dir1)
-    // two appends whose rows interleave within days AND overlap nothing:
-    // the probe-side union must land the identical merged sketch
-    val dir2 = Files.createTempDirectory("graft-parity-sk2-").toString
-    IncrementalIndex.writeSketchIndex(spark, ev.where(col("user_id") % 3 === 0), dir2)
-    IncrementalIndex.writeSketchIndex(spark, ev.where(col("user_id") % 3 =!= 0), dir2,
-      org.apache.spark.sql.SaveMode.Append)
-    val one = IncrementalIndex.probeSketchDistinct(spark, dir1)
-    val two = IncrementalIndex.probeSketchDistinct(spark, dir2)
-    assertSameRows(one, two, "sketch store split append")
-    // and the store's merged readout IS the sketch built in one pass
-    val direct = ev.select(col("event_type"), Portable.h64(col("user_id")).as("h"))
-      .groupBy(col("event_type"))
-      .agg(KmvSketch.kmvValues(KmvK)(col("h")).as("sk"))
-      .select(col("event_type"), size(col("sk")).cast("long").as("m"),
-        element_at(col("sk"), size(col("sk"))).as("kth"))
-    assertSameRows(one.select("event_type", "m", "kth"), direct,
-      "sketch store vs one-shot sketch")
-  }
-
   test("kNN graph: in-JVM memo ≡ persisted graph_edges, and the rounds lever composes") {
     // e22's default levers (rounds=1, revCap=8) serve the memoized
     // graph; the persisted writer iterates the same core over the same
@@ -185,26 +131,6 @@ class StoredParitySpec extends GraftSuite {
     val stored = Embeddings.bruteRankedOf(spark, sf)
     val persisted = IncrementalIndex.probeTruth(spark, indexDir)
     assertSameRows(stored, persisted, "ground truth")
-  }
-
-  test("quantile-sketch store: merged persisted day partials ≡ the streaming/batch sketch readout") {
-    import graft.streaming.AdAnalytics
-    val ev = Tables.events(spark, sf)
-    val dir1 = Files.createTempDirectory("graft-parity-qs1-").toString
-    IncrementalIndex.writeQuantileIndex(spark, ev, dir1)
-    // interleaved split-append must merge to the identical sketch (the
-    // kmv-sketch-store contract, here with value payloads riding along)
-    val dir2 = Files.createTempDirectory("graft-parity-qs2-").toString
-    IncrementalIndex.writeQuantileIndex(spark, ev.where(col("event_id") % 3 === 0), dir2)
-    IncrementalIndex.writeQuantileIndex(spark, ev.where(col("event_id") % 3 =!= 0), dir2,
-      org.apache.spark.sql.SaveMode.Append)
-    val one = IncrementalIndex.probeQuantiles(spark, dir1)
-    val two = IncrementalIndex.probeQuantiles(spark, dir2)
-    assertSameRows(one, two, "quantile store split append")
-    // and the store's merged readout IS st20's streaming readout (and
-    // thereby m19's batch form — all three ride sketchQuantiles)
-    assertSameRows(one, AdAnalytics.st20StreamingQuantiles(spark, sf),
-      "quantile store vs streaming readout")
   }
 
   test("cluster bootstrap: memoized-d03 fixture path ≡ subset self-join path") {

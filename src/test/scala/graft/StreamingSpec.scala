@@ -348,102 +348,6 @@ class StreamingSpec extends GraftSuite {
     assert(!out.contains(0L), s"late event's window must be dropped: $out")
   }
 
-  test("bounded dedup drops in-horizon duplicates and expires keys past the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Long)] // (event_id, event time as epoch seconds)
-    val in = ms.toDF().toDF("event_id", "sec")
-      .withColumn("t", expr("timestamp_seconds(sec)"))
-    val deduped = AdAnalytics.boundedDedup(in, "t", Seq("event_id"), "10 seconds")
-    val qn = "graft_bounded_dedup_test"
-    val q = deduped.select(col("event_id"), col("sec")).writeStream
-      .format("memory").queryName(qn).outputMode("append")
-      .option("checkpointLocation", ckpt()).start()
-    ms.addData((1L, 0L), (1L, 5L), (2L, 3L)) // id=1 dup inside the horizon
-    q.processAllAvailable()
-    ms.addData((3L, 200L))                   // watermark → 190s; ids 1,2 expire
-    q.processAllAvailable()
-    ms.addData((1L, 195L))                   // same key AFTER expiry
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table(qn).collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    // exactly ONE of the two in-horizon id=1 duplicates survives (which
-    // one is not ordered within a batch), plus the post-expiry re-emit
-    assert(rows.count { case (id, sec) => id == 1L && sec < 100L } === 1,
-      s"in-horizon duplicate must be dropped: $rows")
-    assert(rows.contains(1L -> 195L), s"key 1 must re-emit after state expiry: $rows")
-    assert(rows.contains(2L -> 3L) && rows.contains(3L -> 200L), s"$rows")
-    spark.catalog.dropTempView(qn)
-  }
-
-  test("cumulative state with event-time TTL expires idle keys and restarts their counts") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Long)] // (user_id, event time as epoch seconds)
-    val in = ms.toDF().toDF("user_id", "sec")
-      .withColumn("t", expr("timestamp_seconds(sec)"))
-      .withWatermark("t", "0 seconds")
-      .select(col("user_id"), col("t")) // unchanged column keeps the watermark tag
-      .as[(Long, java.sql.Timestamp)]
-    val updates = AdAnalytics.cumulativeCountsWithTtl(in, ttlMillis = 10000L)
-    val qn = "graft_ttl_state_test"
-    val q = updates.writeStream.format("memory").queryName(qn)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt()).start()
-    ms.addData((1L, 100L), (1L, 102L), (2L, 101L)) // u1 count 2, u2 count 1
-    q.processAllAvailable()
-    ms.addData((2L, 1000L))  // u2 accumulates; watermark → 1000s after this batch
-    q.processAllAvailable()
-    ms.addData((3L, 2000L))  // timeout pass: u1 (last seen 102s) is idle > ttl → expires
-    q.processAllAvailable()
-    ms.addData((1L, 2001L))  // u1 returns AFTER expiry
-    q.processAllAvailable()
-    q.stop()
-    val updatesSeen = spark.table(qn).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    // u1 reached 2, expired, then RESTARTED at 1 — never 3
-    assert(updatesSeen.contains(1L -> 2L) && updatesSeen.contains(1L -> 1L),
-      s"expected u1 to restart after TTL expiry: $updatesSeen")
-    assert(!updatesSeen.contains(1L -> 3L), s"u1 state must not survive the TTL: $updatesSeen")
-    // u2 stayed active across its two batches → cumulative 2
-    assert(updatesSeen.contains(2L -> 2L), s"active key must accumulate: $updatesSeen")
-    spark.catalog.dropTempView(qn)
-  }
-
-  test("TTL state: a group arriving entirely behind the watermark does not kill the query") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Long)] // (user_id, event time as epoch seconds)
-    val in = ms.toDF().toDF("user_id", "sec")
-      .withColumn("t", expr("timestamp_seconds(sec)"))
-      .withWatermark("t", "0 seconds")
-      .select(col("user_id"), col("t"))
-      .as[(Long, java.sql.Timestamp)]
-    val updates = AdAnalytics.cumulativeCountsWithTtl(in, ttlMillis = 10000L)
-    val qn = "graft_ttl_late_group_test"
-    val q = updates.writeStream.format("memory").queryName(qn)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt()).start()
-    ms.addData((1L, 2000L)) // watermark → 2000s
-    q.processAllAvailable()
-    // u9's only event is 1900s behind the watermark, so its natural
-    // timeout (100s + ttl) would sit below the watermark —
-    // setTimeoutTimestamp rejects that, which unclamped would kill the
-    // query. Spark 4 drops the fully-late row before the state function
-    // (observed; the clamp stays as defense-in-depth for the
-    // mixed-batch case), so the pinned contract is: the query SURVIVES
-    // and the late group simply produces no output.
-    ms.addData((9L, 100L))
-    q.processAllAvailable() // throws if the state function died
-    ms.addData((1L, 2001L)) // query still live and accumulating
-    q.processAllAvailable()
-    q.stop()
-    val seen = spark.table(qn).collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    assert(!seen.exists(_._1 == 9L), s"fully-late group must be dropped: $seen")
-    assert(seen.contains(1L -> 2L), s"query must survive the late batch: $seen")
-    spark.catalog.dropTempView(qn)
-  }
-
   test("sliding window: each event lands in exactly 4 window instances") {
     val total = Tables.events(spark, sf).count()
     val windowed = AdAnalytics.st02SlidingWindow(spark, sf)
@@ -523,105 +427,6 @@ class StreamingSpec extends GraftSuite {
     val got = fold.store.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = (1 to 50).map(_.toLong % 7).groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(got === want)
-  }
-
-  test("persisted JDBC fold: a new run on the same checkpoint+store resumes; replays are skipped") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.operators.Misc
-    val ms = MemoryStream[(String, Double)]
-    val cp = ckpt()
-    val url = "jdbc:derby:memory:graftst12db;create=true"
-    val props = new java.util.Properties()
-    val table = "st12_fold_store"
-    def pinned(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("event_type"), col("n_events"),
-        col("sum_value").cast("decimal(18,2)").as("sum_value"))
-    val empty = pinned(Misc.eventRollup(
-      Seq.empty[(String, Double)].toDF("event_type", "value")))
-    def merge(store: org.apache.spark.sql.DataFrame,
-              batch: org.apache.spark.sql.DataFrame) =
-      pinned(Upsert.accumulateAll(store, Misc.eventRollup(batch),
-        Seq("event_type"), Seq("n_events", "sum_value")))
-    def run(src: MemoryStream[(String, Double)], checkpoint: String): Unit =
-      Streams.runForeachBatchJdbc(spark, "append", empty, url, table, props, checkpoint)(
-        _ => src.toDF().toDF("event_type", "value"))(merge)
-    ms.addData(("click", 1.50), ("view", 2.25), ("click", 0.25))
-    run(ms, cp) // run 1 folds the first chunk, store lands in Derby
-    ms.addData(("click", 1.00), ("cart", 3.00))
-    run(ms, cp) // run 2: NEW query, same checkpoint+store — must RESUME
-    def readStore() = spark.read.jdbc(url, table, props).drop(Streams.BatchIdCol)
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        r.getDecimal(2).toPlainString)).sorted.toSeq
-    val afterResume = readStore()
-    // equals the one-shot rollup over ALL events — a fold that restarted
-    // from an empty store would read (click 1, cart 1) instead
-    assert(afterResume ===
-      Seq(("cart", 1L, "3.00"), ("click", 3L, "2.75"), ("view", 1L, "2.25")))
-    // crash-replay simulation: a FRESH checkpoint re-delivers its data
-    // as batch 0; the store's batch-id watermark marks 0 and 1 already
-    // applied, so the replayed merges are skipped and nothing
-    // double-counts (the foreachBatch batchId idempotence contract)
-    val replay = MemoryStream[(String, Double)]
-    replay.addData(("click", 99.0))
-    run(replay, ckpt())
-    assert(readStore() === afterResume, "replayed batch ids must not re-merge")
-  }
-
-  test("persisted JDBC fold: store-read failures abort the batch — only true table absence reads as first-batch") {
-    val props = new java.util.Properties()
-    val url = "jdbc:derby:memory:graftprobedb;create=true"
-    // live connection + absent table → false (the legitimate first-batch case)
-    assert(!Streams.jdbcTableExists(url, "no_such_table_probe", props))
-    // connection-level failure (database not found — the transient-outage
-    // analogue) must PROPAGATE, never read as absence: the old behavior
-    // mapped it to existing=None and the overwrite then truncated the store
-    intercept[java.sql.SQLException] {
-      Streams.jdbcTableExists("jdbc:derby:memory:graftNoSuchDb", "t", props)
-    }
-    // and once the table exists, the probe sees it
-    import spark.implicits._
-    graft.etl.Sinks.jdbcOverwrite(
-      Seq((1L, "a")).toDF("k", "v"), url, "probe_present", props)
-    assert(Streams.jdbcTableExists(url, "probe_present", props))
-  }
-
-  test("retriedJdbc: transient SQLExceptions are retried with backoff, persistent ones propagate after the bound") {
-    // fails twice then succeeds → the retry rides out the blip
-    var calls = 0
-    val got = Streams.retriedJdbc(attempts = 3, backoffMs = 1L) {
-      calls += 1
-      if (calls < 3) throw new java.sql.SQLTransientConnectionException("blip")
-      42
-    }
-    assert(got === 42 && calls === 3)
-    // never succeeds → the LAST failure propagates after `attempts` tries
-    var always = 0
-    val e = intercept[java.sql.SQLException] {
-      Streams.retriedJdbc(attempts = 3, backoffMs = 1L) {
-        always += 1
-        throw new java.sql.SQLException(s"down $always")
-      }
-    }
-    assert(always === 3 && e.getMessage === "down 3")
-    // non-SQL failures are NOT retried — the bound is for the connection layer only
-    var other = 0
-    intercept[IllegalArgumentException] {
-      Streams.retriedJdbc(attempts = 3, backoffMs = 1L) {
-        other += 1; throw new IllegalArgumentException("bug")
-      }
-    }
-    assert(other === 1)
-  }
-
-  test("st12's JDBC-persisted variant equals the in-memory fold over the same input") {
-    val got = AdAnalytics.st12RunningRollupJdbc(spark, sf,
-        "jdbc:derby:memory:graftst12fx;create=true", "st12_store_fx",
-        new java.util.Properties(), ckpt())
-      .collect().map(_.toString).sorted.toSeq
-    val want = AdAnalytics.st12RunningRollup(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(got.nonEmpty && got === want)
   }
 
   test("statePartitions lever: identical results at 4 and 32, session conf restored") {
@@ -1055,86 +860,6 @@ class StreamingSpec extends GraftSuite {
       assert(a.count() === b.count(), s"$t row count differs from one-shot")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"$t rows differ from the one-shot build")
-    }
-  }
-
-  test("st13: watermark compaction between batches keeps the ingest exactly-once and the store bounded") {
-    // the small-files lifecycle under a LIVE ingest: compact committed
-    // bid partitions at a watermark between micro-batches, then keep
-    // ingesting — including a crash-replay AFTER the compaction, whose
-    // exceptBid probe must still see exactly the pre-crash store (the
-    // compacted segment's bid can never collide with a real batch id)
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    val mod = graft.operators.LlmText.IncrementalBatchMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val corpusDf = docs.filter(_._1 % mod != 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
-    val chunks = arrivals.grouped((arrivals.length + 2) / 3).toSeq
-    val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val idx = java.nio.file.Files.createTempDirectory("st13-compact-idx-").toString
-    IncrementalIndex.writeTextIndexBatch(spark, corpusDf, idx, batchId = -1L)
-    val cp = ckpt()
-    val ms = MemoryStream[(Long, String, String, String, Long)]
-    @volatile var poison = false
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val v = IncrementalIndex.probeText(spark, batch, idx, exceptBid = Some(bid))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-          IncrementalIndex.writeTextIndexBatch(spark, batch, idx, bid)
-          got ++= v
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
-    }
-    def bidDirsOf(table: String): Set[Long] =
-      new java.io.File(s"$idx/$table").listFiles().filter(_.isDirectory)
-        .map(_.getName).filter(_.startsWith("bid="))
-        .map(_.stripPrefix("bid=").toLong).toSet
-    ms.addData(chunks(0): _*); run(expectCrash = false) // batch 0 commits
-    // the maintenance event between batches: bootstrap + batch 0
-    // collapse to one segment — the store's directory count is now
-    // bounded by (1 + batches-since-watermark), not total batches ever
-    IncrementalIndex.compactTextIndex(spark, idx, upToBid = 0L)
-    assert(bidDirsOf(IncrementalIndex.TextBands) ===
-      Set(IncrementalIndex.compactedBid(0L)),
-      "after compaction the store must hold exactly the one segment")
-    // crash-replay ACROSS the compaction boundary: batch 1 appends,
-    // dies before its offsets commit, then replays with the same id —
-    // its exceptBid probe reads the compacted segment + nothing of its
-    // own crashed append
-    poison = true
-    ms.addData(chunks(1): _*); run(expectCrash = true)
-    run(expectCrash = false) // replay of batch 1
-    ms.addData(chunks(2): _*); run(expectCrash = false)
-    assert(got.toSet === expected,
-      "verdicts across a compaction + crash-replay must equal the one-shot d30 recompute")
-    assert(bidDirsOf(IncrementalIndex.TextBands) ===
-      Set(IncrementalIndex.compactedBid(0L), 1L, 2L))
-    // and the store's ROWS are exactly the one-shot build's
-    val oneShot = java.nio.file.Files.createTempDirectory("st13-compact-oneshot-").toString
-    IncrementalIndex.writeTextIndex(spark, Tables.documents(spark, sf), oneShot)
-    for (t <- Seq(IncrementalIndex.TextBands, IncrementalIndex.TextShingles)) {
-      val a = spark.read.parquet(s"$idx/$t").drop("bid")
-      val b = spark.read.parquet(s"$oneShot/$t")
-      assert(a.count() === b.count(), s"$t row count differs from one-shot")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"$t rows differ from the one-shot build after compaction")
     }
   }
 

@@ -10,22 +10,16 @@ import graft.operators.Embeddings
 
 /** DELETION support for the persisted indexes — the third lifecycle
   * verb beside probe and append: upstream-retracted ids must vanish
-  * from every frozen artifact without rebuilding any of them. The
-  * cheap half is the tombstone table + probe-side anti-join
-  * ([[IncrementalIndex.liveTable]]); the physical half is
-  * [[IncrementalIndex.vacuum]]. Laws pinned here:
+  * from every frozen artifact without rebuilding any of them, through
+  * the tombstone table + probe-side anti-join
+  * ([[IncrementalIndex.liveTable]]). Laws pinned here:
   *
-  *  - row-LOCAL artifacts (LSH buckets, cell members under frozen
-  *    centroids) vacuum to EXACTLY the store a rebuild over the
-  *    survivor corpus produces — deletion is row retraction, never
-  *    retraining;
   *  - ranked artifacts (graph edges, ground truth) are filtered on
   *    BOTH endpoints — sound (no retracted id survives anywhere) but
   *    lossy (completeness returns only with the explicit rebuild);
-  *  - the persisted filtered serve ≡ e24's in-JVM form (the stored
-  *    and memo paths cannot drift under deletion);
-  *  - bid-keyed tables vacuum ONLY their affected partitions;
-  *  - vacuum clears the tombstones: liveTable ≡ the plain read after.
+  *  - st24's bid-partitioned tombstone table reads as one set, and the
+  *    persisted live serve over it ≡ e24's in-JVM form (the stored and
+  *    memo paths cannot drift under deletion).
   */
 class TombstoneSpec extends GraftSuite {
 
@@ -48,7 +42,7 @@ class TombstoneSpec extends GraftSuite {
     IncrementalIndex.writeGraphIndex(spark, all, idx)
     IncrementalIndex.writeTruthIndex(spark, all, idx)
     IncrementalIndex.writeCellIndex(spark, all, idx, centroidTrain = Some(all))
-    IncrementalIndex.writeVecTombstones(spark, delIds, idx)
+    IncrementalIndex.writeVecTombstonesBatch(spark, delIds, idx, 0L)
     (idx, delIds.collect().map(_.getLong(0)).toSet)
   }
 
@@ -73,99 +67,9 @@ class TombstoneSpec extends GraftSuite {
       spark.read.parquet(s"$idx/${IncrementalIndex.CellCentroids}").count())
   }
 
-  test("vacuum: row-local artifacts equal a rebuild over the survivors under the same frozen artifacts") {
-    val (idx, dels) = vecEnv
-    IncrementalIndex.vacuum(spark, idx)
-    // tombstones cleared; liveTable now ≡ the plain read
-    assertSameRows(
-      IncrementalIndex.liveTable(spark, idx, IncrementalIndex.LshBuckets),
-      spark.read.parquet(s"$idx/${IncrementalIndex.LshBuckets}"),
-      "post-vacuum liveTable")
-    // independent rebuild over the survivor corpus
-    val survivors = Tables.embeddings(spark, sf)
-      .where(col("vec_id") % Embeddings.VecTombMod =!= Embeddings.VecTombRem)
-    val rebuilt = Files.createTempDirectory("graft-tomb-rebuild-").toString
-    IncrementalIndex.writeLshIndex(spark, survivors, rebuilt)
-    // same FROZEN centroids: trained on the full pre-deletion corpus
-    IncrementalIndex.writeCellIndex(spark, survivors, rebuilt,
-      centroidTrain = Some(Tables.embeddings(spark, sf)))
-    assertSameRows(
-      spark.read.parquet(s"$idx/${IncrementalIndex.LshBuckets}"),
-      spark.read.parquet(s"$rebuilt/${IncrementalIndex.LshBuckets}"),
-      "vacuumed lsh_buckets vs survivor rebuild")
-    assertSameRows(
-      spark.read.parquet(s"$idx/${IncrementalIndex.CellMembers}"),
-      spark.read.parquet(s"$rebuilt/${IncrementalIndex.CellMembers}"),
-      "vacuumed cell_members vs survivor rebuild under the frozen centroids")
-    // ranked artifacts: filtered, both endpoints gone (sound) — but a
-    // rebuild's descent finds survivor-to-survivor edges the filter
-    // cannot invent, which is exactly why rebuild is a separate event
-    val edges = spark.read.parquet(s"$idx/${IncrementalIndex.GraphEdges}")
-    assert(edges.where(col("query_id").isin(dels.toSeq: _*) ||
-      col("neighbor_id").isin(dels.toSeq: _*)).isEmpty)
-  }
-
-  test("persisted filtered serve ≡ e24's in-JVM form (stored and memo paths agree under deletion)") {
-    val (idx, _) = vecEnv // vacuumed by the previous test (suite order)
-    val aliveQueries = Tables.embeddings(spark, sf)
-      .where(col("vec_id") % Embeddings.VecTombMod =!= Embeddings.VecTombRem &&
-        col("vec_id") % 5 === 0)
-    val stored = IncrementalIndex.probeGraphServe(spark, aliveQueries, idx)
-      .select("query_id", "neighbor_id", "rank")
-    val memo = Embeddings.e24TombstoneServe(spark, sf)
-      .select("query_id", "neighbor_id", "rank")
-    assertSameRows(stored, memo, "tombstoned serve: persisted vs in-JVM")
-  }
-
-  test("bid-keyed vacuum rewrites ONLY the affected partitions") {
-    import scala.jdk.CollectionConverters._
-    val idx = Files.createTempDirectory("graft-tomb-bid-").toString
-    val docs = Tables.documents(spark, sf)
-    (0L to 2L).foreach(b =>
-      IncrementalIndex.writeSubstrIndexBatch(spark,
-        docs.where(col("doc_id") % 3 === b), idx, batchId = b))
-    // retract ids that live ONLY in batch 1
-    val dels = docs.select(col("doc_id")).where(col("doc_id") % 3 === 1)
-      .limit(20)
-    val delSet = dels.collect().map(_.getLong(0)).toSet
-    IncrementalIndex.writeDocTombstones(spark, dels, idx)
-    def files(): Map[String, (Long, Long)] = {
-      val root = java.nio.file.Paths.get(s"$idx/${IncrementalIndex.RhPostings}")
-      val it = java.nio.file.Files.walk(root)
-      try it.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filterNot(p => p.getFileName.toString.startsWith("_") ||
-          p.getFileName.toString.startsWith("."))
-        .map(p => p.toString ->
-          (java.nio.file.Files.size(p),
-            java.nio.file.Files.getLastModifiedTime(p).toMillis))
-        .toMap
-      finally it.close()
-    }
-    val before = files()
-    val rowsBefore = spark.read.parquet(s"$idx/${IncrementalIndex.RhPostings}")
-      .where(!col("doc_id").isin(delSet.toSeq: _*))
-      .drop("bid").collect().map(_.toString).sorted.toSeq
-    IncrementalIndex.vacuum(spark, idx)
-    val after = files()
-    for ((path, stamp) <- before if !path.contains("bid=1"))
-      assert(after.get(path).contains(stamp),
-        s"vacuum touched an unaffected partition's file: $path")
-    assert(before.keys.filter(_.contains("bid=1"))
-      .forall(p => !after.get(p).exists(_ == before(p))),
-      "the affected partition must have been rewritten")
-    val rowsAfter = spark.read.parquet(s"$idx/${IncrementalIndex.RhPostings}")
-      .drop("bid").collect().map(_.toString).sorted.toSeq
-    assert(rowsAfter === rowsBefore,
-      "vacuum must drop exactly the tombstoned rows")
-    assert(rowsAfter.nonEmpty)
-  }
-
-  test("bid-partitioned tombstone table (st24's layout): liveTable and vacuum read it as a set") {
+  test("bid-partitioned tombstone table (st24's layout): liveTable reads it as a set") {
     // st24 accrues the retraction set as one bid=<batchId> partition
-    // per micro-batch; liveTable must read the UNION of partitions and
-    // vacuum must fold + clear the partitioned table exactly like the
-    // flat form
+    // per micro-batch; liveTable must read the UNION of partitions
     import spark.implicits._
     val idx = Files.createTempDirectory("graft-tomb-bidset-").toString
     IncrementalIndex.writeServePair(spark, sf, idx)
@@ -179,16 +83,5 @@ class TombstoneSpec extends GraftSuite {
       IncrementalIndex.probeGraphServeLive(spark, idx)
         .select("query_id", "neighbor_id", "rank"),
       memo, "bid-partitioned tombstones: live serve vs in-JVM e24")
-    IncrementalIndex.vacuum(spark, idx)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$idx/${IncrementalIndex.VecTombstones}")),
-      "vacuum must clear the partitioned tombstone table")
-    assert(spark.read.parquet(s"$idx/${IncrementalIndex.LshBuckets}")
-      .where(col("vec_id").isin(ids: _*)).count() === 0L,
-      "vacuum must drop retracted ids from the bucket table")
-    assertSameRows(
-      IncrementalIndex.probeGraphServeLive(spark, idx)
-        .select("query_id", "neighbor_id", "rank"),
-      memo, "post-vacuum serve (liveTable ≡ plain read)")
   }
 }
