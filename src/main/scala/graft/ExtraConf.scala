@@ -13,10 +13,22 @@ import org.apache.spark.sql.SparkSession
   * instead. Malformed fragments without '=' FAIL FAST: this parser runs
   * inside the verification gate, where a silently half-applied conf
   * string would make a "passes under strategy X" claim about a run that
-  * never actually set strategy X.
+  * never actually set strategy X. [[intLever]] holds integer levers to
+  * the same rule.
   */
 object ExtraConf {
   val EnvVar = "SPARK_GRAFT_CONF"
+
+  /** The one reader of an integer `spark.graft.*` lever: the session
+    * value of `key` (else `default`), which must be an integer of at
+    * least `min`. A bad value fails with an error that names the key
+    * and the value, instead of a bare NumberFormatException or an
+    * out-of-range value that silently empties a result. */
+  def intLever(s: SparkSession, key: String, default: Int, min: Int): Int =
+    s.conf.getOption(key).fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= min).getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer >= $min, got '$v'"))
+    }
 
   def isSet: Boolean = sys.env.get(EnvVar).exists(_.trim.nonEmpty)
 

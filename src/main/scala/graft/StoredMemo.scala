@@ -46,30 +46,6 @@ private[graft] object StoredMemo {
     * call — the measured-cold-bench switch. */
   val DisableConf = "spark.graft.storedMemo.disable"
 
-  /** Partition count for stored in-JVM artifacts that downstream
-    * queries fan out over (r13 optimization round). A small artifact's
-    * build plan usually ends in an AQE-coalesced exchange — often ONE
-    * post-shuffle partition at fixture scale — and `localCheckpoint`
-    * FREEZES that layout, so every probe that multiplies rows against
-    * the artifact (d33's postings self-join, bucket joins) inherits a
-    * single-task stage and runs one-core no matter the cluster
-    * (measured: the d33 dots stage was 15.6 s single-partition vs ~2 s
-    * spread; guide §2.4/§6 — the artifact boundary is a WRITE, size its
-    * layout like one). Scale-adaptive: defaults to the context's
-    * defaultParallelism (total cores), overridable per deployment via
-    * `spark.graft.store.partitions` (CONFIG.md). */
-  val StorePartsConf = "spark.graft.store.partitions"
-
-  def storeParts(s: SparkSession): Int =
-    s.conf.getOption(StorePartsConf).map { v =>
-      val n = try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$StorePartsConf must be a positive integer, got '$v'")
-      }
-      require(n > 0, s"$StorePartsConf must be a positive integer, got '$v'")
-      n
-    }.getOrElse(s.sparkContext.defaultParallelism)
-
   def disabled(s: SparkSession): Boolean =
     s.conf.getOption(DisableConf).exists(_.trim.equalsIgnoreCase("true"))
 

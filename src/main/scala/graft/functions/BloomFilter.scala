@@ -34,13 +34,11 @@ import org.apache.spark.sql.functions._
   * at >10 bits/key (FPR ~1e-4 at k=7). At 100 TB the filter scales with
   * the BUILD side (the bounded benchmark / blocklist), never the corpus:
   * 10^8 keys at 10 bits/key is ~125 MB — still one broadcast where the
-  * key strings would be many GB. Levers: `spark.graft.bloom.bits`,
-  * `spark.graft.bloom.k` (CONFIG.md).
+  * key strings would be many GB. d49 and st23 build at [[DefaultBits]]
+  * and [[DefaultK]]; the geometry rides in every stored filter.
   */
 object BloomFilter {
 
-  val BitsConf = "spark.graft.bloom.bits"
-  val KConf = "spark.graft.bloom.k"
   final val DefaultBits = 524288 // 2^19
   final val DefaultK = 7
 
@@ -106,8 +104,7 @@ object BloomFilter {
     * measured 1.71 s → 1.57 s on d49 at sf0.1 vs the naive k·(h1,h2)
     * form (codegen subexpression elimination did not share the base
     * hashes across probes); the residual probe cost is the k-probe
-    * arithmetic itself, linear in k (the `spark.graft.bloom.k` lever:
-    * 1.10 s at k=1). */
+    * arithmetic itself, linear in k (1.10 s at k=1). */
   def mightContain(words: Array[Long], x: Column, bits: Int, k: Int): Column = {
     require(words.length.toLong * 64 == bits,
       s"words length ${words.length} does not match bits $bits")

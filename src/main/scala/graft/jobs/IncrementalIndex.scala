@@ -7,39 +7,42 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
 import graft.operators.{Embeddings, LlmText, SelfJoin}
 
 /** The PERSISTED incremental-dedup index — the store that turns d30/e09
-  * from operators into a daily pipeline with a day 2.
+  * from operators into a streaming ingest with a day 2.
   *
   * d30 and e09 prove the bipartite probe shape (batch × index, never
   * corpus²) but recompute their index side in-query because the oracle
   * fixture has no store. The reference's analogous capability is its
   * accumulate-upsert store (adversStat/src/main/scala/JdbcHelper.scala:
   * 80-172 — state survives across runs and new data folds in); here the
-  * index is four parquet tables, the layout a 100 TB deployment would
-  * keep in its lake:
+  * index is a set of parquet tables, the layout a 100 TB deployment
+  * would keep in its lake, each written by the st-query that serves it:
   *
-  *  - `text_bands`    (band, band_key, doc_id) — the banded-LSH entries,
-  *    exactly the rows d30's corpus side derives per document.
-  *  - `text_shingles` (doc_id, sh) — the shingle sets Jaccard
-  *    verification needs, so day-2 verification NEVER re-reads day-1
-  *    text.
-  *  - `cell_centroids` (cell, cvec, ncv) — the trained IVF directions,
-  *    computed ONCE and frozen (the faiss convention: assignment uses
-  *    the trained index; retraining is a separate, rarer event).
-  *  - `cell_members`  (cell, vec_id, q, nq) — each vector's primary-cell
-  *    assignment plus its quantized form for exact cosine verification.
-  *  - `pq_codebook`   (m, code, cw, ncw) — the TRAINED product-quantizer
-  *    codebook (per-subspace Lloyd, e12's machinery), frozen like the
-  *    centroids; a rebuild ([[writePqIndex]]) is its refresh event.
-  *  - `pq_codes`      (cell, vec_id, codes, nrecon) — every member's
-  *    4-byte PQ encoding, the table an IVFPQ index persists: an ADC
-  *    scan reads codes + codebook, never a raw vector.
+  *  - `text_bands`    (band, band_key, doc_id) and `text_shingles`
+  *    (doc_id, sh) — d30's banded-LSH entries and the shingle sets
+  *    Jaccard verification needs (st13, st25), so day-2 verification
+  *    NEVER re-reads day-1 text.
+  *  - `rh_postings`   (doc_id, p, h) — d44's rolling-hash window
+  *    postings (st19).
+  *  - `cell_centroids` (cell, cvec, ncv) and `cell_members` (cell,
+  *    vec_id, q, nq) — the trained IVF directions, computed ONCE and
+  *    frozen (the faiss convention), and each vector's primary-cell
+  *    assignment (st14).
+  *  - `sq_quantizer` / `sq_codes`, `media_bands`, `bench_shingles` /
+  *    `bloom_words`, `lsh_buckets` / `graph_edges`, `vec_tombstones`,
+  *    `cluster_labels` / `label_remaps` — st15, st16, st17/st23,
+  *    st21/st22/st24 and st25's stores.
+  *
+  * The text, substring, graph-insert, tombstone and cluster tables are
+  * batch-keyed: each micro-batch lands in its own `bid=<id>` partition,
+  * written with Overwrite, and bootstrap rows take bid = −1 (see
+  * [[writeTextIndexBatch]]).
   *
   * Daily cost ∝ |batch| × collision width: the probe joins are the same
   * strategy-gated equi-joins as d30/e09 ([[SelfJoin]]: broadcast
   * locally, sort-merge + AQE skew split at scale), the index side
-  * arrives via a parquet scan of exactly the columns needed, and
-  * APPENDING survivors is an append of batch-sized partitions — the
-  * corpus is never rewritten, never re-paired, never re-scanned.
+  * arrives via a parquet scan of exactly the columns needed, and each
+  * append is a batch-sized partition — the corpus is never rewritten,
+  * never re-paired, never re-scanned.
   *
   * Contract: the store pins the signature scheme its entries were built
   * with — probes must run under the same `spark.graft.lsh.bandRows`
@@ -52,8 +55,6 @@ object IncrementalIndex {
   val TextShingles = "text_shingles"
   val CellCentroids = "cell_centroids"
   val CellMembers = "cell_members"
-  val PqCodebook = "pq_codebook"
-  val PqCodes = "pq_codes"
   val SqQuantizer = "sq_quantizer"
   val SqCodes = "sq_codes"
   val MediaBands = "media_bands"
@@ -61,7 +62,6 @@ object IncrementalIndex {
   val RhPostings = "rh_postings"
   val GraphEdges = "graph_edges"
   val LshBuckets = "lsh_buckets"
-  val TruthTopK = "truth_topk"
   val VecTombstones = "vec_tombstones"
   val BloomWords = "bloom_words"
   val ClusterLabels = "cluster_labels"
@@ -86,18 +86,16 @@ object IncrementalIndex {
   // ------------------------------------------------------- tombstones
   /** Which store tables the vec-id tombstones filter, on which id
     * columns. Row-LOCAL tables (one row belongs to one id) filter
-    * exactly; the ranked artifacts (`graph_edges`, `truth_topk`) name
-    * BOTH endpoint columns — an edge or truth row dies when EITHER side
+    * exactly; the ranked artifact (`graph_edges`) names BOTH endpoint
+    * columns — an edge dies when EITHER side
     * is retracted (a serve may neither return a deleted id nor route
     * through one) — and filtering them is sound but lossy: a rebuild
     * over the survivors is the completeness-restoring event. */
   private val tombKeys: Map[String, Seq[String]] = Map(
     CellMembers -> Seq("vec_id"),
     LshBuckets -> Seq("vec_id"),
-    PqCodes -> Seq("vec_id"),
     SqCodes -> Seq("vec_id"),
-    GraphEdges -> Seq("query_id", "neighbor_id"),
-    TruthTopK -> Seq("query_id", "neighbor_id"))
+    GraphEdges -> Seq("query_id", "neighbor_id"))
 
   private def tableExists(s: SparkSession, path: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
@@ -138,27 +136,7 @@ object IncrementalIndex {
     }
   }
 
-  private def fsOf(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
   // ------------------------------------------------------------ build
-  /** Write the text half of the index for `docs` (band entries +
-    * shingle sets). `Append` is the day-N survivor fold; `Overwrite`
-    * bootstraps day 1. One pass over the normalized text feeds both
-    * tables (the shared base frame is persisted for the two derivations,
-    * released before return). */
-  def writeTextIndex(s: SparkSession, docs: DataFrame, indexDir: String,
-                     mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val baseDf = LlmText.baseFrom(spread(docs)).persist()
-    try {
-      LlmText.bandEntriesOf(s, LlmText.sigOf(s, baseDf))
-        .write.mode(mode).parquet(p(indexDir, TextBands))
-      LlmText.shingleSetsOf(s, baseDf)
-        .write.mode(mode).parquet(p(indexDir, TextShingles))
-    } finally { baseDf.unpersist(); () }
-  }
-
   /** FIXTURE-path bootstrap writer for the batch-keyed text index: the
     * `bid=-1` corpus partition derived from the in-JVM memoized band/
     * shingle tables ([[graft.operators.LlmText.bandsOf]]/[[graft
@@ -217,15 +195,6 @@ object IncrementalIndex {
       .write.mode(SaveMode.Overwrite)
       .parquet(s"${p(indexDir, RhPostings)}/bid=$batchId")
 
-  /** Consolidated-segment bid encoding: the rewrite of every batch
-    * partition with bid ≤ B lands in `bid = -2 - B`. Numeric, so the
-    * partition column stays LongType beside live `bid=<batchId>` dirs;
-    * strictly below the bootstrap's −1; and never equal to any real
-    * batch id — a probe's `exceptBid(b)` (b ≥ 0, the crash-replay
-    * contract) can therefore never drop consolidated rows. Successive
-    * rebases nest: the segment for B₂ > B₁ folds the B₁ segment in. */
-  def compactedBid(upToBid: Long): Long = -2L - upToBid
-
   /** Store-table read honoring the batch-keyed layout: optionally
     * EXCLUDES one batch id — a crash-replayed batch must probe the
     * store as of the last COMMITTED batch, not see its own crashed
@@ -281,8 +250,7 @@ object IncrementalIndex {
 
   /** Assign `vecs` against the STORED centroids and write their member
     * rows. `Append` is the ingest fold — st14's census form appends the
-    * FULL batch (e09 counts matches against every earlier arrival);
-    * [[appendCellSurvivors]] is the survivors-only curation policy. */
+    * FULL batch (e09 counts matches against every earlier arrival). */
   private[graft] def appendCellMembers(s: SparkSession, vecs: DataFrame,
                                        indexDir: String, mode: SaveMode): Unit =
     Embeddings.assignRanked(s, Embeddings.quantizedFrom(s, vecs),
@@ -291,38 +259,9 @@ object IncrementalIndex {
       .select(col("cell"), col("vec_id"), col("q"), col("nq"))
       .write.mode(mode).parquet(p(indexDir, CellMembers))
 
-  /** Train and freeze the PQ half beside `cell_members`: per-subspace
-    * Lloyd codebook over `trainVecs`' quantized vectors (e12's
-    * [[graft.operators.Embeddings.pqCodebookOf]] — seed + fixed rounds,
-    * deterministic) and the 4-byte code row for every vector of
-    * `allVecs` under its STORED primary-cell assignment. Requires
-    * `cell_centroids` (the coarse quantizer) to exist. `trainVecs` is
-    * typically a sample at scale; `allVecs` the corpus — the encode is
-    * the expensive half, one broadcast-join pass over the members. */
-  def writePqIndex(s: SparkSession, trainVecs: DataFrame, allVecs: DataFrame,
-                   indexDir: String): Unit = {
-    Embeddings.pqTrain(s, Embeddings.quantizedFrom(s, trainVecs), "q")
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, PqCodebook))
-    encodePqMembers(s, allVecs, indexDir, SaveMode.Overwrite)
-  }
-
-  /** Encode `vecs` against the STORED codebook + centroids and land
-    * their code rows. `Append` is the ingest fold (a new batch's codes
-    * join the store); `Overwrite` the build/retrain rebuild. */
-  def encodePqMembers(s: SparkSession, vecs: DataFrame, indexDir: String,
-                      mode: SaveMode = SaveMode.Append): Unit = {
-    val members = Embeddings.assignRanked(s, Embeddings.quantizedFrom(s, vecs),
-        s.read.parquet(p(indexDir, CellCentroids)))
-      .where(col("rn") === 1)
-      .select(col("cell"), col("vec_id"), col("q"))
-    Embeddings.pqEncode(s, members, "q", s.read.parquet(p(indexDir, PqCodebook)))
-      .withColumnRenamed("neighbor_id", "vec_id")
-      .write.mode(mode).parquet(p(indexDir, PqCodes))
-  }
-
   /** Persist the SQ8 half of the index (e14/e15's quantizer): the
     * trained per-dimension [lo, hi] row over `trainVecs` (frozen like
-    * the PQ codebook; a sample at scale) and the 64-byte code row for
+    * the centroids; a sample at scale) and the 64-byte code row for
     * every vector of `allVecs` — the column an SQ-ADC scan streams
     * instead of raw floats. One shared encode definition
     * ([[graft.operators.Embeddings.sqEncode]]) keeps the stored table
@@ -337,7 +276,7 @@ object IncrementalIndex {
   /** Encode `vecs` against the STORED quantizer and land their code
     * rows. `Append` is the ingest fold; `Overwrite` the build/retrain
     * rebuild (codes under different [lo, hi] tables are NOT comparable
-    * — retraining re-encodes wholesale, as [[writePqIndex]] does). */
+    * — retraining re-encodes wholesale). */
   def encodeSqMembers(s: SparkSession, vecs: DataFrame, indexDir: String,
                       mode: SaveMode = SaveMode.Append): DataFrame = {
     val v = Embeddings.quantizedFrom(s, vecs).select(col("vec_id"), col("q"))
@@ -347,37 +286,11 @@ object IncrementalIndex {
     enc
   }
 
-  /** Write the SUBSTRING-DEDUP half of the index: the rolling-hash
-    * postings table (doc_id, byte offset, window hash) — one row per
-    * [[LlmText.D44Window]]-byte window, the inverted index the
-    * ExactSubstr span family (d44/d45) serves from. `Append` is the
-    * day-N ingest: a new batch's windows fold in without the corpus
-    * ever being re-hashed; the serving df-filter recomputes over the
-    * store as it stands, so spans reflect every appended batch
-    * (cross-batch duplicates surface exactly like in-batch ones). */
-  def writeSubstrIndex(s: SparkSession, docs: DataFrame, indexDir: String,
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    LlmText.rhPostingsFrom(s, docs)
-      .write.mode(mode).parquet(p(indexDir, RhPostings))
-
   /** Serve d44's maximal duplicated spans from the PERSISTED postings
     * store — the deployment twin of the in-JVM memo (frame parity
     * pinned in StoredParitySpec). */
   def probeSubstrSpans(s: SparkSession, indexDir: String): DataFrame =
     LlmText.spansFromPostings(s.read.parquet(p(indexDir, RhPostings)))
-
-  /** Write the LSH half: every vector with its quantized form and both
-    * hyperplane-table bucket hashes — the table e02/e04 (and the graph
-    * seeds) serve from. One hash pass at build; queries never re-hash
-    * the corpus (the in-JVM [[graft.operators.Embeddings.bucketedOf]]
-    * memo is this table's single-JVM analogue; parity pinned in
-    * StoredParitySpec). */
-  def writeLshIndex(s: SparkSession, vecs: DataFrame, indexDir: String): Unit =
-    Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, vecs))
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, LshBuckets))
-
-  def probeLshBuckets(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(p(indexDir, LshBuckets))
 
   /** Batch-keyed LSH bucket append — st22's layout for [[LshBuckets]]:
     * bootstrap rows take bid = −1 ([[writeTextIndexBatch]]'s
@@ -450,55 +363,16 @@ object IncrementalIndex {
       s.read.parquet(s"${p(indexDir, GraphEdges)}/bid=-1"))
       .localCheckpoint(true)
 
-  /** Write the GROUND-TRUTH table: the exhaustive top-[[graft.operators
-    * .Embeddings.MmrPoolN]] cosine ranking over the deterministic query
-    * sample — the most expensive artifact of an ANN eval, always
-    * precomputed and stored (faiss-bench practice) so every recall
-    * audit (e07) reads it instead of re-running brute force. */
-  def writeTruthIndex(s: SparkSession, vecs: DataFrame, indexDir: String): Unit =
-    Embeddings.bruteRankedFrom(s, Embeddings.quantizedFrom(s, vecs))
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, TruthTopK))
-
-  def probeTruth(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(p(indexDir, TruthTopK))
-
-  /** Write the GRAPH half: the NN-Descent kNN graph (e22's iterate —
-    * Dong et al. WWW'11) run `rounds` times over the two-table LSH
-    * seeds of `vecs` and PERSISTED as the top-k edge table
-    * (query_id, neighbor_id, cos, rank) — the HNSW/NSG base layer a
-    * deployment builds once and serves many. The iterate is the SAME
-    * core the in-JVM memo path serves ([[graft.operators.Embeddings
-    * .nnDescentOver]]), so stored graph ≡ memo graph for the same
-    * corpus and levers (parity pinned in StoredParitySpec). A rebuild
-    * (more rounds, new corpus snapshot) overwrites — edges from
-    * different builds are not comparable, the [[writeCellIndex]]
-    * freeze discipline. */
-  def writeGraphIndex(s: SparkSession, vecs: DataFrame, indexDir: String,
-                      rounds: Int = 1,
-                      revCap: Int = Embeddings.DefaultNndRevCap): Unit = {
-    val v = Embeddings.quantizedFrom(s, vecs)
-    Embeddings.nnDescentOver(s, Embeddings.bucketedFrom(s, v), v, rounds, revCap)
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, GraphEdges))
-  }
-
-  /** The persisted kNN graph, served as e22 serves its memo: the graph
-    * IS the query result (top-k neighbors per vector) — a reader joins
-    * it on query_id, never touching vectors. */
-  def probeGraph(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(p(indexDir, GraphEdges))
-
   /** Write the (lsh_buckets, graph_edges) serve pair for the FIXTURE
     * corpus through the in-JVM memo path ([[graft.operators.Embeddings
     * .bucketedOf]] / [[graft.operators.Embeddings.graphOf]] at the
-    * pinned build levers) — row-identical to [[writeLshIndex]] +
-    * [[writeGraphIndex]] over the same corpus (the memo-vs-stored
-    * parity StoredParitySpec pins), but the build is SHARED with every
-    * other memo consumer in the JVM: a warm process pays the parquet
-    * write, not a recompute, which is exactly how a deployment derives
-    * its store from an already-materialized build artifact. Memo-
-    * disabled (cold) runs recompute through the same definitions, so
-    * both prices stay honest. st21/st24 use this; st22 builds over a
-    * corpus SUBSET and keeps the explicit writers. */
+    * pinned build levers). The build is SHARED with every other memo
+    * consumer in the JVM: a warm process pays the parquet write, not a
+    * recompute, which is exactly how a deployment derives its store
+    * from an already-materialized build artifact. Memo-disabled (cold)
+    * runs recompute through the same definitions, so both prices stay
+    * honest. st21/st24 use this; st22 builds over a corpus SUBSET and
+    * keeps the explicit writers. */
   def writeServePair(s: SparkSession, dir: String, indexDir: String): Unit = {
     // coalesced writes: the bucket memo carries the corpus-wide spread
     // layout (~32 partitions), which would land 32 tiny files every
@@ -522,7 +396,7 @@ object IncrementalIndex {
     Embeddings.graphServeOver(s,
       Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, batchVecs)),
       s.read.parquet(p(indexDir, LshBuckets)),
-      probeGraph(s, indexDir), hops = 1)
+      s.read.parquet(p(indexDir, GraphEdges)), hops = 1)
 
   /** e24's tombstoned serve over the PERSISTED pair — [[probeGraphServe]]
     * with every stage reading through [[liveTable]]: seeds come from
@@ -662,9 +536,7 @@ object IncrementalIndex {
     * partition. Member relabeling is DEFERRED to the readout
     * ([[resolveClusterLabels]]): one remap-closure build (tiny) plus
     * one broadcast join against the label log. The full corpus is
-    * never re-paired and the label table never rewritten in place —
-    * the rewrite is the explicit [[rebaseClusterLabels]] maintenance
-    * event.
+    * never re-paired and the label table never rewritten in place.
     *
     * Why the readout equals the one-shot d14 for ANY ascending-id
     * split: the edge SET accumulated by bootstrap + probes is exactly
@@ -850,45 +722,6 @@ object IncrementalIndex {
       closure, "label")
       .select(col("doc_id"), col("label").as("cluster_id"))
       .localCheckpoint(true)
-  }
-
-  /** REBASE — the maintenance event that keeps the merge log bounded
-    * on a 24/7 deployment: fold the remap closure into the label rows
-    * and reset the remap table to its empty bootstrap partition.
-    * Readout rows are unchanged and the closure join becomes a no-op
-    * (parity pinned in IncrementalIndexSpec). It rewrites ROW VALUES
-    * (labels resolve), so the watermark must cover EVERY label
-    * partition and the store must be quiesced (between micro-batches).
-    * Two-phase crash discipline: the resolved segment's `_SUCCESS` is
-    * the commit point (written before any delete); a re-run after a
-    * crash sees it, skips the rewrite, and finishes the deletes. */
-  def rebaseClusterLabels(s: SparkSession, indexDir: String, upToBid: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = p(indexDir, ClusterLabels)
-    val fs = fsOf(s, root)
-    val dirs = fs.listStatus(new Path(root)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bid="))
-    val bids = dirs.map(_.getPath.getName.stripPrefix("bid=").toLong)
-    require(bids.forall(b => b <= upToBid && b >= -1L || b < -1L && (-2L - b) <= upToBid),
-      s"rebase watermark $upToBid must cover every label partition (found bids ${bids.sorted.mkString(",")})")
-    val target = compactedBid(upToBid)
-    val targetDir = s"$root/bid=$target"
-    if (!fs.exists(new Path(targetDir, "_SUCCESS"))) {
-      // materialized BEFORE any delete: the resolved plan reads the
-      // directories phase 2 removes
-      resolveClusterLabels(s, indexDir)
-        .select(col("doc_id"), col("cluster_id").as("label"))
-        .write.mode(SaveMode.Overwrite).parquet(targetDir)
-    }
-    dirs.filter(_.getPath.getName != s"bid=$target")
-      .foreach(d => fs.delete(d.getPath, true))
-    // the merge log is folded in: reset to the empty bootstrap
-    // partition (applyClusterBatch never writes remaps at bid=-1)
-    val remRoot = p(indexDir, LabelRemaps)
-    for (st <- fsOf(s, remRoot).listStatus(new Path(remRoot))
-         if st.isDirectory && st.getPath.getName.startsWith("bid=") &&
-           st.getPath.getName != "bid=-1")
-      fsOf(s, remRoot).delete(st.getPath, true)
   }
 
   /** e09's verdicts against the STORED index: the batch assigns to the
@@ -1103,28 +936,5 @@ object IncrementalIndex {
     val words = BloomFilter.dense(stored.toSeq.map(r => (r._1, r._2)), bits)
     verifyBench(s, batchDocs, indexDir,
       BloomFilter.mightContainFast(s, words, col("shingle"), bits, k))
-  }
-
-  // ----------------------------------------------------------- append
-  /** Fold the batch's SURVIVORS into the store — the step that gives
-    * the lifecycle a day 3: next-day probes see today's kept docs as
-    * corpus. Appends batch-sized partitions; the existing index files
-    * are untouched. */
-  def appendTextSurvivors(s: SparkSession, batchDocs: DataFrame,
-                          verdicts: DataFrame, indexDir: String): Unit = {
-    val survivors = verdicts.where(!col("is_dup")).select(col("doc_id"))
-    writeTextIndex(s,
-      batchDocs.join(survivors, Seq("doc_id"), "left_semi"),
-      indexDir, SaveMode.Append)
-  }
-
-  /** Embedding-side survivor fold: kept batch vectors join the stored
-    * member table under their (frozen-centroid) cell assignment. */
-  def appendCellSurvivors(s: SparkSession, batchVecs: DataFrame,
-                          verdicts: DataFrame, indexDir: String): Unit = {
-    val kept = verdicts.where(col("kept")).select(col("vec_id"))
-    appendCellMembers(s,
-      batchVecs.join(kept, Seq("vec_id"), "left_semi"),
-      indexDir, SaveMode.Append)
   }
 }

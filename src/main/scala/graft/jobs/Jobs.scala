@@ -283,24 +283,15 @@ object CurationJob {
   }
 }
 
-/** The DAILY-INGEST lifecycle the incremental operators exist for:
-  * today's batch dedups against the existing corpus (d30 text LSH
-  * probe, e09 embedding cell probe) and both verdict tables land under
-  * one task UUID — the rows a deployment's next step anti-joins to
-  * append only the SURVIVORS (and their index entries) to the corpus.
-  *
-  * Two modes:
-  *  - [[run]] is the oracle-twinned form: batch membership is the
-  *    deterministic id slice and the index side is recomputed in-query
-  *    (d30/e09 — what the DuckDB gate can check).
-  *  - [[buildIndex]] + [[ingestBatch]] is the PRODUCTION form with a
-  *    day 2: the index is the persisted [[IncrementalIndex]] store,
-  *    batches arrive as date-partition reads (pruned scans), day N
-  *    probes day 1..N−1's STORED entries with zero corpus recompute,
-  *    and survivors fold into the store for day N+1. The lifecycle
-  *    spec pins that the stored-index probe is row-identical to the
-  *    recompute form and that a day-2 run reads no day-1 text/vector
-  *    file. */
+/** The DAILY-INGEST job the incremental operators exist for: today's
+  * batch dedups against the existing corpus (d30 text LSH probe, e09
+  * embedding cell probe) and both verdict tables land under one task
+  * UUID — the rows a deployment's next step anti-joins to keep only the
+  * SURVIVORS. Batch membership is the deterministic id slice and the
+  * index side is recomputed in-query, the form the DuckDB gate checks.
+  * The persisted-store form of the same probes is the streaming ingest
+  * (st13/st14 over [[IncrementalIndex]]), where each micro-batch probes
+  * the stored index and appends its own entries. */
 object IngestJob {
   val TextTable = "ingest_text_verdicts"
   val EmbeddingTable = "ingest_embedding_verdicts"
@@ -310,39 +301,6 @@ object IngestJob {
     import graft.operators.{Embeddings, LlmText}
     Jobs.appendKeyed(taskUUID, LlmText.d30IncrementalDedup(s, dir), url, TextTable, props)
     Jobs.appendKeyed(taskUUID, Embeddings.e09IncrementalSemDedup(s, dir), url, EmbeddingTable, props)
-  }
-
-  /** Day-1 bootstrap: persist the index for the starting corpus.
-    * `centroidTrain` optionally widens the centroid training set beyond
-    * day 1's slice (the trained table is then FROZEN — every later
-    * batch assigns against the stored copy). */
-  def buildIndex(s: SparkSession, corpusDocs: DataFrame, corpusVecs: DataFrame,
-                 indexDir: String, centroidTrain: Option[DataFrame] = None): Unit = {
-    IncrementalIndex.writeTextIndex(s, corpusDocs, indexDir)
-    IncrementalIndex.writeCellIndex(s, corpusVecs, indexDir, centroidTrain)
-    // the substring half (d44/d45/d46's rolling-hash postings) rides
-    // the same day-1 bootstrap — the span family then serves from the
-    // store like every other index probe
-    IncrementalIndex.writeSubstrIndex(s, corpusDocs, indexDir)
-  }
-
-  /** Day-N ingest: probe the STORED index with today's batch (no corpus
-    * recompute, no day<N file read), append both verdict tables under
-    * the task UUID, and fold the survivors' index entries into the
-    * store so day N+1 sees them as corpus. The batch's rolling-hash
-    * postings append too, so cross-day duplicated SPANS surface in the
-    * next substring probe exactly like in-corpus ones. */
-  def ingestBatch(s: SparkSession, batchDocs: DataFrame, batchVecs: DataFrame,
-                  indexDir: String, url: String, props: Properties,
-                  taskUUID: String): Unit = {
-    val textV = IncrementalIndex.probeText(s, batchDocs, indexDir)
-    Jobs.appendKeyed(taskUUID, textV, url, TextTable, props)
-    IncrementalIndex.appendTextSurvivors(s, batchDocs, textV, indexDir)
-    val cellV = IncrementalIndex.probeCells(s, batchVecs, indexDir)
-    Jobs.appendKeyed(taskUUID, cellV, url, EmbeddingTable, props)
-    IncrementalIndex.appendCellSurvivors(s, batchVecs, cellV, indexDir)
-    IncrementalIndex.writeSubstrIndex(s, batchDocs, indexDir,
-      org.apache.spark.sql.SaveMode.Append)
   }
 
   /** args: [sfDir] [jdbcUrl]. */

@@ -103,11 +103,9 @@ object Embeddings {
       bruteRankedFrom(s, quantized(s, dir)).localCheckpoint()
     }
 
-  /** The truth-table core over an arbitrary quantized frame — shared
-    * with the persisted-index writer ([[graft.jobs.IncrementalIndex
-    * .writeTruthIndex]]) so the stored ground-truth table and the
-    * in-JVM memo score identically (parity pinned in
-    * StoredParitySpec). */
+  /** The truth-table core over an arbitrary quantized frame: the
+    * body of [[bruteRankedOf]]'s memo, and the brute-force reference
+    * the graph specs score a subset against. */
   private[graft] def bruteRankedFrom(s: SparkSession, v: DataFrame): DataFrame = {
       val queries = v.where(col("vec_id") % 5 === 0)
         .select(col("vec_id").as("query_id"), col("q").as("qa"), col("nq").as("na"))
@@ -224,16 +222,16 @@ object Embeddings {
     }
 
   /** The two-table bucket projection over an arbitrary quantized frame
-    * — shared with the persisted-index lifecycle
-    * ([[graft.jobs.IncrementalIndex.writeGraphIndex]]) so a stored
-    * index and a recompute hash identically. */
+    * — shared with the persisted stores ([[graft.jobs.IncrementalIndex
+    * .writeLshIndexBatch]] and the st21/st22 probes) so a stored index
+    * and a recompute hash identically. */
   private[graft] def bucketedFrom(s: SparkSession, v: DataFrame): DataFrame =
     v.withColumn("bucket", bucketCol(s, col("q")))
       .withColumn("bucket_b", bucketCol(s, col("q"), table = 1))
 
   def e02AnnBucketed(s: SparkSession, dir: String): DataFrame = {
     val dot = dotQ(s) _
-    val probes = s.conf.get(MultiProbeConf, "0").toInt
+    val probes = graft.ExtraConf.intLever(s, MultiProbeConf, 0, min = 0)
     val v = bucketedOf(s, dir)
     val a = v.withColumn("pbucket",
         explode(probeBucketsFrom(s, col("q"), col("bucket"), probes)))
@@ -395,6 +393,9 @@ object Embeddings {
     * neighbor id. */
   val NprobeConf = "spark.graft.ivf.nprobe"
 
+  private def ivfNprobe(s: SparkSession): Int =
+    graft.ExtraConf.intLever(s, NprobeConf, 1, min = 1)
+
   /** Vectors ranked by centroid-cosine against every cell: the shared
     * IVF assignment stage (rn = 1 is the primary cell; rn <= nprobe is
     * the query-side fan-out). Centroid directions are the per-label
@@ -486,7 +487,7 @@ object Embeddings {
     * (e07) materializes ONE `assignRanked` and feeds every IVF path;
     * the standalone query builds its own. Same plan either way. */
   private def e05From(s: SparkSession, ranked: DataFrame): DataFrame = {
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
+    val nprobe = ivfNprobe(s)
     val dot = dotQ(s) _
     // index side: primary cell only; query side: nprobe nearest cells
     val a = ranked.where(col("rn") <= nprobe)
@@ -815,6 +816,9 @@ object Embeddings {
     * oracle's formulation. */
   val RerankCConf = "spark.graft.rerank.c"
 
+  private def rerankDepth(s: SparkSession): Int =
+    graft.ExtraConf.intLever(s, RerankCConf, RerankC, min = 1)
+
   private def signSketch(q: Column, lo: Int): Column =
     aggregate(sequence(lit(lo), lit(lo + 31)), lit(0L),
       (acc, i) => acc + when(element_at(q, i) > 0,
@@ -822,7 +826,7 @@ object Embeddings {
 
   def e08SketchRerank(s: SparkSession, dir: String): DataFrame = {
     val dot = dotQ(s) _
-    val rerankC = s.conf.get(RerankCConf, RerankC.toString).toInt
+    val rerankC = rerankDepth(s)
     val v = quantized(s, dir)
       .withColumn("s_lo", signSketch(col("q"), 1))
       .withColumn("s_hi", signSketch(col("q"), 33))
@@ -982,8 +986,8 @@ object Embeddings {
     * e07 shared-stage form; [[e05From]]'s convention). */
   private def e10From(s: SparkSession, v0: DataFrame, ranked0: DataFrame): DataFrame = {
     val dot = dotQ(s) _
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
-    val rerankC = s.conf.get(RerankCConf, RerankC.toString).toInt
+    val nprobe = ivfNprobe(s)
+    val rerankC = rerankDepth(s)
     val ranked = ranked0
       .withColumn("s_lo", signSketch(col("q"), 1))
       .withColumn("s_hi", signSketch(col("q"), 33))
@@ -1229,18 +1233,16 @@ object Embeddings {
     * Training input is the [[PqTrainSampleMod]] slice of `frame`, and
     * the trained result is MEMOIZED per (canonical input plan, vecCol):
     * codebook training is an index-BUILD step, not per-query work —
-    * faiss trains once and stores; `IncrementalIndex.writePqIndex` is
-    * this engine's store-and-freeze form and the memo is its in-JVM
-    * analogue (sound because the fixture inputs are immutable within a
-    * JVM, the same contract as [[graft.Tables.spreadIfNarrow]]'s cache;
-    * the canonical-plan key distinguishes dirs/frames). */
+    * faiss trains once and stores, and the memo is this engine's in-JVM
+    * store-and-freeze form (sound because the fixture inputs are
+    * immutable within a JVM, the same contract as
+    * [[graft.Tables.spreadIfNarrow]]'s cache; the canonical-plan key
+    * distinguishes dirs/frames). */
   private[graft] def pqCodebookOf(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame =
     // canonicalized-plan key: structural equality, so two frames compare
     // equal iff they compute the same relation (no hash-collision risk).
     // Only SERVING paths (e12/e13/e19 over the stable fixture plans) go
-    // through this memo, so it holds a handful of hot keys; store
-    // builders call [[pqTrain]] directly (the persisted parquet is their
-    // memo), so one-shot keys never accumulate here. The bound is a pure
+    // through this memo, so it holds a handful of hot keys. The bound is a pure
     // safety valve — in round 9 it actually tripped (incremental-index
     // temp frames flooded the map) and the clear() evicted the hot
     // codebooks mid-sweep, which was e19's first-sweep 3.5× spike.
@@ -1249,17 +1251,14 @@ object Embeddings {
       pqTrain(s, frame, vecCol))
 
   /** In-JVM memo of the ENCODED code table — the other half of the PQ
-    * index next to the codebook (faiss stores exactly this pair; the
-    * persisted twin is [[graft.jobs.IncrementalIndex.encodePqMembers]]'
-    * `pq_codes` table, parity pinned in PqIndexSpec/StoredParitySpec).
+    * index next to the codebook (faiss stores exactly this pair).
     * r13 measured each consumer re-running the per-vector nearest-
     * codeword encode (~0.7 s at sf0.1) per invocation: standalone e12,
     * e13 (residual column), and the e07b audit legs all encode the
     * SAME corpus against the SAME memoized codebook. Keyed like
     * [[pqCodebookOf]] (canonicalized input plan — only the stable
-    * fixture frames reach here) plus the codebook's plan; store
-    * builders keep calling [[pqEncode]] directly (their parquet IS the
-    * memo). Cold runs rebuild through the same definition. */
+    * fixture frames reach here) plus the codebook's plan. Cold runs
+    * rebuild through the same definition. */
   private[graft] def pqCodesOf(s: SparkSession, frame: DataFrame, vecCol: String,
       codebook: DataFrame): DataFrame =
     graft.StoredMemo.stored(s, "pq-codes",
@@ -1267,10 +1266,7 @@ object Embeddings {
         codebook.queryExecution.analyzed.canonicalized, vecCol)(
       pqEncode(s, frame, vecCol, codebook).localCheckpoint())
 
-  /** The codebook trainer behind [[pqCodebookOf]]; store builders
-    * ([[graft.jobs.IncrementalIndex.writePqIndex]]) call it directly —
-    * their persisted parquet is the memo, and a one-shot temp-frame key
-    * would only flood the serving memo toward its bound. */
+  /** The codebook trainer behind [[pqCodebookOf]]. */
   private[graft] def pqTrain(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame = {
     val dot = dotQ(s) _
     val train = frame.where(col("vec_id") % lit(PqTrainSampleMod) === 0)
@@ -1368,8 +1364,8 @@ object Embeddings {
     * checkpoint-fresh plans); default = train/look up from `v`. */
   private def e12From(s: SparkSession, v: DataFrame, ranked: DataFrame,
       codebookIn: Option[DataFrame] = None): DataFrame = {
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
-    val rerankC = s.conf.get(RerankCConf, RerankC.toString).toInt
+    val nprobe = ivfNprobe(s)
+    val rerankC = rerankDepth(s)
     val codebook = codebookIn.getOrElse(pqCodebookOf(s, v, "q"))
     val cs = pqCodesOf(s, ranked.where(col("rn") === 1)
       .select(col("cell"), col("vec_id"), col("q")), "q", codebook)
@@ -1547,8 +1543,8 @@ object Embeddings {
   private def e13From(s: SparkSession, v: DataFrame, ranked: DataFrame,
       codebookIn: Option[DataFrame] = None): DataFrame = {
     val dot = dotQ(s) _
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
-    val rerankC = s.conf.get(RerankCConf, RerankC.toString).toInt
+    val nprobe = ivfNprobe(s)
+    val rerankC = rerankDepth(s)
     val mem = cellMembersOf(ranked)
     val resExpr = expr("zip_with(q, cvec, (x, c) -> (x * members - c) div members)")
     // index side: members' residuals vs their own cell centroid
@@ -1667,9 +1663,10 @@ object Embeddings {
     graft.StoredMemo.stored(v.sparkSession, "sq-lohi",
         v.queryExecution.analyzed.canonicalized)(sqLohiTrain(v))
 
-  /** The quantizer trainer behind [[sqLohiOf]]; store builders call it
-    * directly (the [[pqTrain]] discipline — persisted-to-parquet
-    * trainers must not pollute the serving memo with one-shot keys). */
+  /** The quantizer trainer behind [[sqLohiOf]]; the store builder
+    * ([[graft.jobs.IncrementalIndex.writeSqIndex]]) calls it directly —
+    * its persisted parquet is the memo, and a one-shot temp-frame key
+    * would only flood the serving memo toward its bound. */
   private[graft] def sqLohiTrain(v: DataFrame): DataFrame =
     v.select(posexplode(col("q")).as(Seq("d", "x")))
       .groupBy(col("d")).agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
@@ -1830,8 +1827,8 @@ object Embeddings {
   private def e15From(s: SparkSession, v0: DataFrame, ranked0: DataFrame,
       lohiOpt: Option[DataFrame] = None): DataFrame = {
     val dot = dotQ(s) _
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
-    val rerankC = s.conf.get(RerankCConf, RerankC.toString).toInt
+    val nprobe = ivfNprobe(s)
+    val rerankC = rerankDepth(s)
     val lohi = lohiOpt.getOrElse(sqLohiOf(v0))
     // index side: cells + SQ codes + reconstruction norm, served from
     // the stored code table ([[sqCodesOf]])
@@ -1928,7 +1925,7 @@ object Embeddings {
   final val FilterTenants = 3L
 
   def e17FilteredAnn(s: SparkSession, dir: String): DataFrame = {
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
+    val nprobe = ivfNprobe(s)
     val dot = dotQ(s) _
     val ranked = cellRanked(s, dir)
       .withColumn("tenant", col("vec_id") % FilterTenants)
@@ -2131,7 +2128,7 @@ object Embeddings {
     * so even a multi-probed query meets each neighbor in exactly one
     * cell. */
   def e18RangeSearch(s: SparkSession, dir: String): DataFrame = {
-    val nprobe = s.conf.get(NprobeConf, "1").toInt
+    val nprobe = ivfNprobe(s)
     val dot = dotQ(s) _
     val ranked = cellRanked(s, dir)
     val a = ranked.where(col("rn") <= nprobe && col("vec_id") % 5 === 0)
@@ -2506,7 +2503,7 @@ object Embeddings {
     * itself on the shared node. Forward out-degree is ≤ k per hash
     * table by construction, but reverse IN-degree is data-dependent
     * (hub vectors), so the adjacency admitted into the join caps the
-    * reverse side at [[NndRevCapConf]] sampled partners per node —
+    * reverse side at [[DefaultNndRevCap]] sampled partners per node —
     * every node's join degree is then ≤ 2k + R and candidate volume is
     * ≤ N·(2k+R)² (spec-pinned), with no corpus-pairs stage anywhere;
     * it rides the [[SelfJoin]] strategy gate like every bucket join. Rescoring joins the stored quantized vector
@@ -2565,8 +2562,7 @@ object Embeddings {
     * Forward edges and ALL reverse edges remain candidates themselves
     * (they are linear in |edges|); the cap bounds only the quadratic
     * local-join stage, so e22's dominance over the e02 seeds is
-    * unaffected. */
-  val NndRevCapConf = "spark.graft.nnd.revCap"
+    * unaffected. R = 8 is the oracle's formulation. */
   // final + literal = compile-time constant (the RecallK discipline):
   // e07Sql, declared EARLIER in this object, interpolates this through
   // [[nndCandsCteSql]] during static init — a plain val would still be
@@ -2575,7 +2571,7 @@ object Embeddings {
   final val DefaultNndRevCap = 8
 
   /** Portable pseudo-random tie-break order for reverse-sample
-    * selection — see [[NndRevCapConf]]. */
+    * selection — see [[DefaultNndRevCap]]. */
   private def revSampleOrder(n: Column): Column =
     (n % lit(1000003L)) * lit(2654435761L) % lit(1000000007L)
 
@@ -2583,7 +2579,7 @@ object Embeddings {
     * full forward edges (out-degree bounded by construction) + at most
     * `revCap` sampled reverse edges per node — the degree cap that
     * bounds the join's candidate volume under hub skew (see
-    * [[NndRevCapConf]]; bound pinned in the spec). Input must be a
+    * [[DefaultNndRevCap]]; bound pinned in the spec). Input must be a
     * DISTINCT edge list (the oracle's UNION-deduped e0): duplicate
     * edges would occupy multiple sample slots and skew both the bound
     * and the oracle parity. */
@@ -2611,21 +2607,16 @@ object Embeddings {
     bucketTop3(s, vb, "bucket").union(bucketTop3(s, vb, "bucket_b"))
 
   def e22NnDescent(s: SparkSession, dir: String): DataFrame = {
-    val rounds = s.conf.get(NndRoundsConf, "1").toInt
-    require(rounds >= 1, s"$NndRoundsConf must be >= 1, got $rounds")
-    val revCap = s.conf.get(NndRevCapConf, DefaultNndRevCap.toString).toInt
-    require(revCap >= 1, s"$NndRevCapConf must be >= 1, got $revCap")
-    graphOf(s, dir, rounds, revCap)
+    val rounds = graft.ExtraConf.intLever(s, NndRoundsConf, 1, min = 1)
+    graphOf(s, dir, rounds, DefaultNndRevCap)
   }
 
   /** The stored kNN-GRAPH index (the HNSW/NSG base layer a deployment
     * builds once and serves many): the round-`rounds` descent graph
     * materialized once per (JVM, dir, rounds, revCap, join strategy)
     * and served to every later query — e22 and e07's nn_descent leg
-    * read THE graph, not a rebuilt twin. Persisted twin:
-    * [[graft.jobs.IncrementalIndex.writeGraphIndex]]/[[graft.jobs
-    * .IncrementalIndex.probeGraph]] (parity pinned in
-    * StoredParitySpec). Keyed on the SelfJoin strategy like d03's
+    * read THE graph, not a rebuilt twin, and st21/st24's
+    * [[graft.jobs.IncrementalIndex.writeServePair]] persists it. Keyed on the SelfJoin strategy like d03's
     * pair memo — strategy is not result-changing, but the
     * strategy-invariance gate must exercise a REBUILD under the
     * alternate plan, not re-serve the broadcast-built frame. */
@@ -2659,16 +2650,16 @@ object Embeddings {
     }
 
   /** The descent iterate at PINNED levers over the stored fixture
-    * index — the FRESH builder ([[graphOf]] is its memo; [[graft.jobs
-    * .IncrementalIndex.writeGraphIndex]] persists the same iterate over
-    * an arbitrary frame via [[nnDescentOver]]). */
+    * index — the FRESH builder ([[graphOf]] is its memo; st22's
+    * bootstrap runs the same iterate over a subset via
+    * [[nnDescentOver]]). */
   private[graft] def nnDescentRounds(s: SparkSession, dir: String,
                                      rounds: Int, revCap: Int): DataFrame =
     nnDescentOver(s, bucketedOf(s, dir), quantized(s, dir), rounds, revCap)
 
   // ---------------------------------------------------------------- e23
   /** GRAPH-SERVE — the reason a deployment PERSISTS the kNN graph
-    * (e22/writeGraphIndex): answer queries by NAVIGATING the stored
+    * (e22, st21's stored pair): answer queries by NAVIGATING the stored
     * edge list instead of scanning buckets wider, the HNSW/NSG/DiskANN
     * serving shape reduced to its set-based core. Seed each query with
     * its own LSH bucket's exact top-[[GraphBeam]] (the stored bucket
@@ -2676,8 +2667,8 @@ object Embeddings {
     * expands the beam through the stored graph (candidates' top-3
     * neighbors — "a neighbor of my candidate is probably closer"),
     * exact-rescores, and keeps the best [[GraphBeam]]; readout is the
-    * final top-3. One hop = the oracle's formulation;
-    * `spark.graft.graph.hops` widens reach one stored edge at a time.
+    * final top-3. One hop = the oracle's formulation; each further
+    * hop ([[graphServe]]) widens reach one stored edge at a time.
     *
     * Why it beats buckets: the graph edge (x → y) was found by the
     * DESCENT (possibly through the second hash table or an earlier
@@ -2696,19 +2687,14 @@ object Embeddings {
     * rescoring joins the stored vector table twice. No corpus-pairs
     * stage, no data-dependent key concentration (the graph's
     * out-degree is EXACTLY ≤ 3 by construction). */
-  val GraphHopsConf = "spark.graft.graph.hops"
   // final + literal: e23Sql and e07Sql interpolate this during static
   // init (the DefaultNndRevCap discipline)
   final val GraphBeam = 8
 
-  def e23GraphServe(s: SparkSession, dir: String): DataFrame = {
-    val hops = s.conf.get(GraphHopsConf, "1").toInt
-    require(hops >= 1, s"$GraphHopsConf must be >= 1, got $hops")
-    graphServe(s, dir, hops)
-  }
+  def e23GraphServe(s: SparkSession, dir: String): DataFrame = graphServe(s, dir, 1)
 
-  /** The serve path at a PINNED hop count — e07's graph_serve leg
-    * calls (dir, 1) so the audit stays lever-independent. */
+  /** The serve path at a given hop count — e23 and e07's graph_serve
+    * leg serve one hop; the hop-monotonicity spec calls deeper ones. */
   private[graft] def graphServe(s: SparkSession, dir: String, hops: Int): DataFrame = {
     val vb = bucketedOf(s, dir)
     graphServeOver(s,
@@ -3057,9 +3043,9 @@ object Embeddings {
     * is what gives st22 an exact one-shot oracle (the st13 census-form
     * lever). The trade-off is real and documented: a production
     * insert that expands through fresh edges routes better as the
-    * graph grows, but its result depends on batch boundaries — the
-    * periodic [[graft.jobs.IncrementalIndex.writeGraphIndex]] rebuild
-    * is the event that folds arrivals into the navigable structure.
+    * graph grows, but its result depends on batch boundaries — a
+    * periodic descent rebuild over the corpus so far is the event that
+    * folds arrivals into the navigable structure.
     *
     * Scale shape: per batch, two bucket-keyed [[SelfJoin]]s against
     * the stored bucket table (collision-width work, the d30 probe

@@ -193,16 +193,16 @@ object LlmText {
   private[graft] final case class D03Levers(bandRows: Int, maxBucket: Long, strategy: String)
 
   private[graft] def d03Levers(s: SparkSession): D03Levers = {
-    val bandRows = s.conf.get(BandRowsConf, "1").toInt
-    require(bandRows >= 1 && NumHashes % bandRows == 0,
-      s"$BandRowsConf must divide NumHashes=$NumHashes, got $bandRows")
-    D03Levers(bandRows, s.conf.get(MaxBucketConf, "0").toLong,
+    val bandRows = graft.ExtraConf.intLever(s, BandRowsConf, 1, min = 1)
+    require(NumHashes % bandRows == 0,
+      s"$BandRowsConf must divide NumHashes=$NumHashes, got '$bandRows'")
+    D03Levers(bandRows, graft.ExtraConf.intLever(s, MaxBucketConf, 0, min = 0).toLong,
       s.conf.get(SelfJoin.StrategyConf, "broadcast"))
   }
 
   /** In-JVM memos of the two PERSISTED text-index tables (band entries
     * and shingle sets over the full fixture corpus) — the artifacts
-    * [[graft.jobs.IncrementalIndex.writeTextIndex]] freezes. Both
+    * [[graft.jobs.IncrementalIndex.writeTextIndexBatch]] writes. Both
     * derivations are per-doc pure functions, so any fixture-subset
     * store partition (a streaming bootstrap's `bid=-1`) is EXACTLY a
     * doc_id filter of these tables — which is what lets the st13/st25
@@ -1245,7 +1245,7 @@ object LlmText {
   val AuditSampleConf = "spark.graft.lsh.auditSample"
 
   def d22LshRecallAudit(s: SparkSession, dir: String): DataFrame = {
-    val m = s.conf.get(AuditSampleConf, "1").toLong
+    val m = graft.ExtraConf.intLever(s, AuditSampleConf, 1, min = 1).toLong
     val shd = withShingleSet(s, base(s, dir))
       .where(pmod(col("doc_id"), lit(m)) === 0)
       .select(col("doc_id"), col("sh"))
@@ -1333,8 +1333,8 @@ object LlmText {
     * subset): expects `doc_id` + `n_tokens` (+ passthrough columns),
     * adds shard / seq / offset. */
   private def packed(df: DataFrame): DataFrame = {
-    val shards = df.sparkSession.conf.get(PackShardsConf, PackShards.toString).toLong
-    require(shards >= 1, s"$PackShardsConf must be >= 1, got $shards")
+    val shards = graft.ExtraConf.intLever(df.sparkSession, PackShardsConf, PackShards,
+      min = 1).toLong
     val w = Window.partitionBy(col("shard")).orderBy(col("ord").asc, col("doc_id").asc)
     df.withColumn("shard",
         pmod(h64(concat(lit("pack:"), col("doc_id").cast("string"))), lit(shards)))
@@ -2008,6 +2008,9 @@ object LlmText {
     * 1000) are spec-pinned. */
   val SparseMaxDfConf = "spark.graft.sparse.maxDfPermille"
 
+  private def sparseMaxDf(s: SparkSession): Int =
+    graft.ExtraConf.intLever(s, SparseMaxDfConf, 1000, min = 0)
+
   /** (doc_id, term, tf) counts for a [[baseFrom]] frame — d33's first
     * stage. One explode + one keyed count. */
   private[graft] def tfOf(baseDf: DataFrame): DataFrame =
@@ -2024,7 +2027,7 @@ object LlmText {
     * filter only enter the plan when the lever is set. */
   private[graft] def termStatsOf(s: SparkSession, baseDf: DataFrame,
                                  tf: DataFrame): DataFrame = {
-    val maxDfPermille = s.conf.get(SparseMaxDfConf, "1000").toInt
+    val maxDfPermille = sparseMaxDf(s)
     val dfreq0 = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val dfreq =
       if (maxDfPermille >= 1000) dfreq0
@@ -2066,18 +2069,18 @@ object LlmText {
     * changes the table's content. */
   private[graft] def storedPostings(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "sparse-postings", dir,
-        s.conf.get(SparseMaxDfConf, "1000").toInt) {
+        sparseMaxDf(s)) {
       val docs = base(s, dir)
       val tf = tfOf(docs)
-      // doc_id-keyed layout at a scale-adaptive partition count: the
-      // build's last exchange is AQE-coalesced (1 partition at fixture
-      // scale) and localCheckpoint freezes that layout — the ranking
-      // core's dots stage (probe side of the term self-join + partial
+      // doc_id-keyed layout at one partition per core: the build's
+      // last exchange is AQE-coalesced (1 partition at fixture scale)
+      // and localCheckpoint freezes that layout — the ranking core's
+      // dots stage (probe side of the term self-join + partial
       // aggregate, Σ_t qdf·df rows) then runs single-task. Measured
       // r13: d33 dots 15.6 s → spread across cores (plans/r13). Keyed
       // repartition keeps the exchange deterministic (guide §2.5).
       weightedPostingsOf(tf, termStatsOf(s, docs, tf))
-        .repartition(graft.StoredMemo.storeParts(s), col("doc_id"))
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .localCheckpoint()
     }
 
@@ -2233,11 +2236,10 @@ object LlmText {
     * exchange of the shuffled verify carries only the ε-fraction of
     * shingles the filter passes — the shuffle-volume lever, measured in
     * BloomFilterSpec's reduction read. Geometry levers
-    * `spark.graft.bloom.bits` / `spark.graft.bloom.k` (CONFIG.md). */
+    * [[graft.functions.BloomFilter.DefaultBits]] / `DefaultK`. */
   def d49BloomDecontamination(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomFilter
-    val bits = s.conf.get(BloomFilter.BitsConf, BloomFilter.DefaultBits.toString).toInt
-    val k = s.conf.get(BloomFilter.KConf, BloomFilter.DefaultK.toString).toInt
+    val (bits, k) = (BloomFilter.DefaultBits, BloomFilter.DefaultK)
     val ex = withShingleSet(s, base(s, dir))
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
     val bench = ex.where(col("doc_id") % ContaminationMod === 0)
@@ -2346,25 +2348,23 @@ object LlmText {
     * whole epoch is a single-task sort at any scale (the anti-pattern);
     * the (shard, ord) pair IS the global order, lexicographically, and
     * the window partitions by (epoch, shard) so state is bounded by the
-    * largest shard (hash-balanced). `spark.graft.shuffle.shards` scales
-    * the shard count to the cluster (default 8 = the oracle's
-    * formulation); different epochs get independent permutations from
-    * the hash salt. One exchange per query: the window's
+    * largest shard (hash-balanced). [[ShuffleShards]] = 8 shards is the
+    * oracle's formulation; different epochs get independent
+    * permutations from the hash salt. One exchange per query: the window's
     * (epoch, shard) shuffle.
     *
     * Exactness: the hash is [[graft.functions.Portable.h64]] (md5
     * prefix — identical in both engines), ties break on doc_id, and
     * shard = hkey % shards on a nonnegative hash. */
   final val Epochs = 2
-  val ShuffleShardsConf = "spark.graft.shuffle.shards"
+  final val ShuffleShards = 8L
 
   def d35EpochShuffle(s: SparkSession, dir: String): DataFrame = {
-    val shards = s.conf.get(ShuffleShardsConf, "8").toLong
     base(s, dir).select(col("doc_id"))
       .select(col("doc_id"), explode(sequence(lit(1), lit(Epochs))).as("epoch"))
       .withColumn("hkey", h64(concat(
         lit("ep"), col("epoch").cast("string"), lit(":"), col("doc_id").cast("string"))))
-      .withColumn("shard", col("hkey") % lit(shards))
+      .withColumn("shard", col("hkey") % lit(ShuffleShards))
       .withColumn("ord", row_number().over(
         Window.partitionBy(col("epoch"), col("shard"))
           .orderBy(col("hkey").asc, col("doc_id").asc)))
@@ -2952,7 +2952,7 @@ object LlmText {
 
   /** (doc_id, p, h) rolling-hash postings for an arbitrary
     * documents-shaped frame — the derivation the persisted lifecycle
-    * writes ([[graft.jobs.IncrementalIndex.writeSubstrIndex]]), so a
+    * writes ([[graft.jobs.IncrementalIndex.writeSubstrIndexBatch]]), so a
     * stored index and a recompute can never disagree on the windows. */
   private[graft] def rhPostingsFrom(s: SparkSession, docs: DataFrame): DataFrame =
     rhPostingsOf(s, baseFrom(docs))

@@ -433,9 +433,10 @@ object AdAnalytics {
 
   // ---------------------------------------------------------------- st13
   /** STREAMING INGEST against the persisted dedup index — the
-    * [[graft.jobs.IngestJob]] lifecycle running continuously instead of
+    * [[graft.jobs.IngestJob]] probe running continuously instead of
     * daily: the corpus's band/shingle tables are bootstrapped once
-    * ([[graft.jobs.IncrementalIndex.writeTextIndex]]), then each
+    * ([[graft.jobs.IncrementalIndex.writeTextIndexFixtureBootstrap]],
+    * bid −1), then each
     * micro-batch of arriving documents (1) PROBES the store with the
     * bipartite band join — work ∝ the batch's collisions, the corpus is
     * never re-paired or re-read — and (2) APPENDS its own index entries,
@@ -756,7 +757,7 @@ object AdAnalytics {
     * twin (st13/st14/st16's pattern for the rolling-hash postings
     * store): each arriving micro-batch of documents APPENDS its
     * postings to the persisted substring index
-    * ([[graft.jobs.IncrementalIndex.writeSubstrIndex]] — the batch is
+    * ([[graft.jobs.IncrementalIndex.writeSubstrIndexBatch]] — the batch is
     * hashed once, the corpus never re-hashed), and the span readout
     * serves from the store once ingest completes.
     *
@@ -844,8 +845,7 @@ object AdAnalytics {
   /** STREAMING GRAPH-SERVE — e23 run as an online ANN service (st17's
     * frozen-store class): the (lsh_buckets, graph_edges) index pair is
     * built ONCE from the corpus ([[graft.jobs.IncrementalIndex
-    * .writeLshIndex]]/[[graft.jobs.IncrementalIndex.writeGraphIndex]] —
-    * e23's serving pair), then every arriving micro-batch of query
+    * .writeServePair]] — e23's serving pair), then every arriving micro-batch of query
     * vectors is answered from the frozen store
     * ([[graft.jobs.IncrementalIndex.probeGraphServe]]: hash own
     * buckets, seed from the stored bucket table, one stored-edge hop,
@@ -946,13 +946,12 @@ object AdAnalytics {
     import graft.jobs.IncrementalIndex
     import graft.operators.LlmText
     val mod = LlmText.ContaminationMod
-    val bits = s.conf.get(BloomFilter.BitsConf, BloomFilter.DefaultBits.toString).toInt
-    val k = s.conf.get(BloomFilter.KConf, BloomFilter.DefaultK.toString).toInt
     Streams.withTempDir("graft-st23-idx-") { indexDir =>
       val docs = graft.Tables.documents(s, dir)
       // frozen serve pair (strings + bits) from the in-JVM memo path
       IncrementalIndex.writeBenchIndexFixture(s, dir, indexDir)
-      IncrementalIndex.writeBloomIndexFixture(s, dir, indexDir, bits, k)
+      IncrementalIndex.writeBloomIndexFixture(s, dir, indexDir,
+        BloomFilter.DefaultBits, BloomFilter.DefaultK)
       val empty = docs.limit(0)
         .select(col("doc_id"), col("doc_id").as("bench_id"),
           lit(0L).as("n_shared"))
@@ -1037,9 +1036,7 @@ object AdAnalytics {
     * Steady-state deployment cost: per batch, one batch-sized LSH
     * probe + one contraction over the batch's edge count + four
     * batch-sized appends; the merge log grows one row per bridge
-    * EVENT (bounded by total cluster count, ≪ corpus), and
-    * [[graft.jobs.IncrementalIndex.rebaseClusterLabels]] is the
-    * maintenance event that folds it flat. */
+    * EVENT (bounded by total cluster count, ≪ corpus). */
   def st25StreamingClusters(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.IncrementalIndex
     import graft.operators.LlmText

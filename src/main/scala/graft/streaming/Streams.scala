@@ -104,8 +104,8 @@ object Streams {
     s.conf.getAll.foreach { case (k, v) =>
       try child.conf.set(k, v) catch { case _: Exception => () }
     }
-    child.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.streaming.statePartitions").getOrElse("4"))
+    child.conf.set("spark.sql.shuffle.partitions", graft.ExtraConf.intLever(s,
+      "spark.graft.streaming.statePartitions", 4, min = 1).toString)
     child
   }
 

@@ -1,22 +1,20 @@
 package graft
 
 import java.nio.file.Files
-import java.util.Properties
 
 import org.apache.spark.sql.functions._
 
 import graft.etl.Sinks
-import graft.jobs.{IncrementalIndex, IngestJob}
+import graft.jobs.IncrementalIndex
 import graft.operators.{Embeddings, LlmText}
 
-/** The two-day persisted-index lifecycle — the test that gives the
+/** The two-day persisted-index probe — the test that gives the
   * incremental operators (d30/e09) their day 2. Day 1 writes the
-  * band-key/shingle and centroid/member tables to a parquet store from
-  * its own partition; day 2 reads ONLY its partition, probes the STORED
+  * band-key/shingle tables (the `bid=-1` bootstrap partition st13
+  * writes) and the centroid/member tables to a parquet store from its
+  * own partition; day 2 reads ONLY its partition, probes the STORED
   * index, and must (a) reproduce the oracle-pinned recompute forms
-  * row-for-row, (b) never read a day-1 text/vector file, and (c) fold
-  * its survivors into the store. Tests run in declaration order; the
-  * ingestBatch tests mutate the store and therefore come last.
+  * row-for-row and (b) never read a day-1 text/vector file.
   */
 class IncrementalIndexSpec extends GraftSuite {
 
@@ -44,7 +42,8 @@ class IncrementalIndexSpec extends GraftSuite {
     // the frozen centroid table is trained on the full history — e09's
     // oracle formulation — so the stored probe must reproduce e09
     // verbatim; members stored are day-1's only
-    IngestJob.buildIndex(spark, day1Docs, day1Vecs, indexDir,
+    IncrementalIndex.writeTextIndexBatch(spark, day1Docs, indexDir, batchId = -1L)
+    IncrementalIndex.writeCellIndex(spark, day1Vecs, indexDir,
       centroidTrain = Some(Tables.embeddings(spark, sf)))
     (docsDir, vecsDir, indexDir)
   }
@@ -108,55 +107,5 @@ class IncrementalIndexSpec extends GraftSuite {
     assert(vFiles.nonEmpty)
     val vOff = vFiles.filterNot(f => f.contains("ingest_day=2") || f.contains("/index/"))
     assert(vOff.isEmpty, s"cell probe reads day-1 vectors: ${vOff.take(3).mkString(", ")}")
-  }
-
-  test("ingestBatch writes keyed verdicts and folds exactly the survivors into the store") {
-    val url = "jdbc:derby:memory:graftincr;create=true"
-    val props = new Properties()
-    IngestJob.ingestBatch(spark, day2Docs, day2Vecs, env._3, url, props, "day-2")
-    // verdict tables are the library queries, keyed by the task UUID
-    val textViaJob = spark.read.jdbc(url, IngestJob.TextTable, props)
-      .where(col("task_id") === "day-2").drop("task_id")
-      .collect().map(_.toString).sorted.toSeq
-    val textRows = LlmText.d30IncrementalDedup(spark, sf).collect()
-    assert(textViaJob === textRows.map(_.toString).sorted.toSeq)
-    val cellViaJob = spark.read.jdbc(url, IngestJob.EmbeddingTable, props)
-      .where(col("task_id") === "day-2").drop("task_id")
-      .collect().map(_.toString).sorted.toSeq
-    val cellRows = Embeddings.e09IncrementalSemDedup(spark, sf).collect()
-    assert(cellViaJob === cellRows.map(_.toString).sorted.toSeq)
-    // store now holds day-1 entries ∪ exactly the day-2 survivors —
-    // day 3 would see today's kept docs as corpus
-    val day1DocIds = Tables.documents(spark, sf)
-      .where(col("doc_id") % mod =!= 0).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val textSurvivors = textRows.filterNot(_.getAs[Boolean]("is_dup"))
-      .map(_.getAs[Long]("doc_id")).toSet
-    val storedDocIds = spark.read
-      .parquet(s"${env._3}/${IncrementalIndex.TextShingles}")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(storedDocIds === day1DocIds ++ textSurvivors)
-    val day1VecIds = Tables.embeddings(spark, sf)
-      .where(col("vec_id") % mod =!= 0).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    val keptVecIds = cellRows.filter(_.getAs[Boolean]("kept"))
-      .map(_.getAs[Long]("vec_id")).toSet
-    val storedVecIds = spark.read
-      .parquet(s"${env._3}/${IncrementalIndex.CellMembers}")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(storedVecIds === day1VecIds ++ keptVecIds)
-  }
-
-  test("ingestBatch lands the batch postings: substr probe serves full-corpus spans") {
-    // runs after the ingestBatch test (declaration order, like the rest
-    // of this lifecycle file): the store now holds day-1's bootstrap
-    // postings plus day-2's appended ones, so the persisted probe must
-    // equal d44's spans over the WHOLE corpus — cross-day duplicated
-    // spans surface exactly like in-corpus ones
-    val persisted = IncrementalIndex.probeSubstrSpans(spark, env._3)
-      .collect().map(_.toString).sorted.toSeq
-    val direct = LlmText.d44CrossdocSpans(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(persisted === direct, "two-day substr store diverged from the batch spans")
   }
 }

@@ -1534,8 +1534,7 @@ class LlmTextSpec extends GraftSuite {
       assert(v >= s23(q) - 1e-9, s"query $q regressed with a second hop")
     }
     // and the AGGREGATE recall@3 vs the brute truth is monotone too —
-    // the measured form of the claim (GraphHopsCheck records the
-    // sf0.1 numbers per round in BASELINE.md)
+    // the measured form of the claim
     val truth = Embeddings
       .bruteRankedFrom(spark, Embeddings.quantizedFrom(spark, Tables.embeddings(spark, sf)))
       .where(org.apache.spark.sql.functions.col("rank") <= 3 &&

@@ -61,6 +61,33 @@ class SessionSpec extends GraftSuite {
       Jobs.master(Map(Jobs.CpusEnv -> "abc", Jobs.MasterEnv -> "local[2]")))
   }
 
+  test("a bad integer lever fails with an error naming the key and the value") {
+    import graft.operators.{Embeddings, LlmText}
+    import graft.streaming.AdAnalytics
+    // each row: a lever, a value it must refuse, and a query that reads it;
+    // an out-of-range value must not silently empty the result
+    val rows: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      (Embeddings.NprobeConf, "0", () => Embeddings.e05IvfAnn(spark, sf)),
+      (Embeddings.NprobeConf, "abc", () => Embeddings.e05IvfAnn(spark, sf)),
+      (Embeddings.RerankCConf, "0", () => Embeddings.e08SketchRerank(spark, sf)),
+      (Embeddings.MultiProbeConf, "-1", () => Embeddings.e02AnnBucketed(spark, sf)),
+      (Embeddings.NndRoundsConf, "two", () => Embeddings.e22NnDescent(spark, sf)),
+      (LlmText.BandRowsConf, "2.5", () => LlmText.d03LshNeardup(spark, sf)),
+      (LlmText.MaxBucketConf, "-1", () => LlmText.d03LshNeardup(spark, sf)),
+      (LlmText.AuditSampleConf, "0", () => LlmText.d22LshRecallAudit(spark, sf)),
+      (LlmText.PackShardsConf, "x", () => LlmText.d23SequencePack(spark, sf)),
+      (LlmText.SparseMaxDfConf, "-5", () => LlmText.d33SparseCosine(spark, sf)),
+      ("spark.graft.streaming.statePartitions", "abc",
+        () => AdAnalytics.st01ParseCount(spark, sf)))
+    for ((key, bad, query) <- rows) {
+      spark.conf.set(key, bad)
+      val e = try intercept[IllegalArgumentException](query().collect())
+        finally spark.conf.unset(key)
+      assert(e.getMessage.contains(s"$key must be an integer >= ") &&
+        e.getMessage.contains(s"got '$bad'"), s"$key=$bad: ${e.getMessage}")
+    }
+  }
+
   test("SmokeCheck: entry on a bare session returns rows (forked JVM)") {
     val (code, out) = SparkTestBase.forkMain("graft.tools.SmokeCheck")
     assert(code === 0, s"SmokeCheck exited $code:\n${out.takeRight(4000)}")

@@ -252,18 +252,11 @@ class StoredMemoSpec extends AnyFunSuite {
     // tool reaches is deleted rather than kept for its spec; the names
     // below are kept on purpose, each for its reason
     val allowed = Map(
-      "writeLshIndex" -> "persisted twin of the bucket memo (StoredParitySpec, TombstoneSpec)",
-      "probeLshBuckets" -> "persisted twin of the bucket memo (StoredParitySpec)",
-      "writeGraphIndex" -> "persisted twin of e22's graph memo (StoredParitySpec, TombstoneSpec, StreamingSpec)",
-      "writeTruthIndex" -> "persisted twin of the ground-truth memo (StoredParitySpec, TombstoneSpec)",
-      "probeTruth" -> "persisted twin of the ground-truth memo (StoredParitySpec)",
-      "writePqIndex" -> "persisted twin of e12's codebook and codes (StoredParitySpec, PqIndexSpec)",
+      "writeCellIndex" -> "reference writer st14's fixture bootstrap is compared against (FixtureParitySpec, TombstoneSpec, StreamingSpec)",
       "writeGraphBootstrapBatch" -> "split-spec writer of st22's bootstrap (FixtureParitySpec, GraphInsertSpec, StreamingSpec)",
       "writeClusterBootstrap" -> "split-spec writer of st25's bootstrap (StoredParitySpec, StreamingSpec)",
       "writeBenchIndex" -> "split-spec writer of st17's store (BloomFilterSpec, StreamingSpec)",
       "writeBloomIndex" -> "split-spec writer of st23's store (BloomFilterSpec, StreamingSpec)",
-      "buildIndex" -> "IngestJob's lifecycle API, pinned against d30/e09 (IncrementalIndexSpec)",
-      "ingestBatch" -> "IngestJob's lifecycle API, pinned against d30/e09 (IncrementalIndexSpec)",
       "nndSeeds" -> "test hook of e22's seed stage (LlmTextSpec)",
       "m10KmvWindowForm" -> "window-form reference of m10's aggregator (KmvAggregatorSpec)",
       "withPhashForTest" -> "test hook of mm06's native phash (MultimodalSpec)",
@@ -303,6 +296,27 @@ class StoredMemoSpec extends AnyFunSuite {
       s"members with no caller in src/main (delete them, or allow with a reason): ${(unreached -- allowed.keySet).toSeq.sorted}")
     assert((allowed.keySet -- unreached).isEmpty,
       s"allowlist entries that are gone or now have a caller: ${(allowed.keySet -- unreached).toSeq.sorted}")
+  }
+
+  test("every tool main is run by a spec") {
+    // a main no spec forks or calls is run by hand or not at all, and
+    // the members only it reaches look live to the caller scan above
+    import scala.jdk.CollectionConverters._
+    val tools = java.nio.file.Paths.get("src/main/scala/graft/tools")
+    val specs = java.nio.file.Paths.get("src/test")
+    assert(java.nio.file.Files.isDirectory(tools), s"run from the repo root: $tools")
+    def read(p: java.nio.file.Path) = stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    // each object's text runs to the next object; the ones holding a main
+    val mains = java.nio.file.Files.list(tools).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => read(p).split("(?=\\bobject\\s)").toSeq)
+      .flatMap(obj => "^object\\s+(\\w+)".r.findFirstMatchIn(obj)
+        .filter(_ => "\\bdef\\s+main\\b".r.findFirstIn(obj).isDefined).map(_.group(1)))
+    assert(mains.nonEmpty, "no tool mains found")
+    val testSrc = java.nio.file.Files.walk(specs).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(read).mkString("\n")
+    val unrun = mains.filterNot(m => ("\\b" + m + "\\b").r.findFirstIn(testSrc).isDefined)
+    assert(unrun.isEmpty, s"tool mains no spec names (run them from a spec or delete them): ${unrun.sorted}")
   }
 
   test("Streams keeps one streaming runner and persists no store") {

@@ -13,8 +13,8 @@ import graft.operators.{Embeddings, LlmText}
   * the persisted-parquet form of the SAME index must be value-identical
   * for the same corpus, and a memo-served result must equal a fresh
   * recompute. Diffed by frames here: IVF cell members, substring
-  * postings, PQ/SQ tables, the kNN graph, LSH buckets, ground truth,
-  * cluster bootstrap labels and the d03 verified-pair table.
+  * postings, the SQ tables, cluster bootstrap labels and the d03
+  * verified-pair table.
   */
 class StoredParitySpec extends GraftSuite {
 
@@ -31,14 +31,9 @@ class StoredParitySpec extends GraftSuite {
   private lazy val indexDir: String = {
     val tmp = Files.createTempDirectory("graft-parity-").toString
     IncrementalIndex.writeCellIndex(spark, Tables.embeddings(spark, sf), tmp)
-    IncrementalIndex.writeSubstrIndex(spark, Tables.documents(spark, sf), tmp)
-    IncrementalIndex.writeGraphIndex(spark, Tables.embeddings(spark, sf), tmp)
-    IncrementalIndex.writePqIndex(spark, Tables.embeddings(spark, sf),
-      Tables.embeddings(spark, sf), tmp)
+    IncrementalIndex.writeSubstrIndexBatch(spark, Tables.documents(spark, sf), tmp, batchId = -1L)
     IncrementalIndex.writeSqIndex(spark, Tables.embeddings(spark, sf),
       Tables.embeddings(spark, sf), tmp)
-    IncrementalIndex.writeLshIndex(spark, Tables.embeddings(spark, sf), tmp)
-    IncrementalIndex.writeTruthIndex(spark, Tables.embeddings(spark, sf), tmp)
     tmp
   }
 
@@ -59,31 +54,22 @@ class StoredParitySpec extends GraftSuite {
     val persisted = IncrementalIndex.probeSubstrSpans(spark, indexDir)
     assertSameRows(stored, persisted, "d44 spans")
     assertSameRows(stored, LlmText.spansWorklist(spark, sf), "d44 spans vs worklist memo")
-    // day-N append: splitting the corpus into two writes serves the
-    // same spans as the one-shot build (the df filter recomputes over
-    // the store as it stands — cross-batch duplicates surface)
+    // two batch partitions: splitting the corpus into two writes serves
+    // the same spans as the one-shot build (the df filter recomputes
+    // over the store as it stands — cross-batch duplicates surface)
     val docs = Tables.documents(spark, sf)
     val tmp2 = Files.createTempDirectory("graft-parity-substr-").toString
-    IncrementalIndex.writeSubstrIndex(spark, docs.where(col("doc_id") % 2 === 0), tmp2)
-    IncrementalIndex.writeSubstrIndex(spark, docs.where(col("doc_id") % 2 =!= 0), tmp2,
-      org.apache.spark.sql.SaveMode.Append)
+    IncrementalIndex.writeSubstrIndexBatch(spark, docs.where(col("doc_id") % 2 === 0), tmp2, 0L)
+    IncrementalIndex.writeSubstrIndexBatch(spark, docs.where(col("doc_id") % 2 =!= 0), tmp2, 1L)
     assertSameRows(stored, IncrementalIndex.probeSubstrSpans(spark, tmp2),
       "d44 spans after split append")
   }
 
-  test("PQ/SQ code tables: in-JVM codes memo ≡ persisted codes store") {
-    // r14: the encoded code tables joined the codebook/quantizer behind
-    // the stored-index memo discipline — the memo-served rows must
-    // equal the persisted pq_codes / sq_codes the store writers land
+  test("SQ code table: in-JVM codes memo ≡ persisted sq_codes") {
+    // r14: the encoded code table joined the quantizer behind the
+    // stored-index memo discipline — the memo-served rows must equal
+    // the persisted sq_codes the store writer lands
     val v = Embeddings.quantized(spark, sf)
-    val ranked = Embeddings.cellRanked(spark, sf)
-    val memoPq = Embeddings.pqCodesOf(spark,
-        ranked.where(col("rn") === 1)
-          .select(col("cell"), col("vec_id"), col("q")),
-        "q", Embeddings.pqCodebookOf(spark, v, "q"))
-      .withColumnRenamed("neighbor_id", "vec_id")
-    val persistedPq = spark.read.parquet(s"$indexDir/${IncrementalIndex.PqCodes}")
-    assertSameRows(memoPq, persistedPq, "pq codes")
     val memoSq = Embeddings.sqCodesOf(spark, v, Embeddings.sqLohiOf(v))
       .select(col("vec_id"), col("codes"))
     val persistedSq = spark.read.parquet(s"$indexDir/${IncrementalIndex.SqCodes}")
@@ -91,46 +77,10 @@ class StoredParitySpec extends GraftSuite {
     assertSameRows(memoSq, persistedSq, "sq codes")
   }
 
-  test("kNN graph: in-JVM memo ≡ persisted graph_edges, and the rounds lever composes") {
-    // e22's default levers (rounds=1, revCap=8) serve the memoized
-    // graph; the persisted writer iterates the same core over the same
-    // corpus — THE graph, not a rebuilt twin
-    val stored = Embeddings.e22NnDescent(spark, sf)
-    val persisted = IncrementalIndex.probeGraph(spark, indexDir)
-    assertSameRows(stored, persisted, "graph edges")
-    // a deeper build (the deployment's iterate-to-R-rounds event)
-    // persists exactly the fresh R-round iterate
-    val tmp2 = Files.createTempDirectory("graft-parity-graph-").toString
-    IncrementalIndex.writeGraphIndex(spark, Tables.embeddings(spark, sf), tmp2,
-      rounds = 2)
-    assertSameRows(
-      Embeddings.nnDescentRounds(spark, sf, 2, Embeddings.DefaultNndRevCap),
-      IncrementalIndex.probeGraph(spark, tmp2), "graph edges rounds=2")
-  }
-
-  test("PQ codebook: serving memo ≡ persisted pq_codebook (same training input)") {
-    val stored = Embeddings.pqCodebookOf(spark,
-      Embeddings.quantized(spark, sf), "q")
-    val persisted = spark.read.parquet(s"$indexDir/${IncrementalIndex.PqCodebook}")
-    assertSameRows(stored, persisted, "pq codebook")
-  }
-
   test("SQ quantizer: serving memo ≡ persisted sq_quantizer") {
     val stored = Embeddings.sqLohiOf(Embeddings.quantized(spark, sf))
     val persisted = spark.read.parquet(s"$indexDir/${IncrementalIndex.SqQuantizer}")
     assertSameRows(stored, persisted, "sq quantizer")
-  }
-
-  test("LSH bucket table: in-JVM memo ≡ persisted lsh_buckets") {
-    val stored = Embeddings.bucketedOf(spark, sf)
-    val persisted = IncrementalIndex.probeLshBuckets(spark, indexDir)
-    assertSameRows(stored, persisted, "lsh buckets")
-  }
-
-  test("ground-truth table: in-JVM memo ≡ persisted truth_topk") {
-    val stored = Embeddings.bruteRankedOf(spark, sf)
-    val persisted = IncrementalIndex.probeTruth(spark, indexDir)
-    assertSameRows(stored, persisted, "ground truth")
   }
 
   test("cluster bootstrap: memoized-d03 fixture path ≡ subset self-join path") {

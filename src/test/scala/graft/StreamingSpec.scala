@@ -96,9 +96,8 @@ class StreamingSpec extends GraftSuite {
       val ms = MemoryStream[(Long, String, String, String, Long)]
       val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
         .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          IncrementalIndex.writeSubstrIndex(spark, batch, idx,
-            org.apache.spark.sql.SaveMode.Append)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+          IncrementalIndex.writeSubstrIndexBatch(spark, batch, idx, bid)
           ()
         }
         .option("checkpointLocation", ckpt()).start()
@@ -458,16 +457,15 @@ class StreamingSpec extends GraftSuite {
 
     def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Set[(Long, Long, Boolean)] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st13-spec-idx-").toString
-      IncrementalIndex.writeTextIndex(spark, corpusDf, indexDir)
+      IncrementalIndex.writeTextIndexBatch(spark, corpusDf, indexDir, batchId = -1L)
       val ms = MemoryStream[(Long, String, String, String, Long)]
       val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
       val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
         .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           // probe BEFORE appending — the st13 ordering contract
           val v = IncrementalIndex.probeText(spark, batch, indexDir)
-          IncrementalIndex.writeTextIndex(spark, batch, indexDir,
-            org.apache.spark.sql.SaveMode.Append)
+          IncrementalIndex.writeTextIndexBatch(spark, batch, indexDir, bid)
           got ++= v.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
           ()
         }
@@ -655,17 +653,16 @@ class StreamingSpec extends GraftSuite {
     val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val indexDir = java.nio.file.Files.createTempDirectory("st13-resume-idx-").toString
-    IncrementalIndex.writeTextIndex(spark, corpusDf, indexDir)
+    IncrementalIndex.writeTextIndexBatch(spark, corpusDf, indexDir, batchId = -1L)
     val cp = ckpt() // STABLE across both runs — the resume contract
     val ms = MemoryStream[(Long, String, String, String, Long)]
     def run(): Set[(Long, Long, Boolean)] = {
       val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
       val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
         .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val v = IncrementalIndex.probeText(spark, batch, indexDir)
-          IncrementalIndex.writeTextIndex(spark, batch, indexDir,
-            org.apache.spark.sql.SaveMode.Append)
+          IncrementalIndex.writeTextIndexBatch(spark, batch, indexDir, bid)
           got ++= v.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
           ()
         }
@@ -706,8 +703,7 @@ class StreamingSpec extends GraftSuite {
     import graft.jobs.IncrementalIndex
     val idx = java.nio.file.Files.createTempDirectory("st21-spec-idx-").toString
     val all = Tables.embeddings(spark, sf)
-    IncrementalIndex.writeLshIndex(spark, all, idx)
-    IncrementalIndex.writeGraphIndex(spark, all, idx)
+    IncrementalIndex.writeServePair(spark, sf, idx)
     val queries = all.where(col("vec_id") % 5 === 0)
       .select("vec_id", "embedding", "label").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
@@ -778,9 +774,9 @@ class StreamingSpec extends GraftSuite {
     // the store equals the one-shot batch build: no duplicated postings
     // (a naive append would double batch 1's), none lost
     val oneShot = java.nio.file.Files.createTempDirectory("st19-crash-oneshot-").toString
-    IncrementalIndex.writeSubstrIndex(spark, Tables.documents(spark, sf), oneShot)
+    IncrementalIndex.writeSubstrIndexBatch(spark, Tables.documents(spark, sf), oneShot, -1L)
     val pA = spark.read.parquet(s"$idx/${IncrementalIndex.RhPostings}").drop("bid")
-    val pB = spark.read.parquet(s"$oneShot/${IncrementalIndex.RhPostings}")
+    val pB = spark.read.parquet(s"$oneShot/${IncrementalIndex.RhPostings}").drop("bid")
     assert(pA.count() === pB.count(), "postings row count differs from the one-shot build")
     assert(pA.exceptAll(pB).isEmpty && pB.exceptAll(pA).isEmpty,
       "recovered store's postings differ from the one-shot build")
@@ -853,10 +849,10 @@ class StreamingSpec extends GraftSuite {
     // per-doc pure functions, so one write over all docs is the batch-
     // composition-free reference)
     val oneShot = java.nio.file.Files.createTempDirectory("st13-crash-oneshot-").toString
-    IncrementalIndex.writeTextIndex(spark, Tables.documents(spark, sf), oneShot)
+    IncrementalIndex.writeTextIndexBatch(spark, Tables.documents(spark, sf), oneShot, -1L)
     for (t <- Seq(IncrementalIndex.TextBands, IncrementalIndex.TextShingles)) {
       val a = spark.read.parquet(s"$idx/$t").drop("bid")
-      val b = spark.read.parquet(s"$oneShot/$t")
+      val b = spark.read.parquet(s"$oneShot/$t").drop("bid")
       assert(a.count() === b.count(), s"$t row count differs from one-shot")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"$t rows differ from the one-shot build")
@@ -946,8 +942,7 @@ class StreamingSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val idx = java.nio.file.Files.createTempDirectory("st24-crash-idx-").toString
     val vecs = Tables.embeddings(spark, sf)
-    IncrementalIndex.writeLshIndex(spark, vecs, idx)
-    IncrementalIndex.writeGraphIndex(spark, vecs, idx)
+    IncrementalIndex.writeServePair(spark, sf, idx)
     val dels = vecs
       .where(col("vec_id") % Embeddings.VecTombMod === Embeddings.VecTombRem)
       .select("vec_id").collect().map(_.getLong(0)).sorted
@@ -990,7 +985,7 @@ class StreamingSpec extends GraftSuite {
       "streamed-retraction serve diverged from the batch e24 form")
   }
 
-  test("st25: bridge + crash-replay reproduce the one-shot clusters; rebase folds the merge log") {
+  test("st25: bridge + crash-replay reproduce the one-shot clusters") {
     // constructed corpus exercising every path of the union-find-as-log
     // design: P-family docs where arrival E (id 10) BRIDGES the
     // bootstrap component {3,11} with the bootstrap singleton 7 (the
@@ -1053,30 +1048,6 @@ class StreamingSpec extends GraftSuite {
     val remaps = spark.read.parquet(s"$idx/${IncrementalIndex.LabelRemaps}")
     assert(remaps.where(col("src") === 7 && col("dst") === 3).count() === 1L,
       "expected exactly one 7→3 merge event in the remap log")
-    // rebase: readout unchanged, merge log reset, label partitions folded
-    IncrementalIndex.rebaseClusterLabels(spark, idx, upToBid = 1L)
-    val rebased = IncrementalIndex.resolveClusterLabels(spark, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rebased === expected, "rebase changed the readout")
-    assert(spark.read.parquet(s"$idx/${IncrementalIndex.LabelRemaps}").isEmpty,
-      "rebase must fold the merge log flat")
-    def labDirs(): Set[String] = new java.io.File(s"$idx/${IncrementalIndex.ClusterLabels}")
-      .listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(labDirs() === Set(s"bid=${IncrementalIndex.compactedBid(1L)}"),
-      s"rebase must leave one consolidated label segment, got ${labDirs()}")
-    // crash window: a rebase that committed its segment (_SUCCESS) but
-    // died before the deletes leaves an original beside it; the
-    // documented recovery is to RE-RUN the same rebase, which sees the
-    // marker, skips the rewrite, and finishes the deletes
-    val seg = s"$idx/${IncrementalIndex.ClusterLabels}/bid=${IncrementalIndex.compactedBid(1L)}"
-    spark.read.parquet(seg).limit(2)
-      .write.parquet(s"$idx/${IncrementalIndex.ClusterLabels}/bid=0")
-    IncrementalIndex.rebaseClusterLabels(spark, idx, upToBid = 1L)
-    assert(labDirs() === Set(s"bid=${IncrementalIndex.compactedBid(1L)}"),
-      "re-running the rebase must finish the crashed deletes")
-    val resumed = IncrementalIndex.resolveClusterLabels(spark, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(resumed === expected, "resumed rebase changed the readout")
   }
 
   test("st14: a restart on the same checkpoint + index dir resumes — no refold, no index rewrite") {

@@ -14,8 +14,8 @@ import graft.operators.Embeddings
   * the tombstone table + probe-side anti-join
   * ([[IncrementalIndex.liveTable]]). Laws pinned here:
   *
-  *  - ranked artifacts (graph edges, ground truth) are filtered on
-  *    BOTH endpoints — sound (no retracted id survives anywhere) but
+  *  - the ranked artifact (graph edges) is filtered on BOTH
+  *    endpoints — sound (no retracted id survives anywhere) but
   *    lossy (completeness returns only with the explicit rebuild);
   *  - st24's bid-partitioned tombstone table reads as one set, and the
   *    persisted live serve over it ≡ e24's in-JVM form (the stored and
@@ -38,9 +38,7 @@ class TombstoneSpec extends GraftSuite {
   private lazy val vecEnv: (String, Set[Long]) = {
     val idx = Files.createTempDirectory("graft-tomb-vec-").toString
     val all = Tables.embeddings(spark, sf)
-    IncrementalIndex.writeLshIndex(spark, all, idx)
-    IncrementalIndex.writeGraphIndex(spark, all, idx)
-    IncrementalIndex.writeTruthIndex(spark, all, idx)
+    IncrementalIndex.writeServePair(spark, sf, idx)
     IncrementalIndex.writeCellIndex(spark, all, idx, centroidTrain = Some(all))
     IncrementalIndex.writeVecTombstonesBatch(spark, delIds, idx, 0L)
     (idx, delIds.collect().map(_.getLong(0)).toSet)
@@ -56,10 +54,6 @@ class TombstoneSpec extends GraftSuite {
     assert(edges.where(col("query_id").isin(dels.toSeq: _*) ||
         col("neighbor_id").isin(dels.toSeq: _*)).isEmpty,
       "an edge touching a retracted endpoint survived")
-    val truth = IncrementalIndex.liveTable(spark, idx, IncrementalIndex.TruthTopK)
-    assert(truth.where(col("query_id").isin(dels.toSeq: _*) ||
-        col("neighbor_id").isin(dels.toSeq: _*)).isEmpty,
-      "a truth row touching a retracted endpoint survived")
     // an unmapped table (the centroids are corpus statistics, not
     // per-id rows) reads plain
     assert(IncrementalIndex.liveTable(spark, idx, IncrementalIndex.CellCentroids)
