@@ -32,10 +32,9 @@ import graft.operators.{Embeddings, LlmText, SelfJoin}
   *    `cluster_labels` / `label_remaps` — st15, st16, st17/st23,
   *    st21/st22/st24 and st25's stores.
   *
-  * The text, substring, graph-insert, tombstone and cluster tables are
-  * batch-keyed: each micro-batch lands in its own `bid=<id>` partition,
-  * written with Overwrite, and bootstrap rows take bid = −1 (see
-  * [[writeTextIndexBatch]]).
+  * A store that is appended to is batch-keyed: every write lands in
+  * its own `bid=<id>` partition through `land`, bootstrap rows at
+  * bid −1. A frozen store, written once and never appended, is flat.
   *
   * Daily cost ∝ |batch| × collision width: the probe joins are the same
   * strategy-gated equi-joins as d30/e09 ([[SelfJoin]]: broadcast
@@ -92,9 +91,7 @@ object IncrementalIndex {
     * through one) — and filtering them is sound but lossy: a rebuild
     * over the survivors is the completeness-restoring event. */
   private val tombKeys: Map[String, Seq[String]] = Map(
-    CellMembers -> Seq("vec_id"),
     LshBuckets -> Seq("vec_id"),
-    SqCodes -> Seq("vec_id"),
     GraphEdges -> Seq("query_id", "neighbor_id"))
 
   private def tableExists(s: SparkSession, path: String): Boolean = {
@@ -102,21 +99,14 @@ object IncrementalIndex {
     hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  /** Record upstream RETRACTIONS (`ids` is a 1-column frame of vec
-    * ids) — st24's layout for [[VecTombstones]] (the
-    * [[writeLshIndexBatch]] convention applied to retractions):
-    * each micro-batch's retracted ids land in their own idempotent
-    * `bid=<id>` partition, so a crash-replayed batch OVERWRITES its
-    * earlier append instead of duplicating it. Exactly-once here is
-    * doubly assured: the bid overwrite gives no-duplicate storage, and
-    * tombstone application is a SET anti-join ([[liveTable]]) that a
-    * duplicate id could not perturb anyway — the replay-safety is
-    * structural at both layers. */
+  /** st24's step: land a micro-batch of upstream RETRACTIONS (`ids`
+    * is a 1-column frame of vec ids) in [[VecTombstones]]. Tombstone
+    * application is a SET anti-join ([[liveTable]]), so even a
+    * duplicate id could not perturb a read. */
   def writeVecTombstonesBatch(s: SparkSession, ids: DataFrame, indexDir: String,
                               batchId: Long): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, VecTombstones)}/bid=$batchId")
+    land(ids.select(col(ids.columns.head).cast("long").as("vec_id")),
+      indexDir, VecTombstones, batchId)
 
   /** A store table with its tombstone set applied PROBE-SIDE: one
     * broadcast anti-join per id column (the ranked artifacts pass both
@@ -157,43 +147,49 @@ object IncrementalIndex {
     // the small-files cost every later probe re-pays at open time
     // (guide §6); these tables are a few MB, so a handful of files is
     // the right landing size
-    LlmText.bandsOf(s, dir).where(pred).coalesce(4)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, TextBands)}/bid=-1")
-    LlmText.shinglesOf(s, dir).where(pred).coalesce(4)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, TextShingles)}/bid=-1")
+    land(LlmText.bandsOf(s, dir).where(pred).coalesce(4), indexDir, TextBands, -1L)
+    land(LlmText.shinglesOf(s, dir).where(pred).coalesce(4), indexDir, TextShingles, -1L)
   }
 
-  /** IDEMPOTENT per-batch append for the streaming ingest twins: the
-    * batch's index rows land in a batch-id-keyed partition directory
-    * (`bid=<id>`, written with Overwrite). foreachBatch commits source
-    * offsets AFTER the callback returns, so a batch replayed after a
-    * crash arrives with the SAME id and overwrites its own partition
-    * instead of duplicating — the Structured Streaming idempotent-sink
-    * recipe that makes a parquet store exactly-once under recovery
-    * (crash-resume pinned in StreamingSpec). Bootstrap rows take
-    * bid = -1 so the whole store shares one partition-discovered
-    * layout (flat files and bid dirs must not mix under one root). */
+  /** The text index rows (bands and shingle sets) of `docs`, landed at
+    * `batchId`: st13's and st25's per-batch write, and a bootstrap at
+    * bid −1. */
   def writeTextIndexBatch(s: SparkSession, docs: DataFrame, indexDir: String,
                           batchId: Long): Unit = {
     val baseDf = LlmText.baseFrom(spread(docs)).persist()
     try {
-      LlmText.bandEntriesOf(s, LlmText.sigOf(s, baseDf))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${p(indexDir, TextBands)}/bid=$batchId")
-      LlmText.shingleSetsOf(s, baseDf)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${p(indexDir, TextShingles)}/bid=$batchId")
+      land(LlmText.bandEntriesOf(s, LlmText.sigOf(s, baseDf)), indexDir, TextBands, batchId)
+      land(LlmText.shingleSetsOf(s, baseDf), indexDir, TextShingles, batchId)
     } finally { baseDf.unpersist(); () }
   }
 
-  /** [[writeTextIndexBatch]]'s substring-postings twin (st19's append). */
+  /** st13's step: d30's verdicts for `batch` against the store as of
+    * the last committed batch, then the batch's own text index rows. */
+  def ingestTextBatch(s: SparkSession, batch: DataFrame, indexDir: String,
+                      batchId: Long): DataFrame = {
+    val verdicts = probeText(s, batch, indexDir, exceptBid = Some(batchId))
+    writeTextIndexBatch(s, batch, indexDir, batchId)
+    verdicts
+  }
+
+  /** st19's step: the batch's substring postings. */
   def writeSubstrIndexBatch(s: SparkSession, docs: DataFrame, indexDir: String,
                             batchId: Long): Unit =
-    LlmText.rhPostingsFrom(s, spread(docs))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, RhPostings)}/bid=$batchId")
+    land(LlmText.rhPostingsFrom(s, spread(docs)), indexDir, RhPostings, batchId)
+
+  /** The one writer of every batch-keyed store: `df` lands in `table`'s
+    * `bid=<bid>` partition with Overwrite. foreachBatch commits source
+    * offsets AFTER the callback returns, so a batch replayed after a
+    * crash arrives with the SAME id and overwrites its own partition
+    * instead of duplicating it: the Structured Streaming idempotent
+    * sink. Flat files and bid dirs never mix under one root. */
+  private def land(df: DataFrame, indexDir: String, table: String, bid: Long): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(s"${p(indexDir, table)}/bid=$bid")
+
+  /** A batch-keyed table's bootstrap (bid −1) rows; partition pruning
+    * reads only that directory. */
+  private def bootstrapRows(s: SparkSession, indexDir: String, table: String): DataFrame =
+    s.read.parquet(p(indexDir, table)).where(col("bid") === -1).drop("bid")
 
   /** Store-table read honoring the batch-keyed layout: optionally
     * EXCLUDES one batch id — a crash-replayed batch must probe the
@@ -223,7 +219,7 @@ object IncrementalIndex {
     val cents = Embeddings.centroidsOf(s,
       Embeddings.quantizedFrom(s, centroidTrain.getOrElse(vecs)))
     cents.write.mode(SaveMode.Overwrite).parquet(p(indexDir, CellCentroids))
-    appendCellMembers(s, vecs, indexDir, SaveMode.Overwrite)
+    land(cellMembersFrom(s, vecs, indexDir), indexDir, CellMembers, -1L)
   }
 
   /** Fixture-path twin of [[writeCellIndex]] at st14's standing shape
@@ -241,23 +237,28 @@ object IncrementalIndex {
     val modE = Embeddings.IncrementalBatchModE
     Embeddings.centroidsOf(s, Embeddings.quantized(s, dir))
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, CellCentroids))
-    Embeddings.cellRanked(s, dir)
+    land(Embeddings.cellRanked(s, dir)
       .where(col("rn") === 1 && col("vec_id") % modE =!= 0)
       .select(col("cell"), col("vec_id"), col("q"), col("nq"))
-      .coalesce(4)
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, CellMembers))
+      .coalesce(4), indexDir, CellMembers, -1L)
   }
 
-  /** Assign `vecs` against the STORED centroids and write their member
-    * rows. `Append` is the ingest fold — st14's census form appends the
-    * FULL batch (e09 counts matches against every earlier arrival). */
-  private[graft] def appendCellMembers(s: SparkSession, vecs: DataFrame,
-                                       indexDir: String, mode: SaveMode): Unit =
+  /** The member rows of `vecs`, assigned against the STORED centroids. */
+  private def cellMembersFrom(s: SparkSession, vecs: DataFrame, indexDir: String): DataFrame =
     Embeddings.assignRanked(s, Embeddings.quantizedFrom(s, vecs),
         s.read.parquet(p(indexDir, CellCentroids)))
       .where(col("rn") === 1)
       .select(col("cell"), col("vec_id"), col("q"), col("nq"))
-      .write.mode(mode).parquet(p(indexDir, CellMembers))
+
+  /** st14's step: e09's verdicts for `batch` against the store as of the
+    * last committed batch, then the batch's own member rows. The FULL
+    * batch lands (e09 counts matches against every earlier arrival). */
+  def ingestCellBatch(s: SparkSession, batch: DataFrame, indexDir: String,
+                      batchId: Long): DataFrame = {
+    val verdicts = probeCells(s, batch, indexDir, exceptBid = Some(batchId))
+    land(cellMembersFrom(s, batch, indexDir), indexDir, CellMembers, batchId)
+    verdicts
+  }
 
   /** Persist the SQ8 half of the index (e14/e15's quantizer): the
     * trained per-dimension [lo, hi] row over `trainVecs` (frozen like
@@ -270,20 +271,24 @@ object IncrementalIndex {
                    indexDir: String): Unit = {
     Embeddings.sqLohiTrain(Embeddings.quantizedFrom(s, trainVecs))
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, SqQuantizer))
-    encodeSqMembers(s, allVecs, indexDir, SaveMode.Overwrite)
+    land(sqCodesFrom(s, allVecs, indexDir), indexDir, SqCodes, -1L)
   }
 
-  /** Encode `vecs` against the STORED quantizer and land their code
-    * rows. `Append` is the ingest fold; `Overwrite` the build/retrain
-    * rebuild (codes under different [lo, hi] tables are NOT comparable
-    * — retraining re-encodes wholesale). */
-  def encodeSqMembers(s: SparkSession, vecs: DataFrame, indexDir: String,
-                      mode: SaveMode = SaveMode.Append): DataFrame = {
+  /** The code rows of `vecs`, encoded against the STORED quantizer
+    * (codes under different [lo, hi] tables are NOT comparable, so a
+    * retrain re-encodes wholesale). */
+  private def sqCodesFrom(s: SparkSession, vecs: DataFrame, indexDir: String): DataFrame = {
     val v = Embeddings.quantizedFrom(s, vecs).select(col("vec_id"), col("q"))
-    val enc = Embeddings.sqEncode(v, s.read.parquet(p(indexDir, SqQuantizer)))
+    Embeddings.sqEncode(v, s.read.parquet(p(indexDir, SqQuantizer)))
       .select(col("vec_id"), col("codes"))
-    enc.write.mode(mode).parquet(p(indexDir, SqCodes))
-    enc
+  }
+
+  /** st15's step: land the batch's code rows and return them. */
+  def ingestSqBatch(s: SparkSession, batch: DataFrame, indexDir: String,
+                    batchId: Long): DataFrame = {
+    val codes = sqCodesFrom(s, batch, indexDir)
+    land(codes, indexDir, SqCodes, batchId)
+    codes
   }
 
   /** Serve d44's maximal duplicated spans from the PERSISTED postings
@@ -292,16 +297,13 @@ object IncrementalIndex {
   def probeSubstrSpans(s: SparkSession, indexDir: String): DataFrame =
     LlmText.spansFromPostings(s.read.parquet(p(indexDir, RhPostings)))
 
-  /** Batch-keyed LSH bucket append — st22's layout for [[LshBuckets]]:
-    * bootstrap rows take bid = −1 ([[writeTextIndexBatch]]'s
-    * convention), each micro-batch's rows land in their own idempotent
-    * `bid=<id>` partition so arrivals become retrievable by every
-    * later batch while replays overwrite themselves. */
+  /** The LSH bucket rows of `vecs`, landed at `batchId` (st22's
+    * [[LshBuckets]]; a bootstrap at bid −1): arrivals become
+    * retrievable by every later batch. */
   def writeLshIndexBatch(s: SparkSession, vecs: DataFrame, indexDir: String,
                          batchId: Long): Unit =
-    Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, vecs))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, LshBuckets)}/bid=$batchId")
+    land(Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, vecs)),
+      indexDir, LshBuckets, batchId)
 
   /** The BOOTSTRAP graph for the online-insert lifecycle: the corpus's
     * NN-Descent edges in the `bid=-1` partition of a batch-keyed
@@ -313,9 +315,8 @@ object IncrementalIndex {
                                rounds: Int = 1,
                                revCap: Int = Embeddings.DefaultNndRevCap): Unit = {
     val v = Embeddings.quantizedFrom(s, vecs)
-    Embeddings.nnDescentOver(s, Embeddings.bucketedFrom(s, v), v, rounds, revCap)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, GraphEdges)}/bid=-1")
+    land(Embeddings.nnDescentOver(s, Embeddings.bucketedFrom(s, v), v, rounds, revCap),
+      indexDir, GraphEdges, -1L)
   }
 
   /** FIXTURE-path bootstrap for st22's (lsh_buckets, graph_edges)
@@ -332,35 +333,34 @@ object IncrementalIndex {
                                  indexDir: String): Unit = {
     val modE = Embeddings.IncrementalBatchModE
     // coalesced like the text bootstrap: small store, few files
-    Embeddings.bucketedOf(s, dir)
-      .where(col("vec_id") % modE =!= 0).coalesce(4)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, LshBuckets)}/bid=-1")
-    Embeddings.ingestGraphOf(s, dir).coalesce(4)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, GraphEdges)}/bid=-1")
+    land(Embeddings.bucketedOf(s, dir).where(col("vec_id") % modE =!= 0).coalesce(4),
+      indexDir, LshBuckets, -1L)
+    land(Embeddings.ingestGraphOf(s, dir).coalesce(4), indexDir, GraphEdges, -1L)
   }
 
-  /** Append a batch's freshly computed insert edges (the
-    * [[probeGraphInsert]] output) under its idempotent bid partition. */
-  def writeGraphEdgesBatch(s: SparkSession, edges: DataFrame, indexDir: String,
-                           batchId: Long): Unit =
-    edges.write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, GraphEdges)}/bid=$batchId")
+  /** st22's step: the batch's insert edges against the store as of the
+    * last committed batch, then its bucket rows and those edges. */
+  def ingestGraphBatch(s: SparkSession, batch: DataFrame, indexDir: String,
+                       batchId: Long): DataFrame = {
+    val edges = probeGraphInsert(s, batch, indexDir, exceptBid = Some(batchId))
+    writeLshIndexBatch(s, batch, indexDir, batchId)
+    land(edges, indexDir, GraphEdges, batchId)
+    edges
+  }
 
   /** ONLINE INSERT probe — compute a batch of arriving vectors' edge
     * lists against the store as it stands ([[graft.operators.Embeddings
     * .graphInsertOver]]): seeds from the stored bucket table (corpus +
     * every earlier arrival; `exceptBid` hides a crash-replayed batch's
     * own append), expansion through the FROZEN bootstrap edges only.
-    * Returns the materialized batch-sized edge frame the caller appends
-    * via [[writeGraphEdgesBatch]]. */
+    * Returns the materialized batch-sized edge frame
+    * [[ingestGraphBatch]] lands. */
   def probeGraphInsert(s: SparkSession, batchVecs: DataFrame, indexDir: String,
                        exceptBid: Option[Long] = None): DataFrame =
     Embeddings.graphInsertOver(s,
       Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, batchVecs)),
       storeTable(s, indexDir, LshBuckets, exceptBid),
-      s.read.parquet(s"${p(indexDir, GraphEdges)}/bid=-1"))
+      bootstrapRows(s, indexDir, GraphEdges))
       .localCheckpoint(true)
 
   /** Write the (lsh_buckets, graph_edges) serve pair for the FIXTURE
@@ -602,21 +602,19 @@ object IncrementalIndex {
   /** The bootstrap (bid -1) partitions of the cluster store: the labels
     * and an empty remap table. */
   private def writeBootstrapLabels(labels: DataFrame, indexDir: String): Unit = {
-    labels.write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, ClusterLabels)}/bid=-1")
+    land(labels, indexDir, ClusterLabels, -1L)
     // an explicitly-empty remap partition so every later storeTable
     // read finds the table (merge events may only come much later)
-    labels.limit(0).select(col("doc_id").as("src"), col("label").as("dst"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p(indexDir, LabelRemaps)}/bid=-1")
+    land(labels.limit(0).select(col("doc_id").as("src"), col("label").as("dst")),
+      indexDir, LabelRemaps, -1L)
   }
 
   /** Corpus-INTERNAL verified near-dup pairs, derived from the stored
     * bootstrap partition itself (one band self-join + shingle verify —
     * d03's one-join form over the store instead of the fixture). */
   private def selfTextEdges(s: SparkSession, indexDir: String): DataFrame = {
-    val bands = s.read.parquet(s"${p(indexDir, TextBands)}/bid=-1")
-    val sh = s.read.parquet(s"${p(indexDir, TextShingles)}/bid=-1")
+    val bands = bootstrapRows(s, indexDir, TextBands)
+    val sh = bootstrapRows(s, indexDir, TextShingles)
     val cand = SelfJoin.on(
         bands.select(col("band"), col("band_key"), col("doc_id").as("new_id")),
         bands.select(col("band"), col("band_key"), col("doc_id").as("old_id")),
@@ -667,15 +665,13 @@ object IncrementalIndex {
                         batchId: Long): Unit = {
     val pairs = probeTextPairs(s, batchDocs, indexDir, exceptBid = Some(batchId))
     writeTextIndexBatch(s, batchDocs, indexDir, batchId)
-    val labelsPath = s"${p(indexDir, ClusterLabels)}/bid=$batchId"
-    val remapsPath = s"${p(indexDir, LabelRemaps)}/bid=$batchId"
     if (pairs.isEmpty) {
       // nothing matched: explicit empty partitions keep the replay
       // overwrite idempotent even across a crash that wrote them
       val emptyLab = pairs.select(col("new_id").as("doc_id"), col("new_id").as("label"))
-      emptyLab.write.mode(SaveMode.Overwrite).parquet(labelsPath)
-      emptyLab.select(col("doc_id").as("src"), col("label").as("dst"))
-        .write.mode(SaveMode.Overwrite).parquet(remapsPath)
+      land(emptyLab, indexDir, ClusterLabels, batchId)
+      land(emptyLab.select(col("doc_id").as("src"), col("label").as("dst")),
+        indexDir, LabelRemaps, batchId)
       return
     }
     val labStore = storeTable(s, indexDir, ClusterLabels, Some(batchId))
@@ -701,14 +697,14 @@ object IncrementalIndex {
     // time — their node entered the contraction as their own id)
     val prevSingletons = oldNodes.join(
       labStore.withColumnRenamed("doc_id", "node"), Seq("node"), "left_anti")
-    batchNodes.unionByName(prevSingletons)
-      .select(col("node").as("doc_id"), col("comp").as("label"))
-      .write.mode(SaveMode.Overwrite).parquet(labelsPath)
+    land(batchNodes.unionByName(prevSingletons)
+      .select(col("node").as("doc_id"), col("comp").as("label")),
+      indexDir, ClusterLabels, batchId)
     // merge events: a non-batch node whose component found a smaller
     // min was a losing label — point it at the winner
-    oldNodes.where(col("comp") =!= col("node"))
-      .select(col("node").as("src"), col("comp").as("dst"))
-      .write.mode(SaveMode.Overwrite).parquet(remapsPath)
+    land(oldNodes.where(col("comp") =!= col("node"))
+      .select(col("node").as("src"), col("comp").as("dst")),
+      indexDir, LabelRemaps, batchId)
   }
 
   /** The label READOUT: every labeled doc with its label resolved
@@ -727,12 +723,15 @@ object IncrementalIndex {
   /** e09's verdicts against the STORED index: the batch assigns to the
     * stored (frozen) centroids and compares only against that cell's
     * stored members plus its own earlier batch members. No day-1 vector
-    * is re-read, no centroid retrained. */
-  def probeCells(s: SparkSession, batchVecs: DataFrame, indexDir: String): DataFrame =
-    probeCellsLazy(s, batchVecs, indexDir).localCheckpoint(true)
+    * is re-read, no centroid retrained. `exceptBid` serves the
+    * crash-replay contract ([[storeTable]]). */
+  def probeCells(s: SparkSession, batchVecs: DataFrame, indexDir: String,
+                 exceptBid: Option[Long] = None): DataFrame =
+    probeCellsLazy(s, batchVecs, indexDir, exceptBid).localCheckpoint(true)
 
   private[graft] def probeCellsLazy(s: SparkSession, batchVecs: DataFrame,
-                                    indexDir: String): DataFrame = {
+                                    indexDir: String,
+                                    exceptBid: Option[Long] = None): DataFrame = {
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.ArrayOps.longDot(s, a, b)
     val asgB = Embeddings.assignRanked(s, Embeddings.quantizedFrom(s, batchVecs),
@@ -741,7 +740,7 @@ object IncrementalIndex {
       .select(col("cell"), col("vec_id"), col("q"), col("nq"))
     val probe = asgB.select(col("cell"), col("vec_id").as("new_id"),
       col("q").as("qn"), col("nq").as("nn"))
-    val stored = s.read.parquet(p(indexDir, CellMembers))
+    val stored = storeTable(s, indexDir, CellMembers, exceptBid)
       .select(col("cell"), col("vec_id").as("old_id"),
         col("q").as("qo"), col("nq").as("no"))
     val intra = asgB.select(col("cell"), col("vec_id").as("old_id"),
@@ -761,20 +760,28 @@ object IncrementalIndex {
       .withColumn("kept", col("n_matches") === 0)
   }
 
-  /** Write the MEDIA half of the index: every row's 64-bit perceptual
-    * hash with its band keys — (band, band_key, media_id, phash), mm06's
-    * banding verbatim ([[graft.operators.Multimodal.phashBandKeys]]), so
-    * stored entries and a recompute can never band differently. `Append`
-    * is the ingest fold (st16's census form — the full batch lands, as
-    * probeText/probeCells). The phash is 8 bytes/row ×
-    * [[graft.operators.Multimodal.PhashBands]] band rows — the media
-    * corpus itself (the binary payloads) is never re-read after its
-    * hash lands. */
-  def writeMediaIndex(s: SparkSession, docs: DataFrame, indexDir: String,
-                      mode: SaveMode = SaveMode.Overwrite): Unit =
-    graft.operators.Multimodal.phashBandKeys(
-        graft.operators.Multimodal.withPhash(s, docs))
-      .write.mode(mode).parquet(p(indexDir, MediaBands))
+  /** Bootstrap the MEDIA half of the index at bid −1: every row's
+    * 64-bit perceptual hash with its band keys — (band, band_key,
+    * media_id, phash), mm06's banding verbatim
+    * ([[graft.operators.Multimodal.phashBandKeys]]), so stored entries
+    * and a recompute can never band differently. The phash is 8
+    * bytes/row × [[graft.operators.Multimodal.PhashBands]] band rows —
+    * the media payloads are never re-read after their hash lands. */
+  def writeMediaIndex(s: SparkSession, docs: DataFrame, indexDir: String): Unit =
+    land(mediaBandsFrom(s, docs), indexDir, MediaBands, -1L)
+
+  private def mediaBandsFrom(s: SparkSession, docs: DataFrame): DataFrame =
+    graft.operators.Multimodal.phashBandKeys(graft.operators.Multimodal.withPhash(s, docs))
+
+  /** st16's step: mm06's verdicts for `batch` against the store as of
+    * the last committed batch, then the batch's own band rows (the full
+    * batch, as st13/st14). */
+  def ingestMediaBatch(s: SparkSession, batch: DataFrame, indexDir: String,
+                       batchId: Long): DataFrame = {
+    val verdicts = probeMedia(s, batch, indexDir, exceptBid = Some(batchId))
+    land(mediaBandsFrom(s, batch), indexDir, MediaBands, batchId)
+    verdicts
+  }
 
   /** mm06's near-dup verdicts for a batch against the STORED media
     * index: batch rows hash + band map-side, candidates come from the
@@ -783,13 +790,14 @@ object IncrementalIndex {
     * banding is pigeonhole-COMPLETE at the emitted radius — so verdicts
     * equal the all-pairs recompute restricted to (stored ∪ earlier
     * batch) partners. Returns the materialized batch-sized frame. */
-  def probeMedia(s: SparkSession, batchDocs: DataFrame, indexDir: String): DataFrame = {
+  private def probeMedia(s: SparkSession, batchDocs: DataFrame, indexDir: String,
+                         exceptBid: Option[Long]): DataFrame = {
     import graft.operators.Multimodal
     val ph = Multimodal.withPhash(s, batchDocs)
     val bandsB = Multimodal.phashBandKeys(ph)
     val probe = bandsB.select(col("band"), col("band_key"),
       col("media_id").as("new_id"), col("phash").as("ph_n"))
-    val stored = s.read.parquet(p(indexDir, MediaBands))
+    val stored = storeTable(s, indexDir, MediaBands, exceptBid)
       .select(col("band"), col("band_key"),
         col("media_id").as("old_id"), col("phash").as("ph_o"))
     val intra = bandsB.select(col("band"), col("band_key"),
@@ -900,16 +908,18 @@ object IncrementalIndex {
           .select(col("shingle")).distinct(), "shingle", bits, k)
       .write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
 
-  /** Fixture-path twin of [[writeBloomIndex]]: the bits table derived
-    * from the memoized bench-shingle rows (the distinct shingles of the
-    * capped store ARE the filter's key set — same rows either way). The
-    * word aggregate itself is bits/64-bounded and cheap; the memo saves
-    * the bench-side shingle recompute. */
+  /** Fixture-path twin of [[writeBloomIndex]]: the bits table of the
+    * memoized bench-shingle rows (the distinct shingles of the capped
+    * store ARE the filter's key set — same rows either way), itself
+    * memoized per geometry, so a warm call pays only the parquet write
+    * ([[benchRowsOf]]'s discipline). */
   def writeBloomIndexFixture(s: SparkSession, dir: String, indexDir: String,
                              bits: Int, k: Int): Unit =
-    graft.functions.BloomFilter.wordsDF(
-        benchRowsOf(s, dir).select(col("shingle")).distinct(), "shingle", bits, k)
-      .write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
+    graft.StoredMemo.stored(s, "bloom-words", dir, LlmText.ContaminationMod, bits, k) {
+      graft.functions.BloomFilter.wordsDF(
+          benchRowsOf(s, dir).select(col("shingle")).distinct(), "shingle", bits, k)
+        .localCheckpoint(true)
+    }.write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
 
   /** The stored Bloom table's schema, the (widx, word, bits, k) columns
     * of [[graft.functions.BloomFilter.wordsDF]]: the probe reads it

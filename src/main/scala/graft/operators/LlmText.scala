@@ -2077,7 +2077,7 @@ object LlmText {
       // and localCheckpoint freezes that layout — the ranking core's
       // dots stage (probe side of the term self-join + partial
       // aggregate, Σ_t qdf·df rows) then runs single-task. Measured
-      // r13: d33 dots 15.6 s → spread across cores (plans/r13). Keyed
+      // r13: d33 dots 15.6 s → spread across cores. Keyed
       // repartition keeps the exchange deterministic (guide §2.5).
       weightedPostingsOf(tf, termStatsOf(s, docs, tf))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))

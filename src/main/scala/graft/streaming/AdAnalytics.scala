@@ -439,10 +439,11 @@ object AdAnalytics {
     * bid −1), then each
     * micro-batch of arriving documents (1) PROBES the store with the
     * bipartite band join — work ∝ the batch's collisions, the corpus is
-    * never re-paired or re-read — and (2) APPENDS its own index entries,
-    * so later arrivals dedup against earlier ones. Verdicts accumulate
-    * append-only (each batch's frame is materialized by the probe, so
-    * the running union never re-plans through the store).
+    * never re-paired or re-read — and (2) lands its own index entries
+    * in its batch partition, so later arrivals dedup against earlier
+    * ones ([[graft.jobs.IncrementalIndex.ingestTextBatch]]). Verdicts
+    * accumulate append-only (each batch's frame is materialized by the
+    * probe, so the running union never re-plans through the store).
     *
     * Equivalence contract (the oracle): arrivals ordered by doc_id make
     * "already ingested" ≡ "lower id", so the final verdict table equals
@@ -462,13 +463,9 @@ object AdAnalytics {
     import graft.jobs.IncrementalIndex
     val mod = LlmText.IncrementalBatchMod
     Streams.withTempDir("graft-st13-idx-") { indexDir =>
-      // batch-id-keyed store layout throughout (bootstrap = bid -1):
-      // appends are idempotent partition overwrites and the probe can
-      // exclude a crash-replayed batch's own append — the exactly-
-      // once-under-recovery shape StreamingSpec's crash case pins.
-      // Bootstrap rides the in-JVM memoized band/shingle tables (the
-      // writeServePair discipline); per-batch appends below stay the
-      // explicit recompute — arriving data is the measured cost.
+      // bootstrap rides the in-JVM memoized band/shingle tables (the
+      // writeServePair discipline); each batch's step stays the
+      // explicit recompute — arriving data is the measured cost
       IncrementalIndex.writeTextIndexFixtureBootstrap(s, dir, indexDir,
         col("doc_id") % mod =!= 0)
       val empty = graft.Tables.documents(s, dir).limit(0)
@@ -476,13 +473,7 @@ object AdAnalytics {
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
           .where(col("doc_id") % mod === 0)) { (store, batch, bid) =>
-        // probe BEFORE appending: the store must hold only prior
-        // arrivals (intra-batch keep-first is the probe's own candIntra
-        // half); exceptBid makes that hold even on a crash replay
-        val verdicts = IncrementalIndex.probeText(s, batch, indexDir,
-          exceptBid = Some(bid))
-        IncrementalIndex.writeTextIndexBatch(s, batch, indexDir, bid)
-        store.unionByName(verdicts)
+        store.unionByName(IncrementalIndex.ingestTextBatch(s, batch, indexDir, bid))
       }
       // safe to drop the temp index: the fold localCheckpoints the
       // store every batch, so it holds no lineage into these files
@@ -499,13 +490,14 @@ object AdAnalytics {
     * on the full history — e09's oracle formulation), then each
     * micro-batch of arriving vectors assigns against the STORED frozen
     * centroids, compares only within its cells' stored members (plus
-    * intra-batch keep-first), and appends its own member rows for later
-    * arrivals. Same equivalence contract as st13: ascending vec_id
-    * arrivals ⇒ final verdicts ≡ e09's batch recompute for ANY
-    * micro-batch split (pinned in StreamingSpec); same census-form
-    * append (full batch, not survivors — e09 counts matches against
-    * every earlier arrival). State = the lake tables; per-batch work ∝
-    * batch × cell occupancy at any corpus size. */
+    * intra-batch keep-first), and lands its own member rows in its
+    * batch partition for later arrivals
+    * ([[graft.jobs.IncrementalIndex.ingestCellBatch]]). Same equivalence
+    * contract as st13: ascending vec_id arrivals ⇒ final verdicts ≡
+    * e09's batch recompute for ANY micro-batch split (pinned in
+    * StreamingSpec); the full batch lands, not survivors — e09 counts
+    * matches against every earlier arrival. State = the lake tables;
+    * per-batch work ∝ batch × cell occupancy at any corpus size. */
   def st14StreamingSemIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Embeddings
     import graft.jobs.IncrementalIndex
@@ -520,11 +512,8 @@ object AdAnalytics {
           lit(0L).as("n_matches"), lit(true).as("kept"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
-          .where(col("vec_id") % mod === 0)) { (store, batch, _) =>
-        val verdicts = IncrementalIndex.probeCells(s, batch, indexDir)
-        IncrementalIndex.appendCellMembers(s, batch, indexDir,
-          org.apache.spark.sql.SaveMode.Append)
-        store.unionByName(verdicts)
+          .where(col("vec_id") % mod === 0)) { (store, batch, bid) =>
+        store.unionByName(IncrementalIndex.ingestCellBatch(s, batch, indexDir, bid))
       }
     }
   }
@@ -538,10 +527,11 @@ object AdAnalytics {
     * history slice and FREEZES (codes under different spans are not
     * comparable — re-spanning is an explicit rebuild event), history
     * lands its code rows, then each arriving micro-batch encodes
-    * against the STORED quantizer and
-    * appends its own 64-byte codes. Encoding is per-row (no cross-batch
-    * state), so the final appended code set equals the batch encode of
-    * the same slice for ANY micro-batch split — and an arrival OUTSIDE
+    * against the STORED quantizer and lands its own 64-byte codes in
+    * its batch partition ([[graft.jobs.IncrementalIndex.ingestSqBatch]]).
+    * Encoding is per-row (no cross-batch state), so the final code set
+    * equals the batch encode of the same slice for ANY micro-batch
+    * split — and an arrival OUTSIDE
     * the frozen [lo, hi] clamps to the 8-bit range exactly as faiss
     * does (the shared [[graft.operators.Embeddings.sqEncode]]
     * definition; clamp pinned in PqIndexSpec). Output: the streamed
@@ -559,9 +549,8 @@ object AdAnalytics {
         .select(col("vec_id"), array().cast("array<long>").as("codes"))
       val coded = Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
-          .where(col("vec_id") % mod === 0)) { (store, batch, _) =>
-        store.unionByName(
-          IncrementalIndex.encodeSqMembers(s, batch, indexDir))
+          .where(col("vec_id") % mod === 0)) { (store, batch, bid) =>
+        store.unionByName(IncrementalIndex.ingestSqBatch(s, batch, indexDir, bid))
       }
       // Comparator-safe scalar shape: the 64 per-dim codes as one CSV
       // string (array/map/struct output columns break the driver's
@@ -602,9 +591,10 @@ object AdAnalytics {
     * scan), (2) PROBES the store with the bipartite band join plus
     * intra-batch keep-first — pigeonhole-complete at the radius, so
     * probe verdicts equal the all-pairs recompute against everything
-    * that arrived earlier — and (3) APPENDS its own band rows for later
-    * arrivals. Census-form append (the full batch, not survivors),
-    * matching st13/st14.
+    * that arrived earlier — and (3) lands its own band rows in its batch
+    * partition for later arrivals
+    * ([[graft.jobs.IncrementalIndex.ingestMediaBatch]]): the full batch,
+    * not survivors, as st13/st14.
     *
     * Same equivalence contract: ascending media_id arrivals ⇒ the final
     * verdict table equals the batch recompute for ANY micro-batch split
@@ -624,11 +614,8 @@ object AdAnalytics {
           lit(false).as("is_dup"))
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "documents")
-          .where(col("doc_id") % mod === 0)) { (store, batch, _) =>
-        val verdicts = IncrementalIndex.probeMedia(s, batch, indexDir)
-        IncrementalIndex.writeMediaIndex(s, batch, indexDir,
-          org.apache.spark.sql.SaveMode.Append)
-        store.unionByName(verdicts)
+          .where(col("doc_id") % mod === 0)) { (store, batch, bid) =>
+        store.unionByName(IncrementalIndex.ingestMediaBatch(s, batch, indexDir, bid))
       }
     }
   }
@@ -905,7 +892,7 @@ object AdAnalytics {
       val vecs = graft.Tables.embeddings(s, dir)
       // bootstrap pair from the in-JVM memo path (writeServePair's
       // discipline — warm pays the parquet write, cold rebuilds);
-      // per-batch probes/appends below stay the explicit recompute
+      // each batch's step stays the explicit recompute
       IncrementalIndex.writeGraphBootstrapFixture(s, dir, indexDir)
       val empty = vecs.limit(0)
         .select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
@@ -913,13 +900,7 @@ object AdAnalytics {
       Streams.runForeachBatch(s, "append", empty)(
         ss => Streams.tableStream(ss, dir, "embeddings")
           .where(col("vec_id") % modE === 0)) { (store, batch, bid) =>
-        // probe BEFORE appending; exceptBid hides a crash-replayed
-        // batch's own crashed bucket append (st13's recovery contract)
-        val edges = IncrementalIndex.probeGraphInsert(s, batch, indexDir,
-          exceptBid = Some(bid))
-        IncrementalIndex.writeLshIndexBatch(s, batch, indexDir, bid)
-        IncrementalIndex.writeGraphEdgesBatch(s, edges, indexDir, bid)
-        store.unionByName(edges)
+        store.unionByName(IncrementalIndex.ingestGraphBatch(s, batch, indexDir, bid))
       }
     }
   }

@@ -153,14 +153,12 @@ object Streams {
 
   /** Run an AvailableNow stream through `foreachBatch`, folding each
     * micro-batch into a running store via `merge(store, batch, batchId)`
-    * (one of the [[graft.etl.Upsert]] semantics, or a side-effecting
-    * index append that returns the store unchanged). The batch id is
-    * what a crash-safe parquet ingest keys its idempotent appends on
-    * (offsets commit AFTER the callback, so a replayed batch arrives
-    * with the SAME id and an id-keyed partition overwrite makes the
-    * store exactly-once under recovery; [[graft.jobs.IncrementalIndex
-    * .writeTextIndexBatch]] / `writeSubstrIndexBatch`, crash-resume
-    * pinned in StreamingSpec). Returns the final store. */
+    * (one of the [[graft.etl.Upsert]] semantics, or one of
+    * [[graft.jobs.IncrementalIndex]]'s per-batch index steps). The batch
+    * id keys the step's `bid=<id>` partition: offsets commit AFTER the
+    * callback, so a replayed batch arrives with the SAME id and
+    * overwrites its own partition (crash-replay pinned in
+    * StreamingSpec). Returns the final store. */
   def runForeachBatch(
       s: SparkSession,
       outputMode: String,

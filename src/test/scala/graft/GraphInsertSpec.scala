@@ -34,9 +34,7 @@ class GraphInsertSpec extends GraftSuite {
     val (loIds, hiIds) = ids.splitAt(ids.length / 2)
     val b0 = arrivals.where(col("vec_id").isin(loIds: _*))
     val b1 = arrivals.where(col("vec_id").isin(hiIds: _*))
-    val e0 = IncrementalIndex.probeGraphInsert(spark, b0, idx)
-    IncrementalIndex.writeLshIndexBatch(spark, b0, idx, batchId = 0L)
-    IncrementalIndex.writeGraphEdgesBatch(spark, e0, idx, batchId = 0L)
+    val e0 = IncrementalIndex.ingestGraphBatch(spark, b0, idx, batchId = 0L)
     val e1 = IncrementalIndex.probeGraphInsert(spark, b1, idx)
     val online = e0.unionByName(e1)
 

@@ -233,7 +233,7 @@ class PlanAuditSpec extends GraftSuite {
     assert(Tables.spreadIfNarrow(narrow, "audit-narrow").rdd.getNumPartitions === par)
   }
 
-  test("ExplainDump dumps m16's range-sorted stage, not its RDD scan, in either mode") {
+  test("ExplainDump dumps m16's range-sorted stage, not its RDD scan") {
     val (df, note) = tools.ExplainDump.frameFor(spark, sf, "m16_global_rank").get
     assert(plan(df).contains("rangepartitioning"), s"no range exchange in the m16 frame:\n${plan(df)}")
     assert(note.contains("pre-zipWithIndex"))

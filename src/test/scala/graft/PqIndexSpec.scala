@@ -38,9 +38,9 @@ class PqIndexSpec extends GraftSuite {
       .select(explode(col("codes")).as("c"))
       .agg(min(col("c")), max(col("c"))).collect()(0)
     assert(levels.getLong(0) >= 0L && levels.getLong(1) <= 255L)
-    // an APPEND ingest folds a new batch's codes into the store
+    // st15's ingest step lands a new batch's codes beside the bootstrap
     val day2 = all.where(col("vec_id") % 7 === 0)
-    IncrementalIndex.encodeSqMembers(spark, day2, tmp)
+    IncrementalIndex.ingestSqBatch(spark, day2, tmp, 0L)
     val n = spark.read.parquet(s"$tmp/${IncrementalIndex.SqCodes}").count()
     assert(n === all.count() + day2.count())
   }

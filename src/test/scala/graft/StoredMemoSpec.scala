@@ -221,6 +221,29 @@ class StoredMemoSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"memo maps outside StoredMemo: $offenders")
   }
 
+  test("index stores land only through IncrementalIndex.land: no flat append, no hand-built bid path") {
+    // a flat SaveMode.Append lands a batch replayed after a crash twice;
+    // every appended store takes its batch partition from the one writer
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val sources = Seq("graft/jobs", "graft/streaming").flatMap { d =>
+      java.nio.file.Files.walk(root.resolve(d)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => root.relativize(p).toString ->
+          stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+    }
+    val appends = sources.collect { case (path, src) if src.contains("SaveMode.Append") => path }
+    assert(appends.isEmpty, s"flat SaveMode.Append writes: $appends")
+    val landBody = "(?s)def land\\(.*?\n\\s*\n".r
+    assert(sources.exists { case (_, src) => landBody.findFirstIn(src).isDefined },
+      "IncrementalIndex.land is gone")
+    val handBuilt = sources.collect {
+      case (path, src) if landBody.replaceAllIn(src, "").contains("bid=") => path
+    }
+    assert(handBuilt.isEmpty, s"bid= paths built outside IncrementalIndex.land: $handBuilt")
+  }
+
   /** `src` with its comments blanked. String and char literals are kept
     * whole, so a comment opener inside one is not read as a comment. */
   private def stripComments(src: String): String = {

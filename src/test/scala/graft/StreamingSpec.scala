@@ -2,10 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.etl.Upsert
+import graft.jobs.IncrementalIndex
 import graft.streaming.{AdAnalytics, Streams}
 
 /** Multi-batch streaming behavior that AvailableNow-over-one-file can't
@@ -85,24 +87,12 @@ class StreamingSpec extends GraftSuite {
 
   test("st19: any micro-batch split in ANY order reproduces d44's batch spans") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    val arrivals = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      .toSeq
-    def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Seq[String] = {
+    val arrivals = docRows()
+    def run(chunks: Seq[Seq[Doc]]): Seq[String] = {
       val idx = java.nio.file.Files.createTempDirectory("graft-st19-test-").toString
-      val ms = MemoryStream[(Long, String, String, String, Long)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          IncrementalIndex.writeSubstrIndexBatch(spark, batch, idx, bid)
-          ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
+      streamed(chunks, docCols) { (batch, bid) =>
+        IncrementalIndex.writeSubstrIndexBatch(spark, batch, idx, bid); Nil
+      }
       IncrementalIndex.probeSubstrSpans(spark, idx)
         .collect().map(_.toString).sorted.toSeq
     }
@@ -227,13 +217,13 @@ class StreamingSpec extends GraftSuite {
       AdAnalytics.st17StreamingDecontamination(spark, sf).collect()) === 7)
   }
 
-  test("a warm st23 call runs 11 jobs: the bloom store is read with its schema in one collect") {
-    // st17's 7, the bloom store's write, and one collect of geometry and
-    // words per batch; a schema-inference job or a separate geometry
-    // read would add to it
+  test("a warm st23 call runs 9 jobs: the bloom table is memoized and read with its schema in one collect") {
+    // st17's 7, the memoized bloom table's parquet write, and one collect
+    // of geometry and words per batch; rebuilding the table, a
+    // schema-inference job or a separate geometry read would add to it
     AdAnalytics.st23StreamingBloom(spark, sf).collect()
     assert(SparkTestBase.jobsStartedBy(
-      AdAnalytics.st23StreamingBloom(spark, sf).collect()) === 11)
+      AdAnalytics.st23StreamingBloom(spark, sf).collect()) === 9)
   }
 
   test("st04, st05 and st17 leave no cached store behind: nothing piles up across calls") {
@@ -441,38 +431,134 @@ class StreamingSpec extends GraftSuite {
     finally spark.conf.unset("spark.graft.streaming.statePartitions")
   }
 
-  test("st13: every ascending micro-batch split reproduces d30's batch verdicts") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    val mod = graft.operators.LlmText.IncrementalBatchMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val corpusDf = docs.filter(_._1 % mod != 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
-    val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+  private type Doc = (Long, String, String, String, Long)
+  private type Vec = (Long, Seq[Float], Int)
+  private val docCols = Seq("doc_id", "text", "lang", "source", "n_chars")
+  private val vecCols = Seq("vec_id", "embedding", "label")
 
-    def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Set[(Long, Long, Boolean)] = {
-      val indexDir = java.nio.file.Files.createTempDirectory("st13-spec-idx-").toString
-      IncrementalIndex.writeTextIndexBatch(spark, corpusDf, indexDir, batchId = -1L)
-      val ms = MemoryStream[(Long, String, String, String, Long)]
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          // probe BEFORE appending — the st13 ordering contract
-          val v = IncrementalIndex.probeText(spark, batch, indexDir)
-          IncrementalIndex.writeTextIndexBatch(spark, batch, indexDir, bid)
-          got ++= v.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+  /** The fixture's documents as stream rows, ascending by id. */
+  private def docRows(): Seq[Doc] = Tables.documents(spark, sf)
+    .select(docCols.map(col): _*).collect()
+    .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+    .toSeq.sortBy(_._1)
+
+  /** The fixture's vectors as stream rows, ascending by id. */
+  private def vecRows(): Seq[Vec] = Tables.embeddings(spark, sf)
+    .select(vecCols.map(col): _*).collect()
+    .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
+    .toSeq.sortBy(_._1)
+
+  private def thirds[A](xs: Seq[A]): Seq[Seq[A]] = xs.grouped((xs.length + 2) / 3).toSeq
+
+  private def textVerdict(r: Row) = (r.getLong(0), r.getLong(1), r.getBoolean(2))
+  private def cellVerdict(r: Row) = (r.getInt(0), r.getLong(1), r.getLong(2), r.getBoolean(3))
+  private def edge(r: Row) = (r.getLong(0), r.getLong(1), r.getInt(3))
+
+  /** Streams `chunks` through one MemoryStream, one micro-batch per
+    * chunk, into a query's per-batch `step`; returns every row the step
+    * emitted. */
+  private def streamed[A: Encoder](chunks: Seq[Seq[A]], names: Seq[String])(
+      step: (DataFrame, Long) => Seq[Row]): Seq[Row] = {
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    val ms = MemoryStream[A]
+    val out = scala.collection.mutable.Buffer.empty[Row]
+    val q = ms.toDF().toDF(names: _*).writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, bid: Long) => out ++= step(batch, bid); () }
+      .option("checkpointLocation", ckpt()).start()
+    chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
+    q.stop()
+    out.toSeq
+  }
+
+  /** Walks the cause chain for the poison marker — the streaming
+    * wrapper buries the thrown exception a few levels deep. */
+  private def hasPoison(t: Throwable): Boolean =
+    t != null && (Option(t.getMessage).exists(_.contains("poison-after-append"))
+      || hasPoison(t.getCause))
+
+  /** A stream that outlives its runs: one MemoryStream and one stable
+    * checkpoint, so each AvailableNow run resumes after the last
+    * committed batch. Every delivery of a batch to the query's `step` is
+    * kept as (batch id, emitted rows). A run with `crash` throws after
+    * the step returns: its writes have landed, its offsets never
+    * commit — the window in which a naive append duplicates. */
+  private class Restartable[A: Encoder](names: Seq[String])(
+      step: (DataFrame, Long) => Seq[Row]) {
+    private implicit val sqlCtx: SQLContext = spark.sqlContext
+    private val ms = MemoryStream[A]
+    private val cp = ckpt()
+    val deliveries = scala.collection.mutable.Buffer.empty[(Long, Seq[Row])]
+
+    def run(chunk: Seq[A], crash: Boolean = false): Unit = {
+      if (chunk.nonEmpty) ms.addData(chunk: _*)
+      val q = ms.toDF().toDF(names: _*).writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          deliveries += bid -> step(batch, bid)
+          if (crash) throw new RuntimeException("poison-after-append")
           ()
         }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
-      got.toSet
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow()).start()
+      if (crash) {
+        val e = intercept[Exception] { q.awaitTermination() }
+        assert(hasPoison(e), s"expected the poison crash, got $e")
+      } else q.awaitTermination()
+    }
+  }
+
+  /** The crash every ingest step must survive: batch 0 commits, batch 1
+    * crashes after its step, recovery replays batch 1 under the SAME id
+    * (foreachBatch commits offsets after the callback), then the
+    * remaining chunks run. `crashed` runs between the crash and the
+    * replay. Returns every delivery, in order. */
+  private def crashReplay[A: Encoder](chunks: Seq[Seq[A]], names: Seq[String])(
+      step: (DataFrame, Long) => Seq[Row],
+      crashed: () => Unit = () => ()): Seq[(Long, Seq[Row])] = {
+    val stream = new Restartable[A](names)(step)
+    stream.run(chunks(0))
+    stream.run(chunks(1), crash = true)
+    crashed()
+    stream.run(Nil)
+    chunks.drop(2).foreach(stream.run(_))
+    stream.deliveries.toSeq
+  }
+
+  /** Batch 1 ran twice, crashed then replayed, and the replay emitted
+    * exactly the first run's rows: the probe saw the store as of the
+    * last COMMITTED batch, not its own crashed append. */
+  private def assertReplayed(deliveries: Seq[(Long, Seq[Row])]): Unit = {
+    val b1 = deliveries.collect { case (1L, rows) => rows.toSet }
+    assert(b1.size === 2 && b1.head.nonEmpty,
+      s"batch 1 must emit rows, crash and replay: ${b1.map(_.size)}")
+    assert(b1(1) === b1(0), "the replayed batch's rows diverged from its first run")
+  }
+
+  /** `table` in the streamed store equals the one-shot build's, as a
+    * bag: no replay duplicates, nothing lost. */
+  private def assertSameStore(idx: String, oneShot: String, table: String): Unit = {
+    val a = spark.read.parquet(s"$idx/$table").drop("bid")
+    val b = spark.read.parquet(s"$oneShot/$table").drop("bid")
+    val (na, nb) = (a.count(), b.count())
+    assert(na === nb, s"$table holds $na rows, the one-shot build $nb")
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      s"$table rows differ from the one-shot build")
+  }
+
+  test("st13: every ascending micro-batch split reproduces d30's batch verdicts") {
+    import spark.implicits._
+    val mod = graft.operators.LlmText.IncrementalBatchMod
+    val docs = docRows()
+    val corpusDf = docs.filter(_._1 % mod != 0).toDF(docCols: _*)
+    val arrivals = docs.filter(_._1 % mod == 0)
+    val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
+      .map(textVerdict).toSet
+
+    def run(chunks: Seq[Seq[Doc]]): Set[(Long, Long, Boolean)] = {
+      val indexDir = java.nio.file.Files.createTempDirectory("st13-spec-idx-").toString
+      IncrementalIndex.writeTextIndexBatch(spark, corpusDf, indexDir, batchId = -1L)
+      streamed(chunks, docCols) { (batch, bid) =>
+        IncrementalIndex.ingestTextBatch(spark, batch, indexDir, bid).collect().toSeq
+      }.map(textVerdict).toSet
     }
 
     assert(run(Seq(arrivals)) === expected, "single-batch stream diverged from d30")
@@ -484,35 +570,20 @@ class StreamingSpec extends GraftSuite {
 
   test("st17: any micro-batch split in any order reproduces d18's batch verdicts") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.ContaminationMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val benchDf = docs.filter(_._1 % mod == 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod != 0).sortBy(_._1).toSeq
+    val docs = docRows()
+    val benchDf = docs.filter(_._1 % mod == 0).toDF(docCols: _*)
+    val arrivals = docs.filter(_._1 % mod != 0)
     val expected = graft.operators.LlmText.d18Contamination(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(expected.nonEmpty, "fixture must plant benchmark overlap")
 
-    def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Set[(Long, Long, Long)] = {
+    def run(chunks: Seq[Seq[Doc]]): Set[(Long, Long, Long)] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st17-spec-idx-").toString
       IncrementalIndex.writeBenchIndex(spark, benchDf, indexDir)
-      val ms = MemoryStream[(Long, String, String, String, Long)]
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          got ++= IncrementalIndex.probeBench(spark, batch, indexDir).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
-      got.toSet
+      streamed(chunks, docCols) { (batch, _) =>
+        IncrementalIndex.probeBench(spark, batch, indexDir).collect().toSeq
+      }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
 
     assert(run(Seq(arrivals)) === expected, "single-batch stream diverged from d18")
@@ -525,38 +596,23 @@ class StreamingSpec extends GraftSuite {
 
   test("st23: the bloom-prefiltered probe keeps st17's any-split/any-order equivalence") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.functions.BloomFilter
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.ContaminationMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val benchDf = docs.filter(_._1 % mod == 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod != 0).sortBy(_._1).toSeq
+    val docs = docRows()
+    val benchDf = docs.filter(_._1 % mod == 0).toDF(docCols: _*)
+    val arrivals = docs.filter(_._1 % mod != 0)
     val expected = graft.operators.LlmText.d18Contamination(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(expected.nonEmpty, "fixture must plant benchmark overlap")
 
-    def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Set[(Long, Long, Long)] = {
+    def run(chunks: Seq[Seq[Doc]]): Set[(Long, Long, Long)] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st23-spec-idx-").toString
       IncrementalIndex.writeBenchIndex(spark, benchDf, indexDir)
       IncrementalIndex.writeBloomIndex(spark, benchDf, indexDir,
         BloomFilter.DefaultBits, BloomFilter.DefaultK)
-      val ms = MemoryStream[(Long, String, String, String, Long)]
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          got ++= IncrementalIndex.probeBenchBloom(spark, batch, indexDir).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
-      got.toSet
+      streamed(chunks, docCols) { (batch, _) =>
+        IncrementalIndex.probeBenchBloom(spark, batch, indexDir).collect().toSeq
+      }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
 
     assert(run(arrivals.grouped(31).toSeq) === expected,
@@ -565,19 +621,10 @@ class StreamingSpec extends GraftSuite {
     assert(run(shuffled) === expected, "shuffled split diverged from d18")
   }
 
-  test("st16: every ascending micro-batch split reproduces the all-pairs phash verdicts") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    val mod = graft.operators.LlmText.IncrementalBatchMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val corpusDf = docs.filter(_._1 % mod != 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
-    // truth: all-pairs brute force over (history ∪ lower-id) partners —
-    // exact because the banding is pigeonhole-complete at the radius
+  /** st16's truth: all-pairs brute force over (history ∪ lower-id)
+    * partners — exact because the banding is pigeonhole-complete at the
+    * radius. */
+  private def phashVerdicts(docs: Seq[Doc], mod: Long): Set[(Long, Long, Boolean)] = {
     def jvmPhash(t: String): Long = {
       val st = math.max(1, t.length / 64)
       var h = 0L
@@ -588,7 +635,7 @@ class StreamingSpec extends GraftSuite {
       h
     }
     val hashes = docs.map(d => d._1 -> jvmPhash(d._2)).toMap
-    val expected = arrivals.map { case (id, _, _, _, _) =>
+    docs.filter(_._1 % mod == 0).map { case (id, _, _, _, _) =>
       val n = docs.count { case (o, _, _, _, _) =>
         o != id && (o % mod != 0 || o < id) &&
           java.lang.Long.bitCount(hashes(o) ^ hashes(id)) <=
@@ -596,25 +643,22 @@ class StreamingSpec extends GraftSuite {
       }
       (id, n.toLong, n > 0)
     }.toSet
+  }
 
-    def run(chunks: Seq[Seq[(Long, String, String, String, Long)]]): Set[(Long, Long, Boolean)] = {
+  test("st16: every ascending micro-batch split reproduces the all-pairs phash verdicts") {
+    import spark.implicits._
+    val mod = graft.operators.LlmText.IncrementalBatchMod
+    val docs = docRows()
+    val corpusDf = docs.filter(_._1 % mod != 0).toDF(docCols: _*)
+    val arrivals = docs.filter(_._1 % mod == 0)
+    val expected = phashVerdicts(docs, mod)
+
+    def run(chunks: Seq[Seq[Doc]]): Set[(Long, Long, Boolean)] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st16-spec-idx-").toString
       IncrementalIndex.writeMediaIndex(spark, corpusDf, indexDir)
-      val ms = MemoryStream[(Long, String, String, String, Long)]
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val v = IncrementalIndex.probeMedia(spark, batch, indexDir)
-          IncrementalIndex.writeMediaIndex(spark, batch, indexDir,
-            org.apache.spark.sql.SaveMode.Append)
-          got ++= v.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-          ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
-      got.toSet
+      streamed(chunks, docCols) { (batch, bid) =>
+        IncrementalIndex.ingestMediaBatch(spark, batch, indexDir, bid).collect().toSeq
+      }.map(textVerdict).toSet
     }
 
     assert(run(Seq(arrivals)) === expected, "single-batch stream diverged from brute force")
@@ -641,48 +685,31 @@ class StreamingSpec extends GraftSuite {
 
   test("st13: a restart on the same checkpoint + index dir resumes — no refold, no index rewrite") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.IncrementalBatchMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val corpusDf = docs.filter(_._1 % mod != 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
+    val docs = docRows()
+    val corpusDf = docs.filter(_._1 % mod != 0).toDF(docCols: _*)
+    val arrivals = docs.filter(_._1 % mod == 0)
     val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      .map(textVerdict).toSet
     val indexDir = java.nio.file.Files.createTempDirectory("st13-resume-idx-").toString
     IncrementalIndex.writeTextIndexBatch(spark, corpusDf, indexDir, batchId = -1L)
-    val cp = ckpt() // STABLE across both runs — the resume contract
-    val ms = MemoryStream[(Long, String, String, String, Long)]
-    def run(): Set[(Long, Long, Boolean)] = {
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val v = IncrementalIndex.probeText(spark, batch, indexDir)
-          IncrementalIndex.writeTextIndexBatch(spark, batch, indexDir, bid)
-          got ++= v.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      got.toSet
-    }
+    // one checkpoint STABLE across both runs — the resume contract
+    val stream = new Restartable[Doc](docCols)((batch, bid) =>
+      IncrementalIndex.ingestTextBatch(spark, batch, indexDir, bid).collect().toSeq)
+    def verdictsFrom(n: Int) = stream.deliveries.drop(n).flatMap(_._2).map(textVerdict).toSet
     // run 1: first chunk of arrivals lands in the store, then STOP
     val (chunkA, chunkB) = arrivals.splitAt(arrivals.length / 2)
-    ms.addData(chunkA: _*)
-    val gotA = run()
+    stream.run(chunkA)
+    val gotA = verdictsFrom(0)
     assert(gotA.map(_._1) === chunkA.map(_._1).toSet,
       "run 1 must verdict exactly its own arrivals")
     val before = storeFiles(indexDir)
     // run 2: NEW query, same checkpoint + same (already-populated) index
     // dir — must process ONLY the remaining arrivals: nothing refolds,
     // nothing re-probes, and no already-written index file is touched
-    ms.addData(chunkB: _*)
-    val gotB = run()
+    val n = stream.deliveries.size
+    stream.run(chunkB)
+    val gotB = verdictsFrom(n)
     assert(gotB.map(_._1) === chunkB.map(_._1).toSet,
       "resume must probe only the un-processed arrivals")
     assert(gotA ++ gotB === expected,
@@ -700,7 +727,6 @@ class StreamingSpec extends GraftSuite {
     // frozen store) — no cross-batch state, no append-back — so any
     // split in any order must land the identical answer table
     import spark.implicits._
-    import graft.jobs.IncrementalIndex
     val idx = java.nio.file.Files.createTempDirectory("st21-spec-idx-").toString
     val all = Tables.embeddings(spark, sf)
     IncrementalIndex.writeServePair(spark, sf, idx)
@@ -720,66 +746,28 @@ class StreamingSpec extends GraftSuite {
       "shuffled-split stored-store probes must equal the batch e23 answers")
   }
 
-  /** Walks the cause chain for the poison marker — the streaming
-    * wrapper buries the thrown exception a few levels deep. */
-  private def hasPoison(t: Throwable): Boolean =
-    t != null && (Option(t.getMessage).exists(_.contains("poison-after-append"))
-      || hasPoison(t.getCause))
-
   test("st19: crash after an uncommitted append replays idempotently — store equals the one-shot build") {
     // the exactly-once-under-recovery property a deployment leans on:
     // foreachBatch commits offsets AFTER the callback, so a crash
     // between append and commit re-delivers the batch with the SAME id;
     // the bid-keyed partition overwrite absorbs the replay
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      .sortBy(_._1).toSeq
-    val chunks = docs.grouped((docs.length + 2) / 3).toSeq
     val idx = java.nio.file.Files.createTempDirectory("st19-crash-idx-").toString
-    val cp = ckpt() // STABLE across runs — recovery reads it
-    val ms = MemoryStream[(Long, String, String, String, Long)]
-    @volatile var poison = false
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          IncrementalIndex.writeSubstrIndexBatch(spark, batch, idx, bid)
-          // die AFTER the append, BEFORE the offset commit — the
-          // crash window that makes naive appends duplicate
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
-    }
-    ms.addData(chunks(0): _*); run(expectCrash = false) // batch 0 commits
-    poison = true
-    ms.addData(chunks(1): _*); run(expectCrash = true) // batch 1 appended, then crash
-    val crashed = storeFiles(idx).filter(_._1.contains("bid=1"))
-    assert(crashed.nonEmpty, "the crashed run must have appended its partition")
-    run(expectCrash = false) // recovery: batch 1 REPLAYED (same id)
+    var crashed = Map.empty[String, (Long, Long)]
+    crashReplay(thirds(docRows()), docCols)({ (batch, bid) =>
+      IncrementalIndex.writeSubstrIndexBatch(spark, batch, idx, bid); Nil
+    }, () => {
+      crashed = storeFiles(idx).filter(_._1.contains("bid=1"))
+      assert(crashed.nonEmpty, "the crashed run must have appended its partition")
+    })
     val replayed = storeFiles(idx).filter(_._1.contains("bid=1"))
     assert(replayed.nonEmpty && replayed != crashed,
       "recovery must rewrite the replayed batch's partition (offsets were uncommitted)")
-    ms.addData(chunks(2): _*); run(expectCrash = false) // post-recovery ingest continues
     // the store equals the one-shot batch build: no duplicated postings
     // (a naive append would double batch 1's), none lost
     val oneShot = java.nio.file.Files.createTempDirectory("st19-crash-oneshot-").toString
     IncrementalIndex.writeSubstrIndexBatch(spark, Tables.documents(spark, sf), oneShot, -1L)
-    val pA = spark.read.parquet(s"$idx/${IncrementalIndex.RhPostings}").drop("bid")
-    val pB = spark.read.parquet(s"$oneShot/${IncrementalIndex.RhPostings}").drop("bid")
-    assert(pA.count() === pB.count(), "postings row count differs from the one-shot build")
-    assert(pA.exceptAll(pB).isEmpty && pB.exceptAll(pA).isEmpty,
-      "recovered store's postings differ from the one-shot build")
+    assertSameStore(idx, oneShot, IncrementalIndex.RhPostings)
     // and the serving readout agrees with the memo-path query
     val spansGot = IncrementalIndex.probeSubstrSpans(spark, idx).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -790,73 +778,30 @@ class StreamingSpec extends GraftSuite {
 
   test("st13: crash-replayed batch re-probes the pre-crash store (exceptBid) and re-appends idempotently") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.LlmText.IncrementalBatchMod
-    val docs = Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val corpusDf = docs.filter(_._1 % mod != 0).toSeq
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val arrivals = docs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
-    val chunks = arrivals.grouped((arrivals.length + 2) / 3).toSeq
+    val docs = docRows()
     val expected = graft.operators.LlmText.d30IncrementalDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      .map(textVerdict).toSet
     val idx = java.nio.file.Files.createTempDirectory("st13-crash-idx-").toString
-    IncrementalIndex.writeTextIndexBatch(spark, corpusDf, idx, batchId = -1L)
-    val cp = ckpt()
-    val ms = MemoryStream[(Long, String, String, String, Long)]
-    @volatile var poison = false
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Boolean)]
-    var batch1Verdicts: Set[(Long, Long, Boolean)] = Set.empty
-    var batch1Replayed: Set[(Long, Long, Boolean)] = Set.empty
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          // exceptBid: on a replay the store ALREADY holds this batch's
-          // crashed append — the probe must see the store as of the
-          // last COMMITTED batch or every doc would self-match
-          val v = IncrementalIndex.probeText(spark, batch, idx, exceptBid = Some(bid))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-          IncrementalIndex.writeTextIndexBatch(spark, batch, idx, bid)
-          if (bid == 1L) { if (poison) batch1Verdicts = v else batch1Replayed = v }
-          got ++= v
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
-    }
-    ms.addData(chunks(0): _*); run(expectCrash = false)
-    poison = true
-    ms.addData(chunks(1): _*); run(expectCrash = true) // append landed, offsets did not
-    run(expectCrash = false) // replay of batch 1
-    ms.addData(chunks(2): _*); run(expectCrash = false)
-    // the replayed probe must be VALUE-IDENTICAL to the crashed one —
+    IncrementalIndex.writeTextIndexBatch(spark, docs.filter(_._1 % mod != 0).toDF(docCols: _*),
+      idx, batchId = -1L)
+    // exceptBid: on a replay the store ALREADY holds this batch's crashed
+    // append — the probe must see the store as of the last COMMITTED
+    // batch or every doc would self-match
+    val deliveries = crashReplay(thirds(docs.filter(_._1 % mod == 0)), docCols)(
+      (batch, bid) => IncrementalIndex.ingestTextBatch(spark, batch, idx, bid).collect().toSeq)
     // at-least-once emission with identical values, which set-union
     // absorbs into exactly-once verdicts
-    assert(batch1Verdicts.nonEmpty && batch1Replayed === batch1Verdicts,
-      "replayed batch's verdicts diverged from the original probe")
-    assert(got.toSet === expected,
+    assertReplayed(deliveries)
+    assert(deliveries.flatMap(_._2).map(textVerdict).toSet === expected,
       "post-recovery verdicts must equal the one-shot d30 recompute")
     // and the index store equals the one-shot build (bands/shingles are
     // per-doc pure functions, so one write over all docs is the batch-
     // composition-free reference)
     val oneShot = java.nio.file.Files.createTempDirectory("st13-crash-oneshot-").toString
     IncrementalIndex.writeTextIndexBatch(spark, Tables.documents(spark, sf), oneShot, -1L)
-    for (t <- Seq(IncrementalIndex.TextBands, IncrementalIndex.TextShingles)) {
-      val a = spark.read.parquet(s"$idx/$t").drop("bid")
-      val b = spark.read.parquet(s"$oneShot/$t").drop("bid")
-      assert(a.count() === b.count(), s"$t row count differs from one-shot")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"$t rows differ from the one-shot build")
-    }
+    for (t <- Seq(IncrementalIndex.TextBands, IncrementalIndex.TextShingles))
+      assertSameStore(idx, oneShot, t)
   }
 
   test("st22: any ascending split + a crash-replay reproduces the one-shot insert edges") {
@@ -867,63 +812,30 @@ class StreamingSpec extends GraftSuite {
     // appended, crashed before its offsets committed, and replayed
     // (exceptBid hides its own crashed bucket append)
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val modE = graft.operators.Embeddings.IncrementalBatchModE
-    val vecs = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding", "label").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    val corpusDf = vecs.filter(_._1 % modE != 0).toSeq
-      .toDF("vec_id", "embedding", "label")
-    val arrivals = vecs.filter(_._1 % modE == 0).sortBy(_._1).toSeq
-    val chunks = arrivals.grouped((arrivals.length + 2) / 3).toSeq
+    val vecs = vecRows()
+    val corpusDf = vecs.filter(_._1 % modE != 0).toDF(vecCols: _*)
+    val arrivals = vecs.filter(_._1 % modE == 0)
     // one-shot reference: a fresh store, all arrivals in ONE probe
     val oneIdx = java.nio.file.Files.createTempDirectory("st22-oneshot-").toString
     IncrementalIndex.writeLshIndexBatch(spark, corpusDf, oneIdx, batchId = -1L)
     IncrementalIndex.writeGraphBootstrapBatch(spark, corpusDf, oneIdx)
-    val expected = IncrementalIndex.probeGraphInsert(spark,
-        arrivals.toDF("vec_id", "embedding", "label"), oneIdx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    val expected = IncrementalIndex.probeGraphInsert(spark, arrivals.toDF(vecCols: _*), oneIdx)
+      .collect().map(edge).toSet
     // streamed: three batches, batch 1 crashes after its appends
     val idx = java.nio.file.Files.createTempDirectory("st22-crash-idx-").toString
     IncrementalIndex.writeLshIndexBatch(spark, corpusDf, idx, batchId = -1L)
     IncrementalIndex.writeGraphBootstrapBatch(spark, corpusDf, idx)
-    val cp = ckpt()
-    val ms = MemoryStream[(Long, Seq[Float], Int)]
-    @volatile var poison = false
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("vec_id", "embedding", "label")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val edges = IncrementalIndex.probeGraphInsert(spark, batch, idx,
-            exceptBid = Some(bid))
-          IncrementalIndex.writeLshIndexBatch(spark, batch, idx, bid)
-          IncrementalIndex.writeGraphEdgesBatch(spark, edges, idx, bid)
-          got ++= edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
-    }
-    ms.addData(chunks(0): _*); run(expectCrash = false)
-    poison = true
-    ms.addData(chunks(1): _*); run(expectCrash = true) // appends landed, offsets did not
-    run(expectCrash = false) // replay of batch 1
-    ms.addData(chunks(2): _*); run(expectCrash = false)
-    assert(got.toSet === expected,
+    val deliveries = crashReplay(thirds(arrivals), vecCols)(
+      (batch, bid) => IncrementalIndex.ingestGraphBatch(spark, batch, idx, bid).collect().toSeq)
+    assertReplayed(deliveries)
+    assert(deliveries.flatMap(_._2).map(edge).toSet === expected,
       "streamed insert edges diverged from the one-shot recompute")
     // and the stored edge table equals the emitted union (bootstrap
     // partition aside) — what later serving reads
     val storedEdges = spark.read.parquet(s"$idx/${IncrementalIndex.GraphEdges}")
       .where(col("bid") >= 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      .collect().map(edge).toSet
     assert(storedEdges === expected, "stored edges diverged from the emitted union")
   }
 
@@ -935,43 +847,18 @@ class StreamingSpec extends GraftSuite {
     // row-identical to the in-JVM batch form (e24) however the stream
     // delivered the deletes
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     import graft.operators.Embeddings
     val expected = Embeddings.e24TombstoneServe(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      .collect().map(edge).toSet
     val idx = java.nio.file.Files.createTempDirectory("st24-crash-idx-").toString
-    val vecs = Tables.embeddings(spark, sf)
     IncrementalIndex.writeServePair(spark, sf, idx)
-    val dels = vecs
+    val dels = Tables.embeddings(spark, sf)
       .where(col("vec_id") % Embeddings.VecTombMod === Embeddings.VecTombRem)
       .select("vec_id").collect().map(_.getLong(0)).sorted
     // deliver out of ascending order: retraction order must not matter
-    val chunks = dels.reverse.grouped((dels.length + 2) / 3).toSeq
-    val cp = ckpt()
-    val ms = MemoryStream[Long]
-    @volatile var poison = false
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("vec_id")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          IncrementalIndex.writeVecTombstonesBatch(spark, batch, idx, bid)
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
+    crashReplay(thirds(dels.reverse.toSeq), Seq("vec_id")) { (batch, bid) =>
+      IncrementalIndex.writeVecTombstonesBatch(spark, batch, idx, bid); Nil
     }
-    ms.addData(chunks(0): _*); run(expectCrash = false)
-    poison = true
-    ms.addData(chunks(1): _*); run(expectCrash = true) // append landed, offsets did not
-    run(expectCrash = false) // replay of batch 1 overwrites bid=1
-    ms.addData(chunks(2): _*); run(expectCrash = false)
     // stored retraction set = the delivered set, no replay duplicates
     val stored = spark.read
       .parquet(s"$idx/${IncrementalIndex.VecTombstones}")
@@ -980,7 +867,7 @@ class StreamingSpec extends GraftSuite {
     assert(stored.select("vec_id").collect().map(_.getLong(0)).sorted
       .sameElements(dels), "stored retraction ids differ from the delivered set")
     val got = IncrementalIndex.probeGraphServeLive(spark, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      .collect().map(edge).toSet
     assert(got === expected,
       "streamed-retraction serve diverged from the batch e24 form")
   }
@@ -995,52 +882,30 @@ class StreamingSpec extends GraftSuite {
     // to the merged component, plus an untouched corpus doc 13 that
     // must stay absent (d14's singleton exclusion)
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val p = (0 until 18).map(i => s"w$i").mkString(" ")   // 16 word-trigrams
     val bTxt = s"$p bxa bxb bxc"                          // jacc(E,B)=16/19≈.84 ≥ .8
     val dTxt = s"$p dya dyb dyc"                          // jacc(B,D)=16/22≈.73 < .8
     val u2 = (0 until 18).map(i => s"u$i").mkString(" ")
-    def row(id: Long, t: String) = (id, t, "en", "t", t.length.toLong)
+    def row(id: Long, t: String): Doc = (id, t, "en", "t", t.length.toLong)
     val corpus = Seq(row(3, bTxt), row(7, dTxt), row(11, bTxt), row(13,
-      (0 until 18).map(i => s"z$i").mkString(" ")))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      (0 until 18).map(i => s"z$i").mkString(" "))).toDF(docCols: _*)
     val arrivals = Seq(row(10, p), row(20, u2), row(30, u2), row(40, p))
     // one-shot reference: bootstrap over everything at once
     val oneIdx = java.nio.file.Files.createTempDirectory("st25-oneshot-").toString
     IncrementalIndex.writeClusterBootstrap(spark,
-      corpus.unionByName(arrivals.toDF("doc_id", "text", "lang", "source", "n_chars")), oneIdx)
+      corpus.unionByName(arrivals.toDF(docCols: _*)), oneIdx)
     val expected = IncrementalIndex.resolveClusterLabels(spark, oneIdx)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected === Set((3L, 3L), (7L, 3L), (10L, 3L), (11L, 3L), (40L, 3L),
       (20L, 20L), (30L, 20L)),
       "the constructed corpus must produce the designed components")
-    // streamed: two ascending batches, batch 1 crashes after its appends
+    // streamed: two ascending batches (10 bridges, 20 floats; then 30
+    // and 40), batch 1 crashes after its appends and replays
     val idx = java.nio.file.Files.createTempDirectory("st25-crash-idx-").toString
     IncrementalIndex.writeClusterBootstrap(spark, corpus, idx)
-    val cp = ckpt()
-    val ms = MemoryStream[(Long, String, String, String, Long)]
-    @volatile var poison = false
-    def run(expectCrash: Boolean): Unit = {
-      val q = ms.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          IncrementalIndex.applyClusterBatch(spark, batch, idx, bid)
-          if (poison && bid >= 1) throw new RuntimeException("poison-after-append")
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      if (expectCrash) {
-        val e = intercept[Exception] { q.awaitTermination() }
-        assert(hasPoison(e), s"expected the poison crash, got $e")
-        poison = false
-      } else q.awaitTermination()
+    crashReplay(Seq(arrivals.take(2), arrivals.drop(2)), docCols) { (batch, bid) =>
+      IncrementalIndex.applyClusterBatch(spark, batch, idx, bid); Nil
     }
-    ms.addData(arrivals.take(2): _*); run(expectCrash = false) // 10 bridges, 20 floats
-    poison = true
-    ms.addData(arrivals.drop(2): _*); run(expectCrash = true)  // appends landed, offsets did not
-    run(expectCrash = false)                                   // replay of batch 1
     val got = IncrementalIndex.resolveClusterLabels(spark, idx)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected, "streamed labels diverged from the one-shot clustering")
@@ -1052,47 +917,27 @@ class StreamingSpec extends GraftSuite {
 
   test("st14: a restart on the same checkpoint + index dir resumes — no refold, no index rewrite") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.Embeddings.IncrementalBatchModE
-    val vecs = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding", "label").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    val corpusDf = vecs.filter(_._1 % mod != 0).toSeq
-      .toDF("vec_id", "embedding", "label")
-    val arrivals = vecs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
+    val vecs = vecRows()
+    val corpusDf = vecs.filter(_._1 % mod != 0).toDF(vecCols: _*)
+    val arrivals = vecs.filter(_._1 % mod == 0)
     val expected = graft.operators.Embeddings.e09IncrementalSemDedup(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+      .map(cellVerdict).toSet
     val indexDir = java.nio.file.Files.createTempDirectory("st14-resume-idx-").toString
     IncrementalIndex.writeCellIndex(spark, corpusDf, indexDir,
       centroidTrain = Some(Tables.embeddings(spark, sf)))
-    val cp = ckpt()
-    val ms = MemoryStream[(Long, Seq[Float], Int)]
-    def run(): Set[(Int, Long, Long, Boolean)] = {
-      val got = scala.collection.mutable.Set.empty[(Int, Long, Long, Boolean)]
-      val q = ms.toDF().toDF("vec_id", "embedding", "label")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val v = IncrementalIndex.probeCells(spark, batch, indexDir)
-          IncrementalIndex.appendCellMembers(spark, batch, indexDir,
-            org.apache.spark.sql.SaveMode.Append)
-          got ++= v.collect().map(r =>
-            (r.getInt(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          ()
-        }
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      got.toSet
-    }
+    val stream = new Restartable[Vec](vecCols)((batch, bid) =>
+      IncrementalIndex.ingestCellBatch(spark, batch, indexDir, bid).collect().toSeq)
+    def verdictsFrom(n: Int) = stream.deliveries.drop(n).flatMap(_._2).map(cellVerdict).toSet
     val (chunkA, chunkB) = arrivals.splitAt(arrivals.length / 2)
-    ms.addData(chunkA: _*)
-    val gotA = run()
+    stream.run(chunkA)
+    val gotA = verdictsFrom(0)
     assert(gotA.map(_._2) === chunkA.map(_._1).toSet,
       "run 1 must verdict exactly its own arrivals")
     val before = storeFiles(indexDir)
-    ms.addData(chunkB: _*)
-    val gotB = run()
+    val n = stream.deliveries.size
+    stream.run(chunkB)
+    val gotB = verdictsFrom(n)
     assert(gotB.map(_._2) === chunkB.map(_._1).toSet,
       "resume must probe only the un-processed arrivals")
     assert(gotA ++ gotB === expected,
@@ -1107,32 +952,23 @@ class StreamingSpec extends GraftSuite {
 
   test("st15: every micro-batch split lands the same frozen-quantizer codes as the batch encode") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
-    import graft.operators.Embeddings
-    val mod = Embeddings.IncrementalBatchModE
-    val vecs = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding", "label").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    val histDf = vecs.filter(_._1 % mod != 0).toSeq.toDF("vec_id", "embedding", "label")
-    val arrivals = vecs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
-    // expected: one-shot encode of the arrivals against the history-trained quantizer
-    def snapshot(indexDir: String): Map[Long, Seq[Long]] =
+    val mod = graft.operators.Embeddings.IncrementalBatchModE
+    val vecs = vecRows()
+    val histDf = vecs.filter(_._1 % mod != 0).toDF(vecCols: _*)
+    val arrivals = vecs.filter(_._1 % mod == 0)
+    // every stored code row, duplicates kept: a Map would hide a row
+    // landed twice
+    def snapshot(indexDir: String): Seq[(Long, Seq[Long])] =
       spark.read.parquet(s"$indexDir/${IncrementalIndex.SqCodes}")
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+        .select("vec_id", "codes").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
 
-    def run(chunks: Seq[Seq[(Long, Seq[Float], Int)]]): Map[Long, Seq[Long]] = {
+    def run(chunks: Seq[Seq[Vec]]): Seq[(Long, Seq[Long])] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st15-spec-idx-").toString
       IncrementalIndex.writeSqIndex(spark, histDf, histDf, indexDir)
-      val ms = MemoryStream[(Long, Seq[Float], Int)]
-      val q = ms.toDF().toDF("vec_id", "embedding", "label")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          IncrementalIndex.encodeSqMembers(spark, batch, indexDir); ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
+      streamed(chunks, vecCols) { (batch, bid) =>
+        IncrementalIndex.ingestSqBatch(spark, batch, indexDir, bid); Nil
+      }
       snapshot(indexDir)
     }
 
@@ -1144,49 +980,82 @@ class StreamingSpec extends GraftSuite {
     // frozen-quantizer contract: history rows keep the codes the build wrote
     val buildDir = java.nio.file.Files.createTempDirectory("st15-spec-build-").toString
     IncrementalIndex.writeSqIndex(spark, histDf, histDf, buildDir)
-    val buildCodes = snapshot(buildDir)
-    buildCodes.foreach { case (id, c) => assert(single(id) === c,
+    val singleCodes = single.toMap
+    snapshot(buildDir).foreach { case (id, c) => assert(singleCodes(id) === c,
       s"history vec $id re-coded differently after ingest") }
   }
 
   test("st14: every ascending micro-batch split reproduces e09's batch verdicts") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.jobs.IncrementalIndex
     val mod = graft.operators.Embeddings.IncrementalBatchModE
-    val vecs = Tables.embeddings(spark, sf)
-      .select("vec_id", "embedding", "label").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-    val corpusDf = vecs.filter(_._1 % mod != 0).toSeq
-      .toDF("vec_id", "embedding", "label")
-    val arrivals = vecs.filter(_._1 % mod == 0).sortBy(_._1).toSeq
+    val vecs = vecRows()
+    val corpusDf = vecs.filter(_._1 % mod != 0).toDF(vecCols: _*)
+    val arrivals = vecs.filter(_._1 % mod == 0)
     val expected = graft.operators.Embeddings.e09IncrementalSemDedup(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+      .map(cellVerdict).toSet
 
-    def run(chunks: Seq[Seq[(Long, Seq[Float], Int)]]): Set[(Int, Long, Long, Boolean)] = {
+    def run(chunks: Seq[Seq[Vec]]): Set[(Int, Long, Long, Boolean)] = {
       val indexDir = java.nio.file.Files.createTempDirectory("st14-spec-idx-").toString
       IncrementalIndex.writeCellIndex(spark, corpusDf, indexDir,
         centroidTrain = Some(Tables.embeddings(spark, sf)))
-      val ms = MemoryStream[(Long, Seq[Float], Int)]
-      val got = scala.collection.mutable.Set.empty[(Int, Long, Long, Boolean)]
-      val q = ms.toDF().toDF("vec_id", "embedding", "label")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val v = IncrementalIndex.probeCells(spark, batch, indexDir)
-          IncrementalIndex.appendCellMembers(spark, batch, indexDir,
-            org.apache.spark.sql.SaveMode.Append)
-          got ++= v.collect().map(r =>
-            (r.getInt(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-          ()
-        }
-        .option("checkpointLocation", ckpt()).start()
-      chunks.foreach { c => ms.addData(c: _*); q.processAllAvailable() }
-      q.stop()
-      got.toSet
+      streamed(chunks, vecCols) { (batch, bid) =>
+        IncrementalIndex.ingestCellBatch(spark, batch, indexDir, bid).collect().toSeq
+      }.map(cellVerdict).toSet
     }
 
     assert(run(Seq(arrivals)) === expected, "single-batch stream diverged from e09")
     assert(run(arrivals.grouped(13).toSeq) === expected,
       "4-batch ascending split diverged from e09")
+  }
+
+  test("st14: a crash-replayed batch re-probes the pre-crash store and lands its members once") {
+    import spark.implicits._
+    val mod = graft.operators.Embeddings.IncrementalBatchModE
+    val vecs = vecRows()
+    val all = Tables.embeddings(spark, sf)
+    val idx = java.nio.file.Files.createTempDirectory("st14-crash-idx-").toString
+    IncrementalIndex.writeCellIndex(spark, vecs.filter(_._1 % mod != 0).toDF(vecCols: _*),
+      idx, centroidTrain = Some(all))
+    val deliveries = crashReplay(thirds(vecs.filter(_._1 % mod == 0)), vecCols)(
+      (batch, bid) => IncrementalIndex.ingestCellBatch(spark, batch, idx, bid).collect().toSeq)
+    assertReplayed(deliveries)
+    val expected = graft.operators.Embeddings.e09IncrementalSemDedup(spark, sf).collect()
+      .map(cellVerdict).toSet
+    assert(deliveries.flatMap(_._2).map(cellVerdict).toSet === expected,
+      "post-recovery verdicts must equal the one-shot e09 recompute")
+    val oneShot = java.nio.file.Files.createTempDirectory("st14-crash-oneshot-").toString
+    IncrementalIndex.writeCellIndex(spark, all, oneShot, centroidTrain = Some(all))
+    assertSameStore(idx, oneShot, IncrementalIndex.CellMembers)
+  }
+
+  test("st15: a crash-replayed batch lands its codes once") {
+    import spark.implicits._
+    val mod = graft.operators.Embeddings.IncrementalBatchModE
+    val vecs = vecRows()
+    val histDf = vecs.filter(_._1 % mod != 0).toDF(vecCols: _*)
+    val idx = java.nio.file.Files.createTempDirectory("st15-crash-idx-").toString
+    IncrementalIndex.writeSqIndex(spark, histDf, histDf, idx)
+    val deliveries = crashReplay(thirds(vecs.filter(_._1 % mod == 0)), vecCols)(
+      (batch, bid) => IncrementalIndex.ingestSqBatch(spark, batch, idx, bid).collect().toSeq)
+    assertReplayed(deliveries)
+    val oneShot = java.nio.file.Files.createTempDirectory("st15-crash-oneshot-").toString
+    IncrementalIndex.writeSqIndex(spark, histDf, Tables.embeddings(spark, sf), oneShot)
+    assertSameStore(idx, oneShot, IncrementalIndex.SqCodes)
+  }
+
+  test("st16: a crash-replayed batch re-probes the pre-crash store and lands its bands once") {
+    import spark.implicits._
+    val mod = graft.operators.LlmText.IncrementalBatchMod
+    val docs = docRows()
+    val idx = java.nio.file.Files.createTempDirectory("st16-crash-idx-").toString
+    IncrementalIndex.writeMediaIndex(spark, docs.filter(_._1 % mod != 0).toDF(docCols: _*), idx)
+    val deliveries = crashReplay(thirds(docs.filter(_._1 % mod == 0)), docCols)(
+      (batch, bid) => IncrementalIndex.ingestMediaBatch(spark, batch, idx, bid).collect().toSeq)
+    assertReplayed(deliveries)
+    assert(deliveries.flatMap(_._2).map(textVerdict).toSet === phashVerdicts(docs, mod),
+      "post-recovery verdicts must equal the all-pairs brute force")
+    val oneShot = java.nio.file.Files.createTempDirectory("st16-crash-oneshot-").toString
+    IncrementalIndex.writeMediaIndex(spark, Tables.documents(spark, sf), oneShot)
+    assertSameStore(idx, oneShot, IncrementalIndex.MediaBands)
   }
 }
