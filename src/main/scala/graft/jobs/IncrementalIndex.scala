@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -361,7 +362,7 @@ object IncrementalIndex {
       Embeddings.bucketedFrom(s, Embeddings.quantizedFrom(s, batchVecs)),
       storeTable(s, indexDir, LshBuckets, exceptBid),
       bootstrapRows(s, indexDir, GraphEdges))
-      .localCheckpoint(true)
+      .pin("graph-insert-probe")
 
   /** Write the (lsh_buckets, graph_edges) serve pair for the FIXTURE
     * corpus through the in-JVM memo path ([[graft.operators.Embeddings
@@ -414,7 +415,7 @@ object IncrementalIndex {
     val alive = liveTable(s, indexDir, LshBuckets)
     Embeddings.graphServeOver(s, alive.where(col("vec_id") % 5 === 0), alive,
       liveTable(s, indexDir, GraphEdges), hops = 1)
-      .localCheckpoint(true)
+      .pin("graph-serve-live")
   }
 
   // ------------------------------------------------------------ probe
@@ -427,7 +428,7 @@ object IncrementalIndex {
   def probeText(s: SparkSession, batchDocs: DataFrame, indexDir: String,
                 exceptBid: Option[Long] = None): DataFrame = {
     val (out, caches) = probeTextLazy(s, batchDocs, indexDir, exceptBid)
-    val materialized = out.localCheckpoint(true)
+    val materialized = out.pin("text-probe")
     caches.foreach(_.unpersist())
     materialized
   }
@@ -504,7 +505,7 @@ object IncrementalIndex {
   def probeTextPairs(s: SparkSession, batchDocs: DataFrame, indexDir: String,
                      exceptBid: Option[Long] = None): DataFrame = {
     val (pairs, baseB) = probeTextPairsStage(s, batchDocs, indexDir, exceptBid)
-    val materialized = pairs.localCheckpoint(true)
+    val materialized = pairs.pin("text-probe-pairs")
     baseB.unpersist()
     materialized
   }
@@ -586,7 +587,7 @@ object IncrementalIndex {
         .where(col("jaccard") >= LlmText.NeardupThreshold &&
           col("doc_a") % mod =!= 0 && col("doc_b") % mod =!= 0)
         .select(col("doc_a"), col("doc_b"))
-      labelsOf(edges).localCheckpoint(true)
+      labelsOf(edges).pin("cluster-bootstrap-labels")
     }
   }
 
@@ -628,7 +629,7 @@ object IncrementalIndex {
       .where(size(array_intersect(col("sh_n"), col("sh_o"))).cast("double") /
         size(array_union(col("sh_n"), col("sh_o"))).cast("double") >= LlmText.NeardupThreshold)
       .select(col("new_id"), col("old_id"))
-      .localCheckpoint(true)
+      .pin("self-text-edges")
   }
 
   /** The remap CLOSURE as a lookup: (src → final label), following
@@ -717,7 +718,7 @@ object IncrementalIndex {
         .select(col("doc_id"), col("label")),
       closure, "label")
       .select(col("doc_id"), col("label").as("cluster_id"))
-      .localCheckpoint(true)
+      .pin("cluster-labels-resolved")
   }
 
   /** e09's verdicts against the STORED index: the batch assigns to the
@@ -727,7 +728,7 @@ object IncrementalIndex {
     * crash-replay contract ([[storeTable]]). */
   def probeCells(s: SparkSession, batchVecs: DataFrame, indexDir: String,
                  exceptBid: Option[Long] = None): DataFrame =
-    probeCellsLazy(s, batchVecs, indexDir, exceptBid).localCheckpoint(true)
+    probeCellsLazy(s, batchVecs, indexDir, exceptBid).pin("cell-probe")
 
   private[graft] def probeCellsLazy(s: SparkSession, batchVecs: DataFrame,
                                     indexDir: String,
@@ -815,7 +816,7 @@ object IncrementalIndex {
       .join(matches.withColumnRenamed("new_id", "media_id"), Seq("media_id"), "left")
       .select(col("media_id"), coalesce(col("n_matches"), lit(0L)).as("n_matches"))
       .withColumn("is_dup", col("n_matches") > 0)
-      .localCheckpoint(true)
+      .pin("media-probe")
   }
 
   /** Freeze the DECONTAMINATION half: the benchmark suite's rare-shingle
@@ -859,7 +860,7 @@ object IncrementalIndex {
     graft.StoredMemo.stored(s, "bench-shingle-rows", dir, mod) {
       benchRowsFrom(s,
         LlmText.shinglesOf(s, dir).where(col("doc_id") % mod === 0))
-        .localCheckpoint(true)
+        .pin("bench-shingle-rows")
     }
   }
 
@@ -918,7 +919,7 @@ object IncrementalIndex {
     graft.StoredMemo.stored(s, "bloom-words", dir, LlmText.ContaminationMod, bits, k) {
       graft.functions.BloomFilter.wordsDF(
           benchRowsOf(s, dir).select(col("shingle")).distinct(), "shingle", bits, k)
-        .localCheckpoint(true)
+        .pin("bloom-words")
     }.write.mode(SaveMode.Overwrite).parquet(p(indexDir, BloomWords))
 
   /** The stored Bloom table's schema, the (widx, word, bits, k) columns

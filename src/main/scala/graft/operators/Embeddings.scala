@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -53,7 +54,7 @@ object Embeddings {
   private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "quantized-vectors", dir) {
       quantizedFrom(s, Tables.spreadIfNarrow(Tables.embeddings(s, dir), s"$dir/embeddings"))
-        .localCheckpoint()
+        .pin("quantized-vectors")
     }
 
   /** The quantization core over an arbitrary embeddings-shaped frame —
@@ -100,7 +101,7 @@ object Embeddings {
       // layout note (r13): deliberately NOT repartitioned — consumers
       // either aggregate or broadcast this table, and the measured A/B
       // showed the compact AQE layout faster for e16's iterative rounds
-      bruteRankedFrom(s, quantized(s, dir)).localCheckpoint()
+      bruteRankedFrom(s, quantized(s, dir)).pin("brute-truth")
     }
 
   /** The truth-table core over an arbitrary quantized frame: the
@@ -218,7 +219,7 @@ object Embeddings {
     * JVM, and the bucket hash is a pure function of q. */
   private[graft] def bucketedOf(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "lsh-bucketed", dir) {
-      bucketedFrom(s, quantized(s, dir)).localCheckpoint()
+      bucketedFrom(s, quantized(s, dir)).pin("lsh-bucketed")
     }
 
   /** The two-table bucket projection over an arbitrary quantized frame
@@ -417,7 +418,7 @@ object Embeddings {
       // layout note (r13): deliberately NOT repartitioned — the e05/
       // e12-e15 consumers join it broadcast-side or aggregate it, and
       // the measured A/B favored the compact AQE layout
-      assignRanked(s, v, centroidsOf(s, v)).localCheckpoint()
+      assignRanked(s, v, centroidsOf(s, v)).pin("ivf-assignment")
     }
 
   /** (cell, cvec, ncv) centroid-sum directions per label over a
@@ -1258,30 +1259,33 @@ object Embeddings {
     * SAME corpus against the SAME memoized codebook. Keyed like
     * [[pqCodebookOf]] (canonicalized input plan — only the stable
     * fixture frames reach here) plus the codebook's plan. Cold runs
-    * rebuild through the same definition. */
+    * serve the lazy encode through the same definition: pinning it per
+    * call would hold a corpus-sized table until GC. */
   private[graft] def pqCodesOf(s: SparkSession, frame: DataFrame, vecCol: String,
-      codebook: DataFrame): DataFrame =
-    graft.StoredMemo.stored(s, "pq-codes",
+      codebook: DataFrame): DataFrame = {
+    def codes = pqEncode(s, frame, vecCol, codebook)
+    if (graft.StoredMemo.disabled(s)) codes
+    else graft.StoredMemo.stored(s, "pq-codes",
         frame.queryExecution.analyzed.canonicalized,
-        codebook.queryExecution.analyzed.canonicalized, vecCol)(
-      pqEncode(s, frame, vecCol, codebook).localCheckpoint())
+        codebook.queryExecution.analyzed.canonicalized, vecCol)(codes.pin("pq-codes"))
+  }
 
   /** The codebook trainer behind [[pqCodebookOf]]. */
   private[graft] def pqTrain(s: SparkSession, frame: DataFrame, vecCol: String): DataFrame = {
     val dot = dotQ(s) _
     val train = frame.where(col("vec_id") % lit(PqTrainSampleMod) === 0)
-    val subs = pqSubvectors(train, vecCol).localCheckpoint()
+    val subs = pqSubvectors(train, vecCol).pin("pq-train-subvectors")
     val seed = train.orderBy(col("vec_id").asc).limit(PqK)
       .select(col("vec_id"), col(vecCol))
       .withColumn("code", row_number().over(Window.orderBy(col("vec_id").asc)) - 1)
       .select(col("code"), explode(sequence(lit(1), lit(PqM))).as("m"), col(vecCol))
       .withColumn("cw", slice(col(vecCol), (col("m") - 1) * lit(PqSubDim) + 1, lit(PqSubDim)))
       .select(col("m"), col("code"), col("cw"))
-    var cb = seed.localCheckpoint()
-    (1 to PqTrainRounds).foreach { _ => cb = pqLloydRound(s, subs, cb).localCheckpoint() }
+    var cb = seed.pin("pq-codebook-round")
+    (1 to PqTrainRounds).foreach { _ => cb = pqLloydRound(s, subs, cb).pin("pq-codebook-round") }
     cb.withColumn("ncw", dot(col("cw"), col("cw")))
       .select(col("m"), col("code"), col("cw"), col("ncw"))
-      .localCheckpoint()
+      .pin("pq-codebooks")
   }
 
   /** (cell, neighbor_id, codes[PqM] 0-based, nrecon) per-subspace
@@ -1675,7 +1679,7 @@ object Embeddings {
           p => p.getField("lo")).as("los"),
         transform(array_sort(collect_list(struct(col("d"), col("hi")))),
           p => p.getField("hi")).as("his"))
-      .localCheckpoint()
+      .pin("sq-lohi")
 
   /** In-JVM memo of the SQ8-ENCODED corpus — the stored code table of
     * the scalar-quantized index ([[graft.jobs.IncrementalIndex
@@ -1686,16 +1690,16 @@ object Embeddings {
     * shared encode behind the memo so each consumer pays the scan, not
     * the re-encode. Adds `rnb` (= r·r, the reconstruction norm every
     * ADC consumer divides by) so the stored artifact carries its norm
-    * column like the persisted form. Cold runs rebuild through the
-    * same definition. */
+    * column like the persisted form. Cold runs serve the lazy encode
+    * through the same definition, as [[pqCodesOf]] does. */
   private[graft] def sqCodesOf(s: SparkSession, frame: DataFrame,
-      lohi: DataFrame): DataFrame =
-    graft.StoredMemo.stored(s, "sq-codes",
+      lohi: DataFrame): DataFrame = {
+    def codes = sqEncode(frame, lohi).withColumn("rnb", dotQ(s)(col("r"), col("r")))
+    if (graft.StoredMemo.disabled(s)) codes
+    else graft.StoredMemo.stored(s, "sq-codes",
         frame.queryExecution.analyzed.canonicalized,
-        lohi.queryExecution.analyzed.canonicalized)(
-      sqEncode(frame, lohi)
-        .withColumn("rnb", dotQ(s)(col("r"), col("r")))
-        .localCheckpoint())
+        lohi.queryExecution.analyzed.canonicalized)(codes.pin("sq-codes"))
+  }
 
   /** SQ8 encode of `frame` (any frame carrying `q`) against quantizer
     * `lohi`: appends `codes` (the 8-bit levels — the 64-byte stored
@@ -2010,7 +2014,7 @@ object Embeddings {
       .select(col("query_id"), col("pa"), col("pb"),
         (dot(col("va"), col("vb")).cast("double") /
           (sqrt(col("wa").cast("double")) * sqrt(col("wb").cast("double")))).as("sim"))
-      .localCheckpoint()
+      .pin("mmr-pair-sims")
     val pool = cand.select(col("query_id"), col("neighbor_id"), col("rel"))
     var selected = pool
       .withColumn("rn", row_number().over(wRel)).where(col("rn") === 1)
@@ -2034,7 +2038,7 @@ object Embeddings {
           col("score"), lit(r).as("mmr_rank"))
         // one row per query; without this, round r's anti-join re-derives
         // every earlier round's pick (O(k²) recompute of the same plans)
-        .localCheckpoint()
+        .pin("mmr-round")
       selected = selected.unionByName(pick)
     }
     selected
@@ -2372,7 +2376,7 @@ object Embeddings {
     val d2 = v.crossJoin(broadcast(centers))
       .select(col("vec_id"), sqDist(s).as("dist"))
       .groupBy(col("vec_id")).agg(min(col("dist")).as("d2"))
-      .localCheckpoint()
+      .pin("kmpp-d2")
     val phi = d2.agg(sum(col("d2")).as("phi"))
     val coin = graft.functions.Portable.h64(
       concat(lit(s"kmpp:$round:"), col("vec_id").cast("string")))
@@ -2388,7 +2392,7 @@ object Embeddings {
     // instead of re-running the round
     val grown = centers.unionByName(v.join(sel, Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("q").as("cvec"), col("nq").as("ncv")))
-      .localCheckpoint()
+      .pin("kmpp-centers")
     // the checkpoint above is eager, so the round's corpus-sized d2
     // blocks are consumed — release them now instead of leaking one
     // per round to GC/ContextCleaner. `StoredMemo.release` drops the
@@ -2405,7 +2409,7 @@ object Embeddings {
     // materialized once (the d33/s08 discipline): the corpus frame is
     // probed by every round plus the final weighting pass
     val v = quantized(s, dir).select(col("vec_id"), col("q"), col("nq"))
-      .localCheckpoint()
+      .pin("kmpp-corpus")
     val minId = v.agg(min(col("vec_id")).as("mid"))
     val c0 = v.join(broadcast(minId), col("vec_id") === col("mid"))
       .select(col("vec_id").as("cid"), col("q").as("cvec"), col("nq").as("ncv"))
@@ -2432,7 +2436,7 @@ object Embeddings {
         Window.orderBy(col("weight").desc, col("cid").asc)))
       .where(col("seed_rank") <= KmppSeeds)
       .select(col("seed_rank"), col("cid"), col("weight"))
-      .localCheckpoint(eager = true)
+      .pin("kmpp-seeds")
     graft.StoredMemo.release(cands)
     graft.StoredMemo.release(v)
     out
@@ -2626,7 +2630,7 @@ object Embeddings {
         s.conf.get(SelfJoin.StrategyConf, "broadcast")) {
       // layout note (r13): deliberately NOT repartitioned — the serve
       // paths broadcast this edge table, so a compact layout is cheaper
-      nnDescentRounds(s, dir, rounds, revCap).localCheckpoint()
+      nnDescentRounds(s, dir, rounds, revCap).pin("nnd-graph")
     }
 
   /** The st22 INGEST-BOOTSTRAP graph: the descent iterate at pinned
@@ -2646,7 +2650,7 @@ object Embeddings {
           Tables.embeddings(s, dir), s"$dir/embeddings")
         .where(col("vec_id") % IncrementalBatchModE =!= 0))
       nnDescentOver(s, bucketedFrom(s, v), v, 1, DefaultNndRevCap)
-        .localCheckpoint()
+        .pin("ingest-bootstrap-graph")
     }
 
   /** The descent iterate at PINNED levers over the stored fixture
@@ -2757,7 +2761,7 @@ object Embeddings {
         .orderBy(col("cos").desc, col("cand").asc)
       scored = union.withColumn("rank", row_number().over(w))
         .where(col("rank") <= GraphBeam)
-      if (h < hops) scored = scored.localCheckpoint()
+      if (h < hops) scored = scored.pin("graph-beam-hop")
     }
     scored.where(col("rank") <= 3)
       .select(col("query_id"), col("cand").as("neighbor_id"),
@@ -2810,7 +2814,7 @@ object Embeddings {
       result = scored.withColumn("rank", row_number().over(w))
         .where(col("rank") <= 3)
       if (r < rounds) {
-        result = result.localCheckpoint()
+        result = result.pin("nnd-round")
         edges = result.select(col("query_id"), col("neighbor_id"))
       }
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -64,7 +65,7 @@ object LlmText {
   private[graft] def base(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "tokenized-docs", dir) {
       baseFrom(Tables.spreadIfNarrow(Tables.documents(s, dir), s"$dir/documents"))
-        .localCheckpoint()
+        .pin("tokenized-docs")
     }
 
   private val baseSql: String =
@@ -213,12 +214,12 @@ object LlmText {
     * Bands are keyed on the bandRows lever (it changes the rows). */
   private[graft] def bandsOf(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "text-bands", dir, d03Levers(s).bandRows) {
-      bandEntriesOf(s, sigOf(s, base(s, dir))).localCheckpoint()
+      bandEntriesOf(s, sigOf(s, base(s, dir))).pin("text-bands")
     }
 
   private[graft] def shinglesOf(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "text-shingles", dir) {
-      shingleSetsOf(s, base(s, dir)).localCheckpoint()
+      shingleSetsOf(s, base(s, dir)).pin("text-shingles")
     }
 
   /** In-JVM memo of the verified near-dup PAIR TABLE — the
@@ -248,7 +249,7 @@ object LlmText {
       // (d14/d17 loops), which the measured A/B showed run faster over
       // the compact AQE layout (contrast storedPostings, whose fan-out
       // probe DID need the spread)
-      val out = verified.localCheckpoint(eager = true)
+      val out = verified.pin("lsh-pairs")
       caches.foreach(_.unpersist())
       out
     }
@@ -818,7 +819,7 @@ object LlmText {
     // materialize the (small) label table, then release the final
     // round's cache — the loop unpersisted every round but the last
     val out = labels.select(col("doc_id"), col("comp").as("cluster_id"))
-      .localCheckpoint(eager = true)
+      .pin("min-label-components")
     labels.unpersist()
     out
   }
@@ -905,7 +906,7 @@ object LlmText {
     // localCheckpoint truncates the plan and materializes the round
     // (clusterwide the same call sites would use reliable checkpoint)
     var edges = canon(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))).localCheckpoint()
+      pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))).pin("star-edges")
     var prev = potential(edges)
     var rounds = 0
     var converged = prev._1 == 0L
@@ -922,7 +923,7 @@ object LlmText {
       val withM = large.join(smins, Seq("v"))
       val small = canon(
         withM.select(col("m").as("u"), col("u").as("v"))
-          .unionByName(smins.select(col("m").as("u"), col("v")))).localCheckpoint()
+          .unionByName(smins.select(col("m").as("u"), col("v")))).pin("star-edges")
       val cur = potential(small)
       converged = cur == prev
       prev = cur
@@ -1792,7 +1793,7 @@ object LlmText {
         .select(col("doc_id"),
           coalesce(col("n_matches"), lit(0L)).as("n_matches"))
         .withColumn("is_dup", col("n_matches") > 0)
-        .localCheckpoint(true)
+        .pin("d30-dedup-flags")
     } finally Seq(shd, sig).foreach(_.unpersist())
   }
 
@@ -2053,15 +2054,6 @@ object LlmText {
   def d33SparseCosine(s: SparkSession, dir: String): DataFrame =
     d33SparseCosineQ(s, dir, SparseQMod)
 
-  /** d33 with a caller-chosen query subsample (`doc_id % qMod == 0`).
-    * Per-query independence makes the restriction EXACT at any stage:
-    * each query's candidate list, scores, and ranks depend only on its
-    * own postings (norms and weights are corpus-global either way), so
-    * restricting the query side BEFORE the postings join ≡ filtering
-    * the finished ranking — but skips the join work for every dropped
-    * query (d34 fuses only `% HybridQMod` queries; running the lex leg
-    * at mod 13 and discarding 4/5 of it priced the fusion at the full
-    * retrieval's cost). Equivalence is pinned in LlmTextSpec. */
   /** Per-(JVM, dir, maxDfPermille) memo of the WEIGHTED POSTINGS table
     * — the inverted index a search deployment persists: the d33/d34
     * serving queries read the one stored table instead of rebuilding
@@ -2081,23 +2073,41 @@ object LlmText {
       // repartition keeps the exchange deterministic (guide §2.5).
       weightedPostingsOf(tf, termStatsOf(s, docs, tf))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .localCheckpoint()
+        .pin("sparse-postings")
     }
 
+  /** The per-document self-norms of [[storedPostings]], stored next to
+    * it under the same key: a serving call joins them instead of
+    * aggregating the postings again (two shuffles per call). */
+  private[graft] def storedNorms(s: SparkSession, dir: String): DataFrame =
+    graft.StoredMemo.stored(s, "sparse-norms", dir, sparseMaxDf(s)) {
+      sparseNormsOf(storedPostings(s, dir)).pin("sparse-norms")
+    }
+
+  /** d33 with a caller-chosen query subsample (`doc_id % qMod == 0`).
+    * Per-query independence makes the restriction EXACT at any stage:
+    * each query's candidate list, scores, and ranks depend only on its
+    * own postings (norms and weights are corpus-global either way), so
+    * restricting the query side BEFORE the postings join ≡ filtering
+    * the finished ranking — but skips the join work for every dropped
+    * query (d34 fuses only `% HybridQMod` queries; running the lex leg
+    * at mod 13 and discarding 4/5 of it priced the fusion at the full
+    * retrieval's cost). Equivalence is pinned in LlmTextSpec. */
   private[graft] def d33SparseCosineQ(s: SparkSession, dir: String,
                                       qMod: Long): DataFrame =
-    sparseRankOver(storedPostings(s, dir), qMod)
+    sparseRankOver(storedPostings(s, dir), storedNorms(s, dir), qMod)
 
-  /** The ranking core over an arbitrary weighted-postings frame —
-    * shared by d33 (the full stored table) and d48 (the table with a
-    * tombstone set anti-joined away), so the retrieval arithmetic
-    * cannot drift between the live and deletion-filtered paths. */
-  private[graft] def sparseRankOver(wts: DataFrame, qMod: Long): DataFrame = {
-    // the table is probed three ways below (query postings, candidate
-    // postings, self-norms), and per-branch column pruning makes the
-    // subtrees differ, so ReuseExchange cannot dedup them — the
-    // materialization is what lets all three read one artifact.
-    val nrm = sparseNormsOf(wts)
+  /** The ranking core over an arbitrary weighted-postings frame and the
+    * self-norms of its documents — shared by d33 (the full stored table)
+    * and d48 (the table with a tombstone set anti-joined away), so the
+    * retrieval arithmetic cannot drift between the live and
+    * deletion-filtered paths. `nrm` may hold more documents than `wts`:
+    * only the documents of `wts` are joined to it. */
+  private[graft] def sparseRankOver(wts: DataFrame, nrm: DataFrame, qMod: Long): DataFrame = {
+    // the table is probed twice below (query postings, candidate
+    // postings), and per-branch column pruning makes the subtrees
+    // differ, so ReuseExchange cannot dedup them — the materialization
+    // is what lets both read one artifact.
     val qw = wts.where(col("doc_id") % qMod === 0)
       .select(col("term"), col("doc_id").as("query_id"), col("w").as("wq"))
     val cw = wts.select(col("term"), col("doc_id").as("cand_id"), col("w").as("wc"))
@@ -2162,9 +2172,10 @@ object LlmText {
     * TABLE applied as ONE broadcast anti-join on the stored postings
     * before the ranking core ([[sparseRankOver]] — shared with d33, so
     * the live and filtered paths share every downstream definition);
-    * norms recompute over live rows only, which for per-doc self-norms
-    * equals dropping the deleted docs' rows. Unlike the ranked graph
-    * artifacts, THIS filter is exact: postings are row-local per doc,
+    * it reads d33's stored norms, which for the live docs it joins are
+    * the norms over live rows, since a self-norm is row-local. Unlike
+    * the ranked graph artifacts, THIS filter is exact: postings are
+    * row-local per doc,
     * so the filtered serve is row-identical to a rebuild over the
     * survivor corpus under the same frozen stats (TombstoneSpec pins
     * the persisted-store form of that law). */
@@ -2173,7 +2184,7 @@ object LlmText {
     val dels = wts.select(col("doc_id")).distinct()
       .where(col("doc_id") % DocTombMod === DocTombRem)
     sparseRankOver(
-      wts.join(broadcast(dels), Seq("doc_id"), "left_anti"), SparseQMod)
+      wts.join(broadcast(dels), Seq("doc_id"), "left_anti"), storedNorms(s, dir), SparseQMod)
   }
 
   val d48Sql: String =
@@ -2251,7 +2262,7 @@ object LlmText {
       .agg(countDistinct(col("bench_id")).as("df"))
       .where(col("df") <= BenchHotShingleCap)
       .select(col("shingle"))
-      .localCheckpoint(true)
+      .pin("bloom-rare-shingles")
     // the filter is built over the DISTINCT rare shingles (`rare` is
     // already the distinct set) — filter size tracks the benchmark,
     // never the corpus
@@ -2508,7 +2519,7 @@ object LlmText {
       .select(col("doc_id"), col("srcidx"), explode(col("toks")).as("term"))
       .withColumn("b", h64(col("term")) % lit(DsirBuckets))
       .groupBy(col("doc_id"), col("srcidx"), col("b")).agg(count(lit(1)).as("n_b"))
-      .localCheckpoint()
+      .pin("dsir-features")
     val w = perDoc.groupBy(col("b")).agg(
       sum(when(col("srcidx") % 4 === 0, col("n_b")).otherwise(lit(0L))).as("tcnt"),
       sum(col("n_b")).as("rcnt"))
@@ -2968,7 +2979,7 @@ object LlmText {
     * artifact; a deployment persists it bucketed by h. */
   private def rhPostings(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "rh-postings", dir) {
-      rhPostingsOf(s, base(s, dir)).localCheckpoint()
+      rhPostingsOf(s, base(s, dir)).pin("rh-postings")
     }
 
   /** Maximal cross-doc duplicated spans from a postings table — shared
@@ -3016,7 +3027,7 @@ object LlmText {
     * cold runs recompute through the same definitions (r13). */
   private[graft] def spansWorklist(s: SparkSession, dir: String): DataFrame =
     graft.StoredMemo.stored(s, "crossdoc-spans", dir) {
-      spansFromPostings(rhPostings(s, dir)).localCheckpoint(eager = true)
+      spansFromPostings(rhPostings(s, dir)).pin("crossdoc-spans")
     }
 
   /** d44's readout recomputes the df-count + island aggregation from

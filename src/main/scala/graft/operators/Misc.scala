@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -865,7 +866,7 @@ object Misc {
         StructField("pct", IntegerType, nullable = false),
         StructField("value", DoubleType, nullable = false)))
       // materialize before unpersisting the 2-pass cache
-      s.createDataFrame(rows, schema).localCheckpoint()
+      s.createDataFrame(rows, schema).pin("m17-quantiles")
     } finally rdd.unpersist()
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -54,7 +55,7 @@ object Sessions {
       // layout note (r13): deliberately NOT repartitioned — the s-suite
       // consumers aggregate immediately, and the measured A/B favored
       // the compact AQE layout over a 32-way spread
-      sessionizedPlan(s, dir).localCheckpoint())
+      sessionizedPlan(s, dir).pin("sessionized-events"))
 
   /** The un-materialized build pipeline — the form whose physical plan
     * (one user_id exchange) PlanAuditSpec pins. */
@@ -289,7 +290,7 @@ object Sessions {
     // session lifetime (bench sweeps and repeated job runs share a JVM).
     // localCheckpoint blocks are RDD-level: freed by the ContextCleaner
     // once the result is unreferenced, unlike the SQL cache.
-    val out = result.localCheckpoint(eager = true)
+    val out = result.pin("stratified-sample")
     counts.unpersist()
     out
   }
@@ -434,7 +435,7 @@ object Sessions {
     // rollup's cache instead of leaking one MEMORY_AND_DISK entry per
     // invocation (s05 has the same lifecycle; SessionJob owns its own
     // frame's persist/unpersist in try/finally)
-    val out = extract.localCheckpoint(eager = true)
+    val out = extract.pin("session-extract")
     sess.unpersist()
     out
   }

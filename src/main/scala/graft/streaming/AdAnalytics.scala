@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.StoredMemo.Pinning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -769,7 +770,7 @@ object AdAnalytics {
         store
       }
       // materialize before dropping the temp store (the probe is lazy)
-      IncrementalIndex.probeSubstrSpans(s, indexDir).localCheckpoint(eager = true)
+      IncrementalIndex.probeSubstrSpans(s, indexDir).pin("substr-spans")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.StoredMemo.Pinning
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -185,7 +186,7 @@ object Streams {
     def apply(batch: DataFrame, id: Long): Unit = synchronized {
       val merged = merge(store, batch, id)
       if (merged ne store) {
-        val cut = merged.localCheckpoint(eager = true)
+        val cut = merged.pin("stream-store")
         // safe to release the previous store: the new one is
         // materialized above, so nothing recomputes through the old one
         if (store ne initialStore) graft.StoredMemo.release(store)

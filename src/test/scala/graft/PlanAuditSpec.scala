@@ -92,6 +92,23 @@ class PlanAuditSpec extends GraftSuite {
     } finally spark.conf.unset(graft.operators.SelfJoin.StrategyConf)
   }
 
+  test("a warm e12 call plans against its stored artifacts' pinned sizes") {
+    // each stored artifact's leaf carries the bytes the block manager
+    // holds for it, so the planner broadcasts the small ones up front:
+    // no sort-merge join for AQE to turn into a broadcast after the
+    // shuffle ran, and no runtime Bloom-filter subquery sized for a
+    // terabyte-scale side
+    Embeddings.e12IvfPqAdc(spark, sf).collect()
+    val df = Embeddings.e12IvfPqAdc(spark, sf)
+    val initial = df.queryExecution.sparkPlan.toString
+    assert(!initial.contains("SortMergeJoin"), s"sort-merge join in e12's initial plan:\n$initial")
+    df.collect()
+    val executed = plan(df)
+    assert(!executed.contains("might_contain"), s"runtime Bloom filter in e12's plan:\n$executed")
+    val jobs = SparkTestBase.jobsStartedBy(Embeddings.e12IvfPqAdc(spark, sf).collect())
+    assert(jobs < 10, s"a warm e12 call ran $jobs jobs")
+  }
+
   test("fingerprinting and frame sampling are map-only (no keyed shuffle)") {
     // the round-robin repartition (small-file fan-out) is allowed; a
     // hashpartitioning exchange would mean a keyed shuffle crept in

@@ -206,6 +206,59 @@ class StoredMemoSpec extends AnyFunSuite {
     assert(after <= before, s"cold e12/e14 left ${after - before} persistent RDDs pinned")
   }
 
+  test("cold e12 and e14 pin no code table: the bypass serves the lazy encode") {
+    // GC is not run, so a pin a cold call made would still be listed
+    val sc = spark.sparkContext
+    val sf = SparkTestBase.sf
+    val codes = Set("pq-codes", "sq-codes")
+    def pinnedCodes = sc.getPersistentRDDs.values.filter(r => codes(r.name)).toSeq
+    graft.operators.Embeddings.e12IvfPqAdc(spark, sf).collect()
+    graft.operators.Embeddings.e14SqRerank(spark, sf).collect()
+    assert(pinnedCodes.map(_.name).toSet === codes, "the warm builds pin both code tables by name")
+    val firstId = sc.emptyRDD[Int].id
+    spark.conf.set(StoredMemo.DisableConf, "true")
+    try {
+      graft.operators.Embeddings.e12IvfPqAdc(spark, sf).collect()
+      graft.operators.Embeddings.e14SqRerank(spark, sf).collect()
+    } finally spark.conf.unset(StoredMemo.DisableConf)
+    val cold = pinnedCodes.filter(_.id > firstId)
+    assert(cold.isEmpty, s"cold calls pinned ${cold.map(r => s"${r.name} #${r.id}")}")
+  }
+
+  test("a pinned artifact's leaf carries the bytes the block manager holds for it") {
+    val sf = SparkTestBase.sf
+    val sc = spark.sparkContext
+    val pinned = Seq(
+      graft.operators.Embeddings.quantized(spark, sf),
+      graft.operators.Embeddings.cellRanked(spark, sf),
+      graft.operators.LlmText.storedPostings(spark, sf),
+      graft.operators.LlmText.storedNorms(spark, sf),
+      graft.operators.Sessions.sessionized(spark, sf))
+    for (df <- pinned) {
+      val leaf = df.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+      // the status store behind getRDDStorageInfo trails the block
+      // manager (it is fed through the listener bus), so poll it
+      def held = sc.getRDDStorageInfo.find(_.id == leaf.rdd.id).map(i => BigInt(i.memSize + i.diskSize))
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (held != Some(leaf.stats.sizeInBytes) && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(held.exists(_ > 0), s"${leaf.rdd.name} holds no blocks")
+      assert(held === Some(leaf.stats.sizeInBytes), s"${leaf.rdd.name}'s leaf size")
+    }
+  }
+
+  test("main code pins only through StoredMemo.pin") {
+    // a bare localCheckpoint leaf keeps its pre-materialization size
+    // estimate and an unnamed RDD; the handle gives it both
+    val sources = mainSources()
+    val pinBody = "(?s)def pin\\(df: DataFrame.*?\n\\s*\n".r
+    assert(sources.exists { case (_, src) => pinBody.findFirstIn(src).isDefined },
+      "StoredMemo.pin is gone")
+    val bare = sources.collect {
+      case (path, src) if pinBody.replaceAllIn(src, "").contains(".localCheckpoint(") => path
+    }
+    assert(bare.isEmpty, s"localCheckpoint outside StoredMemo.pin: $bare")
+  }
+
   test("main code keeps no memo map outside StoredMemo") {
     // Tables' narrow/wide decision cache and Streams' stream dirs are not
     // session-bound artifacts; every stored artifact goes through StoredMemo
@@ -224,15 +277,7 @@ class StoredMemoSpec extends AnyFunSuite {
   test("index stores land only through IncrementalIndex.land: no flat append, no hand-built bid path") {
     // a flat SaveMode.Append lands a batch replayed after a crash twice;
     // every appended store takes its batch partition from the one writer
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val sources = Seq("graft/jobs", "graft/streaming").flatMap { d =>
-      java.nio.file.Files.walk(root.resolve(d)).iterator().asScala
-        .filter(_.toString.endsWith(".scala")).toSeq
-        .map(p => root.relativize(p).toString ->
-          stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
-    }
+    val sources = mainSources("graft/jobs", "graft/streaming")
     val appends = sources.collect { case (path, src) if src.contains("SaveMode.Append") => path }
     assert(appends.isEmpty, s"flat SaveMode.Append writes: $appends")
     val landBody = "(?s)def land\\(.*?\n\\s*\n".r
@@ -242,6 +287,21 @@ class StoredMemoSpec extends AnyFunSuite {
       case (path, src) if landBody.replaceAllIn(src, "").contains("bid=") => path
     }
     assert(handBuilt.isEmpty, s"bid= paths built outside IncrementalIndex.land: $handBuilt")
+  }
+
+  /** (path under `src/main/scala`, comment-stripped source) of every
+    * main Scala file under `dirs` (all of them when none is given). */
+  private def mainSources(dirs: String*): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    (if (dirs.isEmpty) Seq(root) else dirs.map(root.resolve)).flatMap { d =>
+      val walk = java.nio.file.Files.walk(d)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => root.relativize(p).toString ->
+          stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      finally walk.close()
+    }
   }
 
   /** `src` with its comments blanked. String and char literals are kept
@@ -290,13 +350,7 @@ class StoredMemoSpec extends AnyFunSuite {
       "streamToParquet" -> "streaming file sink surface (SURVEY S6)",
       "streamToConsole" -> "console sink surface (SURVEY S11)",
       "groupConcatDistinct" -> "typed Aggregator surface (SURVEY A7; CompositeSpec)")
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val sources = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => root.relativize(p).toString ->
-        stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+    val sources = mainSources()
     val areas = Seq("graft/operators/", "graft/jobs/", "graft/streaming/",
       "graft/etl/", "graft/functions/", "graft/Tables.scala")
     val topLevelObject = """(?:private(?:\[\w+\])?\s+)?(?:case\s+)?object\s.*""".r

@@ -209,6 +209,25 @@ class StreamingSpec extends GraftSuite {
     assert(SparkTestBase.jobsStartedBy(Streams.tableStream(spark, sf, "events")) === 0)
   }
 
+  test("tableStream keeps one symlink dir per (dir, table): warm st01 calls make no more") {
+    // a fixture dir of its own, so the dir this JVM made for it is the
+    // only one whose link points into it
+    val fixture = java.nio.file.Files.createTempDirectory("graft-spec-fixture-")
+    val events = fixture.resolve("events.parquet")
+    java.nio.file.Files.createSymbolicLink(events, java.nio.file.Paths.get(sf, "events.parquet"))
+    try {
+      (1 to 4).foreach(_ => AdAnalytics.st01ParseCount(spark, fixture.toString).collect())
+      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+      val listing = java.nio.file.Files.list(tmp)
+      val dirs = try listing.iterator().asScala.toSeq finally listing.close()
+      val ours = dirs.filter(_.getFileName.toString.startsWith("graft-stream-events-")).filter { d =>
+        val link = d.resolve("events.parquet")
+        java.nio.file.Files.isSymbolicLink(link) && java.nio.file.Files.readSymbolicLink(link) == events
+      }
+      assert(ours.size === 1, s"st01 over one fixture dir left ${ours.size} stream dirs: $ours")
+    } finally Streams.dropDir(fixture.toString)
+  }
+
   test("a warm st17 call runs 7 jobs: no schema inference, one checkpoint per batch") {
     // a schema-inference job per fixture, stream and bench-store read,
     // or a second checkpoint of the probe's verdicts, would add to it
